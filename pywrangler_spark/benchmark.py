@@ -15,6 +15,10 @@ profiler for the PySpark engine. Two tiers:
   ran. Works identically on ``local[*]`` (driver doubles as the single
   executor) and on a cluster, where it sees every executor — the tier
   the RSS sampler cannot provide (SURVEY M4).
+
+:func:`settled_stages` is the one reader of the ``/stages`` endpoint;
+the executor profiler and ``bench.py``'s per-query telemetry both
+call it and keep their own aggregation.
 """
 
 from __future__ import annotations
@@ -24,9 +28,49 @@ import statistics
 import threading
 import time
 import warnings
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Callable, Collection, Dict, List, Optional
 
 from pyspark.sql import DataFrame
+
+
+def settled_stages(
+    api: str,
+    seen: Collection[int] = (),
+    timeout: float = 0.0,
+) -> Dict[int, Dict[str, Any]]:
+    """Every stage the application UI retains, keyed by stage id, read
+    from ``{api}/stages`` (``api`` = ``.../api/v1/applications/{id}``).
+
+    Completed-stage metrics land asynchronously after a job ends, so
+    the endpoint is re-read every 0.1 s until each stage not in
+    ``seen`` has left ACTIVE/PENDING, or ``timeout`` seconds pass
+    (``timeout=0`` reads once). Warns when the set of stages not in
+    ``seen`` shrinks between reads: the UI store is evicting them
+    (``spark.ui.retainedStages``) and any per-run total under-reports.
+    """
+    import json
+    import urllib.request
+
+    deadline = time.monotonic() + timeout
+    prev_new = -1
+    while True:
+        with urllib.request.urlopen(f"{api}/stages", timeout=10) as r:
+            snap = {s["stageId"]: s for s in json.load(r)}
+        new = [s for sid, s in snap.items() if sid not in seen]
+        if 0 <= len(new) < prev_new:
+            warnings.warn(
+                f"attributed stage set shrank between polls ({prev_new} "
+                f"-> {len(new)}): stages are being evicted from the UI "
+                "store, so metrics under-report. Raise "
+                "spark.ui.retainedStages."
+            )
+        prev_new = len(new)
+        if (
+            all(s["status"] not in ("ACTIVE", "PENDING") for s in new)
+            or time.monotonic() >= deadline
+        ):
+            return snap
+        time.sleep(0.1)
 
 
 class TimeProfiler:
@@ -237,40 +281,13 @@ class SparkExecutorMemoryProfiler:
         with urllib.request.urlopen(f"{self._api}{path}", timeout=10) as r:
             return _json.load(r)
 
-    def _stages(self) -> Dict[int, Dict[str, Any]]:
-        return {s["stageId"]: s for s in self._get("/stages")}
-
     def profile(self, *args: Any, **kwargs: Any) -> "SparkExecutorMemoryProfiler":
         self.records = []
         for _ in range(self.runs):
-            seen = set(self._stages())
+            seen = set(settled_stages(self._api))
             self.func(*args, **kwargs)
-            # completed-stage metrics land asynchronously; poll until
-            # every new stage left the ACTIVE state (or timeout)
-            deadline = time.monotonic() + self.poll_timeout
-            prev_count = -1
-            while True:
-                new = {
-                    sid: s
-                    for sid, s in self._stages().items()
-                    if sid not in seen
-                }
-                if 0 <= len(new) < prev_count:
-                    warnings.warn(
-                        "SparkExecutorMemoryProfiler: attributed stage "
-                        f"set shrank between polls ({prev_count} -> "
-                        f"{len(new)}) — stages are being evicted from "
-                        "the UI store; metrics under-report. Raise "
-                        "spark.ui.retainedStages."
-                    )
-                prev_count = len(new)
-                if all(
-                    s["status"] not in ("ACTIVE", "PENDING")
-                    for s in new.values()
-                ) or time.monotonic() > deadline:
-                    break
-                time.sleep(0.1)
-            stages = list(new.values())
+            snap = settled_stages(self._api, seen, self.poll_timeout)
+            stages = [s for sid, s in snap.items() if sid not in seen]
             if not stages:
                 warnings.warn(
                     "SparkExecutorMemoryProfiler: no new stages "

@@ -55,7 +55,7 @@ def token_count(col: Column) -> Column:
     than ``size(split(...))`` — same number (normalize_text guarantees
     single-space separators, no leading/trailing), but no per-row token
     ARRAY is allocated just to take its length (probe:
-    ``scripts/text_stats_probe.py``, bit-identical over sf10)."""
+    ``bench_textstats_probe_sf10.json``, bit-identical over sf10)."""
     norm = normalize_text(col)
     return F.when(norm == "", F.lit(0)).otherwise(
         F.regexp_count(norm, F.lit(" ")) + 1

@@ -131,8 +131,8 @@ def suggest_fit_params(
     the validated base point — the ``suggest_ann_params`` treatment
     (capacity derived from one corpus count, not pinned constants).
 
-    Measured rationale (holdout ladder in SCALE.md, run via
-    ``scripts/classifier_cap_probe.py``): a fixed 64k cap holds holdout
+    Measured rationale (holdout ladder in SCALE.md, "Round-8:
+    classifier fit cap"): a fixed 64k cap holds holdout
     accuracy within noise of the full fit at the scale it was validated
     (0.994/0.996 at sf0.1/sf1) but decays as the corpus vocabulary
     outgrows the sample (0.976 at sf10) — the gap is TOKEN COVERAGE,
