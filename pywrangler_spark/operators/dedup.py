@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pywrangler_spark.functions.hashing import hash28, hash56
-from pywrangler_spark.util import tie_caches_to_result
+from pywrangler_spark.util import CacheOwner
 from pywrangler_spark.functions.text import (
     fingerprint,
     shingles_from_words,
@@ -174,7 +174,7 @@ def minhash_signatures(
     return _transform
 
 
-class MinHashLSHPairs:
+class MinHashLSHPairs(CacheOwner):
     """Near-duplicate candidate pairs via banded MinHash-LSH, as a
     callable transform **with a cache lifecycle**.
 
@@ -183,18 +183,8 @@ class MinHashLSHPairs:
     full-signature agreement and filtered at ``min_signature_similarity``.
 
     The signature table is consumed three times (banding + two scoring
-    joins), so each ``__call__`` persists it. A lazy transform has no
-    natural unpersist point — the cache must outlive the *query*, not the
-    process — so the instance keeps a handle to every DataFrame it
-    persisted and :meth:`release` unpersists them once the result has
-    been consumed (the same pattern ``pipeline.PipelineCacher`` uses for
-    stage caches). Long-lived services: ``op = MinHashLSHPairs(...)``,
-    ``df.transform(op)``, act, then ``op.release()``. The inline form
-    ``df.transform(MinHashLSHPairs(...))`` discards the instance, so the
-    caches are additionally tied to the RESULT's lifetime
-    (:func:`~pywrangler_spark.util.tie_caches_to_result`): when the
-    returned DataFrame is garbage-collected they unpersist automatically
-    — no ``clearCache()`` required.
+    joins), so each ``__call__`` persists it into a per-call
+    :class:`~pywrangler_spark.util.CacheScope` tied to the result.
 
     Output: (id_a, id_b, sig_similarity), id_a < id_b.
     """
@@ -218,15 +208,9 @@ class MinHashLSHPairs:
         self.shingle_k = shingle_k
         self.seed = seed
         self.min_signature_similarity = min_signature_similarity
-        self._persisted: List[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every signature cache created by this instance
-        (blocking, so executor storage is freed before returning)."""
-        while self._persisted:
-            self._persisted.pop().unpersist(blocking=True)
 
     def __call__(self, df: DataFrame) -> DataFrame:
+        scope = self._open_scope()
         num_hashes, bands = self.num_hashes, self.bands
         r = num_hashes // bands
         min_signature_similarity = self.min_signature_similarity
@@ -241,8 +225,7 @@ class MinHashLSHPairs:
         # longs per doc); persist so shingling+minhash runs once.
         from pyspark import StorageLevel
 
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-        self._persisted.append(sigs)
+        sigs = scope.persist(sigs, StorageLevel.MEMORY_AND_DISK)
         # Signature-distinct banding (same rationale as the simhash
         # rewrite): wholesale-duplicated corpora give every copy the
         # SAME signature, so banding raw rows makes the candidate join
@@ -251,10 +234,10 @@ class MinHashLSHPairs:
         # join runs over reps, and the expansion back to id pairs is
         # sized by the true output (within-group pairs score exactly
         # 1.0: identical signatures agree on all hashes).
-        dsigs = sigs.groupBy("_sig").agg(
-            F.min("_id").alias("_rep")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        self._persisted.append(dsigs)
+        dsigs = scope.persist(
+            sigs.groupBy("_sig").agg(F.min("_id").alias("_rep")),
+            StorageLevel.MEMORY_AND_DISK,
+        )
 
         # The candidate stream shuffles IDS ONLY: the band self-join and
         # the pair dedup move (band, bh, rep) rows — 8-byte ids, never
@@ -344,9 +327,7 @@ class MinHashLSHPairs:
                 F.col("sig_similarity") >= min_signature_similarity
             )
         )
-        out = cross.unionByName(within)
-        tie_caches_to_result(out, self._persisted)
-        return out
+        return scope.tie(cross.unionByName(within))
 
 
 def minhash_lsh_pairs(
@@ -442,7 +423,7 @@ def ngram_jaccard_pairs(
     return _transform
 
 
-class ContainmentPairs:
+class ContainmentPairs(CacheOwner):
     """Asymmetric near-duplicate (containment) pairs via the overlap
     coefficient |S(A) ∩ S(B)| / min(|S(A)|, |S(B)|) over distinct word
     shingles — the primitive resemblance-based MinHash misses by design:
@@ -466,9 +447,8 @@ class ContainmentPairs:
     The hashed shingle stream is consumed up to four times (df-cap
     aggregate, per-doc counts, both self-join sides) and tokenize+shingle
     dominates the family's task-time (measured: ~89% for the span
-    family, ``span_pos_sf10.json``), so each ``__call__`` persists it;
-    cache lifecycle is identical to :class:`MinHashLSHPairs` —
-    :meth:`release` or result-GC unpersists.
+    family, ``span_pos_sf10.json``), so each ``__call__`` persists it
+    into a per-call :class:`~pywrangler_spark.util.CacheScope`.
 
     Output: (id_a, id_b, containment), id_a < id_b.
     """
@@ -490,19 +470,14 @@ class ContainmentPairs:
         self.shingle_k = shingle_k
         self.threshold = threshold
         self.max_df = max_df
-        self._persisted: List[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every shingle cache created by this instance."""
-        while self._persisted:
-            self._persisted.pop().unpersist(blocking=True)
 
     def __call__(self, df: DataFrame) -> DataFrame:
+        scope = self._open_scope()
         # staged tokenization (shingles_from_words docstring): the token
         # array materializes in its own projection before the shingle
         # lambda indexes it — the inlined form re-ran the normalize+split
         # regex per shingle slot, measured 8x slower on this stream
-        sh = (
+        sh = scope.persist(
             _scale_out(df)
             .select(
                 F.col(self.id_column).alias("_id"),
@@ -515,9 +490,7 @@ class ContainmentPairs:
                 ).alias("_s"),
             )
             .select("_id", hash56(F.col("_s")).alias("_h"))
-            .persist()
         )
-        self._persisted.append(sh)
         if self.max_df is not None:
             # the shingle set is distinct per document, so count(*) per
             # hash IS the document frequency. The cap filter, the self-
@@ -529,8 +502,7 @@ class ContainmentPairs:
                 .filter(F.col("_df") <= self.max_df)
                 .select("_h")
             )
-            sh = sh.join(kept, "_h").persist()
-            self._persisted.append(sh)
+            sh = scope.persist(sh.join(kept, "_h"))
         counts = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
         inter = (
             sh.alias("a")
@@ -552,14 +524,12 @@ class ContainmentPairs:
         cont = (
             F.col("_k") / F.least(F.col("_na"), F.col("_nb"))
         ).alias("containment")
-        out = (
+        return scope.tie(
             inter.join(ca, "id_a")
             .join(cb, "id_b")
             .select("id_a", "id_b", cont)
             .filter(F.col("containment") >= self.threshold)
         )
-        tie_caches_to_result(out, self._persisted)
-        return out
 
 
 def containment_pairs(
@@ -616,7 +586,7 @@ def simhash_table(
     return _transform
 
 
-class SimHashNearPairs:
+class SimHashNearPairs(CacheOwner):
     """Hamming-near document pairs from 63-bit SimHash sketches, via the
     pigeonhole multi-index join the ``simhash_table`` docstring promises
     (Manku et al.'s near-duplicate detection, block-permuted variant).
@@ -629,9 +599,9 @@ class SimHashNearPairs:
 
     Same shuffle discipline as the MinHash band join: the candidate
     stream carries (block, value, id) rows only; sketches join back
-    after the pair dedup, keyed by id. Same cache lifecycle too — the
-    sketch table is consumed three times, each ``__call__`` persists it
-    and :meth:`release` unpersists after the result is consumed.
+    after the pair dedup, keyed by id. The sketch table is consumed
+    three times, so each ``__call__`` persists it into a per-call
+    :class:`~pywrangler_spark.util.CacheScope`.
 
     Output: (id_a, id_b, hamming), id_a < id_b, hamming <= max_hamming.
     """
@@ -653,12 +623,6 @@ class SimHashNearPairs:
         self.text_column = text_column
         self.max_hamming = max_hamming
         self.bits = bits
-        self._persisted: List[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every sketch cache created by this instance."""
-        while self._persisted:
-            self._persisted.pop().unpersist(blocking=True)
 
     def _blocks(self):
         """(offset, width) per block: bits split as evenly as possible
@@ -675,10 +639,13 @@ class SimHashNearPairs:
     def __call__(self, df: DataFrame) -> DataFrame:
         from pyspark import StorageLevel
 
-        sk = df.transform(
-            simhash_table(self.id_column, self.text_column, self.bits)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        self._persisted.append(sk)
+        scope = self._open_scope()
+        sk = scope.persist(
+            df.transform(
+                simhash_table(self.id_column, self.text_column, self.bits)
+            ),
+            StorageLevel.MEMORY_AND_DISK,
+        )
 
         # Sketch-distinct pigeonhole: real corpora duplicate wholesale,
         # and every copy of a document carries the SAME sketch — running
@@ -688,10 +655,9 @@ class SimHashNearPairs:
         # first: the candidate join scales with distinct sketches, the
         # verify is inline (the sketch IS the key), and the expansion
         # back to id pairs is sized by the true output.
-        dsk = sk.select("simhash").distinct().persist(
-            StorageLevel.MEMORY_AND_DISK
+        dsk = scope.persist(
+            sk.select("simhash").distinct(), StorageLevel.MEMORY_AND_DISK
         )
-        self._persisted.append(dsk)
 
         blocks = self._blocks()
         rows = dsk.select(
@@ -758,9 +724,7 @@ class SimHashNearPairs:
                 F.lit(0).cast("int").alias("hamming"),
             )
         )
-        out = cross.unionByName(within)
-        tie_caches_to_result(out, self._persisted)
-        return out
+        return scope.tie(cross.unionByName(within))
 
 
 def simhash_near_pairs(
@@ -985,7 +949,7 @@ def dedup_incremental_bloom(
     return _transform
 
 
-class cdc_chunk_neardup_pairs:
+class cdc_chunk_neardup_pairs(CacheOwner):
     """Near-duplicate pairs by SHARED CONTENT-DEFINED CHUNKS — the dedup
     application CDC chunking exists for (LBFS / storage-dedup
     methodology at word granularity): because chunk boundaries re-align
@@ -1018,11 +982,8 @@ class cdc_chunk_neardup_pairs:
     sides, and Spark re-executes a lineage per reference — measured as
     FOUR chunking passes per call (44 s of which the chunker alone is
     13 s at sf10). Each ``__call__`` therefore persists the bounded
-    postings table (8-byte fingerprint + id per posting); the instance
-    keeps the handle and :meth:`release` frees it once the result is
-    consumed — the same convention as :class:`MinHashLSHPairs`,
-    including the result-lifetime finalizer for the inline form
-    (:func:`~pywrangler_spark.util.tie_caches_to_result`).
+    postings table (8-byte fingerprint + id per posting) into a per-call
+    :class:`~pywrangler_spark.util.CacheScope`.
     """
 
     def __init__(
@@ -1044,32 +1005,24 @@ class cdc_chunk_neardup_pairs:
         self.min_shared = min_shared
         self.min_chunk_tokens = min_chunk_tokens
         self.max_chunk_docs = max_chunk_docs
-        self._persisted: List[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every postings cache created by this instance
-        (blocking, so executor storage is freed before returning)."""
-        while self._persisted:
-            self._persisted.pop().unpersist(blocking=True)
 
     def __call__(self, df: DataFrame) -> DataFrame:
         from pywrangler_spark.operators.chunk import chunk_content_defined
 
+        scope = self._open_scope()
         chunks = df.transform(
             chunk_content_defined(
                 self.id_column, self.text_column, avg_tokens=self.avg_tokens
             )
         )
-        postings = (
+        postings = scope.persist(
             chunks.filter(F.col("n_tokens") >= self.min_chunk_tokens)
             .select(
                 F.xxhash64(F.col("chunk")).alias("_fp"),
                 F.col(self.id_column).alias("_doc"),
             )
             .distinct()
-            .persist()
         )
-        self._persisted.append(postings)
         counts = postings.groupBy("_fp").agg(
             F.count(F.lit(1)).alias("_n")
         )
@@ -1083,10 +1036,8 @@ class cdc_chunk_neardup_pairs:
         a = live.select("_fp", F.col("_doc").alias("id_a"))
         b = live.select("_fp", F.col("_doc").alias("id_b"))
         pairs = a.join(b, "_fp").filter(F.col("id_a") < F.col("id_b"))
-        out = (
+        return scope.tie(
             pairs.groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("n_shared"))
             .filter(F.col("n_shared") >= self.min_shared)
         )
-        tie_caches_to_result(out, self._persisted)
-        return out

@@ -52,6 +52,7 @@ from pywrangler_spark.operators.interval_identifier import (
     NO_END_MARKER,
     IntervalIdentifier,
 )
+from pywrangler_spark.util import CacheScope
 
 
 def identify_intervals_global(
@@ -163,10 +164,12 @@ def identify_intervals_global(
         F.col(c).desc() if a else F.col(c).asc()
         for c, a in zip(orderby, asc)
     ]
-    part = part.persist()
-    return _general_path(
-        part, df.columns, base, sort_cols, sort_cols_desc,
-        target_column_name,
+    scope = CacheScope()
+    return scope.tie(
+        _general_path(
+            scope.persist(part), df.columns, base, sort_cols,
+            sort_cols_desc, target_column_name, scope,
+        )
     )
 
 
@@ -195,6 +198,7 @@ def _general_path(
     sort_cols: List[Column],
     sort_cols_desc: List[Column],
     out: str,
+    scope: CacheScope,
 ) -> DataFrame:
     w = Window.partitionBy("_pid").orderBy(*sort_cols)
     w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -250,12 +254,14 @@ def _general_path(
         .when(kept_end, F.lit(_END))
         .cast("int")
     )
-    s3 = s2.select(
-        *original, "_pid", "_mid",
-        kept_start.cast("long").alias("_bs"),
-        kept_end.cast("long").alias("_be"),
-        km.alias("_km"),
-    ).persist()
+    s3 = scope.persist(
+        s2.select(
+            *original, "_pid", "_mid",
+            kept_start.cast("long").alias("_bs"),
+            kept_end.cast("long").alias("_be"),
+            km.alias("_km"),
+        )
+    )
 
     kmc = F.col("_km")
     # next kept marker within the partition (local)

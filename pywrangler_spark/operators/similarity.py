@@ -57,7 +57,7 @@ from pywrangler_spark.functions.vectors import (
     to_double_array,
 )
 from pywrangler_spark.operators.dedup import _scale_out
-from pywrangler_spark.util import tie_caches_to_result
+from pywrangler_spark.util import CacheOwner
 
 
 def _normed_vectors(df: DataFrame, id_column: str, vector_column: str,
@@ -516,7 +516,7 @@ def topk_cosine_lsh(
     return _transform
 
 
-class cosine_neardup_pairs:
+class cosine_neardup_pairs(CacheOwner):
     """All vector pairs with cosine ≥ threshold (exact, pairwise).
 
     Quadratic — the oracle/verification path. At scale, run
@@ -527,13 +527,8 @@ class cosine_neardup_pairs:
     recomputes a lineage per reference — for a text-derived input that
     means scanning + vectorizing the corpus TWICE (measured 6.5x at sf10
     on the capped docvec tier). The tier's contract is a capped input,
-    so each ``__call__`` persists the projection; a lazy transform has
-    no natural unpersist point, so the instance keeps the handle and
-    :meth:`release` frees it once the result is consumed — the same
-    convention as :class:`~pywrangler_spark.operators.dedup.MinHashLSHPairs`
-    (``pipeline.PipelineCacher`` calls it for stage-owned caches),
-    including the result-lifetime finalizer for the inline form
-    (:func:`~pywrangler_spark.util.tie_caches_to_result`).
+    so each ``__call__`` persists the projection into a per-call
+    :class:`~pywrangler_spark.util.CacheScope`.
     """
 
     def __init__(
@@ -545,23 +540,17 @@ class cosine_neardup_pairs:
         self.id_column = id_column
         self.vector_column = vector_column
         self.threshold = threshold
-        self._persisted: List[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every projection cache created by this instance
-        (blocking, so executor storage is freed before returning)."""
-        while self._persisted:
-            self._persisted.pop().unpersist(blocking=True)
 
     def __call__(self, df: DataFrame) -> DataFrame:
-        base = _normed_vectors(df, self.id_column, self.vector_column)
-        base = base.persist()
-        self._persisted.append(base)
+        scope = self._open_scope()
+        base = scope.persist(
+            _normed_vectors(df, self.id_column, self.vector_column)
+        )
         a = base.select(F.col("_id").alias("id_a"),
                         F.col("_bv").alias("_va"), F.col("_bn").alias("_na"))
         b = base.select(F.col("_id").alias("id_b"),
                         F.col("_bv").alias("_vb"), F.col("_bn").alias("_nb"))
-        out = (
+        return scope.tie(
             a.crossJoin(b)
             .filter(F.col("id_a") < F.col("id_b"))
             .select(
@@ -572,8 +561,6 @@ class cosine_neardup_pairs:
             )
             .filter(F.col("cosine") >= self.threshold)
         )
-        tie_caches_to_result(out, self._persisted)
-        return out
 
 
 # ---------------------------------------------------------------------------

@@ -86,17 +86,7 @@ from pywrangler_spark.functions.text import (
     token_count,
     words,
 )
-from pywrangler_spark.util import tie_caches_to_result
-
-
-def _tie_span_caches(out: DataFrame, hp: DataFrame) -> DataFrame:
-    """Tie the adaptive dup-set cache (if any) to the result's
-    lifetime — the inline-transform convention
-    (:func:`pywrangler_spark.util.tie_caches_to_result`)."""
-    caches = getattr(hp, "_span_caches", None)
-    if caches:
-        tie_caches_to_result(out, caches)
-    return out
+from pywrangler_spark.util import CacheScope
 
 
 def _positional_grams(
@@ -185,6 +175,7 @@ def _hit_position_sets(
     n: int,
     min_docs: int,
     hot_min_docs: Optional[int],
+    scope: CacheScope,
 ) -> DataFrame:
     """``(_id, _hp)``: per-document sorted array of hit START positions
     — 0-based token indexes where some n-gram occurring in
@@ -249,9 +240,9 @@ def _hit_position_sets(
     # above it, split hot/cold at ceil(sum(_nd)/budget), which bounds
     # |hot| <= budget exactly, as a plain literal the static planner
     # sees. The persist also spares the distinct-gram scan from
-    # running twice (stats action + join); the cache is tied to the
-    # result's lifetime by the callers (tie_caches_to_result).
-    dup = dup.persist()
+    # running twice (stats action + join); the cache goes into the
+    # caller's ``scope``, which the caller ties to its result.
+    dup = scope.persist(dup)
     stats = dup.agg(
         F.count(F.lit(1)).alias("c"), F.sum("_nd").alias("s")
     ).first()
@@ -264,11 +255,9 @@ def _hit_position_sets(
         hits = grams.join(F.broadcast(hot), "_gh").unionByName(
             grams.join(cold, "_gh")
         )
-    hp = hits.groupBy("_id").agg(
+    return hits.groupBy("_id").agg(
         F.sort_array(F.collect_set("_pos")).alias("_hp")
     )
-    hp._span_caches = [dup]
-    return hp
 
 
 def _union_length(hp, n: int):
@@ -333,8 +322,9 @@ def mask_duplicate_spans(
         )
 
     def _transform(df: DataFrame) -> DataFrame:
+        scope = CacheScope()
         hp = _hit_position_sets(
-            df, id_column, text_column, n, min_docs, hot_min_docs
+            df, id_column, text_column, n, min_docs, hot_min_docs, scope
         )
         masked = hp.select(
             "_id", _union_length(F.col("_hp"), n).alias("n_masked")
@@ -344,15 +334,14 @@ def mask_duplicate_spans(
         )
         n_masked = F.coalesce(F.col("n_masked"), F.lit(0)).cast("long")
         n_tok = token_count(F.col(text_column))
-        return _tie_span_caches(
+        return scope.tie(
             out.select(
                 *df.columns,
                 n_masked.alias("n_masked"),
                 F.when(n_tok > 0, n_masked / n_tok)
                 .otherwise(F.lit(0.0))
                 .alias("dup_ratio"),
-            ),
-            hp,
+            )
         )
 
     _transform.__name__ = "mask_duplicate_spans"
@@ -408,8 +397,9 @@ def duplicate_span_stats(
         )
 
     def _transform(df: DataFrame) -> DataFrame:
+        scope = CacheScope()
         hp = _hit_position_sets(
-            df, id_column, text_column, n, min_docs, hot_min_docs
+            df, id_column, text_column, n, min_docs, hot_min_docs, scope
         )
         masked = hp.select(
             F.col("_id").alias(id_column),
@@ -421,15 +411,14 @@ def duplicate_span_stats(
         )
         out = toks.join(masked, id_column, "left")
         n_masked = F.coalesce(F.col("n_masked"), F.lit(0)).cast("long")
-        return _tie_span_caches(
+        return scope.tie(
             out.select(
                 F.col(id_column),
                 n_masked.alias("n_masked"),
                 F.when(F.col("_n_tok") > 0, n_masked / F.col("_n_tok"))
                 .otherwise(F.lit(0.0))
                 .alias("dup_ratio"),
-            ),
-            hp,
+            )
         )
 
     _transform.__name__ = "duplicate_span_stats"
@@ -491,8 +480,9 @@ def excise_duplicate_spans(
     from pywrangler_spark.functions.text import normalize_text
 
     def _transform(df: DataFrame) -> DataFrame:
+        scope = CacheScope()
         hp = _hit_position_sets(
-            df, id_column, text_column, n, min_docs, hot_min_docs
+            df, id_column, text_column, n, min_docs, hot_min_docs, scope
         )
         # expand each start to its covered window scan-side — the
         # arrays are per-document (≤ token count), so this never
@@ -583,8 +573,8 @@ def excise_duplicate_spans(
                     ),
                 )
             )
-        return _tie_span_caches(
-            base.select(*df.columns, rebuilt.alias(output_column)), hp
+        return scope.tie(
+            base.select(*df.columns, rebuilt.alias(output_column))
         )
 
     _transform.__name__ = "excise_duplicate_spans"

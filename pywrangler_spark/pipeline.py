@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from pywrangler_spark.base import BaseWrangler
 from pywrangler_spark.plans.inspect import count_exchanges
+from pywrangler_spark.util import CacheScope
 
 
 class Stage:
@@ -109,6 +110,7 @@ class PipelineCacher:
     def __init__(self, pipeline: "Pipeline"):
         self._pipeline = pipeline
         self._enabled: set = set()
+        self._scopes: List[CacheScope] = []
 
     def enable(self, stages: Union[Any, List[Any]]) -> None:
         for s in stages if isinstance(stages, list) else [stages]:
@@ -118,17 +120,20 @@ class PipelineCacher:
         for s in stages if isinstance(stages, list) else [stages]:
             self._enabled.discard(self._pipeline._locate(s))
 
+    def open_scope(self) -> CacheScope:
+        """The scope one ``transform`` caches its stages into."""
+        self._scopes.append(CacheScope())
+        return self._scopes[-1]
+
     def clear(self) -> None:
-        """Unpersist every cached intermediate of the last transform,
-        and release stage-owned caches: operators that persist internal
-        state across a lazy transform (minhash/simhash signature
-        caches) expose ``release()``, and the pipeline frees them here
-        — the same consume-then-clear lifecycle as its own stage
-        caches."""
-        for idx in self._enabled:
-            dfs = self._pipeline._dfs
-            if dfs and idx < len(dfs) and dfs[idx] is not None:
-                dfs[idx].unpersist(blocking=True)
+        """Unpersist the stage caches of every transform since the last
+        clear, and release stage-owned caches: operators that persist
+        internal state across a lazy transform (minhash/simhash
+        signature caches) expose ``release()``, and the pipeline frees
+        them here — the same consume-then-clear lifecycle as its own
+        stage caches."""
+        while self._scopes:
+            self._scopes.pop().release()
         self._enabled.clear()
         for stage in self._pipeline.stages:
             release = getattr(stage.obj, "release", None)
@@ -209,10 +214,13 @@ class Pipeline:
     def transform(self, df: DataFrame) -> DataFrame:
         self._input_df = df
         self._dfs = []
+        scope = (
+            self.cacher.open_scope() if self.cacher.enabled_indices else None
+        )
         for idx, stage in enumerate(self.stages):
             df = stage.transform(df)
             if self.cacher.is_enabled(idx):
-                df = df.cache()
+                df = scope.persist(df)
             self._dfs.append(df)
         return df
 

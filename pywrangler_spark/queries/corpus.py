@@ -443,7 +443,7 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         fit_unigram_model,
         unigram_logprob_score,
     )
-    from pywrangler_spark.util import tie_caches_to_result
+    from pywrangler_spark.util import CacheScope
 
     docs = _docs(spark, sf_dir)
     # capacity schedule, resolved once per (process, corpus) like the
@@ -460,15 +460,14 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     med_df = scored.agg(
         F.expr("percentile(lm_score, 0.5D)").alias("_med")
     )
-    label_tbl = (
-        scored.crossJoin(F.broadcast(med_df))
-        .select(
+    scope = CacheScope()
+    label_tbl = scope.persist(
+        scored.crossJoin(F.broadcast(med_df)).select(
             "doc_id",
             F.when(
                 F.col("lm_score") <= F.col("_med"), "keep"
             ).otherwise("drop").alias("qlabel"),
         )
-        .persist()
     )
     labeled = docs.select("doc_id", "text").join(label_tbl, "doc_id")
     train = labeled.filter(F.col("doc_id") % 2 == 0)
@@ -490,19 +489,19 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             model, labels, n_features=fitp["n_features"], bigrams=False
         )
     )
-    out = out.agg(
-        F.count(F.lit(1)).alias("n_eval"),
-        (
-            F.avg(
-                (F.col("predicted_label") == F.col("qlabel")).cast(
-                    "double"
+    return scope.tie(
+        out.agg(
+            F.count(F.lit(1)).alias("n_eval"),
+            (
+                F.avg(
+                    (F.col("predicted_label") == F.col("qlabel")).cast(
+                        "double"
+                    )
                 )
-            )
-            >= 0.8
-        ).alias("acc_ok"),
+                >= 0.8
+            ).alias("acc_ok"),
+        )
     )
-    tie_caches_to_result(out, [label_tbl])
-    return out
 
 
 # ---- interpolated bigram LM scoring ----------------------------------------

@@ -339,11 +339,14 @@ def dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     yields a non-trivial pair set (105 pairs at sf0.01, ~10k at sf0.1)
     to hash-verify against the brute-force oracle."""
     from pywrangler_spark.operators.dedup import simhash_near_pairs
+    from pywrangler_spark.util import keep_alive
 
-    return (
-        _docs(spark, sf_dir)
-        .transform(simhash_near_pairs("doc_id", "text", max_hamming=5))
-        .withColumn("hamming", F.col("hamming").cast("long"))
+    pairs = _docs(spark, sf_dir).transform(
+        simhash_near_pairs("doc_id", "text", max_hamming=5)
+    )
+    # keep_alive: the cast must carry the sketch caches (util.keep_alive)
+    return keep_alive(
+        pairs.withColumn("hamming", F.col("hamming").cast("long")), pairs
     )
 
 

@@ -437,17 +437,14 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quadratic exact pair tier capped at 2000 vectors (a no-op at
     # driver scales), matching dedup_clusters_jaccard's _JACCARD_CAP;
     # at corpus scale the discovery tier is LSH/IVF candidates + exact
-    # verification of candidates only
-    from pywrangler_spark.util import keep_alive
-
-    raw_pairs = emb.filter(F.col("vec_id") < 2000).transform(
+    # verification of candidates only. connected_components consumes
+    # the pairs eagerly (localCheckpoint), so holding ``pairs`` for the
+    # call keeps the projection cache live exactly as long as needed
+    pairs = emb.filter(F.col("vec_id") < 2000).transform(
         cosine_neardup_pairs("vec_id", "embedding", threshold=0.3)
     )
-    # keep_alive: the normalized-projection cache is tied to the
-    # transform result; the derived select must carry it (util.keep_alive)
-    pairs = keep_alive(raw_pairs.select("id_a", "id_b"), raw_pairs)
     cc = connected_components(
-        pairs, src="id_a", dst="id_b",
+        pairs.select("id_a", "id_b"), src="id_a", dst="id_b",
         id_column="vec_id", component_column="component",
     )
     comp = F.coalesce(F.col("component"), F.col("vec_id"))

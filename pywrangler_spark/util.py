@@ -11,6 +11,7 @@ from __future__ import annotations
 import functools
 import importlib
 import inspect
+import weakref
 from typing import Any, Callable, Iterable, Optional, Sequence, Tuple, Type
 
 
@@ -180,75 +181,94 @@ class ColumnCacher:
         return df.withColumn(name, column)
 
 
-def tie_caches_to_result(result, caches: list, shared: list = None) -> None:
-    """Unpersist an operator's caches when ``result`` is garbage-collected.
+def _unpersist_all(frames: list, blocking: bool) -> None:
+    while frames:
+        try:
+            frames.pop().unpersist(blocking=blocking)
+        except Exception:
+            pass  # gateway gone or frame already dropped: nothing to free
 
-    The cached-operator convention (``MinHashLSHPairs`` and friends) is
-    ``op = Op(...); out = df.transform(op); ...; op.release()`` — but the
-    common inline form ``df.transform(Op(...))`` discards the instance,
-    making ``release()`` unreachable, and the caches then live until
-    ``spark.catalog.clearCache()`` (fine under the bench/gate harness, a
-    leak for library users). This registers a ``weakref.finalize`` on the
-    result DataFrame that unpersists the caches once the result object is
-    unreachable.
 
-    ``caches`` must be the caches created for THIS result — NOT the
-    operator's instance-wide list: when one instance is called on two
-    DataFrames, tying the shared list would let the first result's GC
-    unpersist caches the second still-live result depends on. Pass the
-    per-call slice (callers record ``len(self._persisted)`` at call
-    start), and the instance list as ``shared``: each cache is removed
-    from ``shared`` before unpersisting, so an explicit ``release()``
-    beforehand (which empties ``shared``) makes the finalizer a no-op,
-    and repeated calls each finalize only their own caches.
+class CacheScope:
+    """Owns the DataFrames one operator call persisted.
 
-    Safety: unpersist only ever degrades to recompute — if a user derives
-    a new DataFrame from ``result`` and drops ``result`` itself, the
-    derived plan still computes correctly (the cache hit is simply lost).
-    ``atexit`` is disabled: at interpreter shutdown the JVM gateway may
-    already be gone and the cache dies with the session anyway.
+    ``persist`` records each frame; :meth:`release` unpersists them all
+    (blocking, idempotent); :meth:`tie` pins the scope to a result
+    DataFrame. A scope lives exactly as long as something holds it —
+    the results it was tied to (and anything :func:`keep_alive` carried
+    it to), or a caller that owns it outright such as
+    ``pipeline.PipelineCacher``. When the last holder is
+    garbage-collected a finalizer unpersists the frames without
+    blocking, so the inline ``df.transform(Op(...))`` form frees its
+    caches without ``spark.catalog.clearCache()``. Unpersist only ever
+    degrades to recompute: a plan that still reads a released frame
+    stays correct. ``atexit`` is off — at interpreter shutdown the JVM
+    gateway may already be gone and the cache dies with the session.
     """
-    import weakref
 
-    mine = list(caches)
+    def __init__(self) -> None:
+        self._frames: list = []
+        fin = weakref.finalize(self, _unpersist_all, self._frames, False)
+        fin.atexit = False
 
-    def _drain(mine=mine, shared=shared):
-        for c in mine:
-            try:
-                if shared is not None:
-                    try:
-                        shared.remove(c)
-                    except ValueError:
-                        continue  # release() already unpersisted it
-                c.unpersist(blocking=False)
-            except Exception:
-                pass
-        mine.clear()
+    def persist(self, df, level=None):
+        """Persist ``df`` (at ``level``, else the DataFrame default) and
+        record it; returns ``df``."""
+        df = df.persist() if level is None else df.persist(level)
+        self._frames.append(df)
+        return df
 
-    fin = weakref.finalize(result, _drain)
-    fin.atexit = False
+    def release(self) -> None:
+        """Unpersist every recorded frame, blocking until executor
+        storage is freed."""
+        _unpersist_all(self._frames, True)
+
+    def tie(self, result):
+        """Pin this scope to ``result`` and return ``result``."""
+        # vars(): DataFrame.__getattr__ would fetch the schema per miss
+        result._pw_scopes = vars(result).get("_pw_scopes", ()) + (self,)
+        return result
+
+
+class CacheOwner:
+    """Mixin for cached operators: one fresh :class:`CacheScope` per
+    ``__call__``, held weakly, so a result's GC drains its own call's
+    caches while the instance lives on, and :meth:`release` frees every
+    call's caches that are still live."""
+
+    def _open_scope(self) -> CacheScope:
+        scope = CacheScope()
+        self.__dict__.setdefault("_scopes", weakref.WeakSet()).add(scope)
+        return scope
+
+    def release(self) -> None:
+        """Unpersist the caches of every live call (blocking)."""
+        for scope in list(self.__dict__.get("_scopes", ())):
+            scope.release()
 
 
 def keep_alive(derived, *sources):
-    """Pin ``sources`` to ``derived``'s lifetime and return ``derived``.
+    """Make ``derived`` also pin every :class:`CacheScope` pinned to
+    ``sources``; returns ``derived``.
 
-    :func:`tie_caches_to_result` drains an operator's caches when the
-    transform RESULT is garbage-collected — safe (degrade to recompute)
-    but a silent performance trap when a caller immediately derives a
-    new DataFrame (``result.select(...)``) and drops ``result``: the
-    caches die before the derived plan ever executes, and every cached
-    lineage recomputes. Found in r12 via ``explain()`` on the
-    registered span queries — no ``InMemoryTableScan`` in the executed
-    plan; every measured span number to that point had paid one extra
-    distinct-gram corpus scan. Attaching the source to the derived
-    object defers the finalizer to the lifetime that actually consumes
-    the caches::
+    A scope drains when the transform RESULT it was tied to is
+    garbage-collected — safe (degrade to recompute) but a silent
+    performance trap when a caller immediately derives a new DataFrame
+    (``result.select(...)``) and drops ``result``: the caches die before
+    the derived plan ever executes, and every cached lineage
+    recomputes. Found in r12 via ``explain()`` on the registered span
+    queries — no ``InMemoryTableScan`` in the executed plan; every
+    measured span number to that point had paid one extra distinct-gram
+    corpus scan. Carrying the scopes to the derived object defers the
+    drain to the lifetime that actually consumes the caches::
 
-        pairs = df.transform(ContainmentPairs(...))   # caches tied
-        return keep_alive(pairs.select(...), pairs)   # tie transfers
+        pairs = df.transform(ContainmentPairs(...))   # scope tied
+        return keep_alive(pairs.select(...), pairs)   # pin carried over
     """
-    existing = getattr(derived, "_pw_keepalive", ())
-    derived._pw_keepalive = tuple(existing) + sources
+    scopes = vars(derived).get("_pw_scopes", ())
+    for src in sources:
+        scopes += vars(src).get("_pw_scopes", ())
+    derived._pw_scopes = scopes
     return derived
 
 

@@ -26,3 +26,11 @@ def spark():
     )
     session.sparkContext.setLogLevel("ERROR")
     yield session
+
+
+@pytest.fixture
+def persistent_rdds(spark):
+    """Callable returning the ids of the RDDs the session has persisted
+    right now — diff two snapshots to see what one call cached."""
+    jsc = spark.sparkContext._jsc
+    return lambda: set(jsc.getPersistentRDDs().keySet().toArray())

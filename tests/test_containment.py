@@ -107,23 +107,16 @@ class TestContainment:
         with pytest.raises(ValueError, match="max_df"):
             ContainmentPairs("doc_id", "text", max_df=1)
 
-    def test_cache_release(self, spark):
+    def test_cache_release(self, spark, persistent_rdds):
         df = _docs(spark, [SMALL, BIG, "z y x w v u"])
+        before = persistent_rdds()
         op = ContainmentPairs("doc_id", "text", threshold=0.9, max_df=10)
         result = df.transform(op)
         n = result.count()
-        cached = list(op._persisted)
+        cached = persistent_rdds() - before
         assert len(cached) == 2  # raw shingle stream + df-capped stream
-        assert all(
-            c.storageLevel.useMemory or c.storageLevel.useDisk
-            for c in cached
-        )
         op.release()
-        assert not op._persisted
-        assert all(
-            not (c.storageLevel.useMemory or c.storageLevel.useDisk)
-            for c in cached
-        )
+        assert not cached & persistent_rdds()
         assert result.count() == n
 
     def test_short_docs_yield_no_pairs(self, spark):

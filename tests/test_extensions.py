@@ -93,28 +93,26 @@ class TestDedup:
         for doc_id in range(3):
             assert rows.get(doc_id) == 1.0
 
-    def test_minhash_cache_release(self, spark, docs):
+    def test_minhash_cache_release(self, spark, docs, persistent_rdds):
         """The signature cache must not outlive the query: release()
         unpersists every DataFrame the transform persisted (blocking),
         and the result stays correct (recomputes from source) after."""
+        docs.count()  # the module fixture's own cache is not the op's
+        before = persistent_rdds()
         op = MinHashLSHPairs("doc_id", "text")
         result = docs.transform(op)
         n = result.count()  # materialize → signature cache populated
-        cached = list(op._persisted)
+        cached = persistent_rdds() - before
         assert cached, "transform should have persisted the signatures"
-        assert all(
-            df.storageLevel.useMemory or df.storageLevel.useDisk
-            for df in cached
-        )
         op.release()
-        assert not op._persisted
-        assert all(
-            not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-            for df in cached
-        ), "release() must drop the persisted storage level"
+        assert not cached & persistent_rdds(), (
+            "release() must drop the persisted storage"
+        )
         assert result.count() == n
 
-    def test_simhash_near_pairs_finds_planted_neardup(self, spark, docs):
+    def test_simhash_near_pairs_finds_planted_neardup(
+        self, spark, docs, persistent_rdds
+    ):
         """A one-word edit flips only a few sketch bits; the pigeonhole
         multi-index must surface the pair (it is complete for
         hamming <= max_hamming — proven exhaustively by the
@@ -126,15 +124,16 @@ class TestDedup:
             F.concat(F.col("text"), F.lit(" zyxqj")).alias("text"),
         )
         planted = docs.select("doc_id", "text").union(edited)
+        docs.count()  # the module fixture's own cache is not the op's
+        before = persistent_rdds()
         op = simhash_near_pairs("doc_id", "text", max_hamming=20)
-        pairs = {
-            (r.id_a, r.id_b): r.hamming
-            for r in planted.transform(op).collect()
-        }
+        result = planted.transform(op)
+        pairs = {(r.id_a, r.id_b): r.hamming for r in result.collect()}
         for doc_id in range(2):
             assert (doc_id, doc_id + 10_000) in pairs
+        assert persistent_rdds() - before  # the sketch caches
         op.release()
-        assert not op._persisted
+        assert not persistent_rdds() - before
 
     def test_simhash_near_pairs_validation(self):
         from pywrangler_spark.operators.dedup import simhash_near_pairs

@@ -146,7 +146,9 @@ class TestPlanInspection:
 
 
 class TestStageCacheLifecycle:
-    def test_clear_releases_dedup_signature_caches(self, spark):
+    def test_clear_releases_dedup_signature_caches(
+        self, spark, persistent_rdds
+    ):
         """A pipeline containing a minhash stage must leave zero
         persisted RDDs behind after cacher.clear() — the stage-owned
         signature cache joins the same consume-then-clear lifecycle as
@@ -156,19 +158,30 @@ class TestStageCacheLifecycle:
         docs = read_parquet(
             spark, "/root/testdata/sf0.001/documents.parquet"
         ).select("doc_id", "text")
-        jsc = spark.sparkContext._jsc
         # delta-based: the shared test session may carry other tests'
         # caches; this pipeline must add none of its own after clear()
-        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        before = persistent_rdds()
         op = MinHashLSHPairs("doc_id", "text", num_hashes=8, bands=4)
         pipe = Pipeline([op])
         out = pipe.transform(docs)
         out.count()  # consume the result while the cache is live
-        assert op._persisted  # the stage really did persist something
+        assert persistent_rdds() - before  # the stage really persisted
         pipe.cacher.clear()
-        assert not op._persisted
-        after = set(jsc.getPersistentRDDs().keySet().toArray())
-        assert after - before == set()
+        assert persistent_rdds() - before == set()
+
+    def test_clear_releases_every_transform_since_last_clear(
+        self, spark, persistent_rdds
+    ):
+        """Re-transform with a cached stage, then one clear(): the
+        first transform's stage cache must not survive."""
+        before = persistent_rdds()
+        pipe = Pipeline([lambda df: df.selectExpr("id * 2 AS x")])
+        pipe.cacher.enable(0)
+        pipe.transform(spark.range(10)).count()
+        pipe.transform(spark.range(20)).count()
+        assert len(persistent_rdds() - before) == 2
+        pipe.cacher.clear()
+        assert persistent_rdds() - before == set()
 
 
 class TestProfilers:

@@ -36,71 +36,76 @@ class TestColumnCacher:
 
 
 class TestTieCachesToResult:
-    """Cache lifetime tied to the result DataFrame: the inline
-    ``df.transform(Op(...))`` form discards the operator instance, so
-    release() is unreachable — the weakref finalizer must unpersist the
-    operator's caches once the result object is garbage-collected."""
+    """Cache lifetime tied to result DataFrames through
+    ``CacheScope.tie``: the inline ``df.transform(Op(...))`` form
+    discards the operator instance, so the scope's finalizer must
+    unpersist one call's frames once the last DataFrame the scope is
+    tied to is garbage-collected."""
 
     def test_gc_drains_caches(self, spark):
         import gc
 
-        from pywrangler_spark.util import tie_caches_to_result
+        from pywrangler_spark.util import CacheScope
 
-        cached = spark.range(10).persist()
+        scope = CacheScope()
+        cached = scope.persist(spark.range(10))
         cached.count()
-        shared = [cached]
-        result = cached.selectExpr("id * 2 AS x")
-        tie_caches_to_result(result, shared, shared=shared)
+        result = scope.tie(cached.selectExpr("id * 2 AS x"))
+        del scope  # only the result holds it now
+        gc.collect()
         assert cached.storageLevel.useMemory  # live while result is
         del result
         gc.collect()
-        assert shared == []
         assert not cached.storageLevel.useMemory
 
+    def test_persist_keeps_storage_level(self, spark):
+        from pyspark import StorageLevel
+
+        from pywrangler_spark.util import CacheScope
+
+        scope = CacheScope()
+        df = scope.persist(spark.range(3), StorageLevel.DISK_ONLY)
+        assert df.storageLevel == StorageLevel.DISK_ONLY
+        scope.release()
+
     def test_two_results_keep_each_others_caches(self, spark):
-        # one operator instance called on two DataFrames: GC of the
-        # first result must unpersist ONLY its own caches, not the
-        # second still-live result's (the round-8 shared-list defect)
+        # two calls, two scopes: GC of the first result must unpersist
+        # ONLY its own caches, not the second still-live result's
         import gc
 
-        from pywrangler_spark.util import tie_caches_to_result
+        from pywrangler_spark.util import CacheScope
 
-        shared = []
-        c1 = spark.range(10).persist()
+        s1, s2 = CacheScope(), CacheScope()
+        c1 = s1.persist(spark.range(10))
         c1.count()
-        shared.append(c1)
-        r1 = c1.selectExpr("id AS x")
-        tie_caches_to_result(r1, shared[0:], shared=shared)
-
-        c2 = spark.range(20).persist()
+        r1 = s1.tie(c1.selectExpr("id AS x"))
+        c2 = s2.persist(spark.range(20))
         c2.count()
-        shared.append(c2)
-        r2 = c2.selectExpr("id AS y")
-        tie_caches_to_result(r2, shared[1:], shared=shared)
+        r2 = s2.tie(c2.selectExpr("id AS y"))
+        del s1, s2
 
         del r1
         gc.collect()
         assert not c1.storageLevel.useMemory
         assert c2.storageLevel.useMemory  # r2 is still live
-        assert shared == [c2]
         del r2
         gc.collect()
         assert not c2.storageLevel.useMemory
-        assert shared == []
 
     def test_explicit_release_first_is_noop(self, spark):
         import gc
 
-        from pywrangler_spark.util import tie_caches_to_result
+        from pywrangler_spark.util import CacheScope
 
-        cached = spark.range(10).persist()
+        scope = CacheScope()
+        cached = scope.persist(spark.range(10))
         cached.count()
-        persisted = [cached]
-        result = cached.selectExpr("id AS x")
-        tie_caches_to_result(result, persisted)
-        persisted.pop().unpersist(blocking=True)  # the release() path
-        del result
-        gc.collect()  # finalizer fires on the empty shared list: no-op
+        result = scope.tie(cached.selectExpr("id AS x"))
+        scope.release()  # blocking
+        assert not cached.storageLevel.useMemory
+        scope.release()  # idempotent
+        del scope, result
+        gc.collect()  # finalizer fires on the emptied scope: no-op
 
     def test_inline_operator_caches_freed(self, spark):
         import gc
@@ -126,21 +131,50 @@ class TestTieCachesToResult:
         gc.collect()
         assert n_cached() < before
 
+    def test_owner_holds_scopes_weakly(self, spark):
+        """A cached operator's release() frees the caches of its calls
+        that are still live; a call whose result was dropped has
+        already drained, with the instance still alive."""
+        import gc
+
+        from pywrangler_spark.util import CacheOwner
+
+        class Op(CacheOwner):
+            def __call__(self, df):
+                scope = self._open_scope()
+                self.last = scope.persist(df.selectExpr("id + 1 AS id"))
+                return scope.tie(self.last.selectExpr("id AS x"))
+
+        op = Op()
+        r1 = spark.range(5).transform(op)
+        c1 = op.last
+        r1.count()
+        r2 = spark.range(7).transform(op)
+        c2 = op.last
+        r2.count()
+        del r1
+        gc.collect()
+        assert not c1.storageLevel.useMemory  # drained by its own GC
+        assert c2.storageLevel.useMemory
+        op.release()
+        assert not c2.storageLevel.useMemory
+        assert r2.count() == 7  # recomputes from source
+
     def test_keep_alive_defers_drain_to_derived_result(self, spark):
         """The r12 derived-result trap: result.select(...) + drop of the
         transform result must NOT drain the caches when keep_alive
-        transferred the tie; the drain fires when the DERIVED result
+        carried the scope over; the drain fires when the DERIVED result
         dies."""
         import gc
 
-        from pywrangler_spark.util import keep_alive, tie_caches_to_result
+        from pywrangler_spark.util import CacheScope, keep_alive
 
-        cached = spark.range(10).persist()
+        scope = CacheScope()
+        cached = scope.persist(spark.range(10))
         cached.count()
-        result = cached.selectExpr("id * 2 AS x")
-        tie_caches_to_result(result, [cached])
+        result = scope.tie(cached.selectExpr("id * 2 AS x"))
         derived = keep_alive(result.selectExpr("x + 1 AS y"), result)
-        del result
+        del scope, result
         gc.collect()
         assert cached.storageLevel.useMemory  # derived still carries it
         assert derived.count() == 10
@@ -151,19 +185,18 @@ class TestTieCachesToResult:
     def test_keep_alive_stacks_sources(self, spark):
         import gc
 
-        from pywrangler_spark.util import keep_alive, tie_caches_to_result
+        from pywrangler_spark.util import CacheScope, keep_alive
 
-        c1 = spark.range(5).persist()
+        s1, s2 = CacheScope(), CacheScope()
+        c1 = s1.persist(spark.range(5))
         c1.count()
-        r1 = c1.selectExpr("id AS x")
-        tie_caches_to_result(r1, [c1])
-        c2 = spark.range(7).persist()
+        r1 = s1.tie(c1.selectExpr("id AS x"))
+        c2 = s2.persist(spark.range(7))
         c2.count()
-        r2 = c2.selectExpr("id AS y")
-        tie_caches_to_result(r2, [c2])
+        r2 = s2.tie(c2.selectExpr("id AS y"))
         derived = keep_alive(r1.crossJoin(r2), r1)
         derived = keep_alive(derived, r2)  # second call must stack
-        del r1, r2
+        del s1, s2, r1, r2
         gc.collect()
         assert c1.storageLevel.useMemory
         assert c2.storageLevel.useMemory
