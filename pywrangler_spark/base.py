@@ -10,7 +10,7 @@ unevaluated DataFrame for Catalyst to optimize.
 
 from __future__ import annotations
 
-from typing import Any, Dict
+from typing import Any, Dict, Optional
 
 from pyspark.sql import DataFrame
 
@@ -48,15 +48,19 @@ class BaseWrangler:
         return {name: getattr(self, name) for name in names}
 
     def set_params(self, **params: Any) -> "BaseWrangler":
-        """Set parameters by keyword; unknown names raise ``ValueError``."""
+        """Set parameters by keyword. The merged parameters go through
+        ``__init__`` again, so they are normalised and validated exactly
+        as at construction; unknown names or invalid values raise
+        ``ValueError`` and leave the wrangler unchanged."""
         valid = set(collect_init_params(type(self)))
-        for key, value in params.items():
+        for key in params:
             if key not in valid:
                 raise ValueError(
                     f"Invalid parameter {key!r} for {type(self).__name__}. "
                     f"Valid parameters: {sorted(valid)}"
                 )
-            setattr(self, key, value)
+        checked = type(self)(**{**self.get_params(), **params})
+        self.__dict__.update(vars(checked))
         return self
 
     def fit(self, *args: Any, **kwargs: Any) -> "BaseWrangler":
@@ -90,15 +94,18 @@ class SparkWrangler(BaseWrangler):
         return self.fit(df).transform(df)
 
     @staticmethod
-    def validate_columns(df: DataFrame, columns) -> None:
-        """Check referenced columns exist (case-insensitive, matching Spark's
-        default resolution; reference ``pw/pyspark/util.py:38-57``)."""
-        if not columns:
-            return
+    def validate_columns(
+        df: DataFrame, columns, target: Optional[str] = None
+    ) -> None:
+        """Check referenced columns exist and the ``target`` output column
+        does not — case-insensitive, matching Spark's default resolution
+        (reference ``pw/pyspark/util.py:38-57``)."""
         available = {c.lower() for c in df.columns}
-        for column in columns:
+        for column in columns or ():
             if column is not None and column.lower() not in available:
                 raise ValueError(
                     f"Column {column!r} does not exist. "
                     f"Available columns: {df.columns}"
                 )
+        if target is not None and target.lower() in available:
+            raise ValueError(f"target column {target!r} already exists")

@@ -4,24 +4,27 @@ single-partition window.
 ``IntervalIdentifier`` with no ``groupby_columns`` runs its window on a
 single partition: correct, but one task does all the work (SURVEY §7
 hard part (c) — at 100 TB that is not an option). This operator
-produces the same ids with bounded parallelism:
+produces the same ids with bounded parallelism. The interval semantics
+are the label kernel of ``operators.interval_identifier``, run over
+windows keyed by range-partition id (``_pid``); what this module adds is
+the stitching that gives each partition the *edge columns* the kernel
+coalesces in:
 
 1. **Range partition + local sort** on the order columns (one shuffle —
    the same cost the grouped operator pays), cache.
 2. **Pass A** (per-partition aggregate): each partition's first/last
    denoised marker. The N-row summary (N = shuffle partitions) is
    prefix/suffix-scanned with single-partition window functions and
-   broadcast-joined back, so every partition learns the marker adjacent
-   to each of its edges and run-collapse (the ``*_use_first`` dedup) is
-   decided locally even for runs that span partitions.
-3. **Pass B** (local windows keyed by partition id): kept markers +
-   local fills; per-partition kept summary (first/last kept marker,
-   resolved valid-open count, trailing-open flag, kept-start/end sums).
-   The same summary-window + broadcast-join shape resolves trailing
-   opens against the next partition's first kept marker and prefix-sums
-   the id offsets.
-4. **Pass C** (local windows again, over the cached Pass-B frame):
-   final labels = local result + broadcast per-partition offsets.
+   broadcast-joined back: the marker adjacent to each partition edge,
+   so run-collapse is decided locally even for runs that span
+   partitions.
+3. **Pass B** (local windows): kept markers, cached; per-partition kept
+   summary (first/last kept marker, resolved valid-open count,
+   trailing-open flag, kept-start/end sums). The same summary-window +
+   broadcast-join shape gives the kept marker adjacent to each edge,
+   the upstream end flag and the id offsets of the partitions before.
+4. **Pass C** (local windows again, over the cached Pass-B frame): the
+   kernel's fills and labels with those edges and offsets.
 
 All heavy work happens in partition-local windows. The cross-partition
 stitching runs as window functions over the N-row summaries inside the
@@ -43,7 +46,7 @@ from __future__ import annotations
 
 from typing import Any, List, Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from pywrangler_spark.operators.interval_identifier import (
@@ -51,8 +54,18 @@ from pywrangler_spark.operators.interval_identifier import (
     _START,
     NO_END_MARKER,
     IntervalIdentifier,
+    denoise,
+    interval_labels,
+    kept_fills,
+    kept_markers,
+    marker_neighbours,
+    order_windows,
+    preceding,
+    running,
+    sort_columns,
+    start_flags,
 )
-from pywrangler_spark.util import CacheScope
+from pywrangler_spark.util import CacheScope, wide_exchange_width
 
 
 def identify_intervals_global(
@@ -85,13 +98,10 @@ def identify_intervals_global(
         result_type=result_type,
         target_column_name=target_column_name,
     )
-    base.validate_columns(df, [marker_column, *base.orderby_columns])
-    if target_column_name in df.columns:
-        raise ValueError(f"target column {target_column_name!r} already exists")
+    base.validate_columns(
+        df, [marker_column, *base.orderby_columns], target=target_column_name
+    )
 
-    orderby = list(base.orderby_columns)
-    asc = list(base.ascending)
-    spark = df.sparkSession
     # Default the range-exchange width to the AQE initial width when
     # the session declares one (session.get_spark sets 8x the slot
     # count): an explicit repartitionByRange(N) is REPARTITION_BY_NUM,
@@ -104,27 +114,20 @@ def identify_intervals_global(
     # every pass stitches across partitions by _pid regardless of N.
     # The derivation is capped for foreign sessions that tune the AQE
     # initial width into the thousands — see wide_exchange_width.
-    from pywrangler_spark.util import wide_exchange_width
-
-    n_parts = num_partitions or wide_exchange_width(spark)
-    sort_cols = [
-        F.col(c).asc() if a else F.col(c).desc()
-        for c, a in zip(orderby, asc)
-    ]
+    n_parts = num_partitions or wide_exchange_width(df.sparkSession)
+    sort_cols = sort_columns(base.orderby_columns, base.ascending)
+    part = (
+        df.repartitionByRange(n_parts, *sort_cols)
+        .sortWithinPartitions(*sort_cols)
+        .withColumn("_pid", F.spark_partition_id())
+    )
+    w, w_rev = order_windows(["_pid"], base.orderby_columns, base.ascending)
 
     if base._identical_markers:
         # cumsum of start flags: local cumsum + per-partition prefix
         # offset (exclusive prefix sum over the N-row summary, joined
         # back by partition id — all inside one lazy plan)
-        part = (
-            df.repartitionByRange(n_parts, *sort_cols)
-            .sortWithinPartitions(*sort_cols)
-            .withColumn("_pid", F.spark_partition_id())
-        )
-        marker = F.col(marker_column)
-        part = part.withColumn(
-            "_bs", marker.eqNullSafe(F.lit(marker_start)).cast("long")
-        )
+        part = part.withColumn("_bs", start_flags(marker_column, marker_start))
         summary = part.groupBy("_pid").agg(F.sum("_bs").alias("_s"))
         offsets = summary.select(
             "_pid",
@@ -133,43 +136,23 @@ def identify_intervals_global(
             ).alias("_off"),
         )
         joined = part.join(F.broadcast(offsets), "_pid", "left")
-        w_run = Window.partitionBy("_pid").orderBy(*sort_cols).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
         return joined.select(
             *df.columns,
-            (F.sum("_bs").over(w_run) + F.col("_off")).alias(
+            (F.sum("_bs").over(running(w)) + F.col("_off")).alias(
                 target_column_name
             ),
         )
 
-    marker = F.col(marker_column)
-    is_start = marker.eqNullSafe(F.lit(marker_start))
-    is_end = marker.eqNullSafe(F.lit(marker_end))
-    denoised = (
-        F.when(is_start, F.lit(_START)).when(is_end, F.lit(_END)).cast("int")
-    )
-
     part = (
-        df.repartitionByRange(n_parts, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .withColumn("_pid", F.spark_partition_id())
         # partition-local monotone row tag: lets the per-partition
         # summaries find first/last rows with min_by/max_by straight off
         # the cached scan, no row_number window (and no extra exchange)
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn("_m", denoised)
+        part.withColumn("_mid", F.monotonically_increasing_id())
+        .withColumn("_m", denoise(marker_column, marker_start, marker_end))
     )
-    sort_cols_desc = [
-        F.col(c).desc() if a else F.col(c).asc()
-        for c, a in zip(orderby, asc)
-    ]
     scope = CacheScope()
     return scope.tie(
-        _general_path(
-            scope.persist(part), df.columns, base, sort_cols,
-            sort_cols_desc, target_column_name, scope,
-        )
+        _general_path(scope.persist(part), df.columns, base, w, w_rev, scope)
     )
 
 
@@ -195,22 +178,10 @@ def _general_path(
     part: DataFrame,
     original: List[str],
     base: IntervalIdentifier,
-    sort_cols: List[Column],
-    sort_cols_desc: List[Column],
-    out: str,
+    w: WindowSpec,
+    w_rev: WindowSpec,
     scope: CacheScope,
 ) -> DataFrame:
-    w = Window.partitionBy("_pid").orderBy(*sort_cols)
-    w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_before = w.rowsBetween(Window.unboundedPreceding, -1)
-    # "next non-null" runs as last() over a reversed-order RUNNING
-    # frame: Spark's unbounded-FOLLOWING frame rescans the rest of the
-    # partition per row (O(rows²) — measured 64x at a 10x scale-up on
-    # this very operator), while running frames are incremental
-    w_after = Window.partitionBy("_pid").orderBy(*sort_cols_desc).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-
     # ---- pass A: marker boundary summary -------------------------------
     # min_by/max_by ignore rows whose ordering expression is null, so
     # marker-less partitions still get a summary row (null first/last) —
@@ -233,39 +204,19 @@ def _general_path(
 
     # ---- pass B: kept markers + kept summary ---------------------------
     s2 = part.join(F.broadcast(fills_a), "_pid", "left")
-    prev_m = F.coalesce(
-        F.last(m, ignorenulls=True).over(w_before),
-        F.col("_before_m").cast("int"),
-    )
-    next_m = F.coalesce(
-        F.last(m, ignorenulls=True).over(w_after),
-        F.col("_after_m").cast("int"),
-    )
-    s2 = s2.select("*", prev_m.alias("_pm"), next_m.alias("_nm"))
-
-    def _kept(code: int, use_first: bool) -> Column:
-        neighbour = F.col("_pm") if use_first else F.col("_nm")
-        return m.eqNullSafe(F.lit(code)) & ~neighbour.eqNullSafe(F.lit(code))
-
-    kept_start = _kept(_START, base.marker_start_use_first)
-    kept_end = _kept(_END, base.marker_end_use_first)
-    km = (
-        F.when(kept_start, F.lit(_START))
-        .when(kept_end, F.lit(_END))
-        .cast("int")
-    )
+    s2 = s2.select("*", *marker_neighbours(w, w_rev, "_before_m", "_after_m"))
     s3 = scope.persist(
         s2.select(
             *original, "_pid", "_mid",
-            kept_start.cast("long").alias("_bs"),
-            kept_end.cast("long").alias("_be"),
-            km.alias("_km"),
+            *kept_markers(
+                base.marker_start_use_first, base.marker_end_use_first
+            ),
         )
     )
 
     kmc = F.col("_km")
     # next kept marker within the partition (local)
-    local_next_k = F.last(kmc, ignorenulls=True).over(w_after)
+    local_next_k = F.last(kmc, ignorenulls=True).over(preceding(w_rev))
     summary_b = (
         s3.withColumn("_nk", local_next_k)
         .groupBy("_pid")
@@ -350,53 +301,12 @@ def _general_path(
     )
 
     # ---- pass C: final labels ------------------------------------------
-    s4 = s3.join(F.broadcast(fills_b), "_pid", "left")
-    a_col = F.coalesce(
-        F.last(kmc, ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-        F.col("_before_k").cast("int"),
+    s4 = s3.join(F.broadcast(fills_b), "_pid", "left").select(
+        "*", *kept_fills(w, w_rev, "_before_k", "_after_k", "_prev_last_be")
     )
-    prev_k = F.coalesce(
-        F.last(kmc, ignorenulls=True).over(w_before),
-        F.col("_before_k").cast("int"),
-    )
-    next_k = F.coalesce(
-        F.last(kmc, ignorenulls=True).over(w_after),
-        F.col("_after_k").cast("int"),
-    )
-    be_lag = F.coalesce(
-        F.lag("_be", 1).over(w), F.col("_prev_last_be").cast("long")
-    )
-    s4 = s4.select(
-        "*",
-        a_col.alias("_a"),
-        prev_k.alias("_prev"),
-        next_k.alias("_next"),
-        be_lag.alias("_be_lag"),
-    )
-    valid = (
-        F.col("_a").eqNullSafe(F.lit(_START))
-        & F.col("_next").eqNullSafe(F.lit(_END))
-    ) | (
-        F.col("_a").eqNullSafe(F.lit(_END))
-        & F.col("_prev").eqNullSafe(F.lit(_START))
-    )
-
-    if base.result_type == "raw":
-        iid = F.sum(F.col("_bs") + F.col("_be_lag")).over(w_run) + F.col(
-            "_raw_off"
-        )
-        return s4.select(*original, iid.alias(out))
-    if base.result_type == "valid":
-        raw = F.sum(F.col("_bs") + F.col("_be_lag")).over(w_run) + F.col(
-            "_raw_off"
-        )
-        return s4.select(
-            *original, F.when(valid, raw).otherwise(F.lit(0)).alias(out)
-        )
-    opens_valid = (F.col("_bs") == 1) & valid
-    enum = F.sum(opens_valid.cast("long")).over(w_run) + F.col("_enum_off")
     return s4.select(
-        *original, F.when(valid, enum).otherwise(F.lit(0)).alias(out)
+        *original,
+        interval_labels(base.result_type, w, "_raw_off", "_enum_off").alias(
+            base.target_column_name
+        ),
     )

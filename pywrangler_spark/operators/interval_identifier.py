@@ -64,17 +64,31 @@ UDFs anywhere (whole-stage codegen applies end-to-end).
 
 A window without ``groupby_columns`` degenerates to a single partition —
 fine for tests, fatal at scale; we warn (Spark does too).
+
+One definition, several engines
+-------------------------------
+The stages above are module-level helpers — the *label kernel*
+(:func:`denoise`, :func:`marker_neighbours`, :func:`kept_markers`,
+:func:`kept_fills`, :func:`interval_labels`). Each returns columns over
+two window specs (partition + order, and the same partition in reversed
+order). :class:`IntervalIdentifier` calls them over its group windows.
+``operators.interval_global`` calls the same helpers over its
+range-partition windows, adding *edge columns*: the marker just outside
+each partition edge and the id offsets of the partitions before it,
+which its N-row summaries broadcast in. :class:`IntervalParams` is the
+one parameter contract (constructor, normalisation, validation) of the
+Spark and the pandas engine; ``set_params`` re-runs it.
 """
 
 from __future__ import annotations
 
 import warnings
-from typing import Any, Callable, Optional, Sequence, Union
+from typing import Any, Callable, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from pywrangler_spark.base import SparkWrangler
+from pywrangler_spark.base import BaseWrangler, SparkWrangler
 from pywrangler_spark.util import ensure_iterable
 
 
@@ -94,8 +108,174 @@ RESULT_TYPES = ("raw", "valid", "enumerated")
 _START, _END = 1, 2
 
 
-class IntervalIdentifier(SparkWrangler):
-    """Identify intervals delimited by start/end marker values.
+# -- label kernel -----------------------------------------------------------
+
+
+def sort_columns(
+    orderby: Sequence[str], ascending: Sequence[bool], reverse: bool = False
+) -> List[Column]:
+    """Sort expressions for ``orderby``/``ascending``, optionally reversed."""
+    return [
+        F.col(c).asc() if asc != reverse else F.col(c).desc()
+        for c, asc in zip(orderby, ascending)
+    ]
+
+
+def order_windows(
+    partition: Sequence[Any], orderby: Sequence[str], ascending: Sequence[bool]
+) -> Tuple[WindowSpec, WindowSpec]:
+    """The kernel's two window specs: ``partition`` ordered as given,
+    and the same partition in reversed order."""
+    return tuple(
+        Window.partitionBy(*partition).orderBy(
+            *sort_columns(orderby, ascending, reverse)
+        )
+        for reverse in (False, True)
+    )
+
+
+def preceding(w: WindowSpec) -> WindowSpec:
+    """Rows strictly before the current one. Over the reversed spec,
+    ``last(..., ignorenulls=True)`` on this frame is "next non-null":
+    Spark executes ``first`` over an unbounded-FOLLOWING frame by
+    rescanning the rest of the partition per row — O(rows²) per group,
+    measured 64x at a 10x scale-up — while running frames accumulate
+    incrementally."""
+    return w.rowsBetween(Window.unboundedPreceding, -1)
+
+
+def running(w: WindowSpec) -> WindowSpec:
+    """Rows up to and including the current one."""
+    return w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+
+def _edge(value: Column, edge: Optional[str], dtype: str) -> Column:
+    """``value``, falling back to the edge column when the partition
+    holds no such value."""
+    return value if edge is None else F.coalesce(value, F.col(edge).cast(dtype))
+
+
+def _offset(value: Column, offset: Optional[str]) -> Column:
+    return value if offset is None else value + F.col(offset)
+
+
+def start_flags(marker_column: str, marker_start: Any) -> Column:
+    """1 on every start-marker row, else 0 — the whole kernel when the
+    end marker is omitted or equals the start marker."""
+    return F.col(marker_column).eqNullSafe(F.lit(marker_start)).cast("long")
+
+
+def denoise(marker_column: str, marker_start: Any, marker_end: Any) -> Column:
+    """Stage 1: the marker column mapped to ``_START``/``_END``/NULL."""
+    marker = F.col(marker_column)
+    return (
+        F.when(marker.eqNullSafe(F.lit(marker_start)), F.lit(_START))
+        .when(marker.eqNullSafe(F.lit(marker_end)), F.lit(_END))
+        .cast("int")
+    )
+
+
+def marker_neighbours(
+    w: WindowSpec,
+    w_rev: WindowSpec,
+    before: Optional[str] = None,
+    after: Optional[str] = None,
+) -> List[Column]:
+    """Stage 2 over ``_m``: the nearest denoised marker strictly before
+    (``_pm``) and strictly after (``_nm``) each row."""
+    m = F.col("_m")
+    return [
+        _edge(F.last(m, ignorenulls=True).over(preceding(w)), before, "int")
+        .alias("_pm"),
+        _edge(F.last(m, ignorenulls=True).over(preceding(w_rev)), after, "int")
+        .alias("_nm"),
+    ]
+
+
+def kept_markers(start_use_first: bool, end_use_first: bool) -> List[Column]:
+    """Stage 3: collapse runs. A run of equal markers in the denoised
+    subsequence keeps its first element (neighbour-before differs) or
+    its last (neighbour-after differs) per the use_first flags. Gives
+    the kept-start flag ``_bs``, kept-end flag ``_be`` and kept marker
+    ``_km``."""
+    m = F.col("_m")
+
+    def kept(code: int, use_first: bool) -> Column:
+        neighbour = F.col("_pm") if use_first else F.col("_nm")
+        return m.eqNullSafe(F.lit(code)) & ~neighbour.eqNullSafe(F.lit(code))
+
+    kept_start = kept(_START, start_use_first)
+    kept_end = kept(_END, end_use_first)
+    return [
+        kept_start.cast("long").alias("_bs"),
+        kept_end.cast("long").alias("_be"),
+        F.when(kept_start, F.lit(_START))
+        .when(kept_end, F.lit(_END))
+        .cast("int")
+        .alias("_km"),
+    ]
+
+
+def kept_fills(
+    w: WindowSpec,
+    w_rev: WindowSpec,
+    before: Optional[str] = None,
+    after: Optional[str] = None,
+    prev_end: Optional[str] = None,
+) -> List[Column]:
+    """Stage 4 over ``_km``/``_be``: the last kept marker at-or-before
+    (``_a``), strictly before (``_prev``) and strictly after (``_next``)
+    each row, and the previous row's kept-end flag (``_be_lag``). The
+    first row of the whole order sees a virtual end before it (lag
+    default 1); ``prev_end`` replaces it with the flag upstream."""
+    km = F.col("_km")
+    be_lag = F.lag("_be", 1, 1 if prev_end is None else None).over(w)
+    return [
+        _edge(F.last(km, ignorenulls=True).over(running(w)), before, "int")
+        .alias("_a"),
+        _edge(F.last(km, ignorenulls=True).over(preceding(w)), before, "int")
+        .alias("_prev"),
+        _edge(F.last(km, ignorenulls=True).over(preceding(w_rev)), after, "int")
+        .alias("_next"),
+        _edge(be_lag, prev_end, "long").alias("_be_lag"),
+    ]
+
+
+def interval_labels(
+    result_type: str,
+    w: WindowSpec,
+    raw_offset: Optional[str] = None,
+    enum_offset: Optional[str] = None,
+) -> Column:
+    """Stage 5: the ids per ``result_type``. Kept markers strictly
+    alternate start/end, so a row lies in a valid (start…end) interval
+    iff the last kept marker at or before it is a start with an end
+    still ahead, or the row is the closing end itself. Raw ids are a
+    running sum of kept-start + lagged kept-end flags; enumerated ids a
+    running sum of valid-interval starts. The offsets are added to the
+    running sums."""
+    valid = (
+        F.col("_a").eqNullSafe(F.lit(_START))
+        & F.col("_next").eqNullSafe(F.lit(_END))
+    ) | (
+        F.col("_a").eqNullSafe(F.lit(_END))
+        & F.col("_prev").eqNullSafe(F.lit(_START))
+    )
+    if result_type == "enumerated":
+        opens_valid = (F.col("_bs") == 1) & valid
+        enum = F.sum(opens_valid.cast("long")).over(running(w))
+        return F.when(valid, _offset(enum, enum_offset)).otherwise(F.lit(0))
+    raw = _offset(
+        F.sum(F.col("_bs") + F.col("_be_lag")).over(running(w)), raw_offset
+    )
+    return raw if result_type == "raw" else F.when(valid, raw).otherwise(F.lit(0))
+
+
+# -- parameter contract ------------------------------------------------------
+
+
+class IntervalParams(BaseWrangler):
+    """The IntervalIdentifier parameter contract of every engine.
 
     Parameters
     ----------
@@ -110,12 +290,14 @@ class IntervalIdentifier(SparkWrangler):
         Which marker of a consecutive run delimits the interval (see module
         docstring). Defaults: last start, first end (shortest interval).
     orderby_columns
-        Required (Spark DataFrames have no implicit order).
+        Sort columns. Required by Spark (DataFrames have no implicit
+        order); pandas keeps the frame's order when omitted.
     groupby_columns
         Partition keys; intervals never cross groups. Strongly recommended
-        at scale — without them the window is a single partition.
+        at scale — without them the Spark window is a single partition.
     ascending
-        Per-orderby-column sort direction; defaults to all ascending.
+        Per-orderby-column sort direction (booleans); defaults to all
+        ascending.
     result_type
         ``raw`` | ``valid`` | ``enumerated`` (default).
     target_column_name
@@ -150,7 +332,6 @@ class IntervalIdentifier(SparkWrangler):
             raise ValueError(
                 f"result_type must be one of {RESULT_TYPES}, got {result_type!r}"
             )
-
         if self.ascending is None:
             self.ascending = tuple(True for _ in self.orderby_columns)
         elif len(self.ascending) != len(self.orderby_columns):
@@ -160,8 +341,6 @@ class IntervalIdentifier(SparkWrangler):
             )
         if not all(isinstance(a, bool) for a in self.ascending):
             raise ValueError("`ascending` entries must be booleans")
-
-    # -- properties ---------------------------------------------------------
 
     @property
     def preserves_sample_size(self) -> bool:
@@ -174,54 +353,39 @@ class IntervalIdentifier(SparkWrangler):
             or self.marker_end == self.marker_start
         )
 
-    # -- plan building ------------------------------------------------------
 
-    def _window(self) -> WindowSpec:
+class IntervalIdentifier(IntervalParams, SparkWrangler):
+    """Identify intervals delimited by start/end marker values on Spark.
+
+    Parameters: see :class:`IntervalParams`.
+    """
+
+    def _windows(self) -> Tuple[WindowSpec, WindowSpec]:
         if not self.orderby_columns:
             raise ValueError(
                 "orderby_columns is required: Spark DataFrames have no "
                 "implicit row order."
             )
-        order = [
-            F.col(c).asc() if asc else F.col(c).desc()
-            for c, asc in zip(self.orderby_columns, self.ascending)
-        ]
-        if self.groupby_columns:
-            return Window.partitionBy(*self.groupby_columns).orderBy(*order)
-        warnings.warn(
-            "IntervalIdentifier without groupby_columns runs the window on a "
-            "single partition; supply group keys for distributed execution.",
-            stacklevel=3,
+        if not self.groupby_columns:
+            warnings.warn(
+                "IntervalIdentifier without groupby_columns runs the window "
+                "on a single partition; supply group keys for distributed "
+                "execution.",
+                stacklevel=3,
+            )
+        return order_windows(
+            self.groupby_columns or [F.lit(0)],
+            self.orderby_columns,
+            self.ascending,
         )
-        return Window.partitionBy(F.lit(0)).orderBy(*order)
-
-    def _window_reversed(self) -> WindowSpec:
-        """Same partitioning, reversed order. "Next non-null" must run
-        as ``last(...)`` over a RUNNING frame on this spec: Spark
-        executes ``first`` over an unbounded-FOLLOWING frame by
-        rescanning the rest of the partition per row — O(rows²) per
-        group, measured 64x at a 10x scale-up — while running frames
-        accumulate incrementally."""
-        order = [
-            F.col(c).desc() if asc else F.col(c).asc()
-            for c, asc in zip(self.orderby_columns, self.ascending)
-        ]
-        if self.groupby_columns:
-            return Window.partitionBy(*self.groupby_columns).orderBy(*order)
-        return Window.partitionBy(F.lit(0)).orderBy(*order)
 
     def transform(self, df: DataFrame) -> DataFrame:
         self.validate_columns(
-            df, [self.marker_column, *self.orderby_columns, *self.groupby_columns]
+            df,
+            [self.marker_column, *self.orderby_columns, *self.groupby_columns],
+            target=self.target_column_name,
         )
-        if self.target_column_name in df.columns:
-            raise ValueError(
-                f"target column {self.target_column_name!r} already exists"
-            )
-
-        w = self._window()
-        w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        marker = F.col(self.marker_column)
+        w, w_rev = self._windows()
         original = list(df.columns)
         out = self.target_column_name
 
@@ -231,107 +395,26 @@ class IntervalIdentifier(SparkWrangler):
             # for all result types. (Reference short-circuit:
             # pw/pyspark/wranglers/interval_identifier.py:354-373.)
             iid = F.sum(
-                marker.eqNullSafe(F.lit(self.marker_start)).cast("long")
-            ).over(w_run)
+                start_flags(self.marker_column, self.marker_start)
+            ).over(running(w))
             return df.select(*original, iid.alias(out))
 
-        # ---- stage 1: denoised marker + raw start/end membership ----------
-        is_start = marker.eqNullSafe(F.lit(self.marker_start))
-        is_end = marker.eqNullSafe(F.lit(self.marker_end))
-        denoised = (
-            F.when(is_start, F.lit(_START))
-            .when(is_end, F.lit(_END))
-            .cast("int")
+        s1 = df.select(
+            *original,
+            denoise(self.marker_column, self.marker_start, self.marker_end)
+            .alias("_m"),
         )
-        s1 = df.select(*original, denoised.alias("_m"))
-
-        # ---- stage 2: neighbours in the denoised marker subsequence -------
-        m = F.col("_m")
-        prev_m = F.last(m, ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, -1)
-        )
-        next_m = F.last(m, ignorenulls=True).over(
-            self._window_reversed().rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-        )
-        s2 = s1.select("*", prev_m.alias("_pm"), next_m.alias("_nm"))
-
-        # ---- stage 3: collapse runs → kept markers -------------------------
-        # A run of equal markers in the denoised subsequence keeps its first
-        # element (neighbour-before differs) or its last (neighbour-after
-        # differs) per the use_first flags.
-        def _kept(code: int, use_first: bool) -> Column:
-            neighbour = F.col("_pm") if use_first else F.col("_nm")
-            return m.eqNullSafe(F.lit(code)) & ~neighbour.eqNullSafe(
-                F.lit(code)
-            )
-
-        kept_start = _kept(_START, self.marker_start_use_first)
-        kept_end = _kept(_END, self.marker_end_use_first)
-        km = (
-            F.when(kept_start, F.lit(_START))
-            .when(kept_end, F.lit(_END))
-            .cast("int")
-        )
+        s2 = s1.select("*", *marker_neighbours(w, w_rev))
         s3 = s2.select(
             *original,
-            kept_start.cast("long").alias("_bs"),
-            kept_end.cast("long").alias("_be"),
-            km.alias("_km"),
+            *kept_markers(
+                self.marker_start_use_first, self.marker_end_use_first
+            ),
         )
-
-        # ---- stage 4: kept-marker fills + lagged end flag ------------------
-        kmc = F.col("_km")
-        at_or_before = F.last(kmc, ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
+        s4 = s3.select("*", *kept_fills(w, w_rev))
+        return s4.select(
+            *original, interval_labels(self.result_type, w).alias(out)
         )
-        before = F.last(kmc, ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, -1)
-        )
-        after = F.last(kmc, ignorenulls=True).over(
-            self._window_reversed().rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-        )
-        s4 = s3.select(
-            "*",
-            at_or_before.alias("_a"),
-            before.alias("_prev"),
-            after.alias("_next"),
-            F.lag("_be", 1, 1).over(w).alias("_be_lag"),
-        )
-
-        # ---- stage 5: validity + ids ---------------------------------------
-        # Kept markers strictly alternate start/end within a group, so a row
-        # lies in a valid (start…end) interval iff the last kept marker at or
-        # before it is a start with an end still ahead, or the row is the
-        # closing end itself.
-        valid = (
-            F.col("_a").eqNullSafe(F.lit(_START))
-            & F.col("_next").eqNullSafe(F.lit(_END))
-        ) | (
-            F.col("_a").eqNullSafe(F.lit(_END))
-            & F.col("_prev").eqNullSafe(F.lit(_START))
-        )
-
-        if self.result_type == "raw":
-            iid = F.sum(F.col("_bs") + F.col("_be_lag")).over(w_run)
-            s5 = s4.select(*original, iid.alias(out))
-        elif self.result_type == "valid":
-            raw = F.sum(F.col("_bs") + F.col("_be_lag")).over(w_run)
-            s5 = s4.select(
-                *original,
-                F.when(valid, raw).otherwise(F.lit(0)).alias(out),
-            )
-        else:  # enumerated
-            opens_valid = (F.col("_bs") == 1) & valid
-            enum = F.sum(opens_valid.cast("long")).over(w_run)
-            s5 = s4.select(
-                *original,
-                F.when(valid, enum).otherwise(F.lit(0)).alias(out),
-            )
-        return s5
 
 
 def identify_intervals(**params: Any) -> Callable[[DataFrame], DataFrame]:

@@ -13,67 +13,25 @@ Use for small-data/debug workflows; the Spark engine is the scale path.
 from __future__ import annotations
 
 import re
-from typing import Any, Optional, Sequence, Union
+from typing import Any, Sequence, Union
 
 import numpy as np
 import pandas as pd
 
-from pywrangler_spark.base import BaseWrangler
-from pywrangler_spark.operators.interval_identifier import (
-    NO_END_MARKER,
-    RESULT_TYPES,
-)
+from pywrangler_spark.operators.interval_identifier import IntervalParams
 from pywrangler_spark.testing.spec import naive_interval_ids
 from pywrangler_spark.util import ensure_iterable
 
 
-class PandasIntervalIdentifier(BaseWrangler):
+class PandasIntervalIdentifier(IntervalParams):
     """IntervalIdentifier on pandas DataFrames.
 
-    Same constructor contract as the Spark
-    :class:`~pywrangler_spark.operators.interval_identifier.IntervalIdentifier`;
+    Same parameter contract as the Spark
+    :class:`~pywrangler_spark.operators.interval_identifier.IntervalIdentifier`
+    (:class:`~pywrangler_spark.operators.interval_identifier.IntervalParams`);
     unlike Spark, ``orderby_columns`` may be omitted (pandas frames have
     an implicit order). Output preserves the input index and row order.
     """
-
-    def __init__(
-        self,
-        marker_column: str,
-        marker_start: Any,
-        marker_end: Any = NO_END_MARKER,
-        marker_start_use_first: bool = False,
-        marker_end_use_first: bool = True,
-        orderby_columns: Optional[Union[str, Sequence[str]]] = None,
-        groupby_columns: Optional[Union[str, Sequence[str]]] = None,
-        ascending: Optional[Union[bool, Sequence[bool]]] = None,
-        result_type: str = "enumerated",
-        target_column_name: str = "iids",
-    ):
-        self.marker_column = marker_column
-        self.marker_start = marker_start
-        self.marker_end = marker_end
-        self.marker_start_use_first = marker_start_use_first
-        self.marker_end_use_first = marker_end_use_first
-        self.orderby_columns = ensure_iterable(orderby_columns)
-        self.groupby_columns = ensure_iterable(groupby_columns)
-        self.ascending = ensure_iterable(ascending, retain_none=True)
-        self.result_type = result_type
-        self.target_column_name = target_column_name
-
-        if result_type not in RESULT_TYPES:
-            raise ValueError(
-                f"result_type must be one of {RESULT_TYPES}, got {result_type!r}"
-            )
-        if self.ascending is None:
-            self.ascending = tuple(True for _ in self.orderby_columns)
-        elif len(self.ascending) != len(self.orderby_columns):
-            raise ValueError(
-                "`ascending` must match `orderby_columns` in length"
-            )
-
-    @property
-    def preserves_sample_size(self) -> bool:
-        return True
 
     @property
     def computation_engine(self) -> str:

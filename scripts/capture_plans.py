@@ -27,11 +27,8 @@ def main() -> None:
         "plans", tag,
     )
     os.makedirs(out_dir, exist_ok=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
-        "capture-plans", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={"spark.driver.memory": "48g"},
+        "capture-plans", extra_conf={"spark.driver.memory": "48g"}
     )
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:

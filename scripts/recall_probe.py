@@ -180,11 +180,8 @@ def main() -> int:
     ]
     fams = args.families.split(",")
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
-        "recall-probe", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={"spark.driver.memory": "48g"},
+        "recall-probe", extra_conf={"spark.driver.memory": "48g"}
     )
     spark.sparkContext.setLogLevel("ERROR")
     from pywrangler_spark.queries.similarity import _emb

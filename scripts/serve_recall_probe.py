@@ -75,12 +75,8 @@ def main() -> int:
     )
     from pywrangler_spark.sources import read_parquet
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
-        "serve-recall-probe",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={"spark.driver.memory": "48g"},
+        "serve-recall-probe", extra_conf={"spark.driver.memory": "48g"}
     )
     spark.sparkContext.setLogLevel("ERROR")
 

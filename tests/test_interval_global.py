@@ -119,3 +119,15 @@ def test_plan_construction_runs_no_jobs(spark):
     assert after == before, "plan construction triggered Spark jobs"
     # and the plan still executes correctly after the laziness check
     assert len(out.collect()) == 400
+
+
+def test_target_collision_is_case_insensitive(spark):
+    df = _frames(spark, [0, 1, 2]).withColumnRenamed("marker", "IIDS")
+    with pytest.raises(ValueError, match="already exists"):
+        identify_intervals_global(
+            df,
+            marker_column="IIDS",
+            marker_start=START,
+            marker_end=END,
+            orderby_columns="order",
+        )

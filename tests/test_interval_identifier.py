@@ -399,3 +399,49 @@ class TestValidation:
         assert w.get_params()["target_column_name"] == "other"
         with pytest.raises(ValueError, match="Invalid parameter"):
             w.set_params(bogus=1)
+
+    def test_target_collision_is_case_insensitive(self, spark):
+        # Spark resolves "iids" against "IIDS" too: a second column
+        # would make every later reference ambiguous
+        df = self.make(spark).withColumn("IIDS", F.lit(1))
+        with pytest.raises(ValueError, match="already exists"):
+            IntervalIdentifier(
+                marker_column="marker",
+                marker_start=START,
+                orderby_columns="order",
+                groupby_columns="groupby",
+            ).fit_transform(df)
+
+    def test_set_params_validates(self):
+        w = IntervalIdentifier(
+            marker_column="marker",
+            marker_start=START,
+            orderby_columns="order",
+        )
+        with pytest.raises(ValueError, match="result_type"):
+            w.set_params(result_type="rwa")
+        assert w.result_type == "enumerated", "a rejected value was kept"
+        with pytest.raises(ValueError, match="booleans"):
+            w.set_params(ascending=[1])
+        # the defaulted direction covers one column, not two
+        with pytest.raises(ValueError, match="ascending"):
+            w.set_params(orderby_columns=["order", "groupby"])
+        assert w.get_params()["orderby_columns"] == ("order",)
+
+    def test_set_params_normalises(self, spark):
+        df = spark.createDataFrame(
+            [Row(order=i, groupby=1, marker=m)
+             for i, m in enumerate([NOISE, START, NOISE, END, NOISE])],
+            schema="order int, groupby int, marker int",
+        )
+        w = IntervalIdentifier(
+            marker_column="marker",
+            marker_start=START,
+            marker_end=END,
+            orderby_columns="groupby",
+            groupby_columns="groupby",
+        )
+        w.set_params(orderby_columns="order")
+        assert w.get_params()["orderby_columns"] == ("order",)
+        got = [r.iids for r in w.fit_transform(df).orderBy("order").collect()]
+        assert got == [0, 1, 1, 1, 0]

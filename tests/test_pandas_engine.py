@@ -102,6 +102,24 @@ def test_pandas_validation():
         ).fit_transform(pdf)
 
 
+def test_pandas_shares_the_parameter_contract():
+    with pytest.raises(ValueError, match="booleans"):
+        PandasIntervalIdentifier(
+            marker_column="marker",
+            marker_start=START,
+            orderby_columns="order",
+            ascending=[1],
+        )
+    w = PandasIntervalIdentifier(
+        marker_column="marker", marker_start=START, marker_end=END
+    )
+    with pytest.raises(ValueError, match="result_type"):
+        w.set_params(result_type="rwa")
+    w.set_params(result_type="raw")
+    pdf = pd.DataFrame({"marker": [0, 1, 0, 2, 0]})
+    assert list(w.fit_transform(pdf)["iids"]) == [1, 2, 2, 2, 3]
+
+
 class TestSessionizeTwin:
     def test_engines_agree_on_random_streams(self, spark):
         import datetime as dt
