@@ -7,7 +7,8 @@ a ``util.CacheScope`` and is freed when its owner lets go.
   caches while its result is held, also through a garbage collection
   (the r12 derived-result trap: a projection of an operator result
   without ``util.keep_alive`` lets the operator's caches drain before
-  execution);
+  execution); the span/containment/simhash queries, which derive a
+  projection from an operator result, keep this check by name too;
 - one cached-operator instance called twice: dropping one result frees
   only that call's caches;
 - no bare ``.persist(``/``.cache(`` outside ``CacheScope`` and
@@ -74,6 +75,24 @@ def test_dropped_query_result_leaves_no_cache(spark, name, monkeypatch):
     del df
     gc.collect()
     assert _cache_empty(spark), f"{name} leaves a persisted frame behind"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_span_mask",
+        "dedup_span_excise",
+        "dedup_containment",
+        "dedup_simhash_near",
+    ],
+)
+def test_held_derived_result_keeps_operator_caches(spark, name):
+    df = QUERIES[name](spark, SF)
+    gc.collect()
+    plan = df._jdf.queryExecution().withCachedData().toString()
+    assert "InMemoryRelation" in plan, f"{name} lost its caches early"
+    del df
+    gc.collect()
 
 
 OPERATORS = {
