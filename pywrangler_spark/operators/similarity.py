@@ -2,10 +2,12 @@
 
 Six tiers, trading exactness for compute or memory:
 
-- **Brute force** (`topk_cosine`): broadcast the (small) query set against
-  the corpus, compute cosine in JVM array expressions, rank per query.
-  Exact; cost O(|queries| × corpus). The baseline and the oracle-checked
-  path.
+- **Brute force** (`topk_cosine`): exact; cost O(|queries| × corpus).
+  The baseline and the oracle-checked path. With ``query_filter`` the
+  collected query set is GEMMed against each Arrow batch in numpy, each
+  batch keeps its top-L per query, and those candidates are re-scored
+  in the JVM — the same rows the all-pairs plan ranks. Without a filter
+  every row is a query and the frame is cross-joined with itself.
 - **LSH-bucketed** (`topk_cosine_lsh`): random-hyperplane signatures
   (seeded, deterministic) assign each vector to a bucket; candidates are
   corpus vectors sharing the query's bucket (optionally within hamming
@@ -21,6 +23,22 @@ Six tiers, trading exactness for compute or memory:
   config; scoring is table lookups, never raw-vector distances).
 - **IVF-PQ** (`topk_cosine_ivfpq`): cells prune, codes score — the
   canonical billion-vector serving composition.
+
+Each tier writes only its candidate generator (cross join, LSH buckets,
+IVF cells, int8 codes, PQ codes, IVF-PQ cells); candidate → refine →
+rank is one shared core:
+
+- query side: ``_query_vectors`` (a broadcast pair-join side) or
+  ``_collected_queries`` (the bounded set collected driver-side and
+  unit-normalised for the numpy generators, whose batch-local query
+  indices ``_served`` maps back to ids, dropping self-matches);
+- ``_batch_top``: one Arrow batch's top-L per query under the global
+  order, so a numpy generator ships n_batches x Q x L rows, never
+  corpus x Q; ``_adc_tables`` / ``_adc_scores`` are the PQ lookups;
+- ``_exact_scores``: the one JVM cosine over pair rows (the near-dup
+  self join is the only other ``_cosine`` caller); ``_exact_rerank``
+  re-scores an output-sized candidate list with it;
+- ``_ranked``: the per-query rank window.
 
 Scores are rounded to 6 dp before ranking so ranking is reproducible
 across engines (f64 noise cannot reorder), with vector id as the final
@@ -84,6 +102,204 @@ def _cosine(qv: Column, bv: Column, qn: Column, bn: Column) -> Column:
     """round(dot/(|q||b|), 6) — identical f64 op order to the oracle SQL
     (index-ordered fold, norm product, nullif zero guard)."""
     return F.round(dot(qv, bv) / F.nullif(qn * bn, F.lit(0.0)), 6)
+
+
+# Batch-local slots past k + 1 in the exact tier's numpy candidate stage:
+# they absorb round-6 ties at rank k and a 1-ulp numpy-vs-JVM dot product
+# disagreement at a rounding boundary (see topk_cosine).
+_CANDIDATE_MARGIN = 8
+
+
+def _query_rows(df: DataFrame, query_filter: Optional[Column]) -> DataFrame:
+    return df if query_filter is None else df.filter(query_filter)
+
+
+def _query_vectors(df: DataFrame, id_column: str, vector_column: str,
+                   query_filter: Optional[Column]) -> DataFrame:
+    """The query side of a pair join: ``(_qid, _qv, _qn)`` over the rows
+    matching ``query_filter`` (every row when None)."""
+    return _normed_vectors(_query_rows(df, query_filter), id_column,
+                           vector_column, "_qid", "_qv", "_qn")
+
+
+def _cross_pairs(base: DataFrame, queries: DataFrame) -> DataFrame:
+    """Every (corpus ``_id``, broadcast query ``_qid``) pair but self."""
+    return base.crossJoin(F.broadcast(queries)).filter(
+        F.col("_id") != F.col("_qid")
+    )
+
+
+def _exact_scores(pairs: DataFrame, score: str) -> DataFrame:
+    """``(query_id, neighbor_id, score)``: the exact JVM cosine of pair
+    rows carrying the corpus ``(_id, _bv, _bn)`` and query ``(_qid, _qv,
+    _qn)`` columns of :func:`_normed_vectors`."""
+    return pairs.select(
+        F.col("_qid").alias("query_id"),
+        F.col("_id").alias("neighbor_id"),
+        _cosine(F.col("_qv"), F.col("_bv"),
+                F.col("_qn"), F.col("_bn")).alias(score),
+    )
+
+
+def _ranked(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """Per-query top-k: rank by (score desc, neighbor_id asc)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _all_pairs(df: DataFrame, id_column: str, vector_column: str, k: int,
+               score: str) -> DataFrame:
+    """Exact top-k with every row a query: score all pairs, rank."""
+    base = _normed_vectors(df, id_column, vector_column)
+    queries = _query_vectors(df, id_column, vector_column, None)
+    return _ranked(_exact_scores(_cross_pairs(base, queries), score), score, k)
+
+
+def _exact_rerank(
+    df: DataFrame,
+    cand: DataFrame,
+    id_column: str,
+    vector_column: str,
+    k: int,
+    query_filter: Optional[Column],
+    score: str,
+) -> DataFrame:
+    """FAISS-style refine stage: exactly re-score an approximate
+    candidate list (``query_id, neighbor_id``) and keep the true top-k.
+
+    The candidate set is output-sized (queries x k x rerank), so it
+    BROADCASTS against the corpus scan — one BHJ picks up the raw
+    neighbor vectors, a second broadcast joins the (small) query
+    vectors, and :func:`_exact_scores` scores them. The final window
+    shuffles only the candidate rows."""
+    base = _normed_vectors(df, id_column, vector_column)
+    picked = base.join(
+        F.broadcast(cand.select("query_id", "neighbor_id")),
+        base["_id"] == F.col("neighbor_id"),
+    )
+    paired = picked.join(
+        F.broadcast(
+            _query_vectors(df, id_column, vector_column, query_filter)
+        ),
+        F.col("query_id") == F.col("_qid"),
+    )
+    return _ranked(_exact_scores(paired, score), score, k)
+
+
+def _collected_queries(df: DataFrame, id_column: str, vector_column: str,
+                       query_filter: Column):
+    """The (bounded) query set collected driver-side as ``(ids, (Q, d)
+    f64 matrix)`` with unit rows (zero vectors stay zero), or None when
+    ``query_filter`` matches no row."""
+    rows = df.filter(query_filter).select(
+        F.col(id_column).alias("_qid"),
+        to_double_array(F.col(vector_column)).alias("_qv"),
+    ).collect()
+    if not rows:
+        return None
+    qmat = np.stack([np.asarray(r["_qv"], dtype="float64") for r in rows])
+    norms = np.linalg.norm(qmat, axis=1, keepdims=True)
+    norms[norms == 0.0] = 1.0
+    return [r["_qid"] for r in rows], qmat / norms
+
+
+def _served(df: DataFrame, id_column: str, qids: list, corpus: DataFrame,
+            batches, score: Optional[str] = None) -> DataFrame:
+    """Run a numpy candidate generator over ``corpus`` and map its
+    ``(_qidx, _id[, score])`` rows back to ``(query_id, neighbor_id[,
+    score])``, dropping self-matches. ``query_id`` keeps the input id
+    column's type (no int coercion: string/decimal ids must survive the
+    round-trip)."""
+    id_type = df.schema[id_column].dataType
+    extra = [] if score is None else [score]
+    cand = corpus.mapInPandas(
+        batches,
+        StructType(
+            [StructField("_qidx", IntegerType()), StructField("_id", id_type)]
+            + [StructField(s, DoubleType()) for s in extra]
+        ),
+    )
+    qmap = df.sparkSession.createDataFrame(
+        [(int(i), q) for i, q in enumerate(qids)],
+        StructType(
+            [
+                StructField("_qidx", IntegerType()),
+                StructField("query_id", id_type),
+            ]
+        ),
+    )
+    return (
+        cand.join(F.broadcast(qmap), "_qidx")
+        .filter(F.col("_id") != F.col("query_id"))
+        .select("query_id", F.col("_id").alias("neighbor_id"), *extra)
+    )
+
+
+def _batch_top(ids: np.ndarray, scores: np.ndarray, limit: int,
+               score: Optional[str] = None) -> pd.DataFrame:
+    """One Arrow batch's top ``limit`` rows for each query column of the
+    ``(rows, Q)`` ``scores``, as ``(_qidx, _id[, score])``.
+
+    The order is the global total order (score desc, id asc; NaN last,
+    matching NULLS LAST under DESC), so a batch-local top-L holds every
+    global top-L element living in the batch: ranking the union of the
+    batches' tops gives the ranked output of all pairs, while the
+    window input shrinks from corpus x Q to n_batches x Q x L."""
+    nq = scores.shape[1]
+    keep = min(limit, len(ids))
+    sels = [np.lexsort((ids, -scores[:, q]))[:keep] for q in range(nq)]
+    out = {
+        "_qidx": np.repeat(np.arange(nq, dtype="int32"), keep),
+        "_id": np.concatenate([ids[s] for s in sels]),
+    }
+    if score is not None:
+        out[score] = np.concatenate(
+            [scores[s, q] for q, s in enumerate(sels)]
+        )
+    return pd.DataFrame(out)
+
+
+def _adc_tables(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """ADC lookup tables ``LUT[q, j, c] = q_subj . codebook[j][c]`` —
+    Q x m x codebook_k doubles for unit query rows ``qmat``."""
+    m, _, sub = books.shape
+    return np.einsum("qjd,jcd->qjc", qmat.reshape(len(qmat), m, sub), books)
+
+
+def _adc_scores(table: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """``(rows, Q)`` round-6 ADC scores of ``(rows, m)`` PQ codes: one
+    table gather per subspace, never a raw-vector distance."""
+    scores = np.zeros((len(codes), table.shape[0]))
+    for j in range(table.shape[1]):
+        scores += table[:, j, :][:, codes[:, j]].T
+    return np.round(scores, 6)
+
+
+def _require_query_filter(tier: str, query_filter: Optional[Column]) -> None:
+    if query_filter is None:
+        raise ValueError(
+            f"{tier} requires query_filter= — the query set is collected "
+            "driver-side to build ADC lookup tables, and an unfiltered "
+            "collect would pull the whole corpus."
+        )
+
+
+def _refined(df: DataFrame, scored: DataFrame, id_column: str,
+             vector_column: str, k: int, rerank: int,
+             query_filter: Column) -> DataFrame:
+    """Rank ADC-scored candidates; with ``rerank > 1`` exactly re-score
+    the top ``k*rerank`` and keep the true top-k."""
+    topn = _ranked(scored, "cosine_pq", k * rerank)
+    if rerank <= 1:
+        return topn
+    return _exact_rerank(
+        df, topn, id_column, vector_column, k, query_filter, "cosine_pq"
+    )
 
 
 def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> List[List[float]]:
@@ -165,49 +381,20 @@ def suggest_ann_params(n_rows: int, base_rows: int = 2000) -> dict:
     }
 
 
-def _exact_rerank(
-    df: DataFrame,
-    cand: DataFrame,
-    id_column: str,
-    vector_column: str,
-    k: int,
-    query_filter: Optional[Column],
-    score_alias: str,
-) -> DataFrame:
-    """FAISS-style refine stage: exactly re-score an approximate
-    candidate list (``query_id, neighbor_id``) and keep the true top-k.
+def per_query_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """``(query_id, recall)``: the share of each query's exact neighbours
+    that ``approx`` also returns — recall@k of an approximate tier
+    against :func:`topk_cosine`, both ``(query_id, neighbor_id, ...)``.
 
-    The candidate set is output-sized (queries x k x rerank), so it
-    BROADCASTS against the corpus scan — one BHJ picks up the raw
-    neighbor vectors, a second broadcast joins the (small) query
-    vectors, and the exact cosine uses the same f64 op order as
-    :func:`topk_cosine`. The final window shuffles only the candidate
-    rows."""
-    base = _normed_vectors(df, id_column, vector_column)
-    queries = _normed_vectors(
-        df if query_filter is None else df.filter(query_filter),
-        id_column, vector_column, "_qid", "_qv", "_qn",
-    )
-    picked = base.join(
-        F.broadcast(cand.select("query_id", "neighbor_id")),
-        base["_id"] == F.col("neighbor_id"),
-    )
-    paired = picked.join(
-        F.broadcast(queries), F.col("query_id") == F.col("_qid")
-    )
-    scored = paired.select(
-        "query_id",
-        "neighbor_id",
-        _cosine(
-            F.col("_qv"), F.col("_bv"), F.col("_qn"), F.col("_bn")
-        ).alias(score_alias),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col(score_alias).desc(), F.col("neighbor_id").asc()
-    )
+    One left join with a hit marker reads each side ONCE; every read
+    of a side re-executes its GEMM / fitted-index lineage, so a shape
+    that counts hits and exact rows separately pays for it twice."""
+    hits = approx.select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        exact.select("query_id", "neighbor_id")
+        .join(hits, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg((F.count("_hit") / F.count(F.lit(1))).alias("recall"))
     )
 
 
@@ -216,7 +403,6 @@ def topk_cosine(
     vector_column: str,
     k: int = 10,
     query_filter: Optional[Column] = None,
-    candidate_margin: int = 8,
 ) -> Callable[[DataFrame], DataFrame]:
     """Exact top-k cosine neighbours for every query vector (rows matching
     ``query_filter``; default: all rows). Self-matches excluded.
@@ -229,8 +415,8 @@ def topk_cosine(
     which is the same pair-row trap the PQ/IVF-PQ tiers hit (measured
     at the sf100 probe: 50 sort tasks over 250M pair rows, tens of GB
     of sort spill). Instead each Arrow batch GEMMs (B, d) x (d, Q)
-    locally and emits only its top ``k + 1 + candidate_margin`` ids per
-    query; the exact JVM cosine (:func:`_cosine`, the op order the
+    locally and emits only its top ``k + 1 + _CANDIDATE_MARGIN`` ids per
+    query (:func:`_batch_top`); the exact JVM cosine (the op order the
     DuckDB oracle mirrors) is then recomputed for just those candidates
     via :func:`_exact_rerank`, so the RESULT is bit-identical to the
     naive plan while the shuffled/sorted stream shrinks from
@@ -241,67 +427,35 @@ def topk_cosine(
     (round6(cosine) desc, id asc). The numpy and JVM f64 dot products
     can disagree only by summation order (~1 ulp), which survives
     round-to-6 only when the true value sits within ~1e-15 of a
-    rounding boundary; ``candidate_margin`` slots absorb any such
-    boundary row plus round-6 ties at the k-th rank. The +1 covers the
-    query's own row occupying a slot in its home batch.
+    rounding boundary; the margin slots absorb any such boundary row
+    plus round-6 ties at the k-th rank. The +1 covers the query's own
+    row occupying a slot in its home batch.
 
     Without ``query_filter`` every row is a query: the query set cannot
     be collected driver-side, so the quadratic crossJoin plan is used —
     that mode exists for small interactive frames, not the corpus.
     """
 
-    def _all_pairs(df: DataFrame) -> DataFrame:
-        base = _normed_vectors(df, id_column, vector_column)
-        queries = _normed_vectors(
-            df, id_column, vector_column, "_qid", "_qv", "_qn",
-        )
-        pairs = base.crossJoin(F.broadcast(queries)).filter(
-            F.col("_id") != F.col("_qid")
-        )
-        scored = pairs.select(
-            F.col("_qid").alias("query_id"),
-            F.col("_id").alias("neighbor_id"),
-            _cosine(F.col("_qv"), F.col("_bv"),
-                    F.col("_qn"), F.col("_bn")).alias("cosine"),
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-
     def _transform(df: DataFrame) -> DataFrame:
         if query_filter is None:
-            return _all_pairs(df)
-        qrows = (
-            df.filter(query_filter)
-            .select(
-                F.col(id_column).alias("_qid"),
-                to_double_array(F.col(vector_column)).alias("_qv"),
+            return _all_pairs(df, id_column, vector_column, k, "cosine")
+        collected = _collected_queries(
+            df, id_column, vector_column, query_filter
+        )
+        if collected is None:
+            return _all_pairs(
+                df.limit(0), id_column, vector_column, k, "cosine"
             )
-            .collect()
-        )
-        if not qrows:
-            return _all_pairs(df.limit(0))
-        qids = [r["_qid"] for r in qrows]
-        qmat = np.stack(
-            [np.asarray(r["_qv"], dtype="float64") for r in qrows]
-        )
-        qnorm = np.linalg.norm(qmat, axis=1)
+        qids, qmat = collected
         # zero-norm query: JVM cosine is NULL for every pair, so its
         # top-k is the k id-asc smallest rows; scoring against the raw
         # zero vector gives an all-ties 0.0 column whose id-asc
         # batch-local top is exactly that superset
-        qnorm[qnorm == 0.0] = 1.0
-        qmat = qmat / qnorm[:, None]
         bc_q = df.sparkSession.sparkContext.broadcast(qmat)
-        limit = k + 1 + candidate_margin
+        limit = k + 1 + _CANDIDATE_MARGIN
 
         def _candidate_batches(batches):
             qm = bc_q.value  # (Q, d)
-            nq = qm.shape[0]
             for pdf in batches:
                 if not len(pdf):
                     continue
@@ -309,50 +463,15 @@ def topk_cosine(
                 bn = np.linalg.norm(b, axis=1)
                 safe = np.where(bn == 0.0, 1.0, bn)
                 scores = np.round((b @ qm.T) / safe[:, None], 6)
-                # zero-norm corpus rows score NULL in the JVM tier:
-                # NaN sorts after every number in lexsort, matching
-                # NULLS LAST under cosine DESC
+                # zero-norm corpus rows score NULL in the JVM tier
                 scores[bn == 0.0, :] = np.nan
-                ids = pdf["_id"].to_numpy()
-                keep = min(limit, len(b))
-                sels = [
-                    np.lexsort((ids, -scores[:, q]))[:keep]
-                    for q in range(nq)
-                ]
-                yield pd.DataFrame(
-                    {
-                        "_qidx": np.repeat(
-                            np.arange(nq, dtype="int32"), keep
-                        ),
-                        "_id": np.concatenate([ids[s] for s in sels]),
-                    }
-                )
+                yield _batch_top(pdf["_id"].to_numpy(), scores, limit)
 
         corpus = _scale_out(df).select(
             F.col(id_column).alias("_id"),
             to_double_array(F.col(vector_column)).alias("_bv"),
         )
-        cand_schema = StructType(
-            [
-                StructField("_qidx", IntegerType()),
-                StructField("_id", df.schema[id_column].dataType),
-            ]
-        )
-        qmap = df.sparkSession.createDataFrame(
-            [(int(i), q) for i, q in enumerate(qids)],
-            StructType(
-                [
-                    StructField("_qidx", IntegerType()),
-                    StructField("query_id", df.schema[id_column].dataType),
-                ]
-            ),
-        )
-        cand = (
-            corpus.mapInPandas(_candidate_batches, cand_schema)
-            .join(F.broadcast(qmap), "_qidx")
-            .filter(F.col("_id") != F.col("query_id"))
-            .select("query_id", F.col("_id").alias("neighbor_id"))
-        )
+        cand = _served(df, id_column, qids, corpus, _candidate_batches)
         return _exact_rerank(
             df, cand, id_column, vector_column, k, query_filter, "cosine"
         )
@@ -423,25 +542,21 @@ def topk_cosine_lsh(
             for t in range(n_tables)
         ]
 
-        def _with_buckets(frame: DataFrame) -> DataFrame:
+        def _with_buckets(frame: DataFrame, vec: str) -> DataFrame:
             cols = [
-                _lsh_bucket("_v", planes).alias(f"_b{t}")
+                _lsh_bucket(vec, planes).alias(f"_b{t}")
                 for t, planes in enumerate(tables)
             ]
             return frame.select("*", *cols)
 
-        base = _normed_vectors(df, id_column, vector_column,
-                               "_id", "_v", "_n")
-        qbase = _normed_vectors(
-            df if query_filter is None else df.filter(query_filter),
-            id_column, vector_column, "_id", "_v", "_n",
-        )
+        base = _normed_vectors(df, id_column, vector_column)
+        queries = _query_vectors(df, id_column, vector_column, query_filter)
 
         # candidate generation carries ONLY (id, table, bucket) — vectors
         # never ride the candidate stream or its dedup exchange (at scale
         # that exchange is the big one: |candidates| x n_tables rows)
         base_flat = (
-            _with_buckets(base)
+            _with_buckets(base, "_bv")
             .select(
                 "_id",
                 F.explode(
@@ -471,9 +586,8 @@ def topk_cosine_lsh(
                 F.struct(F.lit(t).alias("_t"), p.alias("_bucket"))
                 for p in probes
             ]
-        q = _with_buckets(qbase).select(
-            F.col("_id").alias("_qid"),
-            F.explode(F.array(*probe_structs)).alias("_tb"),
+        q = _with_buckets(queries, "_qv").select(
+            "_qid", F.explode(F.array(*probe_structs)).alias("_tb"),
         ).select("_qid", "_tb._t", "_tb._bucket")
 
         pair_ids = (
@@ -486,32 +600,8 @@ def topk_cosine_lsh(
         # attach vectors AFTER the dedup: corpus side via shuffled
         # equi-join on the id (16-byte pair rows meet once-per-row vector
         # rows), query side broadcast (queries are the small set)
-        scored = (
-            pair_ids.join(base, "_id")
-            .join(
-                F.broadcast(
-                    qbase.select(
-                        F.col("_id").alias("_qid"),
-                        F.col("_v").alias("_qv"),
-                        F.col("_n").alias("_qn"),
-                    )
-                ),
-                "_qid",
-            )
-            .select(
-                F.col("_qid").alias("query_id"),
-                F.col("_id").alias("neighbor_id"),
-                _cosine(F.col("_qv"), F.col("_v"),
-                        F.col("_qn"), F.col("_n")).alias("cosine"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
+        pairs = pair_ids.join(base, "_id").join(F.broadcast(queries), "_qid")
+        return _ranked(_exact_scores(pairs, "cosine"), "cosine", k)
 
     return _transform
 
@@ -683,9 +773,8 @@ def topk_cosine_ivf(
         corpus = base.select(
             "_id", "_bv", "_bn", assign1(F.col("_bv"))[0].alias("_cell")
         )
-        queries = _normed_vectors(
-            df if query_filter is None else df.filter(query_filter),
-            id_column, vector_column, "_qid", "_qv", "_qn",
+        queries = _query_vectors(
+            df, id_column, vector_column, query_filter
         ).select(
             "_qid", "_qv", "_qn",
             F.explode(probe(F.col("_qv"))).alias("_cell"),
@@ -693,19 +782,7 @@ def topk_cosine_ivf(
         cand = queries.join(corpus, "_cell").filter(
             F.col("_id") != F.col("_qid")
         )
-        scored = cand.select(
-            F.col("_qid").alias("query_id"),
-            F.col("_id").alias("neighbor_id"),
-            _cosine(F.col("_qv"), F.col("_bv"),
-                    F.col("_qn"), F.col("_bn")).alias("cosine"),
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
+        return _ranked(_exact_scores(cand, "cosine"), "cosine", k)
 
     return _transform
 
@@ -728,6 +805,7 @@ def topk_cosine_int8(
     Output: (query_id, neighbor_id, cosine_q, rank).
     """
     from pywrangler_spark.functions.vectors import (
+        int8_dot,
         int8_norm_sq,
         int8_quantize,
         int8_scale,
@@ -744,13 +822,7 @@ def topk_cosine_int8(
     def _transform(df: DataFrame) -> DataFrame:
         base = _quantized(df, "_id", "_bq", "_bn")
         queries = _quantized(
-            df if query_filter is None else df.filter(query_filter),
-            "_qid", "_qq", "_qn",
-        )
-        from pywrangler_spark.functions.vectors import int8_dot
-
-        pairs = base.crossJoin(F.broadcast(queries)).filter(
-            F.col("_id") != F.col("_qid")
+            _query_rows(df, query_filter), "_qid", "_qq", "_qn"
         )
         score = F.round(
             int8_dot(F.col("_qq"), F.col("_bq"))
@@ -762,18 +834,12 @@ def topk_cosine_int8(
             ),
             6,
         )
-        scored = pairs.select(
+        scored = _cross_pairs(base, queries).select(
             F.col("_qid").alias("query_id"),
             F.col("_id").alias("neighbor_id"),
             score.alias("cosine_q"),
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine_q").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
+        return _ranked(scored, "cosine_q", k)
 
     return _transform
 
@@ -892,7 +958,6 @@ def topk_cosine_pq(
     seed: int = 42,
     query_filter: Optional[Column] = None,
     codebooks: Optional[np.ndarray] = None,
-    allow_full_collect: bool = False,
     rerank: int = 1,
 ) -> Callable[[DataFrame], DataFrame]:
     """Approximate top-k cosine neighbours via product quantization with
@@ -926,19 +991,19 @@ def topk_cosine_pq(
     ``query_filter`` is required: the query set is collected to the
     driver to build the ADC lookup tables, and with no filter that
     collect would pull the *entire corpus* — a scale-killer at any real
-    corpus size. ``allow_full_collect=True`` opts in explicitly for
-    small interactive frames.
+    corpus size.
     """
-    if query_filter is None and not allow_full_collect:
-        raise ValueError(
-            "topk_cosine_pq requires query_filter= — the query set is "
-            "collected driver-side to build ADC lookup tables, and an "
-            "unfiltered collect would pull the whole corpus. Pass "
-            "allow_full_collect=True to explicitly opt in for small "
-            "interactive frames."
-        )
+    _require_query_filter("topk_cosine_pq", query_filter)
 
     def _transform(df: DataFrame) -> DataFrame:
+        collected = _collected_queries(
+            df, id_column, vector_column, query_filter
+        )
+        if collected is None:
+            return _all_pairs(
+                df.limit(0), id_column, vector_column, k, "cosine_pq"
+            )
+        qids, qmat = collected
         books = (
             codebooks
             if codebooks is not None
@@ -946,68 +1011,27 @@ def topk_cosine_pq(
                 df, vector_column, m=m, codebook_k=codebook_k, seed=seed
             )
         )
-        mm, kk, sub = books.shape
-
-        qdf = df if query_filter is None else df.filter(query_filter)
-        qrows = qdf.select(
-            F.col(id_column).alias("_qid"),
-            to_double_array(F.col(vector_column)).alias("_qv"),
-        ).collect()
-        qids = [r["_qid"] for r in qrows]
-        qvecs = np.stack(
-            [np.asarray(r["_qv"], dtype="float64") for r in qrows]
+        bc_lut = df.sparkSession.sparkContext.broadcast(
+            _adc_tables(qmat, books)
         )
-        qnorms = np.linalg.norm(qvecs, axis=1, keepdims=True)
-        qnorms[qnorms == 0.0] = 1.0
-        qvecs = qvecs / qnorms
-        # LUT[q, j, c] = q_subj . codebook[j][c]  — Q x m x k doubles
-        lut = np.einsum(
-            "qjd,jcd->qjc", qvecs.reshape(len(qids), mm, sub), books
-        )
-        sc = df.sparkSession.sparkContext
-        bc_lut = sc.broadcast(lut)
-
         # Batch-local candidate selection (the IVF-PQ cell-local lesson,
         # r7): emitting all Q scores per corpus row materializes a
         # corpus x Q pair-row stream through Arrow + a corpus-sized
         # window shuffle into Q partitions — measured as the tier's
-        # whole decade at sf10. Instead each Arrow batch scores (B, Q)
-        # locally and emits only its top (k*rerank + 1) rows per query
-        # (+1 because the query's own row may occupy a slot in its home
-        # batch); a batch-local top-L under the global total order
-        # (score desc, id asc — np.lexsort below) is a superset of every
-        # global top-L element, so the final ranked output is IDENTICAL
-        # and the window input shrinks from corpus x Q to
-        # n_batches x Q x L.
+        # whole decade at sf10. Each Arrow batch keeps only its top
+        # (k*rerank + 1) rows per query (:func:`_batch_top`; +1 because
+        # the query's own row may occupy a slot in its home batch).
         limit = k * rerank + 1
 
         def _score_batches(batches):
             table = bc_lut.value  # (Q, m, k)
-            nq = table.shape[0]
             for pdf in batches:
                 if not len(pdf):
                     continue
-                c = np.stack(pdf["_codes"].to_numpy()).astype("int64")
-                scores = np.zeros((len(c), nq))
-                for j in range(table.shape[1]):
-                    scores += table[:, j, :][:, c[:, j]].T
-                scores = np.round(scores, 6)
-                ids = pdf["_id"].to_numpy()
-                keep = min(limit, len(c))
-                sels = [
-                    np.lexsort((ids, -scores[:, q]))[:keep]
-                    for q in range(nq)
-                ]
-                yield pd.DataFrame(
-                    {
-                        "_qidx": np.repeat(
-                            np.arange(nq, dtype="int32"), keep
-                        ),
-                        "_id": np.concatenate([ids[s] for s in sels]),
-                        "cosine_pq": np.concatenate(
-                            [scores[s, q] for q, s in enumerate(sels)]
-                        ),
-                    }
+                codes = np.stack(pdf["_codes"].to_numpy()).astype("int64")
+                yield _batch_top(
+                    pdf["_id"].to_numpy(), _adc_scores(table, codes),
+                    limit, "cosine_pq",
                 )
 
         encode = _pq_encode_udf(books)
@@ -1015,46 +1039,11 @@ def topk_cosine_pq(
             F.col(id_column).alias("_id"),
             encode(to_double_array(F.col(vector_column))).alias("_codes"),
         )
-        cand_schema = StructType(
-            [
-                StructField("_qidx", IntegerType()),
-                StructField("_id", df.schema[id_column].dataType),
-                StructField("cosine_pq", DoubleType()),
-            ]
+        scored = _served(
+            df, id_column, qids, corpus, _score_batches, "cosine_pq"
         )
-        scored = corpus.mapInPandas(_score_batches, cand_schema)
-        # query_id keeps the input id column's type (no int coercion:
-        # string/decimal ids must survive the round-trip)
-        qmap = df.sparkSession.createDataFrame(
-            [(int(i), q) for i, q in enumerate(qids)],
-            StructType(
-                [
-                    StructField("_qidx", IntegerType()),
-                    StructField("query_id", df.schema[id_column].dataType),
-                ]
-            ),
-        )
-        out = (
-            scored.join(F.broadcast(qmap), "_qidx")
-            .filter(F.col("_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("_id").alias("neighbor_id"),
-                "cosine_pq",
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine_pq").desc(), F.col("neighbor_id").asc()
-        )
-        topn = (
-            out.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k * rerank)
-        )
-        if rerank <= 1:
-            return topn
-        return _exact_rerank(
-            df, topn, id_column, vector_column, k, query_filter,
-            "cosine_pq",
+        return _refined(
+            df, scored, id_column, vector_column, k, rerank, query_filter
         )
 
     return _transform
@@ -1072,7 +1061,6 @@ def topk_cosine_ivfpq(
     query_filter: Optional[Column] = None,
     centroids: Optional[np.ndarray] = None,
     codebooks: Optional[np.ndarray] = None,
-    allow_full_collect: bool = False,
     rerank: int = 1,
 ) -> Callable[[DataFrame], DataFrame]:
     """IVF-PQ: k-means cells prune candidates (compute), PQ codes +
@@ -1095,19 +1083,19 @@ def topk_cosine_ivfpq(
     schema matches :func:`topk_cosine` (score column ``cosine_pq``).
 
     ``query_filter`` is required (see :func:`topk_cosine_pq` — the
-    query set is collected driver-side); ``allow_full_collect=True``
-    opts in explicitly for small interactive frames.
+    query set is collected driver-side).
     """
-    if query_filter is None and not allow_full_collect:
-        raise ValueError(
-            "topk_cosine_ivfpq requires query_filter= — the query set "
-            "is collected driver-side to build ADC lookup tables, and "
-            "an unfiltered collect would pull the whole corpus. Pass "
-            "allow_full_collect=True to explicitly opt in for small "
-            "interactive frames."
-        )
+    _require_query_filter("topk_cosine_ivfpq", query_filter)
 
     def _transform(df: DataFrame) -> DataFrame:
+        collected = _collected_queries(
+            df, id_column, vector_column, query_filter
+        )
+        if collected is None:
+            return _all_pairs(
+                df.limit(0), id_column, vector_column, k, "cosine_pq"
+            )
+        qids, qmat = collected
         cents = (
             centroids
             if centroids is not None
@@ -1122,11 +1110,8 @@ def topk_cosine_ivfpq(
                 df, vector_column, m=m, codebook_k=codebook_k, seed=seed
             )
         )
-        mm, kk, sub = books.shape
         assign1 = _nearest_cells_udf(cents, 1)
-        probe = _nearest_cells_udf(cents, n_probe)
         encode = _pq_encode_udf(books)
-
         corpus = _scale_out(df).select(
             F.col(id_column).alias("_id"),
             assign1(to_double_array(F.col(vector_column)))[0].alias(
@@ -1135,42 +1120,20 @@ def topk_cosine_ivfpq(
             encode(to_double_array(F.col(vector_column))).alias("_codes"),
         )
 
-        qdf = df if query_filter is None else df.filter(query_filter)
-        qrows = qdf.select(
-            F.col(id_column).alias("_qid"),
-            to_double_array(F.col(vector_column)).alias("_qv"),
-        ).collect()
-        qids = [r["_qid"] for r in qrows]
-        qvecs = np.stack(
-            [np.asarray(r["_qv"], dtype="float64") for r in qrows]
-        )
-        qnorms = np.linalg.norm(qvecs, axis=1, keepdims=True)
-        qnorms[qnorms == 0.0] = 1.0
-        qvecs = qvecs / qnorms
-        lut = np.einsum(
-            "qjd,jcd->qjc", qvecs.reshape(len(qids), mm, sub), books
-        )
-        qcells = np.argsort(-(qvecs @ cents.T), axis=1, kind="stable")[
+        qcells = np.argsort(-(qmat @ cents.T), axis=1, kind="stable")[
             :, :n_probe
         ]
         # cell -> indices of the queries probing it: the inverted probe
         # map is tiny (Q x n_probe entries) and broadcasts with the LUT.
         cell_queries: dict = {}
-        for i in range(len(qids)):
-            for c in qcells[i]:
+        for i, cells in enumerate(qcells):
+            for c in cells:
                 cell_queries.setdefault(int(c), []).append(i)
         cell_queries = {
             c: np.asarray(v, dtype="int64") for c, v in cell_queries.items()
         }
-        sc = df.sparkSession.sparkContext
-        bc_model = sc.broadcast((lut, cell_queries))
-        id_type = df.schema[id_column].dataType
-        out_schema = StructType(
-            [
-                StructField("_id", id_type),
-                StructField("_qidx", IntegerType()),
-                StructField("cosine_pq", DoubleType()),
-            ]
+        bc_model = df.sparkSession.sparkContext.broadcast(
+            (_adc_tables(qmat, books), cell_queries)
         )
 
         # Score each Arrow batch CELL-LOCALLY with the PQ-style
@@ -1194,55 +1157,24 @@ def topk_cosine_ivfpq(
                     if qs is None or not len(qs):
                         continue
                     rows = np.nonzero(cells == cell)[0]
-                    c = codes[rows]  # (Bc, m)
-                    sub = table[qs]  # (Qc, m, k)
-                    scores = np.zeros((len(rows), len(qs)))
-                    for j in range(table.shape[1]):
-                        scores += sub[:, j, :][:, c[:, j]].T
+                    scores = _adc_scores(table[qs], codes[rows])
                     out_i.append(np.repeat(ids[rows], len(qs)))
                     out_q.append(np.tile(qs, len(rows)))
-                    out_s.append(np.round(scores, 6).ravel())
+                    out_s.append(scores.ravel())
                 if out_i:
                     yield pd.DataFrame(
                         {
-                            "_id": np.concatenate(out_i),
                             "_qidx": np.concatenate(out_q).astype("int32"),
+                            "_id": np.concatenate(out_i),
                             "cosine_pq": np.concatenate(out_s),
                         }
                     )
 
-        # query_id keeps the input id column's type (no int coercion)
-        qmap = df.sparkSession.createDataFrame(
-            [(int(i), q) for i, q in enumerate(qids)],
-            StructType(
-                [
-                    StructField("_qidx", IntegerType()),
-                    StructField("query_id", id_type),
-                ]
-            ),
+        scored = _served(
+            df, id_column, qids, corpus, _score_cells, "cosine_pq"
         )
-        scored = (
-            corpus.mapInPandas(_score_cells, out_schema)
-            .join(F.broadcast(qmap), "_qidx")
-            .filter(F.col("_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("_id").alias("neighbor_id"),
-                "cosine_pq",
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine_pq").desc(), F.col("neighbor_id").asc()
-        )
-        topn = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k * rerank)
-        )
-        if rerank <= 1:
-            return topn
-        return _exact_rerank(
-            df, topn, id_column, vector_column, k, query_filter,
-            "cosine_pq",
+        return _refined(
+            df, scored, id_column, vector_column, k, rerank, query_filter
         )
 
     return _transform

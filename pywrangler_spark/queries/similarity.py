@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pywrangler_spark.operators.similarity import (
     topk_cosine_ivf,
     cosine_neardup_pairs,
+    per_query_recall,
     topk_cosine,
     topk_cosine_lsh,
 )
@@ -106,43 +107,26 @@ FROM embeddings WHERE vec_id % 40 = 0 AND vec_id < 2000
 """
 
 
+def recall_gate(exact: DataFrame, approx: DataFrame, floor: float) -> DataFrame:
+    """(n_queries, avg recall@10 >= floor) of ``approx`` vs ``exact``."""
+    return per_query_recall(exact, approx).agg(
+        F.count(F.lit(1)).alias("n_queries"),
+        (F.avg("recall") >= F.lit(floor)).alias("recall_ok"),
+    )
+
+
 def _recall_row(
     emb: DataFrame, approx: DataFrame, floor: float
 ) -> DataFrame:
-    """(n_queries, avg recall@10 >= floor) against the exact tier."""
+    """The embedding gates' row: ``approx`` against the exact tier."""
     exact = emb.transform(
         topk_cosine(
             "vec_id", "embedding", k=10,
             query_filter=(F.col("vec_id") % 40 == 0)
             & (F.col("vec_id") < 2000),
         )
-    ).select("query_id", "neighbor_id")
-    # one pass per tier: a left join with a hit marker feeds n_exact
-    # and n_hit from a SINGLE use of each side — the earlier left_semi
-    # + two separate groupBys consumed `exact` twice and `approx`
-    # twice, re-executing the GEMM / fitted-index lineages per consumer
-    per_q = (
-        exact.join(
-            approx.select(
-                "query_id", "neighbor_id", F.lit(1).alias("_hit")
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count("_hit").alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            (F.col("n_hit") / F.col("n_exact")).alias("recall"),
-        )
     )
-    return per_q.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        (F.avg("recall") >= F.lit(floor)).alias("recall_ok"),
-    )
+    return recall_gate(exact, approx, floor)
 
 
 @register("ann_topk_lsh", oracle=_RECALL_ORACLE)

@@ -873,9 +873,11 @@ def docvec_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-free semantic-search discovery path at corpus scale."""
     from pywrangler_spark.operators.docvec import hashed_doc_vectors
     from pywrangler_spark.operators.similarity import (
+        suggest_ann_params,
         topk_cosine,
         topk_cosine_lsh,
     )
+    from pywrangler_spark.queries.similarity import recall_gate
     from pywrangler_spark.util import CacheScope
 
     # Materialize the vector table ONCE: the gate's two tiers reference
@@ -897,45 +899,17 @@ def docvec_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     qf = (F.col("id") % 40 == 0) & (F.col("id") < 2000)
     exact = vecs.transform(
         topk_cosine("id", "doc_vec", k=10, query_filter=qf)
-    ).select("query_id", "neighbor_id")
+    )
     # table count from the capacity schedule (+1 per decade) — the
     # count doubles as the persisted vector table's materialization
-    from pywrangler_spark.operators.similarity import suggest_ann_params
-
     n_tables = suggest_ann_params(vecs.count())["n_tables"]
     approx = vecs.transform(
         topk_cosine_lsh(
             "id", "doc_vec", k=10, n_planes=8, n_tables=n_tables,
             dim=64, query_filter=qf,
         )
-    ).select("query_id", "neighbor_id")
-    # one pass per tier: the earlier left_semi + two separate groupBys
-    # consumed `exact` twice and `approx` twice, and every consumer
-    # re-executed the full docvec aggregation + GEMM lineage (4 corpus
-    # passes for one gate). A left join with a hit marker feeds both
-    # counts from a single use of each side.
-    per_q = (
-        exact.join(
-            approx.withColumn("_hit", F.lit(1)),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count("_hit").alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            (F.col("n_hit") / F.col("n_exact")).alias("recall"),
-        )
     )
-    return scope.tie(
-        per_q.agg(
-            F.count(F.lit(1)).alias("n_queries"),
-            (F.avg("recall") >= 0.6).alias("recall_ok"),
-        )
-    )
+    return scope.tie(recall_gate(exact, approx, floor=0.6))
 
 
 # ---- LSH-only serve path (the production shape; the gate above is the

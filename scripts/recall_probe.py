@@ -37,30 +37,6 @@ DIM = 64
 FLOORS = {"lsh": 0.3, "ivf": 0.5, "pq": 0.6, "ivfpq": 0.45}
 
 
-def avg_recall(emb, approx) -> float:
-    """Numeric avg recall@10 vs the exact tier (same join shape as the
-    registered gates' _recall_row, returning the value, not the bool)."""
-    from pywrangler_spark.operators.similarity import topk_cosine
-
-    exact = emb.transform(
-        topk_cosine("vec_id", "embedding", k=10, query_filter=_query_filter())
-    ).select("query_id", "neighbor_id")
-    hits = exact.join(
-        approx.select("query_id", "neighbor_id"),
-        ["query_id", "neighbor_id"],
-        "left_semi",
-    )
-    n_exact = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n"))
-    n_hit = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("h"))
-    row = (
-        n_exact.join(n_hit, "query_id", "left")
-        .select((F.coalesce("h", F.lit(0)) / F.col("n")).alias("r"))
-        .agg(F.avg("r").alias("avg"), F.count(F.lit(1)).alias("nq"))
-        .first()
-    )
-    return float(row["avg"]), int(row["nq"])
-
-
 def build_approx(family, emb, n_rows, scaled):
     from pywrangler_spark.operators import similarity as S
 
@@ -184,6 +160,10 @@ def main() -> int:
         "recall-probe", extra_conf={"spark.driver.memory": "48g"}
     )
     spark.sparkContext.setLogLevel("ERROR")
+    from pywrangler_spark.operators.similarity import (
+        per_query_recall,
+        topk_cosine,
+    )
     from pywrangler_spark.queries.similarity import _emb
 
     results = []
@@ -193,11 +173,17 @@ def main() -> int:
             emb = synth_expand(emb, args.synth_mult)
         emb = emb.persist()
         n_rows = emb.count()
+        exact = emb.transform(
+            topk_cosine("vec_id", "embedding", k=10,
+                        query_filter=_query_filter())
+        )
         for fam in fams:
             for scaled in ([False, True] if args.scaled else [False]):
                 t0 = time.perf_counter()
                 approx, cfg = build_approx(fam, emb, n_rows, scaled)
-                rec, nq = avg_recall(emb, approx)
+                rec, nq = per_query_recall(exact, approx).agg(
+                    F.avg("recall"), F.count(F.lit(1))
+                ).first()
                 took = time.perf_counter() - t0
                 row = {
                     "sf_dir": os.path.basename(sf_dir.rstrip("/"))

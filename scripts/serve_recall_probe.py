@@ -37,23 +37,6 @@ def _query_filter():
     return (F.col("id") % 40 == 0) & (F.col("id") < 2000)
 
 
-def avg_recall(exact, approx) -> tuple:
-    hits = exact.join(
-        approx.select("query_id", "neighbor_id"),
-        ["query_id", "neighbor_id"],
-        "left_semi",
-    )
-    n_exact = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n"))
-    n_hit = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("h"))
-    row = (
-        n_exact.join(n_hit, "query_id", "left")
-        .select((F.coalesce("h", F.lit(0)) / F.col("n")).alias("r"))
-        .agg(F.avg("r").alias("avg"), F.count(F.lit(1)).alias("nq"))
-        .first()
-    )
-    return float(row["avg"]), int(row["nq"])
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument(
@@ -69,6 +52,7 @@ def main() -> int:
 
     from pywrangler_spark.operators.docvec import hashed_doc_vectors
     from pywrangler_spark.operators.similarity import (
+        per_query_recall,
         suggest_ann_params,
         topk_cosine,
         topk_cosine_lsh,
@@ -114,7 +98,9 @@ def main() -> int:
                     query_filter=_query_filter(),
                 )
             )
-            recall, nq = avg_recall(exact, approx)
+            recall, nq = per_query_recall(exact, approx).agg(
+                F.avg("recall"), F.count(F.lit(1))
+            ).first()
             row[f"recall_{kind}"] = round(recall, 3)
             row[f"{kind}_seconds"] = round(time.time() - t0, 1)
             row["n_queries"] = nq

@@ -175,9 +175,13 @@ def test_latest_family_empty(empty_events):
 
 
 def test_similarity_empty(spark):
+    import numpy as np
+
     from pywrangler_spark.operators.similarity import (
         topk_cosine,
+        topk_cosine_ivfpq,
         topk_cosine_lsh,
+        topk_cosine_pq,
     )
 
     emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
@@ -188,6 +192,37 @@ def test_similarity_empty(spark):
             topk_cosine_lsh("vec_id", "embedding", dim=8)
         ).count() == 0
     )
+    # a filter that matches no row of a non-empty corpus: the tiers that
+    # collect the query set driver-side return the empty ranked frame
+    # (model artifacts passed in, so nothing is fitted)
+    rng = np.random.RandomState(0)
+    corpus = spark.createDataFrame(
+        [(i, rng.standard_normal(8).tolist()) for i in range(64)],
+        "vec_id long, embedding array<double>",
+    )
+    none = F.col("vec_id") < 0
+    books = rng.standard_normal((4, 8, 2))
+    cents = np.eye(4, 8)
+    tiers = [
+        ("cosine", topk_cosine("vec_id", "embedding", query_filter=none)),
+        ("cosine_pq", topk_cosine_pq(
+            "vec_id", "embedding", m=4, codebook_k=8, query_filter=none,
+            codebooks=books,
+        )),
+        ("cosine_pq", topk_cosine_pq(
+            "vec_id", "embedding", m=4, codebook_k=8, query_filter=none,
+            codebooks=books, rerank=2,
+        )),
+        ("cosine_pq", topk_cosine_ivfpq(
+            "vec_id", "embedding", n_centroids=4, n_probe=2, m=4,
+            codebook_k=8, query_filter=none, centroids=cents,
+            codebooks=books,
+        )),
+    ]
+    for score, tier in tiers:
+        out = corpus.transform(tier)
+        assert out.columns == ["query_id", "neighbor_id", score, "rank"]
+        assert out.count() == 0
 
 
 def test_trend_fill_empty(empty_events):

@@ -372,6 +372,44 @@ class TestSimilarity:
         assert sims == sorted(sims, reverse=True)
         assert all(r[2] != 0 for r in rows)
 
+    def test_exact_batch_plan_matches_all_pairs(self, spark):
+        """The exact tier's two plans agree: with ``query_filter`` (numpy
+        batch-local top-L, then the JVM re-score) it returns exactly the
+        all-pairs plan's rows for the filtered queries — through a zero
+        vector (NULL cosines), round-6 ties at rank k (12 copies of one
+        vector against k=5) and string ids, over several Arrow batches
+        each larger than the batch-local limit."""
+        import random
+
+        rng = random.Random(11)
+        vecs = [[rng.gauss(0, 1) for _ in range(8)] for _ in range(40)]
+        rows = [(f"v{i:02d}", v) for i, v in enumerate(vecs)]
+        rows += [(f"d{i:02d}", list(vecs[0])) for i in range(12)]
+        rows += [("z00", [0.0] * 8)]
+        df = spark.createDataFrame(
+            rows, "vid string, v array<double>"
+        ).repartition(2)
+        queries = ["v00", "d03", "z00", "v07", "v19"]
+        qf = F.col("vid").isin(*queries)
+
+        def ranked(out):
+            return sorted(
+                (tuple(r) for r in out.collect()),
+                key=lambda r: (r[0], r[3]),
+            )
+
+        batched = ranked(topk_cosine("vid", "v", k=5, query_filter=qf)(df))
+        all_pairs = ranked(
+            topk_cosine("vid", "v", k=5)(df).filter(
+                F.col("query_id").isin(*queries)
+            )
+        )
+        assert batched == all_pairs
+        assert len(batched) == 5 * len(queries)
+        # the ties and the NULL rows are really exercised
+        assert [r[2] for r in batched if r[0] == "v00"] == [1.0] * 5
+        assert [r[2] for r in batched if r[0] == "z00"] == [None] * 5
+
     def test_neardup_pairs_symmetric_bound(self, spark, embeddings):
         pairs = cosine_neardup_pairs("vec_id", "embedding", threshold=0.3)(
             embeddings
