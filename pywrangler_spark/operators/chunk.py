@@ -17,7 +17,7 @@ sizes bounded.
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -76,7 +76,6 @@ def chunk_content_defined(
     chunk_column: str = "chunk",
     index_column: str = "chunk_index",
     token_offset_column: str = "token_start",
-    num_partitions: Optional[int] = None,
 ) -> Callable[[DataFrame], DataFrame]:
     """Content-defined chunking: boundaries fall where the LOCAL text
     says so, not at fixed offsets (public methodology: Rabin/CDC
@@ -143,21 +142,15 @@ def chunk_content_defined(
         from pywrangler_spark.util import wide_exchange_width
 
         text = F.col(text_column)
-        if num_partitions is None:
-            n_parts = wide_exchange_width(df.sparkSession)
-        elif num_partitions >= 1:
-            n_parts = num_partitions
-        else:
-            raise ValueError(
-                f"num_partitions must be >= 1, got {num_partitions!r}"
-            )
         base = (
             df.filter(text.isNotNull() & (normalize_text(text) != ""))
             .select(
                 id_column,
                 words(text).alias("_ws"),
             )
-            .repartition(n_parts, F.col(id_column))
+            .repartition(
+                wide_exchange_width(df.sparkSession), F.col(id_column)
+            )
         )
         tok = base.select(
             id_column,

@@ -10,7 +10,8 @@ Plan shape (the one that survives 100 TB):
 1. The eval set is tiny relative to the corpus, so its distinct n-gram
    hashes become a **broadcast** build side — no shuffle of corpus text.
 2. The corpus side is a scan-side explode of n-gram *hashes* (56-bit
-   md5-derived longs, never the n-gram strings) followed by the
+   md5-derived longs, never the n-gram strings — the dedup family's
+   shared ``operators.dedup.gram_hash_stream``) followed by the
    broadcast hash join. Only MATCHED (doc_id, gram_hash) pairs — a tiny
    fraction of the corpus — reach the aggregation exchange.
 3. The per-doc overlap count joins back to the input on doc id; the
@@ -30,40 +31,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pywrangler_spark.functions.hashing import hash56
-from pywrangler_spark.functions.text import shingles_from_words, words
-
-
-def gram_hash_stream(
-    df: DataFrame, text_column: str, n: int, id_column: str = None
-) -> DataFrame:
-    """Exploded stream of distinct word n-gram hashes: ``(_gh)`` or
-    ``(_id, _gh)`` when ``id_column`` is given.
-
-    Staged in three projections so the token array materializes ONCE
-    before the shingle lambda references it n+1 times — inlining the
-    tokenization there re-evaluates normalize+split per reference
-    (Catalyst does not CSE across array lambdas; see
-    ``functions.text.shingles_from_words``), a measured ~10x slowdown.
-    The hash is applied AFTER the explode, on a plain string column.
-
-    DuckDB twin (see ``queries.corpus``): explode ``range`` over the
-    token list and hash ``w[i] || ' ' || ... || w[i+n-1]`` with the
-    shared md5/56-bit scheme — engine-identical by construction.
-    """
-    ids = [F.col(id_column).alias("_id")] if id_column else []
-    id_names = ["_id"] if id_column else []
-    tokenized = df.select(*ids, words(F.col(text_column)).alias("_w"))
-    exploded = tokenized.filter(F.size("_w") >= n).select(
-        *id_names,
-        F.explode(shingles_from_words(F.col("_w"), n)).alias("_g"),
-    )
-    # at n=1 a zero-word document tokenizes to [''] and would emit one
-    # spurious empty gram; grams with n>=2 always contain a space
-    return (
-        exploded.filter(F.col("_g") != "")
-        .select(*id_names, hash56(F.col("_g")).alias("_gh"))
-    )
+from pywrangler_spark.operators.dedup import gram_hash_stream
 
 
 def contamination_overlap(

@@ -1,5 +1,26 @@
 """Deduplication operators for large-scale document corpora.
 
+One near-duplicate core serves the whole family — this module,
+``operators.decontaminate``, ``operators.spandedup`` and the
+``streaming`` twins. Each operator adds only its own key and its own
+score on top of it:
+
+- :func:`gram_hash_stream` — tokenize → shingle → explode → 56-bit
+  hash: the ``(_id, _gh)`` stream of distinct word n-gram hashes per
+  document (Jaccard, containment, decontamination, span doc frequency);
+- :func:`_shared_counts` / :func:`_overlap` — the postings self-join:
+  every pair of documents sharing a key (``id_a < id_b``) with the
+  number of keys they share, plus each side's own key count (Jaccard,
+  containment, CDC chunks);
+- :func:`signature_columns`, :func:`band_keys` / :func:`minhash_bands`,
+  :func:`_colliding_keys`, :func:`_expand_groups` — the banding scheme
+  MinHash-LSH (Broder) and the SimHash multi-index (Manku et al.) share:
+  band keys, colliding key pairs, verify, then expand each distinct key
+  group back to its member ids;
+- :func:`_keep_min_id` / :func:`drop_seen` — the exact-dedup
+  fingerprint filters: the min-id representative per fingerprint, and
+  the anti-join against a store of already-seen fingerprints.
+
 Scale design (the 100 TB story):
 
 - **Exact dedup** groups by a 32-byte md5 fingerprint of the normalized
@@ -17,9 +38,14 @@ Scale design (the 100 TB story):
   self-join, quadratic in bucket co-occurrence — correct at any scale but
   intended for candidate verification, not all-pairs discovery.
 
-All integer hashing is md5-derived (see ``functions.hashing``) so every
-result is reproducible bit-for-bit in any engine — the DuckDB oracles run
-the same arithmetic.
+Every hash that reaches a RESULT is md5-derived (see
+``functions.hashing``; fingerprints and band keys are md5 too), so every
+output is reproducible bit-for-bit in any engine — the DuckDB oracles
+run the same arithmetic. Two hashes are internal and use Spark's
+``xxhash64``: the CDC chunk postings and the bloom bit positions.
+Neither reaches an output: the pairs are the same for any
+collision-free chunk hash, and every bloom hit is verified by the exact
+anti-join.
 """
 
 from __future__ import annotations
@@ -30,7 +56,8 @@ from typing import Callable, List, Optional, Sequence, Tuple
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pywrangler_spark.functions.hashing import hash28, hash56
@@ -42,6 +69,10 @@ from pywrangler_spark.functions.text import (
 )
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, prime modulus for permutations
+
+SIMHASH_BITS = 63
+"""SimHash sketch width: 63 bits keep the assembled sketch a
+non-negative BIGINT in every engine."""
 
 
 def _scale_out(df: DataFrame) -> DataFrame:
@@ -63,6 +94,73 @@ def _scale_out(df: DataFrame) -> DataFrame:
     return df
 
 
+# ---- the shared core --------------------------------------------------------
+
+
+def gram_hash_stream(
+    df: DataFrame, text_column: str, n: int, id_column: str = None
+) -> DataFrame:
+    """Exploded stream of distinct word n-gram hashes: ``(_gh)`` or
+    ``(_id, _gh)`` when ``id_column`` is given. Documents with fewer
+    than ``n`` words emit nothing.
+
+    Staged in three projections so the token array materializes ONCE
+    before the shingle lambda references it n+1 times — inlining the
+    tokenization there re-evaluates normalize+split per reference
+    (Catalyst does not CSE across array lambdas; see
+    ``functions.text.shingles_from_words``), a measured ~10x slowdown
+    (8x on the sf0.1 Jaccard shingle stream). The hash is applied AFTER
+    the explode, on a plain string column: 8-byte longs are what the
+    joins shuffle and compare, never gram strings.
+
+    DuckDB twin (see ``queries.corpus``): explode ``range`` over the
+    token list and hash ``w[i] || ' ' || ... || w[i+n-1]`` with the
+    shared md5/56-bit scheme — engine-identical by construction.
+    """
+    ids = [F.col(id_column).alias("_id")] if id_column else []
+    id_names = ["_id"] if id_column else []
+    tokenized = df.select(*ids, words(F.col(text_column)).alias("_w"))
+    # no size(_w) >= n filter: shingles_from_words already yields an
+    # empty array for short documents, and Catalyst pushes such a filter
+    # into the scan with the tokenization re-inlined — a second
+    # normalize+split pass per document
+    exploded = tokenized.select(
+        *id_names,
+        F.explode(shingles_from_words(F.col("_w"), n)).alias("_g"),
+    )
+    # at n=1 a zero-word document tokenizes to [''] and would emit one
+    # spurious empty gram; grams with n>=2 always contain a space
+    return (
+        exploded.filter(F.col("_g") != "")
+        .select(*id_names, hash56(F.col("_g")).alias("_gh"))
+    )
+
+
+def _shared_counts(postings: DataFrame, key: str) -> DataFrame:
+    """``(id_a, id_b, _k)``: every pair of documents (``_id``) holding a
+    common ``key`` value, ``id_a < id_b``, with the number of key values
+    they share. Postings must be distinct per ``(key, _id)``. Cost is
+    Σ bucket² over the key's buckets — callers bound hot keys first."""
+    a = postings.select(key, F.col("_id").alias("id_a"))
+    b = postings.select(key, F.col("_id").alias("id_b"))
+    return (
+        a.join(b, key)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("_k"))
+    )
+
+
+def _overlap(postings: DataFrame) -> DataFrame:
+    """``(id_a, id_b, _k, _na, _nb)``: :func:`_shared_counts` over the
+    gram hash ``_gh``, with each side's own gram count joined on — the
+    inputs of every set-overlap score (Jaccard, containment)."""
+    counts = postings.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
+    ca = counts.select(F.col("_id").alias("id_a"), F.col("_n").alias("_na"))
+    cb = counts.select(F.col("_id").alias("id_b"), F.col("_n").alias("_nb"))
+    return _shared_counts(postings, "_gh").join(ca, "id_a").join(cb, "id_b")
+
+
 def minhash_params(
     num_hashes: int, seed: int = 42
 ) -> List[Tuple[int, int]]:
@@ -73,6 +171,185 @@ def minhash_params(
         (rng.randint(1, MERSENNE31 - 1), rng.randint(0, MERSENNE31 - 1))
         for _ in range(num_hashes)
     ]
+
+
+def signature_columns(
+    frame: DataFrame,
+    id_column: str,
+    text_column: str,
+    num_hashes: int,
+    shingle_k: int,
+    seed: int,
+) -> DataFrame:
+    """MinHash signatures ``(_id, _sig array<long>)`` over distinct word
+    shingles; documents with fewer than ``shingle_k`` words (zero-word
+    ones included) are dropped.
+
+    Staged so each expensive array (shingles, md5 hashes) materializes
+    exactly once — Catalyst does not CSE repeated subexpressions across
+    the ``num_hashes`` per-permutation lambdas, so inlining the md5 work
+    into every permutation would multiply scan cost by ``num_hashes``.
+    Pure array expressions — no shuffle, no UDF."""
+    s0 = frame.select(
+        F.col(id_column).alias("_id"),
+        words(F.col(text_column)).alias("_w"),
+    )
+    # filter on the tokens, not on size(_sh) — a pushed-down filter on
+    # _sh would re-inline the whole shingle pipeline into the scan
+    # predicate (equivalent: _sh empty iff len(_w) < k). A zero-word
+    # document tokenizes to [''], which at k=1 would be one shingle, so
+    # the empty token is not counted. One reference to _w: the pushed
+    # filter re-inlines the tokenization once per reference (a second
+    # `_w[0] != ''` test measured ~15% slower on the sf0.1 token stage).
+    s1 = s0.filter(F.size(F.array_remove("_w", "")) >= shingle_k).select(
+        "_id", shingles_from_words(F.col("_w"), shingle_k).alias("_sh")
+    )
+    s2 = s1.select(
+        "_id", F.transform("_sh", lambda s: hash28(s)).alias("_hh")
+    )
+    sig = F.array(
+        *[
+            F.array_min(
+                F.transform(
+                    "_hh",
+                    lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE31,
+                )
+            )
+            for a, b in minhash_params(num_hashes, seed)
+        ]
+    )
+    return s2.select("_id", sig.alias("_sig"))
+
+
+def band_keys(
+    frame: DataFrame, keep: Sequence[str], key_exprs: Sequence[Column]
+) -> DataFrame:
+    """One row per band: the ``keep`` columns plus ``(band, bh)``, where
+    ``band`` is the index into ``key_exprs`` and ``bh`` that
+    expression's value."""
+    return frame.select(
+        *keep,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(j).alias("band"), e.alias("bh"))
+                    for j, e in enumerate(key_exprs)
+                ]
+            )
+        ).alias("b"),
+    ).select(*keep, "b.band", "b.bh")
+
+
+def minhash_bands(
+    frame: DataFrame, keep: Sequence[str], num_hashes: int, bands: int
+) -> DataFrame:
+    """:func:`band_keys` of a ``_sig`` column: band ``j``'s key is the md5
+    of its ``num_hashes // bands`` signature slots."""
+    r = num_hashes // bands
+    return band_keys(
+        frame,
+        keep,
+        [
+            F.md5(F.concat_ws(",", F.slice("_sig", j * r + 1, r)))
+            for j in range(bands)
+        ],
+    )
+
+
+def _colliding_keys(rows: DataFrame, key: str) -> DataFrame:
+    """``(_ka, _kb)``: distinct pairs of ``key`` values, ``_ka < _kb``,
+    that share at least one ``(band, bh)`` row of :func:`band_keys`.
+    The candidate exchange carries the band rows only — callers join
+    heavy payloads (signatures) back after this dedup."""
+    left = rows.select(F.col(key).alias("_ka"), "band", "bh")
+    right = rows.select(F.col(key).alias("_kb"), "band", "bh")
+    return (
+        left.join(right, ["band", "bh"])
+        .filter(F.col("_ka") < F.col("_kb"))
+        .select("_ka", "_kb")
+        .dropDuplicates(["_ka", "_kb"])
+    )
+
+
+def _expand_groups(
+    near: DataFrame, members: DataFrame, score: str, same: Column
+) -> DataFrame:
+    """Key pairs to id pairs. ``near`` holds verified ``(_ka, _kb,
+    score)`` pairs of group keys, ``members`` the ``(_key, _id)`` group
+    membership. Output ``(id_a, id_b, score)``, ``id_a < id_b``: every
+    member of group ``_ka`` with every member of group ``_kb`` (the
+    cross-group pairs), plus every pair inside one group, scored
+    ``same`` (identical keys). Sized by the true output, not by the
+    duplication factor of the groups."""
+    mem_a = members.select(
+        F.col("_key").alias("_ka"), F.col("_id").alias("_ia")
+    )
+    mem_b = members.select(
+        F.col("_key").alias("_kb"), F.col("_id").alias("_ib")
+    )
+    cross = (
+        near.join(mem_a, "_ka")
+        .join(mem_b, "_kb")
+        .select(
+            F.least("_ia", "_ib").alias("id_a"),
+            F.greatest("_ia", "_ib").alias("id_b"),
+            score,
+        )
+    )
+    within = (
+        mem_a.join(mem_a.select("_ka", F.col("_ia").alias("_ib")), "_ka")
+        .filter(F.col("_ia") < F.col("_ib"))
+        .select(
+            F.col("_ia").alias("id_a"),
+            F.col("_ib").alias("id_b"),
+            same.alias(score),
+        )
+    )
+    return cross.unionByName(within)
+
+
+def _with_fingerprint(df: DataFrame, text_column: str) -> DataFrame:
+    """``df`` plus the ``_fp`` text fingerprint the two filters below
+    key on."""
+    return df.withColumn("_fp", fingerprint(F.col(text_column)))
+
+
+def _keep_min_id(with_fp: DataFrame, id_column: str) -> DataFrame:
+    """Keep exactly one row (the minimum id) per ``_fp`` fingerprint,
+    dropping ``_fp``.
+
+    Implemented as a min-id aggregation on the fingerprint followed by a
+    semi-join on (fingerprint, id) — two hash shuffles on a 32-byte key.
+    (A window row_number over fingerprint would be one shuffle but forces
+    a full sort per group; for dedup the aggregation form wins at scale
+    because the combiner pre-reduces map-side.)"""
+    reps = (
+        with_fp.groupBy("_fp")
+        .agg(F.min(id_column).alias("_rep"))
+        .withColumnRenamed("_fp", "_fp_r")
+    )
+    return with_fp.join(
+        reps,
+        (with_fp["_fp"] == reps["_fp_r"])
+        & (with_fp[id_column] == reps["_rep"]),
+        "left_semi",
+    ).drop("_fp")
+
+
+def drop_seen(
+    with_fp: DataFrame, seen: DataFrame, fingerprint_column: str
+) -> DataFrame:
+    """Rows of ``with_fp`` whose ``_fp`` is absent from the ``seen``
+    store's ``fingerprint_column`` — a LEFT ANTI equi-join on the 32-byte
+    fingerprint. The store side is pruned to that one column."""
+    return with_fp.join(
+        seen.select(F.col(fingerprint_column).alias("_seen_fp")).distinct(),
+        with_fp["_fp"] == F.col("_seen_fp"),
+        "left_anti",
+    )
+
+
+# ---- operators --------------------------------------------------------------
 
 
 def duplicate_groups(
@@ -100,29 +377,11 @@ def duplicate_groups(
 def dedup_exact(
     id_column: str, text_column: str
 ) -> Callable[[DataFrame], DataFrame]:
-    """Keep exactly one row (the minimum id) per distinct normalized text.
-
-    Implemented as a min-id aggregation on the fingerprint followed by a
-    semi-join on (fingerprint, id) — two hash shuffles on a 32-byte key.
-    (A window row_number over fingerprint would be one shuffle but forces
-    a full sort per group; for dedup the aggregation form wins at scale
-    because the combiner pre-reduces map-side.)"""
+    """Keep exactly one row (the minimum id) per distinct normalized text
+    (:func:`_keep_min_id` on the text fingerprint)."""
 
     def _transform(df: DataFrame) -> DataFrame:
-        with_fp = df.withColumn("_fp", fingerprint(F.col(text_column)))
-        reps = (
-            with_fp.groupBy("_fp")
-            .agg(F.min(id_column).alias("_rep"))
-            .withColumnRenamed("_fp", "_fp_r")
-        )
-        return (
-            with_fp.join(
-                reps,
-                (with_fp["_fp"] == reps["_fp_r"])
-                & (with_fp[id_column] == reps["_rep"]),
-                "left_semi",
-            ).drop("_fp")
-        )
+        return _keep_min_id(_with_fingerprint(df, text_column), id_column)
 
     return _transform
 
@@ -134,42 +393,14 @@ def minhash_signatures(
     shingle_k: int = 3,
     seed: int = 42,
 ) -> Callable[[DataFrame], DataFrame]:
-    """MinHash signatures over distinct word shingles:
-    ``(_id, _sig array<long>)``; documents with fewer than ``shingle_k``
-    words are dropped.
-
-    Staged so each expensive array (shingles, md5 hashes) materializes
-    exactly once — Catalyst does not CSE repeated subexpressions across
-    the ``num_hashes`` per-permutation lambdas, so inlining the md5 work
-    into every permutation would multiply scan cost by ``num_hashes``.
-    Pure array expressions — no shuffle, no UDF."""
+    """MinHash signatures ``(_id, _sig array<long>)`` of a batch corpus:
+    :func:`signature_columns` after :func:`_scale_out`."""
 
     def _transform(df: DataFrame) -> DataFrame:
-        s0 = _scale_out(df).select(
-            F.col(id_column).alias("_id"),
-            words(F.col(text_column)).alias("_w"),
+        return signature_columns(
+            _scale_out(df), id_column, text_column, num_hashes, shingle_k,
+            seed,
         )
-        # filter on the token count, not on size(_sh) — a pushed-down
-        # filter on _sh would re-inline the whole shingle pipeline into
-        # the scan predicate (equivalent: _sh empty iff len(_w) < k)
-        s1 = s0.filter(F.size("_w") >= shingle_k).select(
-            "_id", shingles_from_words(F.col("_w"), shingle_k).alias("_sh")
-        )
-        s2 = s1.select(
-            "_id", F.transform("_sh", lambda s: hash28(s)).alias("_hh")
-        )
-        sig = F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        "_hh",
-                        lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE31,
-                    )
-                )
-                for a, b in minhash_params(num_hashes, seed)
-            ]
-        )
-        return s2.select("_id", sig.alias("_sig"))
 
     return _transform
 
@@ -211,20 +442,14 @@ class MinHashLSHPairs(CacheOwner):
 
     def __call__(self, df: DataFrame) -> DataFrame:
         scope = self._open_scope()
-        num_hashes, bands = self.num_hashes, self.bands
-        r = num_hashes // bands
-        min_signature_similarity = self.min_signature_similarity
-
         sigs = df.transform(
             minhash_signatures(
-                self.id_column, self.text_column, num_hashes,
+                self.id_column, self.text_column, self.num_hashes,
                 self.shingle_k, self.seed,
             )
         )
         # The signature table is tiny next to the corpus (id + num_hashes
         # longs per doc); persist so shingling+minhash runs once.
-        from pyspark import StorageLevel
-
         sigs = scope.persist(sigs, StorageLevel.MEMORY_AND_DISK)
         # Signature-distinct banding (same rationale as the simhash
         # rewrite): wholesale-duplicated corpora give every copy the
@@ -246,40 +471,17 @@ class MinHashLSHPairs(CacheOwner):
         # exchange dominates; carrying 16 longs per row through it would
         # multiply the shuffle ~9×. (Same discipline as
         # similarity.topk_cosine_lsh.)
-        band_rows = dsigs.select(
+        pairs = _colliding_keys(
+            minhash_bands(dsigs, ["_rep"], self.num_hashes, self.bands),
             "_rep",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("band"),
-                            F.md5(
-                                F.concat_ws(
-                                    ",", F.slice("_sig", j * r + 1, r)
-                                )
-                            ).alias("bh"),
-                        )
-                        for j in range(bands)
-                    ]
-                )
-            ).alias("b"),
-        ).select("_rep", "b.band", "b.bh")
-
-        left = band_rows.select(F.col("_rep").alias("rep_a"), "band", "bh")
-        right = band_rows.select(F.col("_rep").alias("rep_b"), "band", "bh")
-        pairs = (
-            left.join(right, ["band", "bh"])
-            .filter(F.col("rep_a") < F.col("rep_b"))
-            .select("rep_a", "rep_b")
-            .dropDuplicates(["rep_a", "rep_b"])
         )
         sig_a = dsigs.select(
-            F.col("_rep").alias("rep_a"), F.col("_sig").alias("sig_a")
+            F.col("_rep").alias("_ka"), F.col("_sig").alias("sig_a")
         )
         sig_b = dsigs.select(
-            F.col("_rep").alias("rep_b"), F.col("_sig").alias("sig_b")
+            F.col("_rep").alias("_kb"), F.col("_sig").alias("sig_b")
         )
-        scored = pairs.join(sig_a, "rep_a").join(sig_b, "rep_b")
+        scored = pairs.join(sig_a, "_ka").join(sig_b, "_kb")
         sim = (
             F.size(
                 F.filter(
@@ -287,47 +489,21 @@ class MinHashLSHPairs(CacheOwner):
                     lambda eq: eq,
                 )
             )
-            / F.lit(float(num_hashes))
+            / F.lit(float(self.num_hashes))
         ).alias("sig_similarity")
-        rep_pairs = scored.select("rep_a", "rep_b", sim).filter(
-            F.col("sig_similarity") >= min_signature_similarity
+        near = scored.select("_ka", "_kb", sim)
+        members = sigs.join(dsigs, "_sig").select(
+            "_id", F.col("_rep").alias("_key")
         )
-
-        # expand rep pairs to id pairs through group membership
-        members = sigs.join(dsigs, "_sig").select("_id", "_rep")
-        mem_a = members.select(
-            F.col("_rep").alias("rep_a"), F.col("_id").alias("_ia")
-        )
-        mem_b = members.select(
-            F.col("_rep").alias("rep_b"), F.col("_id").alias("_ib")
-        )
-        cross = (
-            rep_pairs.join(mem_a, "rep_a")
-            .join(mem_b, "rep_b")
-            .select(
-                F.least("_ia", "_ib").alias("id_a"),
-                F.greatest("_ia", "_ib").alias("id_b"),
-                "sig_similarity",
-            )
-        )
-        within = (
-            mem_a.join(
-                mem_a.select(
-                    F.col("rep_a"), F.col("_ia").alias("_ib")
-                ),
-                "rep_a",
-            )
-            .filter(F.col("_ia") < F.col("_ib"))
-            .select(
-                F.col("_ia").alias("id_a"),
-                F.col("_ib").alias("id_b"),
-                F.lit(1.0).alias("sig_similarity"),
-            )
+        # one threshold on the union: Catalyst pushes it into both
+        # branches — onto the rep-pair score before the expansion joins,
+        # and onto the within-group literal 1.0, where it folds away
+        return scope.tie(
+            _expand_groups(near, members, "sig_similarity", F.lit(1.0))
             .filter(
-                F.col("sig_similarity") >= min_signature_similarity
+                F.col("sig_similarity") >= self.min_signature_similarity
             )
         )
-        return scope.tie(cross.unionByName(within))
 
 
 def minhash_lsh_pairs(
@@ -375,47 +551,14 @@ def ngram_jaccard_pairs(
     """
 
     def _transform(df: DataFrame) -> DataFrame:
-        # tokenize in its own projection so the shingle lambda indexes a
-        # materialized array, not an inlined regex pass re-evaluated per
-        # element (shingles_from_words docstring; measured 8x on the
-        # sf0.1 shingle stream)
-        sh = (
-            _scale_out(df)
-            .select(
-                F.col(id_column).alias("_id"),
-                words(F.col(text_column)).alias("_w"),
-            )
-            .select(
-                "_id",
-                F.explode(shingles_from_words(F.col("_w"), shingle_k)).alias(
-                    "_s"
-                ),
-            )
-            .select("_id", hash56(F.col("_s")).alias("_h"))
-        )
-        counts = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
-        inter = (
-            sh.alias("a")
-            .join(sh.alias("b"), "_h")
-            .filter(F.col("a._id") < F.col("b._id"))
-            .groupBy(
-                F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-            )
-            .agg(F.count(F.lit(1)).alias("_k"))
-        )
-        ca = counts.select(
-            F.col("_id").alias("id_a"), F.col("_n").alias("_na")
-        )
-        cb = counts.select(
-            F.col("_id").alias("id_b"), F.col("_n").alias("_nb")
+        sh = gram_hash_stream(
+            _scale_out(df), text_column, shingle_k, id_column
         )
         jac = (
-            F.col("_k")
-            / (F.col("_na") + F.col("_nb") - F.col("_k"))
+            F.col("_k") / (F.col("_na") + F.col("_nb") - F.col("_k"))
         ).alias("jaccard")
         return (
-            inter.join(ca, "id_a")
-            .join(cb, "id_b")
+            _overlap(sh)
             .select("id_a", "id_b", jac)
             .filter(F.col("jaccard") >= threshold)
         )
@@ -473,60 +616,31 @@ class ContainmentPairs(CacheOwner):
 
     def __call__(self, df: DataFrame) -> DataFrame:
         scope = self._open_scope()
-        # staged tokenization (shingles_from_words docstring): the token
-        # array materializes in its own projection before the shingle
-        # lambda indexes it — the inlined form re-ran the normalize+split
-        # regex per shingle slot, measured 8x slower on this stream
         sh = scope.persist(
-            _scale_out(df)
-            .select(
-                F.col(self.id_column).alias("_id"),
-                words(F.col(self.text_column)).alias("_w"),
+            gram_hash_stream(
+                _scale_out(df), self.text_column, self.shingle_k,
+                self.id_column,
             )
-            .select(
-                "_id",
-                F.explode(
-                    shingles_from_words(F.col("_w"), self.shingle_k)
-                ).alias("_s"),
-            )
-            .select("_id", hash56(F.col("_s")).alias("_h"))
         )
         if self.max_df is not None:
             # the shingle set is distinct per document, so count(*) per
             # hash IS the document frequency. The cap filter, the self-
-            # join, and this aggregate all key on _h — one exchange
+            # join, and this aggregate all key on _gh — one exchange
             # layout, reused.
             kept = (
-                sh.groupBy("_h")
+                sh.groupBy("_gh")
                 .agg(F.count(F.lit(1)).alias("_df"))
                 .filter(F.col("_df") <= self.max_df)
-                .select("_h")
+                .select("_gh")
             )
-            sh = scope.persist(sh.join(kept, "_h"))
-        counts = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
-        inter = (
-            sh.alias("a")
-            .join(sh.alias("b"), "_h")
-            .filter(F.col("a._id") < F.col("b._id"))
-            .groupBy(
-                F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-            )
-            .agg(F.count(F.lit(1)).alias("_k"))
-        )
-        ca = counts.select(
-            F.col("_id").alias("id_a"), F.col("_n").alias("_na")
-        )
-        cb = counts.select(
-            F.col("_id").alias("id_b"), F.col("_n").alias("_nb")
-        )
+            sh = scope.persist(sh.join(kept, "_gh"))
         # pairs only arise from a shared kept shingle, so both sides have
         # ≥ 1 kept shingle — least() is never zero
         cont = (
             F.col("_k") / F.least(F.col("_na"), F.col("_nb"))
         ).alias("containment")
         return scope.tie(
-            inter.join(ca, "id_a")
-            .join(cb, "id_b")
+            _overlap(sh)
             .select("id_a", "id_b", cont)
             .filter(F.col("containment") >= self.threshold)
         )
@@ -549,22 +663,29 @@ def containment_pairs(
 
 
 def simhash_table(
-    id_column: str, text_column: str, bits: int = 63
+    id_column: str, text_column: str
 ) -> Callable[[DataFrame], DataFrame]:
-    """63-bit frequency-weighted SimHash per document.
+    """63-bit (:data:`SIMHASH_BITS`) frequency-weighted SimHash per
+    document.
 
     explode(words) → md5-derived 56-bit token hash → per-bit ±1 majority
     vote → assemble bits into one BIGINT. One shuffle (groupBy doc id);
     the 63 conditional sums are a single aggregation pass.
 
-    Output: (id, simhash). Empty documents are absent from the output.
+    Output: (id, simhash). Empty documents are absent from the output
+    (a zero-word text tokenizes to ``['']``; that token is dropped).
     """
 
     def _transform(df: DataFrame) -> DataFrame:
-        toks = _scale_out(df).select(
-            F.col(id_column).alias("id"),
-            F.explode(words(F.col(text_column))).alias("_tok"),
-        ).withColumn("_h", hash56(F.col("_tok")))
+        toks = (
+            _scale_out(df)
+            .select(
+                F.col(id_column).alias("id"),
+                F.explode(words(F.col(text_column))).alias("_tok"),
+            )
+            .filter(F.col("_tok") != "")
+            .withColumn("_h", hash56(F.col("_tok")))
+        )
         # single-expr strings, not composed Columns: each Column node is
         # a py4j round-trip and 63 bits x ~6 nodes costs ~1.5 s of DRIVER
         # time per plan build (measured); expr strings parse JVM-side
@@ -573,11 +694,11 @@ def simhash_table(
                 F.expr(f"sum(if((_h & {1 << b}L) != 0, 1, -1))").alias(
                     f"_v{b}"
                 )
-                for b in range(bits)
+                for b in range(SIMHASH_BITS)
             ]
         )
         assembled = " + ".join(
-            f"if(_v{b} > 0, {1 << b}L, 0L)" for b in range(bits)
+            f"if(_v{b} > 0, {1 << b}L, 0L)" for b in range(SIMHASH_BITS)
         )
         return votes.select(
             "id", F.expr(f"cast(({assembled}) as long)").alias("simhash")
@@ -597,38 +718,32 @@ class SimHashNearPairs(CacheOwner):
     equi-joins on (block index, block value) — never an all-pairs scan.
     Candidates are verified with an exact ``bit_count(a XOR b)``.
 
-    Same shuffle discipline as the MinHash band join: the candidate
-    stream carries (block, value, id) rows only; sketches join back
-    after the pair dedup, keyed by id. The sketch table is consumed
-    three times, so each ``__call__`` persists it into a per-call
-    :class:`~pywrangler_spark.util.CacheScope`.
+    Same shuffle discipline as the MinHash band join (the shared
+    :func:`band_keys` → :func:`_colliding_keys` → :func:`_expand_groups`
+    core): the candidate stream carries (block, value, sketch) rows only.
+    The sketch table is consumed three times, so each ``__call__``
+    persists it into a per-call :class:`~pywrangler_spark.util.CacheScope`.
 
     Output: (id_a, id_b, hamming), id_a < id_b, hamming <= max_hamming.
     """
 
     def __init__(
-        self,
-        id_column: str,
-        text_column: str,
-        max_hamming: int = 3,
-        bits: int = 63,
+        self, id_column: str, text_column: str, max_hamming: int = 3
     ) -> None:
-        if max_hamming < 1:
+        if not 1 <= max_hamming < SIMHASH_BITS:
             raise ValueError(
-                f"max_hamming must be >= 1, got {max_hamming}"
+                f"max_hamming must be in [1, {SIMHASH_BITS - 1}], "
+                f"got {max_hamming}"
             )
-        if bits < (max_hamming + 1):
-            raise ValueError("bits must exceed max_hamming + 1")
         self.id_column = id_column
         self.text_column = text_column
         self.max_hamming = max_hamming
-        self.bits = bits
 
     def _blocks(self):
         """(offset, width) per block: bits split as evenly as possible
         into max_hamming + 1 contiguous blocks."""
         n_blocks = self.max_hamming + 1
-        base, rem = divmod(self.bits, n_blocks)
+        base, rem = divmod(SIMHASH_BITS, n_blocks)
         out, off = [], 0
         for j in range(n_blocks):
             w = base + (1 if j < rem else 0)
@@ -637,13 +752,9 @@ class SimHashNearPairs(CacheOwner):
         return out
 
     def __call__(self, df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
         scope = self._open_scope()
         sk = scope.persist(
-            df.transform(
-                simhash_table(self.id_column, self.text_column, self.bits)
-            ),
+            df.transform(simhash_table(self.id_column, self.text_column)),
             StorageLevel.MEMORY_AND_DISK,
         )
 
@@ -658,85 +769,39 @@ class SimHashNearPairs(CacheOwner):
         dsk = scope.persist(
             sk.select("simhash").distinct(), StorageLevel.MEMORY_AND_DISK
         )
-
-        blocks = self._blocks()
-        rows = dsk.select(
-            "simhash",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("blk"),
-                            (
-                                F.shiftright(F.col("simhash"), off)
-                                .bitwiseAND(F.lit((1 << w) - 1))
-                            ).alias("bv"),
-                        )
-                        for j, (off, w) in enumerate(blocks)
-                    ]
+        rows = band_keys(
+            dsk,
+            ["simhash"],
+            [
+                F.shiftright(F.col("simhash"), off).bitwiseAND(
+                    F.lit((1 << w) - 1)
                 )
-            ).alias("b"),
-        ).select("simhash", "b.blk", "b.bv")
-
-        left = rows.select(F.col("simhash").alias("_sa"), "blk", "bv")
-        right = rows.select(F.col("simhash").alias("_sb"), "blk", "bv")
+                for off, w in self._blocks()
+            ],
+        )
         near = (
-            left.join(right, ["blk", "bv"])
-            .filter(F.col("_sa") < F.col("_sb"))
-            .select("_sa", "_sb")
-            .dropDuplicates(["_sa", "_sb"])
+            _colliding_keys(rows, "simhash")
             .withColumn(
                 "hamming",
-                F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))),
+                F.bit_count(F.col("_ka").bitwiseXOR(F.col("_kb"))),
             )
             .filter(F.col("hamming") <= self.max_hamming)
         )
-
-        # cross-group pairs: every member of sketch-group a with every
-        # member of sketch-group b (the true near-dup output)
-        mem_a = sk.select(
-            F.col("simhash").alias("_sa"), F.col("id").alias("_ia")
+        members = sk.select(
+            F.col("simhash").alias("_key"), F.col("id").alias("_id")
         )
-        mem_b = sk.select(
-            F.col("simhash").alias("_sb"), F.col("id").alias("_ib")
+        return scope.tie(
+            _expand_groups(near, members, "hamming", F.lit(0).cast("int"))
         )
-        cross = (
-            near.join(mem_a, "_sa")
-            .join(mem_b, "_sb")
-            .select(
-                F.least("_ia", "_ib").alias("id_a"),
-                F.greatest("_ia", "_ib").alias("id_b"),
-                "hamming",
-            )
-        )
-        # within-group pairs: identical sketches, hamming 0
-        within = (
-            mem_a.join(
-                mem_a.select(
-                    F.col("_sa"), F.col("_ia").alias("_ib")
-                ),
-                "_sa",
-            )
-            .filter(F.col("_ia") < F.col("_ib"))
-            .select(
-                F.col("_ia").alias("id_a"),
-                F.col("_ib").alias("id_b"),
-                F.lit(0).cast("int").alias("hamming"),
-            )
-        )
-        return scope.tie(cross.unionByName(within))
 
 
 def simhash_near_pairs(
-    id_column: str,
-    text_column: str,
-    max_hamming: int = 3,
-    bits: int = 63,
+    id_column: str, text_column: str, max_hamming: int = 3
 ) -> SimHashNearPairs:
     """Functional form of :class:`SimHashNearPairs` (drop-in for
     ``df.transform(simhash_near_pairs(...))``); keep the returned object
     to :meth:`SimHashNearPairs.release` the sketch cache."""
-    return SimHashNearPairs(id_column, text_column, max_hamming, bits)
+    return SimHashNearPairs(id_column, text_column, max_hamming)
 
 
 def dedup_incremental(
@@ -753,35 +818,19 @@ def dedup_incremental(
     ``duplicate_groups`` gives them directly.
 
     Plan: fingerprints compute scan-side on the batch; the history
-    check is a LEFT ANTI equi-join on the 32-byte fingerprint — the
-    batch side is the small probe against the big store, so at scale
-    this is the shuffled join whose exchange carries (fingerprint, id)
-    projections of the NEW batch only (the store side partial is pruned
-    to the fingerprint column by pushdown). Within-batch dedup then
-    reuses :func:`dedup_exact`'s aggregation+semi-join shape.
+    check (:func:`drop_seen`) is a LEFT ANTI equi-join on the 32-byte
+    fingerprint — the batch side is the small probe against the big
+    store, so at scale this is the shuffled join whose exchange carries
+    (fingerprint, id) projections of the NEW batch only (the store side
+    partial is pruned to the fingerprint column by pushdown).
+    Within-batch dedup then reuses :func:`dedup_exact`'s
+    aggregation+semi-join shape (:func:`_keep_min_id`).
     """
 
     def _transform(df: DataFrame) -> DataFrame:
-        with_fp = df.withColumn("_fp", fingerprint(F.col(text_column)))
-        unseen = with_fp.join(
-            seen.select(
-                F.col(fingerprint_column).alias("_seen_fp")
-            ).distinct(),
-            with_fp["_fp"] == F.col("_seen_fp"),
-            "left_anti",
-        )
-        reps = (
-            unseen.groupBy("_fp")
-            .agg(F.min(id_column).alias("_rep"))
-            .withColumnRenamed("_fp", "_fp_r")
-        )
-        return (
-            unseen.join(
-                reps,
-                (unseen["_fp"] == reps["_fp_r"])
-                & (unseen[id_column] == reps["_rep"]),
-                "left_semi",
-            ).drop("_fp")
+        with_fp = _with_fingerprint(df, text_column)
+        return _keep_min_id(
+            drop_seen(with_fp, seen, fingerprint_column), id_column
         )
 
     return _transform
@@ -915,7 +964,7 @@ def dedup_incremental_bloom(
                 res &= (bm[idx >> 3] >> (idx & 7) & 1).astype(bool)
             return pd.Series(res)
 
-        with_fp = df.withColumn("_fp", fingerprint(F.col(text_column)))
+        with_fp = _with_fingerprint(df, text_column)
         probe = [
             F.pmod(F.xxhash64(F.col("_fp"), F.lit(seed + i)), F.lit(m))
             for i in range(k)
@@ -923,26 +972,9 @@ def dedup_incremental_bloom(
         flagged = with_fp.withColumn("_maybe", _might_contain(*probe))
         neg = flagged.filter(~F.col("_maybe"))  # definitely unseen
         pos = flagged.filter(F.col("_maybe"))
-        verified = pos.join(
-            seen.select(
-                F.col(fingerprint_column).alias("_seen_fp")
-            ).distinct(),
-            pos["_fp"] == F.col("_seen_fp"),
-            "left_anti",
-        )
-        unseen = neg.unionByName(verified).drop("_maybe")
-        reps = (
-            unseen.groupBy("_fp")
-            .agg(F.min(id_column).alias("_rep"))
-            .withColumnRenamed("_fp", "_fp_r")
-        )
-        return (
-            unseen.join(
-                reps,
-                (unseen["_fp"] == reps["_fp_r"])
-                & (unseen[id_column] == reps["_rep"]),
-                "left_semi",
-            ).drop("_fp")
+        verified = drop_seen(pos, seen, fingerprint_column)
+        return _keep_min_id(
+            neg.unionByName(verified).drop("_maybe"), id_column
         )
 
     _transform.__name__ = "dedup_incremental_bloom"
@@ -972,8 +1004,9 @@ class cdc_chunk_neardup_pairs(CacheOwner):
        ``max_chunk_docs`` docs are boilerplate (the hot-gram exclusion
        the span-dedup family also applies) — dropping them bounds the
        join fanout at ``max_chunk_docs**2`` pairs per fingerprint.
-    3. A self-join on the fingerprint emits candidate pairs; pairs
-       sharing at least ``min_shared`` chunks survive.
+    3. A self-join on the fingerprint (:func:`_shared_counts`) emits
+       candidate pairs; pairs sharing at least ``min_shared`` chunks
+       survive.
 
     Output: ``(id_a, id_b, n_shared)`` with ``id_a < id_b``. Shuffles
     carry fingerprints and ids only — never text.
@@ -1019,7 +1052,7 @@ class cdc_chunk_neardup_pairs(CacheOwner):
             chunks.filter(F.col("n_tokens") >= self.min_chunk_tokens)
             .select(
                 F.xxhash64(F.col("chunk")).alias("_fp"),
-                F.col(self.id_column).alias("_doc"),
+                F.col(self.id_column).alias("_id"),
             )
             .distinct()
         )
@@ -1033,11 +1066,8 @@ class cdc_chunk_neardup_pairs(CacheOwner):
             "_fp",
             "left_semi",
         )
-        a = live.select("_fp", F.col("_doc").alias("id_a"))
-        b = live.select("_fp", F.col("_doc").alias("id_b"))
-        pairs = a.join(b, "_fp").filter(F.col("id_a") < F.col("id_b"))
         return scope.tie(
-            pairs.groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-            .filter(F.col("n_shared") >= self.min_shared)
+            _shared_counts(live, "_fp")
+            .filter(F.col("_k") >= self.min_shared)
+            .select("id_a", "id_b", F.col("_k").alias("n_shared"))
         )

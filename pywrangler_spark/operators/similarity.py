@@ -191,18 +191,37 @@ def _exact_rerank(
     return _ranked(_exact_scores(paired, score), score, k)
 
 
+def _stacked(vectors, dim: int) -> np.ndarray:
+    """``(rows, dim)`` f64 matrix of array values; a NULL vector becomes a
+    zero row. Every numpy path already ranks the zero vector the way the
+    JVM tiers rank a NULL cosine (NaN score, NULL after the exact
+    re-score, last by id), so NULL and zero vectors share one path."""
+    mat = np.zeros((len(vectors), dim))
+    for i, v in enumerate(vectors):
+        if v is not None:
+            mat[i] = v
+    return mat
+
+
 def _collected_queries(df: DataFrame, id_column: str, vector_column: str,
                        query_filter: Column):
     """The (bounded) query set collected driver-side as ``(ids, (Q, d)
-    f64 matrix)`` with unit rows (zero vectors stay zero), or None when
-    ``query_filter`` matches no row."""
+    f64 matrix)`` with unit rows (zero and NULL vectors stay zero), or
+    None when ``query_filter`` matches no row."""
     rows = df.filter(query_filter).select(
         F.col(id_column).alias("_qid"),
         to_double_array(F.col(vector_column)).alias("_qv"),
     ).collect()
     if not rows:
         return None
-    qmat = np.stack([np.asarray(r["_qv"], dtype="float64") for r in rows])
+    vecs = [r["_qv"] for r in rows]
+    dim = next((len(v) for v in vecs if v is not None), None)
+    if dim is None:  # every query vector is NULL: size them from the corpus
+        first = df.filter(F.col(vector_column).isNotNull()).select(
+            F.size(vector_column)
+        ).first()
+        dim = first[0] if first else 0
+    qmat = _stacked(vecs, dim)
     norms = np.linalg.norm(qmat, axis=1, keepdims=True)
     norms[norms == 0.0] = 1.0
     return [r["_qid"] for r in rows], qmat / norms
@@ -459,7 +478,7 @@ def topk_cosine(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                b = np.stack(pdf["_bv"].to_numpy()).astype("float64")
+                b = _stacked(pdf["_bv"].to_numpy(), qm.shape[1])
                 bn = np.linalg.norm(b, axis=1)
                 safe = np.where(bn == 0.0, 1.0, bn)
                 scores = np.round((b @ qm.T) / safe[:, None], 6)
@@ -657,6 +676,15 @@ class cosine_neardup_pairs(CacheOwner):
 # IVF (inverted-file) ANN — the k-means-partitioned scale path
 # ---------------------------------------------------------------------------
 
+def _fit_rows(df: DataFrame, vector_column: str) -> DataFrame:
+    """``(_v)``: the f64 vectors a quantizer fits on. NULL vectors carry
+    nothing to fit and are skipped; serving encodes them as zero rows
+    (:func:`_stacked`)."""
+    return df.select(
+        to_double_array(F.col(vector_column)).alias("_v")
+    ).filter(F.col("_v").isNotNull())
+
+
 def train_ivf_centroids(
     df: DataFrame,
     vector_column: str,
@@ -681,7 +709,7 @@ def train_ivf_centroids(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    base = df.select(to_double_array(F.col(vector_column)).alias("_v"))
+    base = _fit_rows(df, vector_column)
     if sample_fraction is not None:
         base = base.sample(fraction=sample_fraction, seed=seed)
     elif max_fit_rows is not None:
@@ -716,7 +744,7 @@ def _nearest_cells_udf(centers: np.ndarray, n_probe: int):
 
     @pandas_udf("array<int>")
     def nearest(vs: pd.Series) -> pd.Series:
-        mat = np.stack(vs.to_numpy())
+        mat = _stacked(vs.to_numpy(), centers.shape[1])
         sims = mat @ centers.T
         # argsort is deterministic for ties with kind="stable"
         order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
@@ -875,7 +903,7 @@ def train_pq_codebooks(
         raise ValueError(f"m must be >= 1, got {m}")
     if codebook_k < 2:
         raise ValueError(f"codebook_k must be >= 2, got {codebook_k}")
-    base = df.select(to_double_array(F.col(vector_column)).alias("_v"))
+    base = _fit_rows(df, vector_column)
     n = base.count()
     if n > max_fit_rows:
         base = base.sample(
@@ -931,7 +959,7 @@ def _pq_encode_udf(books: np.ndarray):
 
     @pandas_udf("array<int>")
     def encode(vs: pd.Series) -> pd.Series:
-        x = np.stack(vs.to_numpy()).astype("float64")
+        x = _stacked(vs.to_numpy(), m * sub)
         norms = np.linalg.norm(x, axis=1, keepdims=True)
         norms[norms == 0.0] = 1.0
         x = x / norms

@@ -17,7 +17,8 @@ Plan shape at 100 TB:
 1. positional gram stream: scan-side posexplode of (doc_id, pos,
    gram_hash) — 8-byte hashes, never gram strings;
 2. duplicated-gram set: doc frequency per gram hash, counted over a
-   SECOND scan pass that dedups grams per document scan-side
+   SECOND scan pass — ``operators.dedup.gram_hash_stream``, which
+   dedups grams per document scan-side
    (``shingles_from_words(distinct=True)``) so the aggregation is a
    plain map-side-combining ``count`` whose exchange is bounded by
    mappers x vocabulary — not ``count_distinct`` over the positional
@@ -86,6 +87,7 @@ from pywrangler_spark.functions.text import (
     token_count,
     words,
 )
+from pywrangler_spark.operators.dedup import gram_hash_stream
 from pywrangler_spark.util import CacheScope
 
 
@@ -94,9 +96,9 @@ def _positional_grams(
 ) -> DataFrame:
     """(_id, _pos, _gh): every n-gram occurrence with its 0-based start
     token index. Non-distinct — positions matter here, unlike the
-    decontamination stream. Staged like
-    ``decontaminate.gram_hash_stream`` (token array materializes before
-    the shingle lambda; hash after the explode)."""
+    family's shared ``dedup.gram_hash_stream``. Staged like it (token
+    array materializes before the shingle lambda; hash after the
+    explode)."""
     tokenized = df.select(
         F.col(id_column).alias("_id"), words(F.col(text_column)).alias("_w")
     )
@@ -106,53 +108,9 @@ def _positional_grams(
             shingles_from_words(F.col("_w"), n, distinct=False)
         ).alias("_pos", "_g"),
     )
-    # n=1 zero-word guard, as in decontaminate.gram_hash_stream
+    # n=1 zero-word guard, as in dedup.gram_hash_stream
     return exploded.filter(F.col("_g") != "").select(
         "_id", "_pos", hash56(F.col("_g")).alias("_gh")
-    )
-
-
-def _distinct_doc_grams(
-    df: DataFrame, id_column: str, text_column: str, n: int
-) -> DataFrame:
-    """``(_id, _gh)`` with one row per (document, distinct gram) — the
-    doc-frequency stream, deduplicated SCAN-SIDE via
-    ``shingles_from_words(distinct=True)`` so the consumer can count
-    documents with a plain ``count`` instead of ``count_distinct``.
-
-    Why this exists: ``count_distinct(_id)`` over the positional stream
-    plans as the two-phase distinct rewrite whose exchange carries every
-    distinct (gram, doc) PAIR — linear in the corpus even though the
-    vocabulary being counted is not (replicated/boilerplate corpora add
-    docs, not grams). Scan-side dedup makes the pairs unique by
-    construction, so the count is a partial_count that map-side-combines
-    to one (gram, n) row per mapper per distinct gram — the exchange is
-    bounded by mappers x vocabulary. Measured (sf100 same-window
-    isolated probe, bench_spanmask_count_probe_sf100.json): the
-    span-stats pipeline's total shuffle drops 10.2 -> 6.9 GB and the
-    decade-max query runs 227.9 -> 154.0 s (0.68x) with bit-identical
-    output; sf1/sf10 are neutral-to-better with the same ~5x cut on
-    the count exchange.
-
-    Collision caveat vs the superseded ``count_distinct`` form: rows
-    are distinct per (document, gram TEXT) scan-side, then hashed, so
-    two distinct grams in one document that collide under
-    :func:`hash56` count that document twice toward ``_nd``; the old
-    post-hash ``count_distinct(_id)`` grouped by ``_gh`` would have
-    counted it once. At 56 bits a within-document collision needs two
-    of a document's ~10³ grams to share a hash (~1e-11 per document),
-    and ``_nd`` only feeds >= thresholds — accepted, not silent."""
-    tokenized = df.select(
-        F.col(id_column).alias("_id"), words(F.col(text_column)).alias("_w")
-    )
-    exploded = tokenized.filter(F.size("_w") >= n).select(
-        "_id",
-        F.explode(
-            shingles_from_words(F.col("_w"), n, distinct=True)
-        ).alias("_g"),
-    )
-    return exploded.filter(F.col("_g") != "").select(
-        "_id", hash56(F.col("_g")).alias("_gh")
     )
 
 
@@ -194,12 +152,32 @@ def _hit_position_sets(
     taxed the FOLLOWING bench query at sf10 (rolling window 2.3 s →
     21.7 s after this operator, recovering over minutes)."""
     grams = _positional_grams(df, id_column, text_column, n)
-    # doc frequency from the scan-side-distinct stream: plain count
-    # with map-side combine, NOT count_distinct over the positional
-    # stream (whose distinct-rewrite exchange carries every (gram,
-    # doc) pair — see _distinct_doc_grams)
+    # Doc frequency from the shared gram stream, which is distinct per
+    # (document, gram) SCAN-SIDE (shingles_from_words(distinct=True)),
+    # so a plain ``count`` counts documents. ``count_distinct(_id)``
+    # over the positional stream plans as the two-phase distinct
+    # rewrite whose exchange carries every distinct (gram, doc) PAIR —
+    # linear in the corpus even though the vocabulary being counted is
+    # not (replicated/boilerplate corpora add docs, not grams). The
+    # plain count is a partial_count that map-side-combines to one
+    # (gram, n) row per mapper per distinct gram: the exchange is
+    # bounded by mappers x vocabulary. Measured (sf100 same-window
+    # isolated probe, bench_spanmask_count_probe_sf100.json): the
+    # span-stats pipeline's total shuffle drops 10.2 -> 6.9 GB and the
+    # decade-max query runs 227.9 -> 154.0 s (0.68x) with bit-identical
+    # output; sf1/sf10 are neutral-to-better with the same ~5x cut on
+    # the count exchange.
+    #
+    # Collision caveat vs the superseded ``count_distinct`` form: rows
+    # are distinct per (document, gram TEXT) scan-side, then hashed, so
+    # two distinct grams in one document that collide under hash56
+    # count that document twice toward ``_nd``; the old post-hash
+    # ``count_distinct(_id)`` grouped by ``_gh`` would have counted it
+    # once. At 56 bits a within-document collision needs two of a
+    # document's ~10³ grams to share a hash (~1e-11 per document), and
+    # ``_nd`` only feeds >= thresholds — accepted, not silent.
     dup = (
-        _distinct_doc_grams(df, id_column, text_column, n)
+        gram_hash_stream(df, text_column, n, id_column)
         .groupBy("_gh")
         .agg(F.count(F.lit(1)).alias("_nd"))
         .filter(F.col("_nd") >= min_docs)

@@ -190,7 +190,7 @@ def _normalize_py(s: str) -> str:
 
 def _gram_hashes_py(text, n: int) -> set:
     """Distinct word n-gram hash56 set — twin of
-    ``operators.decontaminate.gram_hash_stream``. NULL/empty text has
+    ``operators.dedup.gram_hash_stream``. NULL/empty text has
     no words, hence no grams (matching the Spark NULL-propagation and
     empty-gram filter)."""
     if text is None or (isinstance(text, float) and np.isnan(text)):

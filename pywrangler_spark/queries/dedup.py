@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from pywrangler_spark.operators.dedup import (
     MERSENNE31,
+    SIMHASH_BITS,
     dedup_exact,
     duplicate_groups,
     minhash_lsh_pairs,
@@ -235,13 +236,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- SimHash ----------------------------------------------------------------
 
 
-def _simhash_oracle(bits: int = 63) -> str:
+def _simhash_oracle() -> str:
     votes = ", ".join(
         f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     )
     assemble = " + ".join(
-        f"CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(bits)
+        f"CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END"
+        for b in range(SIMHASH_BITS)
     )
     return f"""
 WITH toks AS (
@@ -249,6 +251,7 @@ WITH toks AS (
     FROM documents
 ), hashed AS (
     SELECT doc_id, ('0x' || substr(md5(tok), 1, 14))::BIGINT AS h FROM toks
+    WHERE tok <> ''
 ), votes AS (
     SELECT doc_id AS id, {votes} FROM hashed GROUP BY doc_id
 )

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from pywrangler_spark.operators.decontaminate import gram_hash_stream
+from pywrangler_spark.operators.dedup import gram_hash_stream
 
 
 def stream_contamination_flag(

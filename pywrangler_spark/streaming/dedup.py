@@ -62,21 +62,14 @@ def stream_dedup_incremental(
     static side per micro-batch only for file sources — for a fixed
     snapshot semantics, pass a cached frame).
     """
-    from pywrangler_spark.functions.text import fingerprint as _fp
+    from pywrangler_spark.operators.dedup import _with_fingerprint, drop_seen
 
     if seen.isStreaming:
         raise ValueError("seen must be a static (batch) DataFrame")
 
-    from pyspark.sql import functions as F
-
     def _transform(sdf: DataFrame) -> DataFrame:
-        with_fp = sdf.withColumn("_fp", _fp(F.col(text_column)))
-        unseen = with_fp.join(
-            seen.select(
-                F.col(fingerprint_column).alias("_seen_fp")
-            ).distinct(),
-            with_fp["_fp"] == F.col("_seen_fp"),
-            "left_anti",
+        unseen = drop_seen(
+            _with_fingerprint(sdf, text_column), seen, fingerprint_column
         )
         return (
             unseen.withWatermark(ts_column, watermark)

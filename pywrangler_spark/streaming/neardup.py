@@ -3,9 +3,9 @@ of ``operators.dedup.MinHashLSHPairs``.
 
 The batch operator's pieces split cleanly along the stream/state line:
 
-- **signatures are stateless scan-side column expressions** (the same
-  shingle→hash28→affine-permutation→array_min pipeline the batch
-  operator runs — no UDF, no shuffle), so every micro-batch computes
+- **signatures are stateless scan-side column expressions** (the batch
+  operator's own ``operators.dedup.signature_columns`` and
+  ``minhash_bands`` — no UDF, no shuffle), so every micro-batch computes
   them as it arrives;
 - **band-bucket membership is the state**: the stream groups by
   ``(band, band_hash)`` and each bucket's ``applyInPandasWithState``
@@ -49,16 +49,12 @@ from typing import Callable, Iterator, Tuple
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pywrangler_spark.operators.dedup import (
-    MERSENNE31,
-    minhash_params,
-    shingles_from_words,
-    words,
+    minhash_bands,
+    signature_columns,
 )
-from pywrangler_spark.functions.hashing import hash28
 
 
 def stream_signatures(
@@ -69,35 +65,16 @@ def stream_signatures(
     seed: int = 42,
 ) -> Callable[[DataFrame], DataFrame]:
     """MinHash signatures ``(_id, _sig)`` for a streaming DataFrame —
-    the batch ``minhash_signatures`` column pipeline without the batch
+    the batch ``signature_columns`` pipeline without the batch
     ``_scale_out`` repartition (micro-batches inherit source
     parallelism; forcing a shuffle per micro-batch would serialize the
     trigger). Documents with fewer than ``shingle_k`` words drop, as in
     batch."""
 
     def _transform(sdf: DataFrame) -> DataFrame:
-        s0 = sdf.select(
-            F.col(id_column).alias("_id"),
-            words(F.col(text_column)).alias("_w"),
+        return signature_columns(
+            sdf, id_column, text_column, num_hashes, shingle_k, seed
         )
-        s1 = s0.filter(F.size("_w") >= shingle_k).select(
-            "_id", shingles_from_words(F.col("_w"), shingle_k).alias("_sh")
-        )
-        s2 = s1.select(
-            "_id", F.transform("_sh", lambda s: hash28(s)).alias("_hh")
-        )
-        sig = F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        "_hh",
-                        lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE31,
-                    )
-                )
-                for a, b in minhash_params(num_hashes, seed)
-            ]
-        )
-        return s2.select("_id", sig.alias("_sig"))
 
     return _transform
 
@@ -125,7 +102,6 @@ def stream_neardup_minhash(
         raise ValueError("min_signature_similarity must be in [0, 1]")
     if max_bucket_size < 2:
         raise ValueError("max_bucket_size must be >= 2")
-    r = num_hashes // bands
     threshold = float(min_signature_similarity)
 
     def _transform(sdf: DataFrame) -> DataFrame:
@@ -139,25 +115,7 @@ def stream_neardup_minhash(
                 id_column, text_column, num_hashes, shingle_k, seed
             )
         )
-        band_rows = sigs.select(
-            "_id",
-            "_sig",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("band"),
-                            F.md5(
-                                F.concat_ws(
-                                    ",", F.slice("_sig", j * r + 1, r)
-                                )
-                            ).alias("bh"),
-                        )
-                        for j in range(bands)
-                    ]
-                )
-            ).alias("b"),
-        ).select("_id", "_sig", "b.band", "b.bh")
+        band_rows = minhash_bands(sigs, ["_id", "_sig"], num_hashes, bands)
 
         overflow_cap = 16 * max_bucket_size
 

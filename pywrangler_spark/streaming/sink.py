@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame
 
 def idempotent_parquet_sink(
     path: str,
-    mode: str = "append",
     coalesce: Optional[int] = None,
 ) -> Callable[[DataFrame, int], None]:
     """Build the ``foreachBatch`` function:
@@ -45,11 +44,6 @@ def idempotent_parquet_sink(
     mid-write leaves only a scratch dir (``_tmp_batch_id=<n>``), which
     the next attempt clears before rewriting.
     """
-    if mode != "append":
-        raise ValueError(
-            f"only append mode is meaningful per-batch, got {mode!r}"
-        )
-
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # resolve the filesystem FROM the sink path: on HDFS/cluster

@@ -5,7 +5,10 @@ interval ops = 1 exchange; star joins = broadcast (no SortMergeJoin at
 test scale); filtered scans show PushedFilters; sketch/text ops = 0
 exchanges. Run after touching any query or operator.
 
-Usage: python scripts/plan_audit.py [sf_dir]
+Usage: python scripts/plan_audit.py [sf_dir] [names...]
+
+Names restrict the table to those queries (default: all registered), so
+two checkouts can be diffed on just the queries a change reaches.
 """
 import sys, os
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -17,8 +20,12 @@ from pywrangler_spark.plans import explain_string, count_exchanges, scan_info
 
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:] or sorted(QUERIES)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
     spark = get_spark("plan-audit", shuffle_partitions=8)
-    for name in sorted(QUERIES):
+    for name in sorted(names):
         df = QUERIES[name](spark, sf)
         plan = explain_string(df)
         scans = scan_info(df)

@@ -131,16 +131,6 @@ class TestContentDefinedChunking:
         assert len(ca) > 5
         assert cb[-(len(ca) - 1):] == ca[1:]
 
-    def test_zero_num_partitions_rejected(self, spark):
-        # an explicit 0 is invalid, not "use the derived default"
-        df = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
-        with pytest.raises(ValueError, match="num_partitions"):
-            df.transform(
-                chunk_content_defined(
-                    "doc_id", "text", avg_tokens=self.AVG, num_partitions=0
-                )
-            )
-
     def test_degenerate_docs(self, spark):
         df = spark.createDataFrame(
             [(1, ""), (2, None), (3, "solo"), (4, "  two  words ")],

@@ -13,7 +13,9 @@ from pyspark.sql import functions as F
 from pywrangler_spark.operators.dedup import (
     ContainmentPairs,
     containment_pairs,
+    minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    simhash_near_pairs,
 )
 
 
@@ -127,3 +129,16 @@ class TestContainment:
             ).count()
             == 0
         )
+        # zero-word documents have no grams at any k: at k=1 their
+        # tokenization [''] must not become a shared gram, signature or
+        # sketch (ids 1 and 2 used to pair at similarity 1.0 / hamming 0)
+        empty = _docs(spark, ["x", "", "   "])
+        for op in (
+            ngram_jaccard_pairs("doc_id", "text", shingle_k=1, threshold=0.0),
+            containment_pairs("doc_id", "text", shingle_k=1, threshold=0.0),
+            minhash_lsh_pairs(
+                "doc_id", "text", shingle_k=1, min_signature_similarity=0.0
+            ),
+            simhash_near_pairs("doc_id", "text", max_hamming=1),
+        ):
+            assert empty.transform(op).collect() == []

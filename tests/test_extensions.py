@@ -376,20 +376,27 @@ class TestSimilarity:
         """The exact tier's two plans agree: with ``query_filter`` (numpy
         batch-local top-L, then the JVM re-score) it returns exactly the
         all-pairs plan's rows for the filtered queries — through a zero
-        vector (NULL cosines), round-6 ties at rank k (12 copies of one
-        vector against k=5) and string ids, over several Arrow batches
-        each larger than the batch-local limit."""
+        vector and a NULL vector (NULL cosines, as query and as corpus
+        row), round-6 ties at rank k (12 copies of one vector against
+        k=5) and string ids, over several Arrow batches each larger than
+        the batch-local limit. The PQ and IVF-PQ tiers serve the same
+        frame, NULL query included."""
         import random
+
+        from pywrangler_spark.operators.similarity import (
+            topk_cosine_ivfpq,
+            topk_cosine_pq,
+        )
 
         rng = random.Random(11)
         vecs = [[rng.gauss(0, 1) for _ in range(8)] for _ in range(40)]
         rows = [(f"v{i:02d}", v) for i, v in enumerate(vecs)]
         rows += [(f"d{i:02d}", list(vecs[0])) for i in range(12)]
-        rows += [("z00", [0.0] * 8)]
+        rows += [("z00", [0.0] * 8), ("n00", None)]
         df = spark.createDataFrame(
             rows, "vid string, v array<double>"
         ).repartition(2)
-        queries = ["v00", "d03", "z00", "v07", "v19"]
+        queries = ["v00", "d03", "z00", "n00", "v07", "v19"]
         qf = F.col("vid").isin(*queries)
 
         def ranked(out):
@@ -409,6 +416,23 @@ class TestSimilarity:
         # the ties and the NULL rows are really exercised
         assert [r[2] for r in batched if r[0] == "v00"] == [1.0] * 5
         assert [r[2] for r in batched if r[0] == "z00"] == [None] * 5
+        assert [r[2] for r in batched if r[0] == "n00"] == [None] * 5
+        assert ("v07", "n00") not in {(r[0], r[1]) for r in batched}
+        only_null = ranked(
+            topk_cosine("vid", "v", k=5, query_filter=F.col("vid") == "n00")(
+                df
+            )
+        )
+        assert only_null == [r for r in all_pairs if r[0] == "n00"]
+        pq = topk_cosine_pq(
+            "vid", "v", k=5, m=2, codebook_k=4, query_filter=qf
+        )(df).collect()
+        assert {r.query_id for r in pq} == set(queries)
+        ivfpq = topk_cosine_ivfpq(
+            "vid", "v", k=5, n_centroids=2, n_probe=2, m=2, codebook_k=4,
+            query_filter=qf,
+        )(df).collect()
+        assert {r.query_id for r in ivfpq} == set(queries)
 
     def test_neardup_pairs_symmetric_bound(self, spark, embeddings):
         pairs = cosine_neardup_pairs("vec_id", "embedding", threshold=0.3)(

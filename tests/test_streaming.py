@@ -722,12 +722,6 @@ class TestIdempotentSink:
             os.path.join(out_dir, "_tmp_batch_id=7")
         )
 
-    def test_rejects_non_append(self):
-        from pywrangler_spark.streaming import idempotent_parquet_sink
-
-        with pytest.raises(ValueError, match="append"):
-            idempotent_parquet_sink("/tmp/x", mode="overwrite")
-
 
 class TestStreamingIncrementalDedup:
     def test_matches_batch_incremental(self, spark, tmp_path_factory):
