@@ -8,8 +8,7 @@ no exchanges. Rows before the first non-null (ffill) / after the last
 (bfill) stay null — pandas semantics.
 
 Tie precondition (applies to every reversed-order running-frame rewrite
-of "next non-null" in this repo — here, ``asof.py``,
-``interval_global.py``, ``interval_identifier.py``): the rewrite is
+of "next non-null" in this repo — here and ``asof.py``): the rewrite is
 exactly equivalent to an unbounded-FOLLOWING frame only when the
 orderby keys are unique within a group. With duplicate keys, tied peers
 can land on either side of the current row — but tie order was already

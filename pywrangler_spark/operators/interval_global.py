@@ -59,8 +59,8 @@ from pywrangler_spark.operators.interval_identifier import (
     kept_fills,
     kept_markers,
     marker_neighbours,
-    order_windows,
-    preceding,
+    next_value,
+    order_window,
     running,
     sort_columns,
     start_flags,
@@ -121,7 +121,7 @@ def identify_intervals_global(
         .sortWithinPartitions(*sort_cols)
         .withColumn("_pid", F.spark_partition_id())
     )
-    w, w_rev = order_windows(["_pid"], base.orderby_columns, base.ascending)
+    w = order_window(["_pid"], base.orderby_columns, base.ascending)
 
     if base._identical_markers:
         # cumsum of start flags: local cumsum + per-partition prefix
@@ -152,7 +152,7 @@ def identify_intervals_global(
     )
     scope = CacheScope()
     return scope.tie(
-        _general_path(scope.persist(part), df.columns, base, w, w_rev, scope)
+        _general_path(scope.persist(part), df.columns, base, w, scope)
     )
 
 
@@ -165,21 +165,11 @@ def _w_pid_before() -> Window:
     )
 
 
-def _w_pid_after() -> Window:
-    """Mirror of :func:`_w_pid_before` in descending pid order: with
-    ``last(..., ignorenulls=True)`` this reads "nearest following
-    partition with a non-null value"."""
-    return Window.orderBy(F.col("_pid").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-
-
 def _general_path(
     part: DataFrame,
     original: List[str],
     base: IntervalIdentifier,
     w: WindowSpec,
-    w_rev: WindowSpec,
     scope: CacheScope,
 ) -> DataFrame:
     # ---- pass A: marker boundary summary -------------------------------
@@ -197,14 +187,12 @@ def _general_path(
         F.last("_lm", ignorenulls=True).over(_w_pid_before()).alias(
             "_before_m"
         ),
-        F.last("_fm", ignorenulls=True).over(_w_pid_after()).alias(
-            "_after_m"
-        ),
+        next_value("_fm", Window.orderBy("_pid")).alias("_after_m"),
     )
 
     # ---- pass B: kept markers + kept summary ---------------------------
     s2 = part.join(F.broadcast(fills_a), "_pid", "left")
-    s2 = s2.select("*", *marker_neighbours(w, w_rev, "_before_m", "_after_m"))
+    s2 = s2.select("*", *marker_neighbours(w, "_before_m", "_after_m"))
     s3 = scope.persist(
         s2.select(
             *original, "_pid", "_mid",
@@ -215,10 +203,9 @@ def _general_path(
     )
 
     kmc = F.col("_km")
-    # next kept marker within the partition (local)
-    local_next_k = F.last(kmc, ignorenulls=True).over(preceding(w_rev))
     summary_b = (
-        s3.withColumn("_nk", local_next_k)
+        # next kept marker within the partition (local)
+        s3.withColumn("_nk", next_value("_km", w))
         .groupBy("_pid")
         .agg(
             F.min_by(
@@ -263,7 +250,6 @@ def _general_path(
     #                          non-empty partitions to
     #                          1 - _prev_last_be, giving
     #                          prefix(bs_sum + be_sum) + 1 - _prev_last_be
-    after_k = F.last("_fk", ignorenulls=True).over(_w_pid_after())
     n_valid = F.col("_n_resolved") + (
         (F.col("_trailing_open") > 0) & F.col("_after_k").eqNullSafe(
             F.lit(_END)
@@ -275,7 +261,7 @@ def _general_path(
             F.last("_lk", ignorenulls=True).over(_w_pid_before()).alias(
                 "_before_k"
             ),
-            after_k.alias("_after_k"),
+            next_value("_fk", Window.orderBy("_pid")).alias("_after_k"),
             F.lag("_last_be", 1, 1).over(Window.orderBy("_pid")).alias(
                 "_prev_last_be"
             ),
@@ -302,7 +288,7 @@ def _general_path(
 
     # ---- pass C: final labels ------------------------------------------
     s4 = s3.join(F.broadcast(fills_b), "_pid", "left").select(
-        "*", *kept_fills(w, w_rev, "_before_k", "_after_k", "_prev_last_be")
+        "*", *kept_fills(w, "_before_k", "_after_k", "_prev_last_be")
     )
     return s4.select(
         *original,

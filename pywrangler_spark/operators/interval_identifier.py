@@ -44,23 +44,33 @@ all four configs and all result types:
 1. *Denoise*: map the marker column to {start, end, NULL}.
 2. *Dedup runs*: in the denoised marker subsequence, a run of equal markers
    is collapsed to its first or last element per the ``*_use_first`` flags —
-   detected with forward/backward ``last/first(…, ignorenulls=True)`` fills,
-   no self-join.
-3. *Kept-marker fills*: forward/backward fills over the surviving markers
-   give, for every row: the last kept marker at-or-before it (``a``),
-   strictly-before it (``prev``), and strictly-after it (``next``). Because
-   kept markers strictly alternate start/end, a row is inside a **valid**
-   interval iff ``(a = start ∧ next = end) ∨ (a = end ∧ prev = start)`` —
-   no groupBy-and-rejoin, no second exchange.
+   detected from the nearest marker before and after each row, no
+   self-join.
+3. *Kept-marker fills*: over the surviving markers, for every row: the
+   last kept marker at-or-before it (``a``), strictly-before it
+   (``prev``), and strictly-after it (``next``). Because kept markers
+   strictly alternate start/end, a row is inside a **valid** interval iff
+   ``(a = start ∧ next = end) ∨ (a = end ∧ prev = start)`` — no
+   groupBy-and-rejoin, no second exchange.
 4. *Ids*: raw ids are a running sum of kept-start + lagged kept-end flags;
    enumerated ids are a running sum of valid-interval starts.
 
-All expressions share one ``Window.partitionBy(groupby).orderBy(orderby)``
-spec, so Catalyst plans a single Exchange + Sort followed by pipelined
-Window operators — verified with ``explain("formatted")``. At 100 TB the
-shuffle is therefore bounded by the group cardinality of the data, and the
-per-group state is O(1) streaming through the sorted partition. No Python
-UDFs anywhere (whole-stage codegen applies end-to-end).
+"Before" reads are ``last(…, ignorenulls=True)`` over running frames;
+"after" reads are ``lead(…, 1) IGNORE NULLS`` (:func:`next_value`), a
+frame-less offset function that Spark evaluates in one pass over the
+partition in the spec's own order — linear per group, like the running
+frames (``first`` over an UNBOUNDED FOLLOWING frame would rescan the
+partition tail per row). Every expression therefore shares one
+``Window.partitionBy(groupby).orderBy(orderby)`` spec, and Catalyst plans
+a single Exchange + Sort followed by pipelined Window operators
+(``tests/test_plan_contracts.py`` pins 1 Exchange and 1 Sort per grouped
+interval query). At 100 TB the shuffle is therefore bounded by the group
+cardinality of the data, and the per-group state is O(1) streaming
+through the sorted partition. No Python UDFs anywhere (whole-stage
+codegen applies end-to-end). Rows tied on the order columns read their
+before and after neighbours from that one sorted order; which order the
+sort gives tied rows is up to the engine, so append a unique tiebreaker
+to ``orderby_columns`` for deterministic ids.
 
 A window without ``groupby_columns`` degenerates to a single partition —
 fine for tests, fatal at scale; we warn (Spark does too).
@@ -70,8 +80,8 @@ One definition, several engines
 The stages above are module-level helpers — the *label kernel*
 (:func:`denoise`, :func:`marker_neighbours`, :func:`kept_markers`,
 :func:`kept_fills`, :func:`interval_labels`). Each returns columns over
-two window specs (partition + order, and the same partition in reversed
-order). :class:`IntervalIdentifier` calls them over its group windows.
+one window spec (:func:`order_window`). :class:`IntervalIdentifier`
+calls them over its group window.
 ``operators.interval_global`` calls the same helpers over its
 range-partition windows, adding *edge columns*: the marker just outside
 each partition edge and the id offsets of the partitions before it,
@@ -83,7 +93,7 @@ Spark and the pandas engine; ``set_params`` re-runs it.
 from __future__ import annotations
 
 import warnings
-from typing import Any, Callable, List, Optional, Sequence, Tuple, Union
+from typing import Any, Callable, List, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -112,36 +122,38 @@ _START, _END = 1, 2
 
 
 def sort_columns(
-    orderby: Sequence[str], ascending: Sequence[bool], reverse: bool = False
+    orderby: Sequence[str], ascending: Sequence[bool]
 ) -> List[Column]:
-    """Sort expressions for ``orderby``/``ascending``, optionally reversed."""
+    """Sort expressions for ``orderby``/``ascending``."""
     return [
-        F.col(c).asc() if asc != reverse else F.col(c).desc()
+        F.col(c).asc() if asc else F.col(c).desc()
         for c, asc in zip(orderby, ascending)
     ]
 
 
-def order_windows(
+def order_window(
     partition: Sequence[Any], orderby: Sequence[str], ascending: Sequence[bool]
-) -> Tuple[WindowSpec, WindowSpec]:
-    """The kernel's two window specs: ``partition`` ordered as given,
-    and the same partition in reversed order."""
-    return tuple(
-        Window.partitionBy(*partition).orderBy(
-            *sort_columns(orderby, ascending, reverse)
-        )
-        for reverse in (False, True)
+) -> WindowSpec:
+    """The kernel's one window spec: ``partition`` ordered as given."""
+    return Window.partitionBy(*partition).orderBy(
+        *sort_columns(orderby, ascending)
     )
 
 
 def preceding(w: WindowSpec) -> WindowSpec:
-    """Rows strictly before the current one. Over the reversed spec,
-    ``last(..., ignorenulls=True)`` on this frame is "next non-null":
-    Spark executes ``first`` over an unbounded-FOLLOWING frame by
-    rescanning the rest of the partition per row — O(rows²) per group,
-    measured 64x at a 10x scale-up — while running frames accumulate
-    incrementally."""
+    """Rows strictly before the current one: with
+    ``last(..., ignorenulls=True)`` this reads "previous non-null"."""
     return w.rowsBetween(Window.unboundedPreceding, -1)
+
+
+def next_value(name: str, w: WindowSpec) -> Column:
+    """The nearest non-null ``name`` strictly after the current row.
+    ``lead ... IGNORE NULLS`` is frame-less: Spark streams it through
+    the partition in one pass over ``w``'s own order, so it shares the
+    Sort of every other column over ``w`` (``first`` over an
+    unbounded-FOLLOWING frame rescans the partition tail per row).
+    ``F.lead`` takes no ignore-nulls flag, hence the SQL form."""
+    return F.expr(f"lead(`{name}`, 1) IGNORE NULLS").over(w)
 
 
 def running(w: WindowSpec) -> WindowSpec:
@@ -177,7 +189,6 @@ def denoise(marker_column: str, marker_start: Any, marker_end: Any) -> Column:
 
 def marker_neighbours(
     w: WindowSpec,
-    w_rev: WindowSpec,
     before: Optional[str] = None,
     after: Optional[str] = None,
 ) -> List[Column]:
@@ -187,8 +198,7 @@ def marker_neighbours(
     return [
         _edge(F.last(m, ignorenulls=True).over(preceding(w)), before, "int")
         .alias("_pm"),
-        _edge(F.last(m, ignorenulls=True).over(preceding(w_rev)), after, "int")
-        .alias("_nm"),
+        _edge(next_value("_m", w), after, "int").alias("_nm"),
     ]
 
 
@@ -218,7 +228,6 @@ def kept_markers(start_use_first: bool, end_use_first: bool) -> List[Column]:
 
 def kept_fills(
     w: WindowSpec,
-    w_rev: WindowSpec,
     before: Optional[str] = None,
     after: Optional[str] = None,
     prev_end: Optional[str] = None,
@@ -235,8 +244,7 @@ def kept_fills(
         .alias("_a"),
         _edge(F.last(km, ignorenulls=True).over(preceding(w)), before, "int")
         .alias("_prev"),
-        _edge(F.last(km, ignorenulls=True).over(preceding(w_rev)), after, "int")
-        .alias("_next"),
+        _edge(next_value("_km", w), after, "int").alias("_next"),
         _edge(be_lag, prev_end, "long").alias("_be_lag"),
     ]
 
@@ -360,7 +368,7 @@ class IntervalIdentifier(IntervalParams, SparkWrangler):
     Parameters: see :class:`IntervalParams`.
     """
 
-    def _windows(self) -> Tuple[WindowSpec, WindowSpec]:
+    def _window(self) -> WindowSpec:
         if not self.orderby_columns:
             raise ValueError(
                 "orderby_columns is required: Spark DataFrames have no "
@@ -373,7 +381,7 @@ class IntervalIdentifier(IntervalParams, SparkWrangler):
                 "execution.",
                 stacklevel=3,
             )
-        return order_windows(
+        return order_window(
             self.groupby_columns or [F.lit(0)],
             self.orderby_columns,
             self.ascending,
@@ -385,7 +393,7 @@ class IntervalIdentifier(IntervalParams, SparkWrangler):
             [self.marker_column, *self.orderby_columns, *self.groupby_columns],
             target=self.target_column_name,
         )
-        w, w_rev = self._windows()
+        w = self._window()
         original = list(df.columns)
         out = self.target_column_name
 
@@ -404,14 +412,14 @@ class IntervalIdentifier(IntervalParams, SparkWrangler):
             denoise(self.marker_column, self.marker_start, self.marker_end)
             .alias("_m"),
         )
-        s2 = s1.select("*", *marker_neighbours(w, w_rev))
+        s2 = s1.select("*", *marker_neighbours(w))
         s3 = s2.select(
             *original,
             *kept_markers(
                 self.marker_start_use_first, self.marker_end_use_first
             ),
         )
-        s4 = s3.select("*", *kept_fills(w, w_rev))
+        s4 = s3.select("*", *kept_fills(w))
         return s4.select(
             *original, interval_labels(self.result_type, w).alias(out)
         )

@@ -102,7 +102,9 @@ def _positional_grams(
     tokenized = df.select(
         F.col(id_column).alias("_id"), words(F.col(text_column)).alias("_w")
     )
-    exploded = tokenized.filter(F.size("_w") >= n).select(
+    # no size(_w) >= n filter, as in dedup.gram_hash_stream: it would be
+    # pushed into the scan with the tokenization inlined a second time
+    exploded = tokenized.select(
         "_id",
         F.posexplode(
             shingles_from_words(F.col("_w"), n, distinct=False)

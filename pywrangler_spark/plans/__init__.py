@@ -3,6 +3,7 @@
 from pywrangler_spark.plans.inspect import (
     codegen_stage_count,
     count_exchanges,
+    count_sorts,
     explain_string,
     scan_info,
 )
@@ -10,6 +11,7 @@ from pywrangler_spark.plans.inspect import (
 __all__ = [
     "explain_string",
     "count_exchanges",
+    "count_sorts",
     "codegen_stage_count",
     "scan_info",
 ]

@@ -26,18 +26,28 @@ def explain_string(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def _plan_tree(df: DataFrame) -> str:
+    """The (final) physical plan TREE of ``df``: after AQE execution the
+    formatted text contains a Final Plan tree, an Initial Plan tree, and
+    a details section that lists both trees' operators again — naive
+    counting over the whole text double- or triple-counts."""
+    plan = explain_string(df)
+    return plan.split("== Initial Plan ==")[0].split("\n\n")[0]
+
+
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle Exchange operators (excluding broadcast and
     reused exchanges) — the metric to minimize."""
-    plan = explain_string(df)
-    # count in the (final) plan TREE only: after AQE execution the text
-    # contains a Final Plan tree, an Initial Plan tree, and a details
-    # section that lists both trees' operators again — naive counting
-    # double- or triple-counts
-    tree = plan.split("== Initial Plan ==")[0].split("\n\n")[0]
     # tree lines look like "+- Exchange (4)"; the lookbehind excludes
     # BroadcastExchange / ReusedExchange
-    return len(re.findall(r"(?<![A-Za-z])Exchange \(\d+\)", tree))
+    return len(re.findall(r"(?<![A-Za-z])Exchange \(\d+\)", _plan_tree(df)))
+
+
+def count_sorts(df: DataFrame) -> int:
+    """Number of Sort operators (not SortMergeJoin / SortAggregate) —
+    each one re-sorts its whole input, so window specs that share one
+    order should plan exactly one."""
+    return len(re.findall(r"(?<![A-Za-z])Sort \(\d+\)", _plan_tree(df)))
 
 
 def codegen_stage_count(df: DataFrame) -> int:

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Physical-plan audit: for every registered query print shuffle-exchange
-count, join strategies, and scan pushdown facts. The shape contract:
-interval ops = 1 exchange; star joins = broadcast (no SortMergeJoin at
-test scale); filtered scans show PushedFilters; sketch/text ops = 0
-exchanges. Run after touching any query or operator.
+and sort counts, join strategies, and scan pushdown facts. The shape
+contract: grouped interval ops = 1 exchange + 1 sort; star joins =
+broadcast (no SortMergeJoin at test scale); filtered scans show
+PushedFilters; sketch/text ops = 0 exchanges. Run after touching any
+query or operator.
 
 Usage: python scripts/plan_audit.py [sf_dir] [names...]
 
@@ -15,7 +16,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pywrangler_spark.session import get_spark
 from pywrangler_spark.queries import QUERIES
-from pywrangler_spark.plans import explain_string, count_exchanges, scan_info
+from pywrangler_spark.plans import (
+    count_exchanges, count_sorts, explain_string, scan_info,
+)
 
 
 def main() -> None:
@@ -34,6 +37,7 @@ def main() -> None:
         )
         print(
             f"{name:32s} exch={count_exchanges(df):2d} "
+            f"sort={count_sorts(df):2d} "
             f"bhj={plan.count(') BroadcastHashJoin')} "
             f"smj={plan.count(') SortMergeJoin')} "
             f"bnlj={plan.count(') BroadcastNestedLoopJoin')} "

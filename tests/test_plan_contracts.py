@@ -8,10 +8,13 @@ construction only; nothing here runs jobs except the queries whose
 build includes a fit phase, which are excluded.
 """
 
+import re
+
 import pytest
 
 from pywrangler_spark.plans.inspect import (
     count_exchanges,
+    count_sorts,
     explain_string,
     scan_info,
 )
@@ -25,7 +28,19 @@ INTERVAL_QUERIES = [
     "interval_raw_ids", "interval_valid_ids",
 ]
 
+ALL_INTERVAL_QUERIES = [*INTERVAL_QUERIES, "interval_global_timeline"]
+
 SCAN_SIDE_QUERIES = ["text_stats", "lang_id", "multimodal_blob_stats"]
+
+
+def _window_details(plan: str) -> list:
+    """The formatted plan's details blocks of its Window operators
+    ("(5) Window" / "Input: ..." / "Arguments: ...")."""
+    return [
+        block
+        for block in plan.split("\n\n")
+        if re.fullmatch(r"\(\d+\) Window", block.strip().split("\n")[0])
+    ]
 
 
 class TestPlanContracts:
@@ -33,6 +48,25 @@ class TestPlanContracts:
     def test_interval_family_single_exchange(self, spark, name):
         df = QUERIES[name](spark, SF)
         assert count_exchanges(df) == 1, name
+
+    @pytest.mark.parametrize("name", INTERVAL_QUERIES)
+    def test_interval_family_single_sort(self, spark, name):
+        # every kernel window shares one ordering; "next marker" reads
+        # come from lead ... IGNORE NULLS over that same order, not
+        # from a reversed spec that re-sorts the partition
+        df = QUERIES[name](spark, SF)
+        assert count_sorts(df) == 1, explain_string(df)
+
+    @pytest.mark.parametrize("name", ALL_INTERVAL_QUERIES)
+    def test_interval_windows_forward_order_only(self, spark, name):
+        # no reversed-order window and no UNBOUNDED FOLLOWING frame
+        # (Spark rescans the partition tail per row for the latter)
+        plan = explain_string(QUERIES[name](spark, SF))
+        windows = _window_details(plan)
+        assert windows, plan
+        assert "unboundedfollowing" not in plan, plan
+        for details in windows:
+            assert "DESC" not in details, details
 
     @pytest.mark.parametrize("name", SCAN_SIDE_QUERIES)
     def test_text_family_zero_exchanges(self, spark, name):
