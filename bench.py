@@ -33,7 +33,9 @@ Three modes, one query loop (:func:`run_suite`) and one session bring-up:
   ``sys.path`` puts that package root first, so per-query HEAD/REF
   ratios (min over passes) are measured within the same host window —
   the host drifts 2-6x across minutes, which makes cross-round absolute
-  numbers incomparable.
+  numbers incomparable. ``bench_ab.json`` also keeps every pass's
+  per-query seconds for both arms and ``cpus``; the last stdout line
+  carries the ratio summary and the three worst ratios.
 - ``python bench.py --isolated [NAME ...]``: each query in its own fresh
   subprocess + session (best of the reps inside it).
 
@@ -191,6 +193,32 @@ def _run_in_subprocess(root: str, names, reps: int, telemetry: bool) -> dict:
         raise RuntimeError((proc.stderr or "runner died")[-500:]) from None
 
 
+def ab_record(sha: str, passes: dict, cpus) -> dict:
+    """Fold each arm's per-pass query seconds (``{"head": {query: [sec,
+    ...]}, "ref": {...}}``) into the ``bench_ab.json`` record: paired
+    per-query min-over-passes ratios (head/ref; <1 = HEAD faster) over
+    the queries both arms ran, plus the passes themselves and ``cpus``,
+    so a reader can tell whether a ratio is inside the pass spread."""
+    best = {arm: {n: min(secs) for n, secs in passes[arm].items()}
+            for arm in ("head", "ref")}
+    shared = sorted(set(best["head"]) & set(best["ref"]))
+    ratios = {
+        n: round(best["head"][n] / best["ref"][n], 3) for n in shared
+    }
+    svals = sorted(ratios.values())
+    return {
+        "metric": "ab_head_over_ref",
+        "ref": sha,
+        "n_shared": len(shared),
+        "head_total": round(sum(best["head"][n] for n in shared), 3),
+        "ref_total": round(sum(best["ref"][n] for n in shared), 3),
+        "median_ratio": svals[len(svals) // 2] if svals else None,
+        "ratios": ratios,
+        "cpus": cpus,
+        "passes": passes,
+    }
+
+
 def ab_main(ref: str) -> None:
     """Alternate whole-suite passes between HEAD and REF; emit paired
     per-query min-over-passes ratios (head/ref; <1 = HEAD faster)."""
@@ -200,7 +228,8 @@ def ab_main(ref: str) -> None:
     archive = subprocess.run(
         ["git", "-C", REPO, "archive", sha], capture_output=True, check=True
     ).stdout
-    best: dict = {"head": {}, "ref": {}}
+    passes: dict = {"head": {}, "ref": {}}
+    cpus = None
     with tempfile.TemporaryDirectory(prefix=f"bench_ref_{sha}_") as ref_root:
         tarfile.open(fileobj=io.BytesIO(archive)).extractall(ref_root)
         for p in range(REPS):
@@ -212,32 +241,19 @@ def ab_main(ref: str) -> None:
                 # each arm runs its own registry; failed queries are
                 # left out of its timings
                 res = _run_in_subprocess(root, [], 1, telemetry=False)
+                cpus = res["cpus"]
                 for name, sec in res["queries"].items():
-                    cur = best[variant].get(name)
-                    if cur is None or sec < cur:
-                        best[variant][name] = sec
+                    passes[variant].setdefault(name, []).append(sec)
 
-    shared = sorted(set(best["head"]) & set(best["ref"]))
-    ratios = {
-        n: round(best["head"][n] / best["ref"][n], 3) for n in shared
-    }
-    svals = sorted(ratios.values())
-    result = {
-        "metric": "ab_head_over_ref",
-        "ref": sha,
-        "n_shared": len(shared),
-        "head_total": round(sum(best["head"][n] for n in shared), 3),
-        "ref_total": round(sum(best["ref"][n] for n in shared), 3),
-        "median_ratio": svals[len(svals) // 2] if svals else None,
-        "ratios": ratios,
-    }
+    result = ab_record(sha, passes, cpus)
     out_name = os.environ.get("SPARK_GRAFT_BENCH_OUT", "bench_ab.json")
     with open(os.path.join(REPO, out_name), "w") as fh:
         json.dump(result, fh)
     print(json.dumps(result))
-    compact = {k: v for k, v in result.items() if k != "ratios"}
+    compact = {k: v for k, v in result.items()
+               if k not in ("ratios", "cpus", "passes")}
     compact["worst3"] = dict(
-        sorted(ratios.items(), key=lambda kv: -kv[1])[:3]
+        sorted(result["ratios"].items(), key=lambda kv: -kv[1])[:3]
     )
     print(json.dumps(compact))
 

@@ -1,4 +1,10 @@
-"""Structured Streaming variants of the batch operators."""
+"""Structured Streaming variants of the batch operators.
+
+The stateful twins (intervals, caps, sequence packing and pack
+rendering, trailing windows, resample/LOCF, MinHash near-dup) are each a
+pure per-key ``step(key, batch, state) -> (state, out)`` run by one
+core, :func:`pywrangler_spark.streaming.keyed.keyed_state`.
+"""
 
 from pywrangler_spark.streaming.caps import stream_cap_per_key
 from pywrangler_spark.streaming.chunk import stream_chunk_content_defined

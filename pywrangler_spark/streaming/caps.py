@@ -10,8 +10,8 @@ streaming cap uses the streaming-native semantics: keep the FIRST
 ``max_rows`` rows per key in (micro-batch, order_columns) order and
 suppress the rest.
 
-State per key is a single running count (``applyInPandasWithState``),
-so total state is O(number of distinct keys) — bounded by the key
+State per key is a single running count (``streaming.keyed``), so
+total state is O(number of distinct keys) — bounded by the key
 domain (sources/domains), not the stream length. Keys are never
 expired: a cap is a whole-stream contract, and expiring a key's counter
 would re-open its quota. If the key domain itself is unbounded, cap a
@@ -20,15 +20,11 @@ bounded re-key (e.g. registrable domain, not full URL).
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Sequence, Tuple, Union
+from typing import Callable, Sequence, Union
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import (
-    GroupState,
-    GroupStateTimeout,
-)
 
+from pywrangler_spark.streaming.keyed import keyed_state
 from pywrangler_spark.util import ensure_iterable
 
 
@@ -53,31 +49,13 @@ def stream_cap_per_key(
         raise ValueError(f"max_rows must be > 0, got {max_rows}")
     order = list(ensure_iterable(order_columns)) if order_columns else []
 
+    def _cap(key, batch, taken):
+        taken = taken or 0
+        admitted = batch.head(max(max_rows - taken, 0))
+        return taken + len(admitted), admitted
+
     def _transform(sdf: DataFrame) -> DataFrame:
-        out_schema = sdf.schema
-
-        def _cap(
-            key: Tuple,
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            (taken,) = state.get if state.exists else (0,)
-            budget = max_rows - taken
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            if order:
-                batch = batch.sort_values(order, kind="stable")
-            admitted = batch.head(max(budget, 0))
-            state.update((taken + len(admitted),))
-            if len(admitted):
-                yield admitted
-
-        return sdf.groupBy(*keys).applyInPandasWithState(
-            _cap,
-            outputStructType=out_schema,
-            stateStructType="taken long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return keyed_state(sdf, keys, sdf.schema, _cap, order)
 
     _transform.__name__ = "stream_cap_per_key"
     return _transform

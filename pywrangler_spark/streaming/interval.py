@@ -1,7 +1,6 @@
-"""Incremental marker-based interval identification
-(``applyInPandasWithState``) — the streaming variant of the batch
-``IntervalIdentifier`` for its default config (last start → first end,
-enumerated).
+"""Incremental marker-based interval identification — the streaming
+variant of the batch ``IntervalIdentifier`` for its default config
+(last start → first end, enumerated).
 
 Per-group state machine:
 
@@ -20,23 +19,24 @@ mode), so nothing is emitted that later data could retract.
 
 Constraints (documented, asserted nowhere): events must arrive in
 per-group event-time order across micro-batches (e.g. a log shipper per
-user); within a batch they are sorted. Buffered state is bounded by the
-longest unresolved interval.
+user); within a micro-batch a group's rows are sorted as one batch,
+across Arrow chunks. Buffered state is bounded by the longest
+unresolved interval.
 
-State is carried as (counter, JSON-encoded buffer) — buffers are small
-(one open interval) and the Arrow transfer stays batched.
+State per group is the interval counter and the open candidate's
+buffer (``streaming.keyed``) — buffers are small (one open interval).
 """
 
 from __future__ import annotations
 
-import json
-from typing import Any, Callable, Iterator, Tuple
+from typing import Any, Callable
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pywrangler_spark.streaming.keyed import key_columns, keyed_state, micros
 
 
 def stream_identify_intervals(
@@ -50,13 +50,6 @@ def stream_identify_intervals(
     """Streaming interval ids. Output schema: (group, ts, marker,
     iids) — emitted only once resolved (append semantics)."""
 
-    state_schema = T.StructType(
-        [
-            T.StructField("counter", T.LongType()),
-            T.StructField("buffer", T.StringType()),
-        ]
-    )
-
     def _transform(sdf: DataFrame) -> DataFrame:
         out_schema = T.StructType(
             [
@@ -66,72 +59,57 @@ def stream_identify_intervals(
                 T.StructField(target_column_name, T.LongType()),
             ]
         )
-        group_f, ts_f, marker_f = (
-            groupby_column,
-            ts_column,
-            marker_column,
-        )
 
-        def process(
-            key: Tuple,
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            counter, buffer = 0, []
-            if state.exists:
-                counter, buf_json = state.get
-                buffer = json.loads(buf_json)
-
-            out_rows = []
+        def step(key, batch, state):
+            counter, buffer = state or (0, [])
+            out_ts, out_marker, out_iid = [], [], []
 
             def emit(ts_us: int, marker: Any, iid: int) -> None:
-                out_rows.append((key[0], ts_us, marker, iid))
+                out_ts.append(ts_us)
+                out_marker.append(marker)
+                out_iid.append(iid)
 
-            for pdf in pdfs:
-                pdf = pdf.sort_values(ts_f)
-                ts_us = (
-                    pdf[ts_f].astype("datetime64[us]").astype("int64")
-                )
-                for ts_val, marker in zip(ts_us, pdf[marker_f]):
-                    marker = None if pd.isna(marker) else marker
-                    if marker == marker_start:
-                        for b_ts, b_m in buffer:  # previous candidate dies
-                            emit(b_ts, b_m, 0)
-                        buffer = [(int(ts_val), marker)]
-                    elif marker == marker_end:
-                        if buffer:
-                            counter += 1
-                            for b_ts, b_m in buffer:
-                                emit(b_ts, b_m, counter)
-                            emit(int(ts_val), marker, counter)
-                            buffer = []
-                        else:
-                            emit(int(ts_val), marker, 0)
-                    else:  # noise
-                        if buffer:
-                            buffer.append((int(ts_val), marker))
-                        else:
-                            emit(int(ts_val), marker, 0)
+            for ts_val, marker in zip(
+                micros(batch[ts_column]).tolist(), batch[marker_column]
+            ):
+                marker = None if pd.isna(marker) else marker
+                if marker == marker_start:
+                    for b_ts, b_m in buffer:  # previous candidate dies
+                        emit(b_ts, b_m, 0)
+                    buffer = [(ts_val, marker)]
+                elif marker == marker_end:
+                    if buffer:
+                        counter += 1
+                        for b_ts, b_m in buffer:
+                            emit(b_ts, b_m, counter)
+                        emit(ts_val, marker, counter)
+                        buffer = []
+                    else:
+                        emit(ts_val, marker, 0)
+                else:  # noise
+                    if buffer:
+                        buffer.append((ts_val, marker))
+                    else:
+                        emit(ts_val, marker, 0)
 
-            state.update((counter, json.dumps(buffer)))
-            if out_rows:
-                out = pd.DataFrame(
-                    out_rows,
-                    columns=[group_f, ts_f, marker_f, target_column_name],
-                )
-                out[ts_f] = out[ts_f].astype("datetime64[us]")
-                yield out
-
-        return (
-            sdf.select(group_f, ts_f, marker_f)
-            .groupBy(group_f)
-            .applyInPandasWithState(
-                process,
-                outputStructType=out_schema,
-                stateStructType=state_schema,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
+            out = pd.DataFrame(
+                {
+                    **key_columns([groupby_column], key, len(out_ts)),
+                    ts_column: pd.Series(out_ts, dtype="int64").astype(
+                        "datetime64[us]"
+                    ),
+                    marker_column: pd.Series(out_marker, dtype=object),
+                    target_column_name: pd.Series(out_iid, dtype="int64"),
+                }
             )
+            return (counter, buffer), out
+
+        return keyed_state(
+            sdf.select(groupby_column, ts_column, marker_column),
+            [groupby_column],
+            out_schema,
+            step,
+            order=[ts_column],
         )
 
     return _transform

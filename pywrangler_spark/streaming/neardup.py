@@ -8,8 +8,8 @@ The batch operator's pieces split cleanly along the stream/state line:
   ``minhash_bands`` — no UDF, no shuffle), so every micro-batch computes
   them as it arrives;
 - **band-bucket membership is the state**: the stream groups by
-  ``(band, band_hash)`` and each bucket's ``applyInPandasWithState``
-  group keeps the ``(id, signature)`` list of documents hashed there.
+  ``(band, band_hash)`` and each bucket's state (``streaming.keyed``)
+  keeps the ``(id, signature)`` list of documents hashed there.
   A new document emits a candidate pair against every current member,
   scored by full-signature agreement, then joins the bucket.
 
@@ -43,18 +43,17 @@ contract as cross-bucket duplicate emissions.
 
 from __future__ import annotations
 
-import pickle
-from typing import Callable, Iterator, Tuple
+from typing import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pywrangler_spark.operators.dedup import (
     minhash_bands,
     signature_columns,
 )
+from pywrangler_spark.streaming.keyed import keyed_state
 
 
 def stream_signatures(
@@ -104,6 +103,56 @@ def stream_neardup_minhash(
         raise ValueError("max_bucket_size must be >= 2")
     threshold = float(min_signature_similarity)
 
+    overflow_cap = 16 * max_bucket_size
+
+    def _probe(key, batch, stored):
+        if stored is None:
+            members = []  # list of (id, signature ndarray)
+            overflow = []  # capped FIFO of ids seen past the cap
+        elif isinstance(stored, dict):
+            members, overflow = stored["members"], stored["overflow"]
+        else:  # pre-overflow state layout: bare member list
+            members, overflow = stored, []
+        # membership is keyed by doc id: a re-ingested id has an
+        # identical signature by construction, so appending it again
+        # would only inflate state toward max_bucket_size (evicting
+        # capacity for genuinely new docs) and re-emit its pairs.
+        # Docs arriving while the bucket is full are remembered in
+        # the overflow id window so THEIR replays are no-ops too —
+        # up to overflow_cap ids (see module docstring).
+        seen_ids = {m[0] for m in members} | set(overflow)
+        out_a, out_b, out_s = [], [], []
+        for doc_id, sig in zip(
+            batch["_id"].to_numpy(), batch["_sig"].to_numpy()
+        ):
+            if int(doc_id) in seen_ids:
+                continue
+            sig = np.asarray(sig, dtype="int64")
+            if members:
+                known_ids = np.fromiter(
+                    (m[0] for m in members), dtype="int64"
+                )
+                mat = np.stack([m[1] for m in members])
+                sims = (mat == sig).mean(axis=1)
+                hit = (sims >= threshold) & (known_ids != doc_id)
+                for mid, s in zip(known_ids[hit], sims[hit]):
+                    out_a.append(min(int(mid), int(doc_id)))
+                    out_b.append(max(int(mid), int(doc_id)))
+                    out_s.append(float(s))
+            if len(members) < max_bucket_size:
+                members.append((int(doc_id), sig))
+            else:
+                overflow.append(int(doc_id))
+            seen_ids.add(int(doc_id))
+        out = pd.DataFrame(
+            {
+                "id_a": pd.Series(out_a, dtype="int64"),
+                "id_b": pd.Series(out_b, dtype="int64"),
+                "sig_similarity": pd.Series(out_s, dtype="float64"),
+            }
+        )
+        return {"members": members, "overflow": overflow[-overflow_cap:]}, out
+
     def _transform(sdf: DataFrame) -> DataFrame:
         if not sdf.isStreaming:
             raise ValueError(
@@ -115,82 +164,14 @@ def stream_neardup_minhash(
                 id_column, text_column, num_hashes, shingle_k, seed
             )
         )
-        band_rows = minhash_bands(sigs, ["_id", "_sig"], num_hashes, bands)
-
-        overflow_cap = 16 * max_bucket_size
-
-        def _probe(
-            key: Tuple,
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            if state.exists:
-                stored = pickle.loads(bytes(state.get[0]))
-                if isinstance(stored, dict):
-                    members = stored["members"]
-                    overflow = stored["overflow"]
-                else:  # pre-overflow state layout: bare member list
-                    members, overflow = stored, []
-            else:
-                members = []  # list of (id, signature ndarray)
-                overflow = []  # capped FIFO of ids seen past the cap
-            batch = pd.concat(list(pdfs), ignore_index=True)
+        return keyed_state(
+            minhash_bands(sigs, ["_id", "_sig"], num_hashes, bands),
+            ["band", "bh"],
+            "id_a long, id_b long, sig_similarity double",
+            _probe,
             # deterministic intra-batch order so replays emit the same
             # pairs (micro-batch row order is not guaranteed)
-            batch = batch.sort_values("_id", kind="stable")
-            # membership is keyed by doc id: a re-ingested id has an
-            # identical signature by construction, so appending it again
-            # would only inflate state toward max_bucket_size (evicting
-            # capacity for genuinely new docs) and re-emit its pairs.
-            # Docs arriving while the bucket is full are remembered in
-            # the overflow id window so THEIR replays are no-ops too —
-            # up to overflow_cap ids (see module docstring).
-            seen_ids = {m[0] for m in members} | set(overflow)
-            out_a, out_b, out_s = [], [], []
-            for doc_id, sig in zip(
-                batch["_id"].to_numpy(), batch["_sig"].to_numpy()
-            ):
-                if int(doc_id) in seen_ids:
-                    continue
-                sig = np.asarray(sig, dtype="int64")
-                if members:
-                    known_ids = np.fromiter(
-                        (m[0] for m in members), dtype="int64"
-                    )
-                    mat = np.stack([m[1] for m in members])
-                    sims = (mat == sig).mean(axis=1)
-                    hit = (sims >= threshold) & (known_ids != doc_id)
-                    for mid, s in zip(known_ids[hit], sims[hit]):
-                        out_a.append(min(int(mid), int(doc_id)))
-                        out_b.append(max(int(mid), int(doc_id)))
-                        out_s.append(float(s))
-                if len(members) < max_bucket_size:
-                    members.append((int(doc_id), sig))
-                else:
-                    overflow.append(int(doc_id))
-                seen_ids.add(int(doc_id))
-            if len(overflow) > overflow_cap:
-                overflow = overflow[-overflow_cap:]
-            state.update(
-                (pickle.dumps({"members": members, "overflow": overflow}),)
-            )
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "id_a": pd.Series(out_a, dtype="int64"),
-                        "id_b": pd.Series(out_b, dtype="int64"),
-                        "sig_similarity": pd.Series(out_s, dtype="float64"),
-                    }
-                )
-
-        return band_rows.groupBy("band", "bh").applyInPandasWithState(
-            _probe,
-            outputStructType=(
-                "id_a long, id_b long, sig_similarity double"
-            ),
-            stateStructType="members binary",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+            order=["_id"],
         )
 
     _transform.__name__ = "stream_neardup_minhash"

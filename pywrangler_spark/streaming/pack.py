@@ -4,7 +4,7 @@
 Packing is a running-total computation per shard: ``pack_id =
 floor(cum_tokens_before / budget)``. On a stream the running total must
 survive across micro-batches, so each shard keeps ONE number of state
-(the tokens consumed so far) in ``applyInPandasWithState`` — the same
+(the tokens consumed so far) in ``streaming.keyed`` — the same
 bounded-state shape as ``streaming.caps``: O(shards), independent of
 stream length, never expired (a pack layout is a whole-stream
 contract; expiring a shard's counter would restart its packs at 0).
@@ -21,12 +21,10 @@ would serialize the stream through one state key.
 
 from __future__ import annotations
 
-import pickle
-from typing import Callable, Iterator, Sequence, Tuple, Union
+from typing import Callable, Sequence, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -35,7 +33,24 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pywrangler_spark.streaming.keyed import key_columns, keyed_state
 from pywrangler_spark.util import ensure_iterable
+
+
+def _shard_args(name, budget, order_columns, partition_columns):
+    """Validated ``(order, parts)`` column lists of a packing twin."""
+    order = list(ensure_iterable(order_columns))
+    parts = list(ensure_iterable(partition_columns))
+    if budget <= 0:
+        raise ValueError(f"{name} requires a positive budget")
+    if not order:
+        raise ValueError(f"{name} requires order columns")
+    if not parts:
+        raise ValueError(
+            f"{name} requires a shard key: a global "
+            "packing order serializes the stream through one state key"
+        )
+    return order, parts
 
 
 def stream_pack_sequences(
@@ -51,17 +66,19 @@ def stream_pack_sequences(
     ``sdf.transform(stream_pack_sequences("n_tokens", 4096,
     "doc_id", "shard"))``
     """
-    order = list(ensure_iterable(order_columns))
-    parts = list(ensure_iterable(partition_columns))
-    if budget <= 0:
-        raise ValueError("stream_pack_sequences requires a positive budget")
-    if not order:
-        raise ValueError("stream_pack_sequences requires order columns")
-    if not parts:
-        raise ValueError(
-            "stream_pack_sequences requires a shard key: a global "
-            "packing order serializes the stream through one state key"
-        )
+    order, parts = _shard_args(
+        "stream_pack_sequences", budget, order_columns, partition_columns
+    )
+
+    def _pack(key, batch, consumed):
+        consumed = consumed or 0
+        sizes = batch[size_column].astype("int64")
+        cum_before = consumed + sizes.cumsum() - sizes
+        batch["pack_id"] = (cum_before // budget).astype("int64")
+        batch["pack_offset"] = (
+            cum_before - batch["pack_id"] * budget
+        ).astype("int64")
+        return int(consumed + sizes.sum()), batch
 
     def _transform(sdf: DataFrame) -> DataFrame:
         out_schema = StructType(
@@ -71,33 +88,7 @@ def stream_pack_sequences(
                 StructField("pack_offset", LongType()),
             ]
         )
-
-        def _pack(
-            key: Tuple,
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            (consumed,) = state.get if state.exists else (0,)
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            batch = batch.sort_values(order, kind="stable").reset_index(
-                drop=True
-            )
-            sizes = batch[size_column].astype("int64")
-            cum_before = consumed + sizes.cumsum() - sizes
-            batch["pack_id"] = (cum_before // budget).astype("int64")
-            batch["pack_offset"] = (
-                cum_before - batch["pack_id"] * budget
-            ).astype("int64")
-            state.update((int(consumed + sizes.sum()),))
-            yield batch
-
-        return sdf.groupBy(*parts).applyInPandasWithState(
-            _pack,
-            outputStructType=out_schema,
-            stateStructType="consumed long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return keyed_state(sdf, parts, out_schema, _pack, order)
 
     return _transform
 
@@ -130,22 +121,52 @@ def stream_render_packs(
     ``sdf.transform(stream_render_packs("text", "n_tokens", 4096,
     "doc_id", "shard"))``
     """
-    order = list(ensure_iterable(order_columns))
-    parts = list(ensure_iterable(partition_columns))
-    if budget <= 0:
-        raise ValueError("stream_render_packs requires a positive budget")
-    if not order:
-        raise ValueError("stream_render_packs requires order columns")
-    if not parts:
-        raise ValueError(
-            "stream_render_packs requires a shard key: a global "
-            "packing order serializes the stream through one state key"
+    order, parts = _shard_args(
+        "stream_render_packs", budget, order_columns, partition_columns
+    )
+
+    def _render(key, batch, st):
+        st = st or {"consumed": 0, "pack_id": None,
+                    "offsets": [], "texts": [], "sizes": []}
+        closed = []  # (pack_id, offsets, texts, sizes)
+        consumed = st["consumed"]
+        for text, size in zip(
+            batch[text_column], batch[size_column].astype("int64")
+        ):
+            pack_id = consumed // budget
+            offset = consumed - pack_id * budget
+            if st["pack_id"] is not None and pack_id != st["pack_id"]:
+                closed.append(
+                    (st["pack_id"], st["offsets"], st["texts"], st["sizes"])
+                )
+                st["offsets"], st["texts"], st["sizes"] = [], [], []
+            st["pack_id"] = int(pack_id)
+            st["offsets"].append(int(offset))
+            st["texts"].append(str(text))
+            st["sizes"].append(int(size))
+            consumed += int(size)
+        st["consumed"] = int(consumed)
+        return st, pd.DataFrame(
+            {
+                **key_columns(parts, key, len(closed)),
+                "pack_id": pd.Series([c[0] for c in closed], dtype="int64"),
+                "n_docs": pd.Series(
+                    [len(c[1]) for c in closed], dtype="int64"
+                ),
+                "n_tokens": pd.Series(
+                    [sum(c[3]) for c in closed], dtype="int64"
+                ),
+                "boundaries": pd.Series([list(c[1]) for c in closed]),
+                "packed_text": pd.Series(
+                    [joiner.join(c[2]) for c in closed]
+                ),
+            }
         )
 
     def _transform(sdf: DataFrame) -> DataFrame:
-        part_fields = [sdf.schema[p] for p in parts]
         out_schema = StructType(
-            [StructField(f.name, f.dataType) for f in part_fields]
+            [StructField(sdf.schema[p].name, sdf.schema[p].dataType)
+             for p in parts]
             + [
                 StructField("pack_id", LongType()),
                 StructField("n_docs", LongType()),
@@ -154,75 +175,7 @@ def stream_render_packs(
                 StructField("packed_text", StringType()),
             ]
         )
-
-        def _render(
-            key: Tuple,
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            if state.exists:
-                st = pickle.loads(bytes(state.get[0]))
-            else:
-                st = {"consumed": 0, "pack_id": None,
-                      "offsets": [], "texts": [], "sizes": []}
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            batch = batch.sort_values(order, kind="stable").reset_index(
-                drop=True
-            )
-            closed = []  # (pack_id, offsets, texts, sizes)
-            consumed = st["consumed"]
-            for text, size in zip(
-                batch[text_column], batch[size_column].astype("int64")
-            ):
-                pack_id = consumed // budget
-                offset = consumed - pack_id * budget
-                if st["pack_id"] is not None and pack_id != st["pack_id"]:
-                    closed.append(
-                        (st["pack_id"], st["offsets"], st["texts"],
-                         st["sizes"])
-                    )
-                    st["offsets"], st["texts"], st["sizes"] = [], [], []
-                st["pack_id"] = int(pack_id)
-                st["offsets"].append(int(offset))
-                st["texts"].append(str(text))
-                st["sizes"].append(int(size))
-                consumed += int(size)
-            st["consumed"] = int(consumed)
-            state.update((pickle.dumps(st),))
-            if closed:
-                yield pd.DataFrame(
-                    {
-                        **{
-                            f.name: pd.Series(
-                                [k] * len(closed)
-                            )
-                            for f, k in zip(part_fields, key)
-                        },
-                        "pack_id": pd.Series(
-                            [c[0] for c in closed], dtype="int64"
-                        ),
-                        "n_docs": pd.Series(
-                            [len(c[1]) for c in closed], dtype="int64"
-                        ),
-                        "n_tokens": pd.Series(
-                            [sum(c[3]) for c in closed], dtype="int64"
-                        ),
-                        "boundaries": pd.Series(
-                            [list(c[1]) for c in closed]
-                        ),
-                        "packed_text": pd.Series(
-                            [joiner.join(c[2]) for c in closed]
-                        ),
-                    }
-                )
-
-        return sdf.groupBy(*parts).applyInPandasWithState(
-            _render,
-            outputStructType=out_schema,
-            stateStructType="packstate binary",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return keyed_state(sdf, parts, out_schema, _render, order)
 
     _transform.__name__ = "stream_render_packs"
     return _transform

@@ -29,13 +29,11 @@ emitted range — never a per-event python loop.
 
 from __future__ import annotations
 
-import pickle
-from typing import Callable, Iterator, Sequence, Tuple, Union
+from typing import Callable, Sequence, Union
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -44,6 +42,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from pywrangler_spark.streaming.keyed import key_columns, keyed_state, micros
 from pywrangler_spark.util import ensure_iterable
 
 _AGGS = ("last", "sum", "avg", "min", "max")
@@ -111,6 +110,14 @@ def _finish(agg: str, partial) -> float:
     return partial[0]
 
 
+def _nullable(vals) -> pd.Series:
+    """NaN must surface as SQL NULL (the batch twin's pre-first-value
+    rows are NULL, and Arrow passes NaN through as NaN): ship as an
+    object column with None."""
+    col = pd.Series(vals)
+    return col.astype(object).where(col.notna(), None)
+
+
 def stream_resample_locf(
     ts_column: str,
     step_seconds: int,
@@ -148,6 +155,90 @@ def stream_resample_locf(
         raise ValueError(f"output must be 'dense' or 'runs', got {output!r}")
     step_us = int(step_seconds) * 1_000_000
 
+    def _resample(key, batch, state):
+        carry, open_idx, open_partial, open_cnt = state or (
+            float("nan"), None, None, 0,
+        )
+        t_us = micros(batch[ts_column])
+        v = batch[value_column].astype("float64").to_numpy()
+        bidx = t_us // step_us  # floor division: pre-1970 safe
+        if open_idx is not None:
+            live = bidx >= open_idx  # older buckets already emitted
+            t_us, v, bidx = t_us[live], v[live], bidx[live]
+        if not len(bidx):
+            return state, None
+
+        order = np.argsort(t_us, kind="stable")
+        t_us, v, bidx = t_us[order], v[order], bidx[order]
+        ub, starts, counts = np.unique(
+            bidx, return_index=True, return_counts=True
+        )
+        partials = [
+            _bucket_reduce(agg, t_us[s: s + c], v[s: s + c])
+            for s, c in zip(starts, counts)
+        ]
+        counts = counts.astype("int64")
+        if open_idx is not None and len(ub) and ub[0] == open_idx:
+            partials[0] = _merge_partials(agg, open_partial, partials[0])
+            counts[0] += open_cnt
+        elif open_idx is not None:
+            # the open bucket had no new events; it is still the
+            # range start and closes if anything newer arrived
+            ub = np.concatenate([[open_idx], ub])
+            partials = [open_partial] + partials
+            counts = np.concatenate([[open_cnt], counts])
+
+        newest = int(ub[-1])
+        emit_lo = int(ub[0])
+        out = None
+        if output == "runs" and emit_lo < newest:
+            # each closed non-empty bucket is one run, valid until
+            # the bucket before the NEXT non-empty one (the last
+            # closed run ends just before the still-open newest)
+            starts = ub[:-1]
+            ends = ub[1:] - 1
+            vals, nev = [], []
+            for p, c in zip(partials[:-1], counts[:-1]):
+                fv = _finish(agg, p)
+                if not np.isnan(fv):
+                    carry = float(fv)
+                vals.append(carry)
+                nev.append(int(c))
+            out = pd.DataFrame(
+                {
+                    **key_columns(groups, key, len(starts)),
+                    "valid_from": pd.to_datetime(starts * step_us, unit="us"),
+                    "valid_to": pd.to_datetime(ends * step_us, unit="us"),
+                    value_column: _nullable(vals),
+                    "n_events": np.asarray(nev, dtype="int64"),
+                }
+            )
+        elif emit_lo < newest:
+            span = np.arange(emit_lo, newest, dtype="int64")
+            vals = np.full(len(span), np.nan)
+            nev = np.zeros(len(span), dtype="int64")
+            closed = ub[:-1] - emit_lo  # positions of non-empty
+            for pos, p, c in zip(closed, partials[:-1], counts[:-1]):
+                vals[pos] = _finish(agg, p)
+                nev[pos] = c
+            # LOCF: forward-fill non-NaN bucket aggregates over the
+            # gap rows, seeded with the carried value
+            filled = np.concatenate([[carry], vals])
+            idx = np.arange(len(filled))
+            idx[np.isnan(filled)] = 0
+            np.maximum.accumulate(idx, out=idx)
+            filled = filled[idx][1:]
+            carry = float(filled[-1]) if len(filled) else carry
+            out = pd.DataFrame(
+                {
+                    **key_columns(groups, key, len(span)),
+                    "bucket_start": pd.to_datetime(span * step_us, unit="us"),
+                    value_column: _nullable(filled),
+                    "n_events": nev,
+                }
+            )
+        return (carry, newest, partials[-1], int(counts[-1])), out
+
     def _transform(sdf: DataFrame) -> DataFrame:
         key_fields = [sdf.schema[g] for g in groups]
         if output == "runs":
@@ -169,144 +260,6 @@ def stream_resample_locf(
                     StructField("n_events", LongType()),
                 ]
             )
-
-        def _resample(
-            key: Tuple,
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            if state.exists:
-                carry, open_idx, open_partial, open_cnt = pickle.loads(
-                    bytes(state.get[0])
-                )
-            else:
-                carry, open_idx, open_partial, open_cnt = (
-                    float("nan"), None, None, 0,
-                )
-
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            t_us = (
-                batch[ts_column]
-                .astype("datetime64[us]")
-                .astype("int64")
-                .to_numpy()
-            )
-            v = batch[value_column].astype("float64").to_numpy()
-            bidx = t_us // step_us  # floor division: pre-1970 safe
-            if open_idx is not None:
-                live = bidx >= open_idx  # older buckets already emitted
-                t_us, v, bidx = t_us[live], v[live], bidx[live]
-            if not len(bidx):
-                state.update((pickle.dumps(
-                    (carry, open_idx, open_partial, open_cnt)
-                ),))
-                return
-
-            order = np.argsort(t_us, kind="stable")
-            t_us, v, bidx = t_us[order], v[order], bidx[order]
-            ub, starts, counts = np.unique(
-                bidx, return_index=True, return_counts=True
-            )
-            partials = [
-                _bucket_reduce(
-                    agg, t_us[s: s + c], v[s: s + c]
-                )
-                for s, c in zip(starts, counts)
-            ]
-            counts = counts.astype("int64")
-            if open_idx is not None and len(ub) and ub[0] == open_idx:
-                partials[0] = _merge_partials(
-                    agg, open_partial, partials[0]
-                )
-                counts[0] += open_cnt
-            elif open_idx is not None:
-                # the open bucket had no new events; it is still the
-                # range start and closes if anything newer arrived
-                ub = np.concatenate([[open_idx], ub])
-                partials = [open_partial] + partials
-                counts = np.concatenate([[open_cnt], counts])
-
-            newest = int(ub[-1])
-            emit_lo = int(ub[0])
-            if output == "runs" and emit_lo < newest:
-                # each closed non-empty bucket is one run, valid until
-                # the bucket before the NEXT non-empty one (the last
-                # closed run ends just before the still-open newest)
-                starts = ub[:-1]
-                ends = ub[1:] - 1
-                vals, nev = [], []
-                for p, c in zip(partials[:-1], counts[:-1]):
-                    fv = _finish(agg, p)
-                    if not np.isnan(fv):
-                        carry = float(fv)
-                    vals.append(carry)
-                    nev.append(int(c))
-                vcol = pd.Series(vals)
-                vcol = vcol.astype(object).where(vcol.notna(), None)
-                yield pd.DataFrame(
-                    {
-                        **{
-                            g: pd.Series([kv] * len(starts))
-                            for g, kv in zip(groups, key)
-                        },
-                        "valid_from": pd.to_datetime(
-                            starts * step_us, unit="us"
-                        ),
-                        "valid_to": pd.to_datetime(
-                            ends * step_us, unit="us"
-                        ),
-                        value_column: vcol,
-                        "n_events": np.asarray(nev, dtype="int64"),
-                    }
-                )
-            elif emit_lo < newest:
-                span = np.arange(emit_lo, newest, dtype="int64")
-                vals = np.full(len(span), np.nan)
-                nev = np.zeros(len(span), dtype="int64")
-                closed = ub[:-1] - emit_lo  # positions of non-empty
-                for pos, p, c in zip(closed, partials[:-1], counts[:-1]):
-                    vals[pos] = _finish(agg, p)
-                    nev[pos] = c
-                # LOCF: forward-fill non-NaN bucket aggregates over the
-                # gap rows, seeded with the carried value
-                filled = np.concatenate([[carry], vals])
-                idx = np.arange(len(filled))
-                idx[np.isnan(filled)] = 0
-                np.maximum.accumulate(idx, out=idx)
-                filled = filled[idx][1:]
-                carry = float(filled[-1]) if len(filled) else carry
-                # NaN must surface as SQL NULL (the batch twin's
-                # pre-first-value rows are NULL, and Arrow passes NaN
-                # through as NaN): ship as object column with None
-                vcol = pd.Series(filled)
-                vcol = vcol.astype(object).where(vcol.notna(), None)
-                out = pd.DataFrame(
-                    {
-                        **{
-                            g: pd.Series([kv] * len(span))
-                            for g, kv in zip(groups, key)
-                        },
-                        "bucket_start": pd.to_datetime(
-                            span * step_us, unit="us"
-                        ),
-                        value_column: vcol,
-                        "n_events": nev,
-                    }
-                )
-                yield out
-            open_idx = newest
-            open_partial = partials[-1]
-            open_cnt = int(counts[-1])
-            state.update((pickle.dumps(
-                (carry, open_idx, open_partial, open_cnt)
-            ),))
-
-        return sdf.groupBy(*groups).applyInPandasWithState(
-            _resample,
-            outputStructType=out_schema,
-            stateStructType="buf binary",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return keyed_state(sdf, groups, out_schema, _resample)
 
     return _transform

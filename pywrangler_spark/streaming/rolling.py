@@ -23,13 +23,10 @@ rows — the append-mode contract shared by all streaming twins here).
 
 from __future__ import annotations
 
-import pickle
-from typing import Callable, Iterator, Mapping, Sequence, Tuple, Union
+from typing import Callable, Mapping, Sequence, Union
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -37,6 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pywrangler_spark.streaming.keyed import keyed_state, micros
 from pywrangler_spark.util import ensure_iterable
 
 
@@ -68,81 +66,50 @@ def stream_trailing_window_agg(
         raise ValueError("trailing_seconds must be > 0")
     src_cols = list(sums.values())
 
+    def _roll(key, batch, state):
+        if state is None:
+            state = (
+                np.empty(0, dtype="int64"),
+                np.zeros((len(src_cols), 0), dtype="float64"),
+            )
+        st_t, st_v = state
+        bt = micros(batch[ts_column])
+        bv = np.stack(
+            [batch[c].astype("float64").to_numpy() for c in src_cols]
+        )
+        # the state buffer and the batch interleave in time: sort merged
+        all_t = np.concatenate([st_t, bt])
+        all_v = np.concatenate([st_v, bv], axis=1)
+        morder = np.argsort(all_t, kind="stable")
+        all_t = all_t[morder]
+        all_v = all_v[:, morder]
+
+        nn = ~np.isnan(all_v)
+        psum = np.cumsum(np.where(nn, all_v, 0.0), axis=1)
+        pcnt_nn = np.cumsum(nn, axis=1)
+        zeros = np.zeros((len(src_cols), 1))
+        psum = np.concatenate([zeros, psum], axis=1)
+        pcnt_nn = np.concatenate([zeros.astype("int64"), pcnt_nn], axis=1)
+
+        lo = np.searchsorted(all_t, bt - trailing_us, side="left")
+        hi = np.searchsorted(all_t, bt, side="right")
+        for i, out in enumerate(sums):
+            s = psum[i, hi] - psum[i, lo]
+            c = pcnt_nn[i, hi] - pcnt_nn[i, lo]
+            batch[out] = np.where(c > 0, s, np.nan)
+        batch[count_alias] = (hi - lo).astype("int64")
+
+        # >= so an event exactly T old survives: a future arrival
+        # tied with max_t still has it inside its closed window
+        keep = all_t >= all_t[-1] - trailing_us
+        return (all_t[keep], all_v[:, keep]), batch
+
     def _transform(sdf: DataFrame) -> DataFrame:
         out_schema = StructType(
             list(sdf.schema.fields)
             + [StructField(out, DoubleType()) for out in sums]
             + [StructField(count_alias, LongType())]
         )
-
-        def _roll(
-            key: Tuple,
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            if state.exists:
-                st_t, st_v = pickle.loads(bytes(state.get[0]))
-            else:
-                st_t = np.empty(0, dtype="int64")
-                st_v = np.zeros((len(src_cols), 0), dtype="float64")
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            bt = (
-                batch[ts_column]
-                .astype("datetime64[us]")
-                .astype("int64")
-                .to_numpy()
-            )
-            order = np.argsort(bt, kind="stable")
-            batch = batch.iloc[order].reset_index(drop=True)
-            bt = bt[order]
-            bv = np.stack(
-                [
-                    batch[c].astype("float64").to_numpy()
-                    for c in src_cols
-                ]
-            )
-
-            all_t = np.concatenate([st_t, bt])
-            all_v = np.concatenate([st_v, bv], axis=1)
-            # state is pruned to trailing order already and batch is
-            # sorted, but a late event can interleave — resort merged
-            morder = np.argsort(all_t, kind="stable")
-            all_t = all_t[morder]
-            all_v = all_v[:, morder]
-
-            nn = ~np.isnan(all_v)
-            psum = np.cumsum(np.where(nn, all_v, 0.0), axis=1)
-            pcnt_nn = np.cumsum(nn, axis=1)
-            zeros = np.zeros((len(src_cols), 1))
-            psum = np.concatenate([zeros, psum], axis=1)
-            pcnt_nn = np.concatenate(
-                [zeros.astype("int64"), pcnt_nn], axis=1
-            )
-
-            lo = np.searchsorted(all_t, bt - trailing_us, side="left")
-            hi = np.searchsorted(all_t, bt, side="right")
-            for i, out in enumerate(sums):
-                s = psum[i, hi] - psum[i, lo]
-                c = pcnt_nn[i, hi] - pcnt_nn[i, lo]
-                batch[out] = np.where(c > 0, s, np.nan)
-            batch[count_alias] = (hi - lo).astype("int64")
-
-            # >= so an event exactly T old survives: a future arrival
-            # tied with max_t still has it inside its closed window
-            keep = all_t >= all_t[-1] - trailing_us if len(all_t) else (
-                np.zeros(0, dtype=bool)
-            )
-            state.update(
-                (pickle.dumps((all_t[keep], all_v[:, keep])),)
-            )
-            yield batch
-
-        return sdf.groupBy(*keys).applyInPandasWithState(
-            _roll,
-            outputStructType=out_schema,
-            stateStructType="buf binary",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return keyed_state(sdf, keys, out_schema, _roll, [ts_column])
 
     return _transform

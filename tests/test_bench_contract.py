@@ -1,7 +1,8 @@
 """The bench.py contract: the final stdout line is compact JSON under 250
 characters, the full record carries ``cpus`` and per-query stage
 telemetry, and a query that fails on a later rep leaves neither a timing
-nor telemetry behind."""
+nor telemetry behind. The ``--ab`` record keeps every pass beside its
+min-over-passes ratios."""
 
 import json
 import os
@@ -53,6 +54,29 @@ def test_committed_full_record_renders_compact_line():
     line = json.dumps(bench._compact(full))
     assert len(line) < COMPACT_MAX, line
     assert json.loads(line)["n_queries"] == len(full["queries"])
+
+
+def test_ab_record_keeps_passes_beside_ratios():
+    passes = {
+        "head": {"q1": [2.0, 1.0, 1.5], "q2": [4.0, 3.0], "head_only": [1.0]},
+        "ref": {"q1": [2.5, 2.0], "q2": [2.0, 2.4], "ref_only": [9.0]},
+    }
+    rec = bench.ab_record("abc1234", passes, 4)
+    # min over passes per arm, shared queries only
+    assert rec["ratios"] == {"q1": 0.5, "q2": 1.5}
+    assert rec["n_shared"] == 2
+    assert (rec["head_total"], rec["ref_total"]) == (4.0, 4.0)
+    assert rec["median_ratio"] == 1.5
+    assert rec["ref"] == "abc1234" and rec["cpus"] == 4
+    # every pass of both arms survives, including unshared queries
+    assert rec["passes"] == passes
+    assert json.loads(json.dumps(rec)) == rec
+
+
+def test_ab_record_with_no_shared_query():
+    rec = bench.ab_record("abc1234", {"head": {"a": [1.0]}, "ref": {}}, 2)
+    assert rec["ratios"] == {} and rec["median_ratio"] is None
+    assert rec["n_shared"] == 0
 
 
 def test_stage_reader_is_none_with_ui_off(spark):

@@ -110,6 +110,54 @@ class TestStreamingIntervals:
         total = read_parquet(spark, f"{SF}/events.parquet").count()
         assert streamed.count() > total * 0.8
 
+    def test_key_spanning_arrow_chunks_matches_batch(self, spark, tmp_path):
+        """One key's micro-batch rows arrive out of time order across
+        several Arrow chunks: they are sorted as one batch, so every
+        emitted row carries the batch id."""
+        import datetime as dt
+
+        rows = [
+            (1, dt.datetime(2024, 1, 1, 0, 0, s), m)
+            for s, m in [
+                (5, "purchase"), (4, "view"), (1, "signup"),
+                (2, "view"), (3, "view"),
+            ]
+        ]
+        df = spark.createDataFrame(
+            rows, "user_id long, ts timestamp, event_type string"
+        )
+        files = str(tmp_path / "files")
+        df.coalesce(1).write.parquet(files)
+        batch = {
+            r.ts: r.iids
+            for r in df.transform(
+                identify_intervals(
+                    marker_column="event_type",
+                    marker_start="signup",
+                    marker_end="purchase",
+                    orderby_columns="ts",
+                    groupby_columns="user_id",
+                )
+            ).collect()
+        }
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        saved = spark.conf.get(conf)
+        spark.conf.set(conf, "2")
+        try:
+            streamed = _run_stream(
+                spark,
+                stream_identify_intervals(
+                    "event_type", "signup", "purchase", "user_id", "ts"
+                ),
+                files,
+                df.schema,
+                "intervals_chunked_sink",
+            ).collect()
+        finally:
+            spark.conf.set(conf, saved)
+        assert set(batch.values()) == {1}
+        assert {r.ts: r.iids for r in streamed} == batch
+
 
 class TestStreamingSessions:
     def test_session_counts_match_batch(self, spark, events_stream_dir):
@@ -1441,3 +1489,33 @@ class TestStreamingResample:
             if streamed.get(k) != batch[k]
         }
         assert not mismatch, list(mismatch.items())[:5]
+
+
+def test_keyed_state_is_the_only_stateful_call():
+    """Every stateful streaming twin runs through ``streaming.keyed``:
+    no other package file calls ``applyInPandasWithState(`` or imports
+    ``GroupState``."""
+    import ast
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "pywrangler_spark",
+    )
+    core = os.path.join("streaming", "keyed.py")
+    found = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, pkg)
+            if not f.endswith(".py") or rel == core:
+                continue
+            with open(path) as fh:
+                src = fh.read()
+            if "applyInPandasWithState(" in src:
+                found.append(f"{rel}: applyInPandasWithState(")
+            for node in ast.walk(ast.parse(src)):
+                if isinstance(node, ast.ImportFrom) and any(
+                    a.name.startswith("GroupState") for a in node.names
+                ):
+                    found.append(f"{rel}:{node.lineno}: imports GroupState")
+    assert not found, f"stateful plumbing outside streaming/keyed.py: {found}"
