@@ -301,12 +301,13 @@ def _stage_metrics_reader(spark):
     span-dedup shuffle-poisoning incident (one query's shuffle
     write-back inflating its NEIGHBOR 2.3 s -> 21.7 s) only by accident
     before."""
-    sc = spark.sparkContext
-    if not sc.uiWebUrl:
+    if not spark.sparkContext.uiWebUrl:
         return None
-    from pywrangler_spark.benchmark import settled_stages
+    # imported past the UI check: ``--ab`` runs REF packages, which may
+    # predate these names, with the UI off
+    from pywrangler_spark.benchmark import settled_stages, ui_api
 
-    api = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+    api = ui_api(spark)
 
     def read(seen=(), timeout: float = 0.0) -> dict:
         try:
@@ -318,55 +319,24 @@ def _stage_metrics_reader(spark):
 
 
 def _aggregate_stages(stages, slots: int) -> dict:
+    """One query's ``stage_metrics``: the
+    :func:`pywrangler_spark.benchmark.stage_totals` of its stages in MB
+    (the normalized peak is the mean-based estimate documented there;
+    README and SCALE.md label it so)."""
+    from pywrangler_spark.benchmark import stage_totals
+
+    t = stage_totals(stages, slots)
+
+    def mb(n) -> float:
+        return round(n / 2**20, 1)
+
     return {
-        "n_stages": len(stages),
-        "shuffle_read_mb": round(
-            sum(s.get("shuffleReadBytes", 0) for s in stages) / 2**20, 1
-        ),
-        "shuffle_write_mb": round(
-            sum(s.get("shuffleWriteBytes", 0) for s in stages) / 2**20, 1
-        ),
-        "spill_mb": round(
-            sum(
-                s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-                for s in stages
-            )
-            / 2**20,
-            1,
-        ),
-        # The REST stage-level peakExecutionMemory is the SUM of
-        # per-task peaks, so it inflates with task count (a 2048-task
-        # stage reports ~2048x one task's peak, not a resident
-        # figure). Keep the raw max-over-stages for cross-round
-        # comparability, and add a concurrency-normalized estimate:
-        # per-task MEAN peak x the slots that can run at once. This is
-        # a mean-based ESTIMATE, not an upper bound — when task peaks
-        # are skewed, the concurrently-resident peak can exceed it
-        # (max-per-task x slots would bound it, but the stage REST
-        # endpoint exposes only the sum; task-level summaries cost a
-        # withSummaries sweep per stage). Readers citing this figure
-        # (README, SCALE.md) label it as the mean-based estimate.
-        "peak_exec_mem_mb": round(
-            max(
-                (s.get("peakExecutionMemory", 0) for s in stages),
-                default=0,
-            )
-            / 2**20,
-            1,
-        ),
-        "peak_exec_mem_norm_mb": round(
-            max(
-                (
-                    s.get("peakExecutionMemory", 0)
-                    / max(s.get("numCompleteTasks", 1), 1)
-                    * min(s.get("numCompleteTasks", 1), slots)
-                    for s in stages
-                ),
-                default=0,
-            )
-            / 2**20,
-            1,
-        ),
+        "n_stages": t["n_stages"],
+        "shuffle_read_mb": mb(t["shuffle_read_bytes"]),
+        "shuffle_write_mb": mb(t["shuffle_write_bytes"]),
+        "spill_mb": mb(t["memory_bytes_spilled"] + t["disk_bytes_spilled"]),
+        "peak_exec_mem_mb": mb(t["peak_execution_memory"]),
+        "peak_exec_mem_norm_mb": mb(t["peak_execution_memory_norm"]),
     }
 
 

@@ -16,9 +16,10 @@ profiler for the PySpark engine. Two tiers:
   executor) and on a cluster, where it sees every executor — the tier
   the RSS sampler cannot provide (SURVEY M4).
 
-:func:`settled_stages` is the one reader of the ``/stages`` endpoint;
-the executor profiler and ``bench.py``'s per-query telemetry both
-call it and keep their own aggregation.
+:func:`settled_stages` is the one reader of the ``/stages`` endpoint
+and :func:`stage_totals` the one fold of its records; the executor
+profiler and ``bench.py``'s per-query telemetry both call them, with
+:func:`ui_api` naming the application's REST root.
 """
 
 from __future__ import annotations
@@ -71,6 +72,58 @@ def settled_stages(
         ):
             return snap
         time.sleep(0.1)
+
+
+def ui_api(spark, api_url: Optional[str] = None) -> Optional[str]:
+    """The application's monitoring REST root,
+    ``{base}/api/v1/applications/{id}``, where ``base`` is ``api_url``
+    (e.g. a history server) or the live UI; ``None`` when neither is
+    set (``spark.ui.enabled=false`` and no ``api_url``)."""
+    sc = spark.sparkContext
+    base = api_url or sc.uiWebUrl
+    return f"{base}/api/v1/applications/{sc.applicationId}" if base else None
+
+
+def stage_totals(stages: List[Dict[str, Any]], slots: int) -> Dict[str, Any]:
+    """Fold ``/stages`` records (as :func:`settled_stages` returns them)
+    into one run's totals: the stage count, summed spill and shuffle
+    bytes, and two peaks of ``peakExecutionMemory``.
+
+    The REST stage-level ``peakExecutionMemory`` is the SUM of per-task
+    peaks, so it inflates with task count (a 2048-task stage reports
+    ~2048x one task's peak, not a resident figure).
+    ``peak_execution_memory`` keeps the raw max over stages for
+    comparability with older records; ``peak_execution_memory_norm``
+    is a concurrency-normalized estimate: per-task MEAN peak x the
+    ``slots`` that can run at once, maxed over stages. It is a
+    mean-based ESTIMATE, not an upper bound — when task peaks are
+    skewed, the concurrently-resident peak can exceed it (max-per-task
+    x slots would bound it, but the stage endpoint exposes only the
+    sum; task-level summaries cost a ``withSummaries`` sweep per
+    stage)."""
+
+    def total(key: str) -> int:
+        return sum(s.get(key, 0) for s in stages)
+
+    return {
+        "n_stages": len(stages),
+        "peak_execution_memory": max(
+            (s.get("peakExecutionMemory", 0) for s in stages), default=0
+        ),
+        "peak_execution_memory_norm": max(
+            (
+                s.get("peakExecutionMemory", 0)
+                / max(s.get("numCompleteTasks", 1), 1)
+                * min(s.get("numCompleteTasks", 1), slots)
+                for s in stages
+            ),
+            default=0,
+        ),
+        "memory_bytes_spilled": total("memoryBytesSpilled"),
+        "disk_bytes_spilled": total("diskBytesSpilled"),
+        "shuffle_read_bytes": total("shuffleReadBytes"),
+        "shuffle_write_bytes": total("shuffleWriteBytes"),
+    }
 
 
 class TimeProfiler:
@@ -226,7 +279,9 @@ class SparkExecutorMemoryProfiler:
     - ``peak_execution_memory``: max over the run's stages of Spark's
       unsafe execution-memory peak (hash aggregation / sort / join
       buffers) — the number that decides whether a partition fits in
-      executor memory at the target scale;
+      executor memory at the target scale — and
+      ``peak_execution_memory_norm``, its slot-normalized estimate
+      (:func:`stage_totals`);
     - ``memory_bytes_spilled`` / ``disk_bytes_spilled``: summed spill,
       the symptom when it does not fit;
     - ``shuffle_read_bytes`` / ``shuffle_write_bytes``: summed exchange
@@ -246,7 +301,8 @@ class SparkExecutorMemoryProfiler:
     the post-run poll, silently under-reporting. The profiler warns
     when a run attributes zero stages or when the attributed set
     shrinks between polls (both are eviction signatures); raise
-    ``spark.ui.retainedStages`` for very long profiled calls.
+    ``spark.ui.retainedStages`` for very long profiled calls. The
+    post-run poll waits up to 10 s for the run's stages to settle.
     """
 
     def __init__(
@@ -255,23 +311,21 @@ class SparkExecutorMemoryProfiler:
         func: Callable[..., Any],
         runs: int = 1,
         api_url: Optional[str] = None,
-        poll_timeout: float = 10.0,
     ):
         if runs < 1:
             raise ValueError("runs must be >= 1")
-        sc = spark.sparkContext
-        base = api_url or sc.uiWebUrl
-        if not base:
+        api = ui_api(spark, api_url)
+        if api is None:
             raise RuntimeError(
                 "no application UI: build the session with "
                 'extra_conf={"spark.ui.enabled": "true"} (or pass '
                 "api_url= pointing at a history server) to use the "
                 "executor-metrics profiler; MemoryProfiler needs no UI"
             )
-        self._api = f"{base}/api/v1/applications/{sc.applicationId}"
+        self._api = api
+        self._slots = spark.sparkContext.defaultParallelism
         self.func = func
         self.runs = runs
-        self.poll_timeout = poll_timeout
         self.records: List[Dict[str, Any]] = []
 
     def _get(self, path: str):
@@ -286,7 +340,7 @@ class SparkExecutorMemoryProfiler:
         for _ in range(self.runs):
             seen = set(settled_stages(self._api))
             self.func(*args, **kwargs)
-            snap = settled_stages(self._api, seen, self.poll_timeout)
+            snap = settled_stages(self._api, seen, 10.0)
             stages = [s for sid, s in snap.items() if sid not in seen]
             if not stages:
                 warnings.warn(
@@ -295,27 +349,7 @@ class SparkExecutorMemoryProfiler:
                     "zero jobs, or its stages were evicted "
                     "(spark.ui.retainedStages); metrics are zeros."
                 )
-            self.records.append(
-                {
-                    "n_stages": len(stages),
-                    "peak_execution_memory": max(
-                        (s.get("peakExecutionMemory", 0) for s in stages),
-                        default=0,
-                    ),
-                    "memory_bytes_spilled": sum(
-                        s.get("memoryBytesSpilled", 0) for s in stages
-                    ),
-                    "disk_bytes_spilled": sum(
-                        s.get("diskBytesSpilled", 0) for s in stages
-                    ),
-                    "shuffle_read_bytes": sum(
-                        s.get("shuffleReadBytes", 0) for s in stages
-                    ),
-                    "shuffle_write_bytes": sum(
-                        s.get("shuffleWriteBytes", 0) for s in stages
-                    ),
-                }
-            )
+            self.records.append(stage_totals(stages, self._slots))
         return self
 
     @property

@@ -120,13 +120,17 @@ def _threshold_cap(
     return df.filter(b <= thr_map[F.col(label_column)])
 
 
-def suggest_fit_params(
-    n_rows: int,
-    base_rows: int = 128_000,
-    base_cap: int = 64_000,
-    base_features: int = 1 << 16,
-    max_features: int = 1 << 20,
-) -> dict:
+FIT_BASE_ROWS = 128_000
+"""Corpus size (rows) of the validated fit base point."""
+FIT_BASE_CAP = 64_000
+"""``max_fit_rows`` at the base point."""
+FIT_BASE_FEATURES = 1 << 16
+"""``n_features`` at the base point."""
+FIT_MAX_FEATURES = 1 << 20
+"""Ceiling on the scheduled ``n_features``."""
+
+
+def suggest_fit_params(n_rows: int) -> dict:
     """Capacity schedule for the classifier fit as the corpus grows past
     the validated base point — the ``suggest_ann_params`` treatment
     (capacity derived from one corpus count, not pinned constants).
@@ -139,29 +143,31 @@ def suggest_fit_params(
     and sample size is the lever (iterations/features/regularization
     measured flat). So both levers grow with the data:
 
-    - ``max_fit_rows``: doubles per decade of corpus beyond
-      ``base_rows`` — fit cost (treeAggregate passes over the sample)
-      grows 2x per 10x data, sublinear and bounded, while sample
-      vocabulary tracks a Heaps-law corpus (vocab ~ n^0.5 means ~3.2x
-      new types per decade; the synthetic key-shifted corpus is the
-      linear worst case and still closes most of the gap — ladder in
-      SCALE.md);
-    - ``n_features``: doubles per decade alongside the cap (hash-bucket
-      collision rate is vocab/buckets; growing the sample without the
-      feature space converts coverage into collisions), capped at
-      ``max_features`` — a 2^20 coefficient matrix per class is a few
-      MB, still a cheap MLlib broadcast.
+    - ``max_fit_rows``: ``FIT_BASE_CAP``, doubled per decade of corpus
+      beyond ``FIT_BASE_ROWS`` — fit cost (treeAggregate passes over
+      the sample) grows 2x per 10x data, sublinear and bounded, while
+      sample vocabulary tracks a Heaps-law corpus (vocab ~ n^0.5 means
+      ~3.2x new types per decade; the synthetic key-shifted corpus is
+      the linear worst case and still closes most of the gap — ladder
+      in SCALE.md);
+    - ``n_features``: ``FIT_BASE_FEATURES``, doubled per decade
+      alongside the cap (hash-bucket collision rate is vocab/buckets;
+      growing the sample without the feature space converts coverage
+      into collisions), capped at ``FIT_MAX_FEATURES`` — a 2^20
+      coefficient matrix per class is a few MB, still a cheap MLlib
+      broadcast.
 
-    Below ``base_rows`` the schedule returns the base point unchanged —
-    the cap only starts binding where the fit input outgrows it."""
+    Below ``FIT_BASE_ROWS`` the schedule returns the base point
+    unchanged — the cap only starts binding where the fit input
+    outgrows it."""
     import math
 
     n_rows = max(int(n_rows), 1)
-    decades = max(0.0, math.log10(n_rows / float(base_rows)))
+    decades = max(0.0, math.log10(n_rows / float(FIT_BASE_ROWS)))
     steps = int(round(decades))
     return {
-        "max_fit_rows": base_cap * 2**steps,
-        "n_features": min(max_features, base_features * 2**steps),
+        "max_fit_rows": FIT_BASE_CAP * 2**steps,
+        "n_features": min(FIT_MAX_FEATURES, FIT_BASE_FEATURES * 2**steps),
     }
 
 
@@ -174,22 +180,11 @@ def fit_text_classifier(
     reg_param: float = 1e-4,
     max_iter: int = 50,
     seed: int = 42,
-    fit_partitions: int = 0,
     max_fit_rows: int = 0,
 ):
     """Fit the classifier on labeled seed data. Returns
     ``(model, labels)``: the MLlib LogisticRegressionModel and the
     ordered label list (string label -> model index).
-
-    ``fit_partitions``: coalesce the seed to this many partitions
-    before fitting (0 = leave as-is). Every L-BFGS iteration runs one
-    treeAggregate over the input, so per-iteration cost has a
-    tasks-per-pass floor. On local[32] this measured NEUTRAL (warm
-    A/B, the scheduler launches tiny tasks in microseconds); on a real
-    cluster, where a task round-trips the scheduler and executors, a
-    small labeled seed over hundreds of partitions pays that floor
-    per iteration — the knob exists for that deployment. Leave 0 when
-    the seed is genuinely large.
 
     ``max_fit_rows``: cap the fit on a per-label-stratified sample of at
     most this many rows total (0 = fit on everything). The IVF-centroid
@@ -221,9 +216,6 @@ def fit_text_classifier(
     would need a second threshold pass to buy back at most
     ``n_labels - 1`` rows, noise at any cap worth setting."""
     from pyspark.ml.classification import LogisticRegression
-
-    if fit_partitions:
-        df = df.coalesce(fit_partitions)
 
     labels = [
         r[label_column]

@@ -850,7 +850,6 @@ def build_fingerprint_bloom(
     seen: DataFrame,
     fingerprint_column: str = "fingerprint",
     fpp: float = 0.01,
-    expected_items: Optional[int] = None,
     seed: int = 42,
     max_bitmap_bytes: int = 1 << 28,
 ):
@@ -863,9 +862,8 @@ def build_fingerprint_bloom(
     scan-side. Each Arrow batch folds its positions into one local
     bitmap (``mapInPandas``), and the driver ORs the per-batch bitmaps
     — the treeAggregate shape; what crosses the wire is one bitmap per
-    batch, never the positions. ``expected_items`` skips the sizing
-    ``count()`` when the caller knows the store size (fit-stage action
-    otherwise, like the ANN centroid fits).
+    batch, never the positions. Sizing counts the store first (a
+    fit-stage action, like the ANN centroid fits).
 
     Practical size bound: the driver holds one ``m/8``-byte partial per
     Arrow batch transiently plus the OR'd result, and the probe side
@@ -881,8 +879,7 @@ def build_fingerprint_bloom(
 
     if not 0.0 < fpp < 1.0:
         raise ValueError(f"fpp must be in (0, 1), got {fpp}")
-    n = expected_items if expected_items is not None else seen.count()
-    n = max(int(n), 1)
+    n = max(seen.count(), 1)
     m = max(64, int(-n * math.log(fpp) / (math.log(2) ** 2)))
     m = (m + 7) // 8 * 8  # byte-align
     if m // 8 > max_bitmap_bytes:
@@ -932,7 +929,6 @@ def dedup_incremental_bloom(
     text_column: str,
     fingerprint_column: str = "fingerprint",
     fpp: float = 0.01,
-    expected_items: Optional[int] = None,
     seed: int = 42,
 ) -> Callable[[DataFrame], DataFrame]:
     """:func:`dedup_incremental` with a bloom prefilter on the store.
@@ -947,8 +943,7 @@ def dedup_incremental_bloom(
 
     def _transform(df: DataFrame) -> DataFrame:
         bitmap, k, m = build_fingerprint_bloom(
-            seen, fingerprint_column, fpp=fpp,
-            expected_items=expected_items, seed=seed,
+            seen, fingerprint_column, fpp=fpp, seed=seed
         )
         sc = df.sparkSession.sparkContext
         bc = sc.broadcast(bitmap)

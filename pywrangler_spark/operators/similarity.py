@@ -366,10 +366,15 @@ def _lsh_bucket(vec_column: str, planes: Sequence[Sequence[float]]) -> Column:
     return F.expr("cast((" + " + ".join(terms) + ") as int)")
 
 
-def suggest_ann_params(n_rows: int, base_rows: int = 2000) -> dict:
+ANN_BASE_ROWS = 2000
+"""Corpus size (vectors) the approximate tiers' defaults were validated
+at; :func:`suggest_ann_params` counts decades from here."""
+
+
+def suggest_ann_params(n_rows: int) -> dict:
     """Capacity schedule for the approximate tiers as the corpus grows
     past the driver-scale defaults (16 cells / probe 4 / 4 tables /
-    no rerank, validated at ~2k vectors).
+    no rerank, validated at ``ANN_BASE_ROWS`` ~2k vectors).
 
     Measured rationale (``scripts/recall_probe.py``, SCALE.md recall
     table): with hyperparameters FROZEN at the driver-scale defaults, a
@@ -390,7 +395,7 @@ def suggest_ann_params(n_rows: int, base_rows: int = 2000) -> dict:
     import math
 
     n_rows = max(int(n_rows), 1)
-    decades = max(0.0, math.log10(n_rows / float(base_rows)))
+    decades = max(0.0, math.log10(n_rows / float(ANN_BASE_ROWS)))
     n_centroids = max(16, int(round(math.sqrt(n_rows))))
     return {
         "n_centroids": n_centroids,
@@ -506,26 +511,22 @@ def topk_cosine_lsh(
     n_tables: int = 4,
     seed: int = 42,
     query_filter: Optional[Column] = None,
-    multiprobe: bool = True,
     dim: Optional[int] = None,
-    probe_dim: bool = False,
     plane_kind: str = "gaussian",
 ) -> Callable[[DataFrame], DataFrame]:
     """Approximate top-k cosine neighbours via random-hyperplane LSH.
 
     ``n_tables`` independent hash tables (the standard recall lever: a
     neighbour is found if it collides in *any* table); candidates share the
-    query's bucket in some table, and with ``multiprobe`` the 1-bit-flipped
-    neighbour buckets are probed too. Cost per query ≈
+    query's bucket in some table, or one of its ``n_planes`` 1-bit-flipped
+    neighbour buckets (multi-probe). Cost per query ≈
     n_tables × (planes+1) × bucket size instead of the full corpus.
     Output schema matches :func:`topk_cosine`; recall is validated against
     it in the test suite.
 
     ``dim`` (the embedding width — a schema-level fact the caller knows)
-    is required so plan construction is purely declarative. For
-    interactive use only, ``probe_dim=True`` opts in to a one-row
-    metadata probe at build time — a driver-side action a production
-    pipeline must not take, hence the explicit opt-in.
+    is required so plan construction is purely declarative: reading it
+    off the data would be a driver-side action at build time.
 
     ``plane_kind='rademacher'`` swaps the Gaussian hyperplanes for ±1
     sign projections (:func:`rademacher_hyperplanes`): same family in
@@ -534,12 +535,10 @@ def topk_cosine_lsh(
     engine from the same constants (the oracle path for
     ``docvec_ann_lsh_serve``).
     """
-    if dim is None and not probe_dim:
+    if dim is None:
         raise ValueError(
             "topk_cosine_lsh requires dim= (the embedding width); plan "
-            "construction must not run driver-side actions. Pass "
-            "probe_dim=True to explicitly opt in to a one-row probe for "
-            "interactive use."
+            "construction must not run driver-side actions."
         )
     if plane_kind not in ("gaussian", "rademacher"):
         raise ValueError(
@@ -548,16 +547,13 @@ def topk_cosine_lsh(
         )
 
     def _transform(df: DataFrame) -> DataFrame:
-        d = dim if dim is not None else len(
-            df.select(vector_column).first()[0]
-        )
         plane_fn = (
             rademacher_hyperplanes
             if plane_kind == "rademacher"
             else hyperplanes
         )
         tables = [
-            plane_fn(n_planes, d, seed + 1000 * t)
+            plane_fn(n_planes, dim, seed + 1000 * t)
             for t in range(n_tables)
         ]
 
@@ -596,11 +592,9 @@ def topk_cosine_lsh(
         probe_structs = []
         for t in range(n_tables):
             bucket = F.col(f"_b{t}")
-            probes = [bucket]
-            if multiprobe:
-                probes += [
-                    bucket.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)
-                ]
+            probes = [bucket] + [
+                bucket.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)
+            ]
             probe_structs += [
                 F.struct(F.lit(t).alias("_t"), p.alias("_bucket"))
                 for p in probes

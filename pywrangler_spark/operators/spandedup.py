@@ -37,28 +37,28 @@ Plan shape at 100 TB:
    an explicit repartition of the agg side is eliminated as
    redundant). The operator therefore splits the join itself:
 
-   - **hot grams** (``>= hot_min_docs`` distinct docs) broadcast; the
-     gram stream probes them map-side, so a boilerplate gram's rows
-     never shuffle at all. The hot set is mass-bounded: at most
-     (total gram occurrences) / ``hot_min_docs`` grams can clear the
-     bar, so its size shrinks as the threshold rises. The DEFAULT
-     routing is ADAPTIVE, decided in Python from the persisted dup
-     set (one bounded aggregate action): a set at or under
-     ``HOT_BUDGET_ROWS`` broadcasts WHOLE — one join, the gram stream
-     never shuffles AND never needs the second probe scan — and a
-     bigger set splits at ``ceil(sum(_nd)/budget)``, which bounds the
-     hot side by the budget exactly. No absolute threshold is right
-     at every scale (the r11 sf100 probe found a x1000-replicated
-     corpus whose entire dup mass sits at ``_nd ~ 1000`` — a 100k bar
-     routed everything cold and cost a 17.7x excise decade), and no
-     declarative derivation is reliable (AQE decides the cold join
-     from a count-PARTIALS stage after the gram exchange is sunk; a
-     broadcast-scalar threshold fixes sf100 at 0.663x but inflates
-     the cold branch's static estimate and regresses sf10 2x) — see
-     ``_hit_position_sets`` for the measured trail.
-   - **cold grams** join shuffled, with per-key doc-fanout bounded by
-     ``hot_min_docs`` (intra-document repeats can still exceed the
-     bound rowwise; they are bounded by document length).
+   - **hot grams** broadcast; the gram stream probes them map-side,
+     so a boilerplate gram's rows never shuffle at all. Routing is
+     decided in Python from the persisted dup set (one bounded
+     aggregate action): a set at or under ``HOT_BUDGET_ROWS``
+     broadcasts WHOLE — one join, the gram stream never shuffles AND
+     never needs the second probe scan. A bigger set splits at the
+     derived threshold ``thr = max(min_docs, ceil(sum(_nd) /
+     HOT_BUDGET_ROWS))``: grams in ``thr``+ distinct docs are hot. The
+     hot set is mass-bounded — at most ``sum(_nd) / thr`` grams can
+     clear the bar — so it never exceeds the budget. No absolute
+     threshold is right at every scale (the r11 sf100 probe found a
+     x1000-replicated corpus whose entire dup mass sits at
+     ``_nd ~ 1000`` — a 100k bar routed everything cold and cost a
+     17.7x excise decade), and no declarative derivation is reliable
+     (AQE decides the cold join from a count-PARTIALS stage after the
+     gram exchange is sunk; a broadcast-scalar threshold fixes sf100
+     at 0.663x but inflates the cold branch's static estimate and
+     regresses sf10 2x) — see ``_hit_position_sets`` for the measured
+     trail.
+   - **cold grams** (``_nd < thr``) join shuffled, with per-key
+     doc-fanout bounded by ``thr`` (intra-document repeats can still
+     exceed the bound rowwise; they are bounded by document length).
 
    The hot probe deliberately recomputes the gram stream scan-side
    instead of reading the cold join's shuffled exchange: reading the
@@ -76,7 +76,7 @@ Plan shape at 100 TB:
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -116,16 +116,25 @@ def _positional_grams(
     )
 
 
+def check_span_params(n: int, min_docs: int) -> None:
+    """The span operators' parameter contract, shared with their pandas
+    twins: ``n >= 1`` words per gram, ``min_docs >= 2`` documents."""
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
+    if min_docs < 2:
+        raise ValueError(f"min_docs must be >= 2, got {min_docs}")
+
+
 HOT_BUDGET_ROWS = 2_000_000
 """Broadcast budget (rows) for the adaptive dup-gram routing.
 
 2M rows of 8-byte gram hashes ≈ 32 MB on the wire — comfortably inside
 any executor/driver budget this engine targets. Used two ways by the
-default (``hot_min_docs=None``) policy in :func:`_hit_position_sets`:
-a dup set at or under the budget broadcasts WHOLE (one join, no
-split); above it, the hot threshold ``ceil(sum(_nd) / budget)``
-guarantees ``|hot| <= budget`` exactly (at most ``sum/threshold`` rows
-can clear a doc-frequency bar of ``threshold``)."""
+routing in :func:`_hit_position_sets`: a dup set at or under the budget
+broadcasts WHOLE (one join, no split); above it, the derived hot
+threshold ``ceil(sum(_nd) / budget)`` guarantees ``|hot| <= budget``
+exactly (at most ``sum/threshold`` rows can clear a doc-frequency bar
+of ``threshold``)."""
 
 
 def _hit_position_sets(
@@ -134,7 +143,6 @@ def _hit_position_sets(
     text_column: str,
     n: int,
     min_docs: int,
-    hot_min_docs: Optional[int],
     scope: CacheScope,
 ) -> DataFrame:
     """``(_id, _hp)``: per-document sorted array of hit START positions
@@ -178,28 +186,15 @@ def _hit_position_sets(
     # once. At 56 bits a within-document collision needs two of a
     # document's ~10³ grams to share a hash (~1e-11 per document), and
     # ``_nd`` only feeds >= thresholds — accepted, not silent.
-    dup = (
+    dup = scope.persist(
         gram_hash_stream(df, text_column, n, id_column)
         .groupBy("_gh")
         .agg(F.count(F.lit(1)).alias("_nd"))
         .filter(F.col("_nd") >= min_docs)
     )
-    if hot_min_docs is not None:
-        # explicit split point: fully declarative, no driver action —
-        # the caller has sized the broadcast themselves
-        hot = dup.filter(F.col("_nd") >= hot_min_docs).select("_gh")
-        cold = dup.filter(F.col("_nd") < hot_min_docs).select("_gh")
-        # disjoint key sets → the union is exactly the single-join
-        # result
-        hits = grams.join(F.broadcast(hot), "_gh").unionByName(
-            grams.join(cold, "_gh")
-        )
-        return hits.groupBy("_id").agg(
-            F.sort_array(F.collect_set("_pos")).alias("_hp")
-        )
-    # DEFAULT (None): adaptive routing decided in Python from the
-    # MATERIALIZED dup set, because no declarative form is reliable
-    # here — measured r11, identical outputs throughout:
+    # Routing is decided in Python from the MATERIALIZED dup set,
+    # because no declarative form is reliable here — measured r11,
+    # identical outputs throughout:
     #  * an absolute threshold (the old 100k default) never fires on a
     #    x1000-replicated corpus whose dup mass sits at _nd ~ 1000, so
     #    everything reaches the cold join, and whether THAT join
@@ -222,7 +217,6 @@ def _hit_position_sets(
     # sees. The persist also spares the distinct-gram scan from
     # running twice (stats action + join); the cache goes into the
     # caller's ``scope``, which the caller ties to its result.
-    dup = scope.persist(dup)
     stats = dup.agg(
         F.count(F.lit(1)).alias("c"), F.sum("_nd").alias("s")
     ).first()
@@ -232,6 +226,8 @@ def _hit_position_sets(
         thr = max(min_docs, -(-int(stats.s or 0) // HOT_BUDGET_ROWS))
         hot = dup.filter(F.col("_nd") >= thr).select("_gh")
         cold = dup.filter(F.col("_nd") < thr).select("_gh")
+        # disjoint key sets → the union is exactly the single-join
+        # result
         hits = grams.join(F.broadcast(hot), "_gh").unionByName(
             grams.join(cold, "_gh")
         )
@@ -265,7 +261,6 @@ def mask_duplicate_spans(
     text_column: str = "text",
     n: int = 5,
     min_docs: int = 2,
-    hot_min_docs: Optional[int] = None,
 ) -> Callable[[DataFrame], DataFrame]:
     """Append per-document duplicate-span statistics:
 
@@ -276,35 +271,21 @@ def mask_duplicate_spans(
 
     Documents shorter than ``n`` words are never masked.
 
-    ``hot_min_docs`` is the hot/cold split point of the gram join (see
-    module docstring): grams in that many+ distinct documents take the
-    broadcast path (their occurrences never shuffle), the long tail
-    takes the shuffled join with per-key doc-fanout bounded by the
-    threshold. Any value ``> min_docs`` gives identical results — the
-    knob trades broadcast size against shuffle skew. The default
-    (``None``) routes adaptively from the measured dup set — whole-set
-    broadcast when it fits ``HOT_BUDGET_ROWS``, else a split whose hot
-    side is mass-bounded by the budget (module docstring, bullet 2).
+    The gram join routes itself from the measured dup set — whole-set
+    broadcast when it fits ``HOT_BUDGET_ROWS``, else a hot/cold split
+    at a threshold derived from the set's doc-frequency mass (module
+    docstring, bullet 2).
 
-    .. note:: the adaptive default is EAGER: applying the returned
-       transform runs a Spark job (persist + one bounded aggregate
-       action on the vocab-bounded dup set) to make the routing
-       decision. Callers composing fully-lazy pipelines should pass an
-       explicit ``hot_min_docs``, which keeps the plan declarative.
+    .. note:: applying the returned transform is EAGER: it runs a Spark
+       job (persist + one bounded aggregate action on the vocab-bounded
+       dup set) to make the routing decision.
     """
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    if min_docs < 2:
-        raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-    if hot_min_docs is not None and hot_min_docs < min_docs:
-        raise ValueError(
-            f"hot_min_docs must be >= min_docs, got {hot_min_docs}"
-        )
+    check_span_params(n, min_docs)
 
     def _transform(df: DataFrame) -> DataFrame:
         scope = CacheScope()
         hp = _hit_position_sets(
-            df, id_column, text_column, n, min_docs, hot_min_docs, scope
+            df, id_column, text_column, n, min_docs, scope
         )
         masked = hp.select(
             "_id", _union_length(F.col("_hp"), n).alias("n_masked")
@@ -333,7 +314,6 @@ def duplicate_span_stats(
     text_column: str = "text",
     n: int = 5,
     min_docs: int = 2,
-    hot_min_docs: Optional[int] = None,
 ) -> Callable[[DataFrame], DataFrame]:
     """Stats-only projection of :func:`mask_duplicate_spans` —
     ``(id, n_masked, dup_ratio)`` without the other input columns.
@@ -362,24 +342,15 @@ def duplicate_span_stats(
     use ``mask_duplicate_spans`` when the stats must ride along with
     the documents.
 
-    .. note:: the default ``hot_min_docs=None`` routes the gram join
-       adaptively and is EAGER — applying the transform runs a Spark
-       job (persist + one bounded aggregate on the dup set). Pass an
-       explicit ``hot_min_docs`` for a fully-lazy plan.
+    .. note:: applying the transform is EAGER, as for
+       :func:`mask_duplicate_spans`: it runs the dup set's routing job.
     """
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    if min_docs < 2:
-        raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-    if hot_min_docs is not None and hot_min_docs < min_docs:
-        raise ValueError(
-            f"hot_min_docs must be >= min_docs, got {hot_min_docs}"
-        )
+    check_span_params(n, min_docs)
 
     def _transform(df: DataFrame) -> DataFrame:
         scope = CacheScope()
         hp = _hit_position_sets(
-            df, id_column, text_column, n, min_docs, hot_min_docs, scope
+            df, id_column, text_column, n, min_docs, scope
         )
         masked = hp.select(
             F.col("_id").alias(id_column),
@@ -410,7 +381,6 @@ def excise_duplicate_spans(
     text_column: str = "text",
     n: int = 5,
     min_docs: int = 2,
-    hot_min_docs: Optional[int] = None,
     output_column: str = "masked_text",
     preserve_whitespace: bool = False,
 ) -> Callable[[DataFrame], DataFrame]:
@@ -419,7 +389,7 @@ def excise_duplicate_spans(
     :func:`mask_duplicate_spans` into cleaned training text.
 
     The masked token positions are exactly
-    :func:`mask_duplicate_spans`'s covered set (same hot/cold split
+    :func:`mask_duplicate_spans`'s covered set (same routed gram
     join); each document then rebuilds its text scan-side — no extra
     shuffle beyond the per-doc position aggregation. NULL text stays
     NULL.
@@ -443,26 +413,17 @@ def excise_duplicate_spans(
     below typical document-length budgets; documents are capped
     upstream by the chunker in any real pipeline.
 
-    .. note:: the default ``hot_min_docs=None`` routes the gram join
-       adaptively and is EAGER — applying the transform runs a Spark
-       job (persist + one bounded aggregate on the dup set). Pass an
-       explicit ``hot_min_docs`` for a fully-lazy plan.
+    .. note:: applying the transform is EAGER, as for
+       :func:`mask_duplicate_spans`: it runs the dup set's routing job.
     """
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    if min_docs < 2:
-        raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-    if hot_min_docs is not None and hot_min_docs < min_docs:
-        raise ValueError(
-            f"hot_min_docs must be >= min_docs, got {hot_min_docs}"
-        )
+    check_span_params(n, min_docs)
 
     from pywrangler_spark.functions.text import normalize_text
 
     def _transform(df: DataFrame) -> DataFrame:
         scope = CacheScope()
         hp = _hit_position_sets(
-            df, id_column, text_column, n, min_docs, hot_min_docs, scope
+            df, id_column, text_column, n, min_docs, scope
         )
         # expand each start to its covered window scan-side — the
         # arrays are per-document (≤ token count), so this never

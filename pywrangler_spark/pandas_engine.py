@@ -19,6 +19,7 @@ import numpy as np
 import pandas as pd
 
 from pywrangler_spark.operators.interval_identifier import IntervalParams
+from pywrangler_spark.operators.spandedup import check_span_params
 from pywrangler_spark.testing.spec import naive_interval_ids
 from pywrangler_spark.util import ensure_iterable
 
@@ -237,6 +238,43 @@ def pandas_contamination_overlap(
     return _transform
 
 
+def _span_grams(text, n: int) -> list:
+    """``(start position, hash56)`` of every word n-gram of ``text``:
+    the positional gram stream of ``operators.spandedup``."""
+    if text is None or (isinstance(text, float) and np.isnan(text)):
+        return []
+    norm = _normalize_py(text)
+    if norm == "":
+        return []
+    w = norm.split(" ")
+    return [
+        (i, _hash56_py(" ".join(w[i : i + n])))
+        for i in range(len(w) - n + 1)
+    ]
+
+
+def _covered_positions(
+    df: pd.DataFrame, id_column: str, text_column: str, n: int, min_docs: int
+) -> dict:
+    """Document id -> the token positions covered by some n-gram that
+    occurs in ``min_docs``+ distinct documents (the span twins' mask)."""
+    per_doc = {
+        r[id_column]: _span_grams(r[text_column], n)
+        for _, r in df.iterrows()
+    }
+    docs_per_gram: dict = {}
+    for doc, grams in per_doc.items():
+        for _, gh in grams:
+            docs_per_gram.setdefault(gh, set()).add(doc)
+    dup = {g for g, d in docs_per_gram.items() if len(d) >= min_docs}
+    return {
+        doc: {
+            p for pos, gh in grams if gh in dup for p in range(pos, pos + n)
+        }
+        for doc, grams in per_doc.items()
+    }
+
+
 def pandas_mask_duplicate_spans(
     id_column: str = "doc_id",
     text_column: str = "text",
@@ -245,44 +283,18 @@ def pandas_mask_duplicate_spans(
 ) -> Any:
     """Pandas twin of ``operators.spandedup.mask_duplicate_spans`` —
     same md5-gram semantics; appends ``n_masked`` and ``dup_ratio``."""
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    if min_docs < 2:
-        raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-
-    def _grams(text):
-        if text is None or (isinstance(text, float) and np.isnan(text)):
-            return []
-        norm = _normalize_py(text)
-        if norm == "":
-            return []
-        w = norm.split(" ")
-        return [
-            (i, _hash56_py(" ".join(w[i : i + n])))
-            for i in range(len(w) - n + 1)
-        ]
+    check_span_params(n, min_docs)
 
     def _transform(df: pd.DataFrame) -> pd.DataFrame:
-        per_doc = {
-            r[id_column]: _grams(r[text_column])
-            for _, r in df.iterrows()
-        }
-        docs_per_gram: dict = {}
-        for doc, grams in per_doc.items():
-            for _, gh in grams:
-                docs_per_gram.setdefault(gh, set()).add(doc)
-        dup = {g for g, d in docs_per_gram.items() if len(d) >= min_docs}
+        covered = _covered_positions(df, id_column, text_column, n, min_docs)
         out = df.copy()
         masked, ratios = [], []
         for _, r in df.iterrows():
-            covered: set = set()
-            for pos, gh in per_doc[r[id_column]]:
-                if gh in dup:
-                    covered.update(range(pos, pos + n))
+            n_cov = len(covered[r[id_column]])
             norm = _normalize_py(r[text_column]) if r[text_column] is not None else ""
             n_tok = 0 if norm == "" else len(norm.split(" "))
-            masked.append(len(covered))
-            ratios.append(len(covered) / n_tok if n_tok > 0 else 0.0)
+            masked.append(n_cov)
+            ratios.append(n_cov / n_tok if n_tok > 0 else 0.0)
         out["n_masked"] = pd.Series(masked, index=df.index, dtype="int64")
         out["dup_ratio"] = pd.Series(ratios, index=df.index, dtype="float64")
         return out
@@ -361,33 +373,10 @@ def pandas_excise_duplicate_spans(
     """Pandas twin of ``operators.spandedup.excise_duplicate_spans`` —
     appends the text with duplicated-span tokens removed (normalized,
     or byte-faithful to the original with ``preserve_whitespace``)."""
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    if min_docs < 2:
-        raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-
-    def _grams(text):
-        if text is None or (isinstance(text, float) and np.isnan(text)):
-            return []
-        norm = _normalize_py(text)
-        if norm == "":
-            return []
-        w = norm.split(" ")
-        return [
-            (i, _hash56_py(" ".join(w[i : i + n])))
-            for i in range(len(w) - n + 1)
-        ]
+    check_span_params(n, min_docs)
 
     def _transform(df: pd.DataFrame) -> pd.DataFrame:
-        per_doc = {
-            r[id_column]: _grams(r[text_column])
-            for _, r in df.iterrows()
-        }
-        docs_per_gram: dict = {}
-        for doc, grams in per_doc.items():
-            for _, gh in grams:
-                docs_per_gram.setdefault(gh, set()).add(doc)
-        dup = {g for g, d in docs_per_gram.items() if len(d) >= min_docs}
+        covered = _covered_positions(df, id_column, text_column, n, min_docs)
         out = df.copy()
         rebuilt = []
         for _, r in df.iterrows():
@@ -397,12 +386,9 @@ def pandas_excise_duplicate_spans(
             ):
                 rebuilt.append(None)
                 continue
-            covered: set = set()
-            for pos, gh in per_doc[r[id_column]]:
-                if gh in dup:
-                    covered.update(range(pos, pos + n))
+            cov = covered[r[id_column]]
             if preserve_whitespace:
-                if not covered:
+                if not cov:
                     rebuilt.append(text)  # clean doc: byte-identical
                     continue
                 # same segment walk as the Spark aggregate: a masked
@@ -412,7 +398,7 @@ def pandas_excise_duplicate_spans(
                 for seg in segs:
                     if seg[0].isspace():
                         pend = seg
-                    elif i in covered:
+                    elif i in cov:
                         pend = ""
                         i += 1
                     else:
@@ -425,7 +411,7 @@ def pandas_excise_duplicate_spans(
             toks = _normalize_py(text).split(" ")
             rebuilt.append(
                 " ".join(
-                    t for i, t in enumerate(toks) if i not in covered
+                    t for i, t in enumerate(toks) if i not in cov
                 )
             )
         out[output_column] = pd.Series(rebuilt, index=df.index)

@@ -133,7 +133,7 @@ def _recall_row(
 def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH recall gate: avg recall@10 vs the exact tier must
     clear the floor the test suite validates (0.3 on 64-dim random
-    vectors with 8 planes × 4 tables + multiprobe). Table count is
+    vectors with 8 planes × 4 tables + multi-probe). Table count is
     schedule-derived (+1 per decade past the driver scale)."""
     emb = _emb(spark, sf_dir)
     approx = emb.transform(

@@ -41,28 +41,25 @@ def write_bucketed_table(
     sort_columns: Optional[Union[str, Sequence[str]]] = None,
     mode: str = "overwrite",
     format: str = "parquet",
-    one_file_per_bucket: bool = True,
 ) -> None:
     """Persist ``df`` as a catalog table bucketed (and optionally
     bucket-sorted) on ``bucket_columns``.
 
-    ``one_file_per_bucket`` (default): pre-repartition on the bucket
-    columns so each bucket lands in exactly one file. ``sortBy`` only
-    guarantees order *within a file*, and Spark exploits storage order
-    (eliding the Sort under a sort-merge join) only when a bucket has a
-    single file — otherwise every writer task emits one file per bucket
-    it touches and the reader must re-sort. The pre-shuffle costs one
-    exchange AT WRITE TIME (the whole point of bucketing is to pay it
-    there); pass ``False`` when writing from a source already
-    partitioned this way. At very large scale size buckets so one
-    bucket's rows fit a writer task (more buckets, not more files)."""
+    The write pre-repartitions on the bucket columns so each bucket
+    lands in exactly one file. ``sortBy`` only guarantees order *within
+    a file*, and Spark exploits storage order (eliding the Sort under a
+    sort-merge join) only when a bucket has a single file — otherwise
+    every writer task emits one file per bucket it touches and the
+    reader must re-sort. The pre-shuffle costs one exchange AT WRITE
+    TIME (the whole point of bucketing is to pay it there). At very
+    large scale size buckets so one bucket's rows fit a writer task
+    (more buckets, not more files)."""
     buckets = list(ensure_iterable(bucket_columns))
     if not buckets:
         raise ValueError("write_bucketed_table requires bucket columns")
     if num_buckets < 1:
         raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
-    if one_file_per_bucket:
-        df = df.repartition(num_buckets, *[df[c] for c in buckets])
+    df = df.repartition(num_buckets, *[df[c] for c in buckets])
     spark = df.sparkSession
     stale = None
     if mode == "overwrite" and not spark.catalog.tableExists(table):

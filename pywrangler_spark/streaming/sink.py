@@ -28,15 +28,12 @@ committer-backed path there.
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
 
-def idempotent_parquet_sink(
-    path: str,
-    coalesce: Optional[int] = None,
-) -> Callable[[DataFrame, int], None]:
+def idempotent_parquet_sink(path: str) -> Callable[[DataFrame, int], None]:
     """Build the ``foreachBatch`` function:
     ``stream.writeStream.foreachBatch(idempotent_parquet_sink(p))``.
 
@@ -60,8 +57,7 @@ def idempotent_parquet_sink(
         scratch = hpath(path, f"_tmp_batch_id={batch_id}")
         if fs.exists(scratch):  # crashed previous attempt
             fs.delete(scratch, True)
-        out = batch_df if coalesce is None else batch_df.coalesce(coalesce)
-        out.write.mode("overwrite").parquet(scratch.toString())
+        batch_df.write.mode("overwrite").parquet(scratch.toString())
         if not fs.rename(scratch, final):  # atomic commit
             raise IOError(
                 f"commit rename failed: {scratch} -> {final} "

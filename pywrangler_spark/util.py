@@ -57,7 +57,7 @@ def collect_init_params(cls: Type) -> Tuple[str, ...]:
     return tuple(names)
 
 
-def wide_exchange_width(spark, cap_factor: int = 16) -> int:
+def wide_exchange_width(spark) -> int:
     """Partition count for an explicitly-widened exchange whose per-task
     sort/aggregation mass must stay bounded as the data grows.
 
@@ -71,8 +71,8 @@ def wide_exchange_width(spark, cap_factor: int = 16) -> int:
     :func:`pywrangler_spark.session.get_spark` may tune
     ``initialPartitionNum`` into the thousands (a common cluster
     setting); since this count is never coalesced back, cap the derived
-    default at ``cap_factor x defaultParallelism`` so a foreign session
-    doesn't pay thousands of range-sampled/near-empty partitions. The
+    default at ``16 x defaultParallelism`` so a foreign session doesn't
+    pay thousands of range-sampled/near-empty partitions. The
     floor is ``spark.sql.shuffle.partitions``. Callers expose a
     ``num_partitions`` override for layouts this heuristic can't know.
     """
@@ -97,7 +97,7 @@ def wide_exchange_width(spark, cap_factor: int = 16) -> int:
     except Exception:
         initial = base
     try:
-        cap = cap_factor * int(spark.sparkContext.defaultParallelism)
+        cap = 16 * int(spark.sparkContext.defaultParallelism)
     except Exception:  # Spark Connect: no sparkContext; trust the conf
         cap = initial
     return max(base, min(initial, cap))

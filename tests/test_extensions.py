@@ -185,8 +185,8 @@ class TestDedup:
 
 class TestSimilarity:
     def test_lsh_requires_dim(self):
-        """Omitting dim without the probe_dim opt-in must fail fast at
-        factory time — plan construction never runs driver-side actions."""
+        """Omitting dim must fail fast at factory time — plan
+        construction never runs driver-side actions."""
         with pytest.raises(ValueError, match="dim"):
             topk_cosine_lsh("vec_id", "embedding")
 
@@ -300,12 +300,12 @@ class TestSimilarity:
         )
         approx = topk_cosine_lsh(
             "vec_id", "embedding", k=10, n_planes=8, query_filter=qf,
-            probe_dim=True,
+            dim=64,
         )(embeddings)
         e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
         a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
         recall = len(e & a) / len(e)
-        # 8 planes + multiprobe on 64-dim random data: recall is moderate
+        # 8 planes + multi-probe on 64-dim random data: recall is moderate
         # by design; the contract is "substantially better than random"
         assert recall >= 0.3, f"LSH recall {recall}"
 
@@ -322,7 +322,7 @@ class TestSimilarity:
         )
         approx = topk_cosine_lsh(
             "vec_id", "embedding", k=10, n_planes=8, query_filter=qf,
-            probe_dim=True, plane_kind="rademacher",
+            dim=64, plane_kind="rademacher",
         )(embeddings)
         e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
         a = {(r.query_id, r.neighbor_id) for r in approx.collect()}

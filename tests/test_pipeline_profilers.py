@@ -227,6 +227,49 @@ class TestProfilers:
         assert rep["max_increase_bytes"] > 32 * 1024 * 1024
 
 
+class TestStageTotals:
+    """The one fold of ``/stages`` records, on synthetic records (no UI)."""
+
+    def test_sums_and_peaks(self):
+        from pywrangler_spark.benchmark import stage_totals
+
+        stages = [
+            # stage peaks are SUMS of task peaks: 16 tasks at 100 each
+            {"peakExecutionMemory": 1600, "numCompleteTasks": 16,
+             "memoryBytesSpilled": 10, "diskBytesSpilled": 5,
+             "shuffleReadBytes": 100, "shuffleWriteBytes": 200},
+            {"peakExecutionMemory": 300, "numCompleteTasks": 1,
+             "shuffleReadBytes": 1, "shuffleWriteBytes": 2},
+        ]
+        assert stage_totals(stages, slots=4) == {
+            "n_stages": 2,
+            "peak_execution_memory": 1600,
+            # 1600 / 16 tasks x 4 slots beats 300 / 1 task x 1
+            "peak_execution_memory_norm": 400.0,
+            "memory_bytes_spilled": 10,
+            "disk_bytes_spilled": 5,
+            "shuffle_read_bytes": 101,
+            "shuffle_write_bytes": 202,
+        }
+
+    def test_no_stages(self):
+        from pywrangler_spark.benchmark import stage_totals
+
+        totals = stage_totals([], slots=4)
+        assert totals.pop("n_stages") == 0
+        assert set(totals.values()) == {0}
+
+    def test_ui_api(self, spark):
+        from pywrangler_spark.benchmark import ui_api
+
+        # the shared test session runs with spark.ui.enabled=false
+        assert ui_api(spark) is None
+        app = spark.sparkContext.applicationId
+        assert ui_api(spark, "http://history:18080") == (
+            f"http://history:18080/api/v1/applications/{app}"
+        )
+
+
 class TestExecutorMemoryProfiler:
     def test_requires_live_ui(self, spark):
         from pywrangler_spark.benchmark import SparkExecutorMemoryProfiler

@@ -69,9 +69,10 @@ class TestSkewedGramJoin:
     """A boilerplate mega-gram is a skewed join key. AQE's skew rule
     cannot split this join (the dup side's aggregation sits between its
     shuffle and the join — verified empirically, see module docstring),
-    so the operator does its own hot/cold split: hot grams broadcast,
-    cold tail shuffled. These tests pin both the equivalence and the
-    plan shape of that split."""
+    so the operator routes the join itself from the measured dup set:
+    a small set broadcasts whole, a big one splits hot (broadcast) /
+    cold (shuffled) — :class:`TestAdaptiveSplitBranch` drives the
+    split. These tests pin the values and the whole-set plan shape."""
 
     @pytest.fixture(scope="class")
     def skewed_docs(self, spark):
@@ -96,70 +97,19 @@ class TestSkewedGramJoin:
             .alias("text"),
         )
 
-    def _mask_sum(self, df, hot_min_docs):
+    def test_skewed_default_masks_boilerplate(self, spark, skewed_docs):
         from pyspark.sql import functions as F
 
-        return (
-            df.transform(
-                mask_duplicate_spans(n=5, min_docs=2,
-                                     hot_min_docs=hot_min_docs)
-            )
+        out = (
+            skewed_docs.transform(mask_duplicate_spans(n=5, min_docs=2))
             .agg(
                 F.sum("n_masked").alias("s"),
                 F.count(F.lit(1)).alias("c"),
             )
             .first()
         )
-
-    def test_hot_and_cold_paths_agree(self, spark, skewed_docs):
-        # threshold below the mega-gram's doc count → broadcast path;
-        # threshold above it → everything through the shuffled join
-        hot = self._mask_sum(skewed_docs, hot_min_docs=10)
-        cold = self._mask_sum(skewed_docs, hot_min_docs=10_000_000)
-        assert hot == cold
         # 6000 boilerplate docs x 5 masked tokens
-        assert hot["s"] == 30_000 and hot["c"] == 20_000
-
-    def test_hot_grams_take_the_broadcast_join(self, spark, skewed_docs):
-        """With auto-broadcast disabled, the only BroadcastHashJoin in
-        the plan is the explicit hot-gram probe — the mega-gram's rows
-        never enter a shuffle — while the cold tail keeps the shuffled
-        equi-join."""
-        from pywrangler_spark.plans.inspect import explain_string
-
-        keys = (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-        old = {k: spark.conf.get(k, None) for k in keys}
-        for k in keys:
-            spark.conf.set(k, "-1")
-        try:
-            plan = explain_string(
-                skewed_docs.transform(
-                    mask_duplicate_spans(n=5, min_docs=2, hot_min_docs=10)
-                )
-            )
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-        # the hot probe survives threshold=-1 because it is an explicit
-        # broadcast hint; everything else must stay shuffled. Count in
-        # the plan TREE only (the formatted details section repeats
-        # every node)
-        tree = plan.split("\n\n")[0]
-        assert tree.count("BroadcastHashJoin") == 1
-        assert "SortMergeJoin" in tree or "ShuffledHashJoin" in tree
-
-    def test_adaptive_default_matches_explicit(self, spark, skewed_docs):
-        # default None routes adaptively (here: whole-dup-set
-        # broadcast) — identical VALUES to any explicit split point
-        derived = self._mask_sum(skewed_docs, hot_min_docs=None)
-        explicit = self._mask_sum(skewed_docs, hot_min_docs=10)
-        assert derived == explicit
+        assert out["s"] == 30_000 and out["c"] == 20_000
 
     def test_adaptive_default_broadcasts_dup_set(self, spark,
                                                  skewed_docs):
@@ -236,11 +186,11 @@ class TestAdaptiveSplitBranch:
             .alias("text"),
         )
 
-    def _mask_sum(self, df, **kwargs):
+    def _mask_sum(self, df):
         from pyspark.sql import functions as F
 
         return (
-            df.transform(mask_duplicate_spans(n=5, min_docs=2, **kwargs))
+            df.transform(mask_duplicate_spans(n=5, min_docs=2))
             .agg(
                 F.sum("n_masked").alias("s"),
                 F.count(F.lit(1)).alias("c"),
@@ -248,21 +198,19 @@ class TestAdaptiveSplitBranch:
             .first()
         )
 
-    def test_split_branch_matches_whole_set_and_explicit(
+    def test_split_branch_matches_whole_set(
         self, spark, tri_dup_docs, monkeypatch
     ):
         """budget=2 < |dup set|=3 forces the split; the derived
         threshold is ceil(1005/2)=503, so hot={mega gram} (1 row <=
-        budget) and cold={both rare grams} — values must equal both
-        the whole-set-broadcast run and an explicit run at the same
-        split point."""
+        budget) and cold={both rare grams} — values must equal the
+        whole-set-broadcast run."""
         from pywrangler_spark.operators import spandedup
 
         whole = self._mask_sum(tri_dup_docs)  # unpatched: c=3 <= 2M
-        explicit = self._mask_sum(tri_dup_docs, hot_min_docs=503)
         monkeypatch.setattr(spandedup, "HOT_BUDGET_ROWS", 2)
         split = self._mask_sum(tri_dup_docs)
-        assert split == whole == explicit
+        assert split == whole
         # (1000 + 3 + 2) dup docs x 5 masked tokens each
         assert split["s"] == 5_025 and split["c"] == 3_000
 

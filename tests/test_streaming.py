@@ -722,7 +722,7 @@ class TestIdempotentSink:
 
         docs = read_parquet(spark, f"{SF}/documents.parquet")
         out_dir = str(tmp_path / "sink")
-        sink = idempotent_parquet_sink(out_dir, coalesce=1)
+        sink = idempotent_parquet_sink(out_dir)
 
         sdf = (
             spark.readStream.schema(docs.schema)
@@ -762,7 +762,7 @@ class TestIdempotentSink:
         out_dir = str(tmp_path / "sink2")
         os.makedirs(os.path.join(out_dir, "_tmp_batch_id=7"))
         docs = read_parquet(spark, f"{SF}/documents.parquet").limit(3)
-        sink = idempotent_parquet_sink(out_dir, coalesce=1)
+        sink = idempotent_parquet_sink(out_dir)
         sink(docs, 7)
         got = spark.read.parquet(out_dir)
         assert got.count() == 3
