@@ -5,27 +5,19 @@ documented cross-engine (md5-hash) semantics.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pywrangler_spark.queries import register
+from pywrangler_spark.queries._shared import (
+    NORM_SQL,
+    TOKENS_SQL,
+    bucket_sql,
+    md5_bits_sql,
+    seeded_hash_sql,
+)
+from pywrangler_spark.sources import sf_table
 from pywrangler_spark.util import BoundedFitCache
-from pywrangler_spark.sources import read_parquet
-
-_NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
-
-
-def _bucket_sql(seed: str) -> str:
-    return (
-        f"('0x' || substr(md5('{seed}' || ':' || CAST(doc_id AS VARCHAR)),"
-        " 1, 14))::BIGINT % 10000"
-    )
 
 
 def _bucket_col(seed: str) -> Column:
@@ -41,21 +33,20 @@ def _bucket_col(seed: str) -> Column:
 # corpus explode, matched-grams-only aggregation (see
 # operators/decontaminate.py for the 100 TB rationale).
 
-_GRAM5_SQL = (
-    "('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' ||"
-    " w[i+3] || ' ' || w[i+4]), 1, 14))::BIGINT"
+_GRAM5_SQL = md5_bits_sql(
+    "w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]"
 )
 
 _DECONTAM_ORACLE = f"""
 WITH norm AS (
-    SELECT doc_id, string_split({_NORM_SQL}, ' ') AS w FROM documents
+    SELECT doc_id, string_split({NORM_SQL}, ' ') AS w FROM documents
 ), grams AS (
     SELECT DISTINCT doc_id, {_GRAM5_SQL} AS gh
     FROM norm, UNNEST(range(1, len(w) - 3)) AS t(i)
     WHERE len(w) >= 5
 ), eval_grams AS (
     SELECT DISTINCT gh FROM grams
-    WHERE {_bucket_sql("evalset")} < 500
+    WHERE {bucket_sql("evalset")} < 500
 ), overlap AS (
     SELECT g.doc_id, COUNT(DISTINCT g.gh) AS n_overlap
     FROM grams g JOIN eval_grams e USING (gh)
@@ -64,7 +55,7 @@ WITH norm AS (
 SELECT d.doc_id,
        CAST(COALESCE(o.n_overlap, 0) AS BIGINT) AS n_overlap,
        COALESCE(o.n_overlap, 0) >= 1 AS contaminated,
-       {_bucket_sql("evalset").replace("doc_id", "d.doc_id")} < 500 AS is_eval
+       {bucket_sql("evalset").replace("doc_id", "d.doc_id")} < 500 AS is_eval
 FROM documents d LEFT JOIN overlap o USING (doc_id)
 """
 
@@ -73,7 +64,7 @@ FROM documents d LEFT JOIN overlap o USING (doc_id)
 def decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.decontaminate import contamination_overlap
 
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     is_eval = _bucket_col("evalset") < 500
     eval_df = docs.filter(is_eval)
     return (
@@ -88,11 +79,10 @@ def decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SHARD_ORACLE = f"""
 SELECT doc_id,
-       {_bucket_sql("shards").replace("% 10000", "% 8")} AS shard,
+       {seeded_hash_sql("shards")} % 8 AS shard,
        CAST(row_number() OVER (
-           PARTITION BY {_bucket_sql("shards").replace("% 10000", "% 8")}
-           ORDER BY ('0x' || substr(md5('shards' || ':' ||
-               CAST(doc_id AS VARCHAR)), 1, 14))::BIGINT, doc_id
+           PARTITION BY {seeded_hash_sql("shards")} % 8
+           ORDER BY {seeded_hash_sql("shards")}, doc_id
        ) - 1 AS BIGINT) AS pos
 FROM documents
 """
@@ -103,7 +93,7 @@ def shard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.shard import shuffle_to_shards
 
     return (
-        _docs(spark, sf_dir)
+        sf_table(spark, sf_dir, "documents")
         .transform(shuffle_to_shards("doc_id", 8, seed="shards"))
         .select(
             "doc_id",
@@ -121,7 +111,7 @@ def shard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HH_ORACLE = f"""
 SELECT term, CAST(COUNT(*) AS BIGINT) AS n_exact
 FROM (
-    SELECT unnest(string_split({_NORM_SQL}, ' ')) AS term FROM documents
+    SELECT unnest(string_split({NORM_SQL}, ' ')) AS term FROM documents
 )
 WHERE term <> ''
 GROUP BY term
@@ -134,7 +124,7 @@ LIMIT 10
 def heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.heavyhitters import top_terms_sampled
 
-    return _docs(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "documents").transform(
         top_terms_sampled(
             "text", "doc_id", k=10, sample_fraction=0.2, seed="hh"
         )
@@ -150,21 +140,16 @@ def heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shard) aggregate (24 rows) also pins the within-shard permutation via
 # ``min_by(doc_id, pos)``.
 
-_TOKENS_SQL = (
-    f"CASE WHEN {_NORM_SQL} = '' THEN 0"
-    f" ELSE len(string_split({_NORM_SQL}, ' ')) END"
-)
-
 _PIPELINE_ORACLE = f"""
 WITH feat AS (
     SELECT doc_id, text,
-           CAST({_TOKENS_SQL} AS BIGINT) AS n_tokens,
-           md5({_NORM_SQL}) AS fp,
-           {_bucket_sql("evalset")} < 500 AS is_eval
+           CAST({TOKENS_SQL} AS BIGINT) AS n_tokens,
+           md5({NORM_SQL}) AS fp,
+           {bucket_sql("evalset")} < 500 AS is_eval
     FROM documents
 ), grams AS (
     SELECT DISTINCT doc_id, {_GRAM5_SQL} AS gh
-    FROM (SELECT doc_id, string_split({_NORM_SQL}, ' ') AS w
+    FROM (SELECT doc_id, string_split({NORM_SQL}, ' ') AS w
           FROM documents),
          UNNEST(range(1, len(w) - 3)) AS t(i)
     WHERE len(w) >= 5
@@ -182,11 +167,10 @@ WITH feat AS (
     )
 ), assigned AS (
     SELECT doc_id, n_tokens,
-           CASE WHEN {_bucket_sql("42")} < 8000 THEN 'train'
-                WHEN {_bucket_sql("42")} < 9000 THEN 'val'
+           CASE WHEN {bucket_sql("42")} < 8000 THEN 'train'
+                WHEN {bucket_sql("42")} < 9000 THEN 'val'
                 ELSE 'test' END AS split,
-           ('0x' || substr(md5('shards' || ':' ||
-               CAST(doc_id AS VARCHAR)), 1, 14))::BIGINT AS h
+           {seeded_hash_sql("shards")} AS h
     FROM clean
 ), pos AS (
     SELECT *, h % 8 AS shard,
@@ -211,7 +195,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.sampling import hash_split
     from pywrangler_spark.operators.shard import shuffle_to_shards
 
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     is_eval = _bucket_col("evalset") < 500
     eval_df = docs.filter(is_eval)
     cleaned = (
@@ -242,7 +226,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LM_ORACLE = f"""
 WITH toks AS (
-    SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS term
+    SELECT doc_id, unnest(string_split({NORM_SQL}, ' ')) AS term
     FROM documents
 ), toks2 AS (
     SELECT * FROM toks WHERE term <> ''
@@ -264,9 +248,11 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
 
 
-_SPAN_ORACLE = f"""
+# ``covered(doc_id, tok)``: every token position inside a 5-gram that
+# occurs in two or more documents (operators/spandedup.py)
+_SPAN_COVERED_SQL = f"""
 WITH norm AS (
-    SELECT doc_id, string_split({_NORM_SQL}, ' ') AS w FROM documents
+    SELECT doc_id, string_split({NORM_SQL}, ' ') AS w FROM documents
 ), grams AS (
     SELECT doc_id, i - 1 AS pos, {_GRAM5_SQL} AS gh
     FROM norm, UNNEST(range(1, len(w) - 3)) AS t(i)
@@ -276,10 +262,12 @@ WITH norm AS (
 ), covered AS (
     SELECT DISTINCT g.doc_id, g.pos + o AS tok
     FROM grams g JOIN dup USING (gh), UNNEST(range(0, 5)) AS u(o)
-), masked AS (
+)"""
+
+_SPAN_ORACLE = _SPAN_COVERED_SQL + f""", masked AS (
     SELECT doc_id, COUNT(*) AS n_masked FROM covered GROUP BY 1
 ), toks AS (
-    SELECT doc_id, {_TOKENS_SQL} AS n_tok FROM documents
+    SELECT doc_id, {TOKENS_SQL} AS n_tok FROM documents
 )
 SELECT d.doc_id,
        CAST(COALESCE(m.n_masked, 0) AS BIGINT) AS n_masked,
@@ -303,7 +291,7 @@ def dedup_span_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.spandedup import duplicate_span_stats
     from pywrangler_spark.util import keep_alive
 
-    stats = _docs(spark, sf_dir).transform(
+    stats = sf_table(spark, sf_dir, "documents").transform(
         duplicate_span_stats("doc_id", "text", n=5, min_docs=2)
     )
     # keep_alive: the dup-set cache is tied to ``stats``; without it the
@@ -322,19 +310,7 @@ def dedup_span_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- duplicate-span excision ----------------------------------------------
 # Same covered-position pipeline as the mask, then a positional filter
 # rebuilds the normalized text without the duplicated-span tokens.
-_SPAN_EXCISE_ORACLE = f"""
-WITH norm AS (
-    SELECT doc_id, string_split({_NORM_SQL}, ' ') AS w FROM documents
-), grams AS (
-    SELECT doc_id, i - 1 AS pos, {_GRAM5_SQL} AS gh
-    FROM norm, UNNEST(range(1, len(w) - 3)) AS t(i)
-    WHERE len(w) >= 5
-), dup AS (
-    SELECT gh FROM grams GROUP BY gh HAVING COUNT(DISTINCT doc_id) >= 2
-), covered AS (
-    SELECT DISTINCT g.doc_id, g.pos + o AS tok
-    FROM grams g JOIN dup USING (gh), UNNEST(range(0, 5)) AS u(o)
-), mt AS (
+_SPAN_EXCISE_ORACLE = _SPAN_COVERED_SQL + """, mt AS (
     SELECT doc_id, list(tok) AS toks FROM covered GROUP BY 1
 )
 SELECT n.doc_id,
@@ -363,7 +339,7 @@ def dedup_span_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.spandedup import excise_duplicate_spans
     from pywrangler_spark.util import keep_alive
 
-    excised = _docs(spark, sf_dir).transform(
+    excised = sf_table(spark, sf_dir, "documents").transform(
         excise_duplicate_spans("doc_id", "text", n=5, min_docs=2)
     )
     # keep_alive: same dup-set-cache transfer as dedup_span_mask
@@ -377,7 +353,7 @@ def lm_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         unigram_logprob_score,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     model = docs.transform(fit_unigram_model("text", vocab_size=20))
     return (
         docs.transform(unigram_logprob_score(model, oov_p=1e-9))
@@ -445,14 +421,14 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pywrangler_spark.util import CacheScope
 
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     # capacity schedule, resolved once per (process, corpus) like the
     # ANN gates' suggest_ann_params: cap and feature width derive from
     # corpus size instead of pinning the 64k/2^16 base point (which
     # decays with vocabulary growth at 10x+ — holdout ladder, SCALE.md)
-    if sf_dir not in _FIT_PARAMS:
-        _FIT_PARAMS[sf_dir] = suggest_fit_params(docs.count())
-    fitp = _FIT_PARAMS[sf_dir]
+    fitp = _FIT_PARAMS.get_or_fit(
+        sf_dir, lambda: suggest_fit_params(docs.count())
+    )
     lm = docs.transform(fit_unigram_model("text", vocab_size=20))
     scored = docs.transform(unigram_logprob_score(lm, oov_p=1e-9))
     # the median cutoff rides the plan as a broadcast one-row aggregate
@@ -478,12 +454,13 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # matched to the task; bigram features are exercised in tests
     # 10 L-BFGS iterations converge on this task (0.995 holdout at
     # 10/20/50 iters measured at sf0.1); more is pure fit wall-time
-    if sf_dir not in _CLF_MODELS:
-        _CLF_MODELS[sf_dir] = fit_text_classifier(
+    model, labels = _CLF_MODELS.get_or_fit(
+        sf_dir,
+        lambda: fit_text_classifier(
             train, "qlabel", n_features=fitp["n_features"], bigrams=False,
             max_iter=10, max_fit_rows=fitp["max_fit_rows"],
-        )
-    model, labels = _CLF_MODELS[sf_dir]
+        ),
+    )
     out = test.transform(
         score_text_classifier(
             model, labels, n_features=fitp["n_features"], bigrams=False
@@ -510,7 +487,7 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the capped-table and backoff paths are both oracle-exercised.
 _LM2_ORACLE = f"""
 WITH norm AS (
-    SELECT doc_id, string_split({_NORM_SQL}, ' ') AS w FROM documents
+    SELECT doc_id, string_split({NORM_SQL}, ' ') AS w FROM documents
 ), toks2 AS (
     SELECT doc_id, unnest(w) AS term FROM norm
 ), toksf AS (
@@ -556,7 +533,7 @@ def lm_bigram_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         fit_bigram_model,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     unigrams, bigrams = fit_bigram_model(
         "text", vocab_size=20, bigram_size=500
     )(docs)
@@ -577,8 +554,8 @@ def lm_bigram_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIX_APPLY_ORACLE = f"""
 WITH meta AS (
     SELECT doc_id, source,
-           CAST({_TOKENS_SQL} AS BIGINT) AS n_tok,
-           {_bucket_sql("mix")} AS h
+           CAST({TOKENS_SQL} AS BIGINT) AS n_tok,
+           {bucket_sql("mix")} AS h
     FROM documents
 ), c AS (
     SELECT *, COALESCE(SUM(n_tok) OVER (
@@ -598,7 +575,7 @@ def mix_docs_to_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.functions.text import token_count
     from pywrangler_spark.operators.mix import apply_token_budget_mix
 
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     sources = [r["source"] for r in docs.select("source").distinct().collect()]
     budgets = {s: 2000 for s in sources}
     kept = docs.transform(

@@ -8,8 +8,6 @@ exactly. SimHash likewise (generated 63-bit majority-vote SQL).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,17 +23,17 @@ from pywrangler_spark.operators.dedup import (
     simhash_table,
 )
 from pywrangler_spark.queries import register
-from pywrangler_spark.sources import read_parquet
-
-_NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+from pywrangler_spark.queries._shared import (
+    NORM_SQL,
+    REACH_SQL,
+    cdc_chunks_sql,
+    md5_bits_sql,
+)
+from pywrangler_spark.sources import sf_table
 
 
 _DEDUP_GROUPS_ORACLE = f"""
-SELECT md5({_NORM_SQL}) AS fingerprint,
+SELECT md5({NORM_SQL}) AS fingerprint,
        min(doc_id) AS rep_id,
        count(*) AS n_docs
 FROM documents
@@ -45,20 +43,24 @@ GROUP BY 1
 
 @register("dedup_exact_groups", oracle=_DEDUP_GROUPS_ORACLE)
 def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).transform(duplicate_groups("doc_id", "text"))
+    return sf_table(spark, sf_dir, "documents").transform(
+        duplicate_groups("doc_id", "text")
+    )
 
 
 _DEDUP_ROWS_ORACLE = f"""
 SELECT doc_id, text, lang, source, n_chars
 FROM documents
-QUALIFY row_number() OVER (PARTITION BY md5({_NORM_SQL})
+QUALIFY row_number() OVER (PARTITION BY md5({NORM_SQL})
                            ORDER BY doc_id) = 1
 """
 
 
 @register("dedup_exact_rows", oracle=_DEDUP_ROWS_ORACLE)
 def dedup_exact_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).transform(dedup_exact("doc_id", "text"))
+    return sf_table(spark, sf_dir, "documents").transform(
+        dedup_exact("doc_id", "text")
+    )
 
 
 # ---- n-gram Jaccard (exact near-dup verification path) --------------------
@@ -71,7 +73,7 @@ _JACCARD_CAP = 2000
 def _shingles_sql(where: str = "") -> str:
     return f"""
 WITH d AS (
-    SELECT doc_id, string_split({_NORM_SQL}, ' ') AS w FROM documents
+    SELECT doc_id, string_split({NORM_SQL}, ' ') AS w FROM documents
     {where}
 ), sh AS (
     SELECT DISTINCT doc_id, s
@@ -86,17 +88,25 @@ WITH d AS (
 _SHINGLES_SQL = _shingles_sql(f"WHERE doc_id < {_JACCARD_CAP}")
 _SHINGLES_SQL_ALL = _shingles_sql()
 
-_JACCARD_ORACLE = (
-    _SHINGLES_SQL
-    + """
+_SHINGLE_HASH_SQL = f"""
 , shh AS (
-    SELECT doc_id, ('0x' || substr(md5(s), 1, 14))::BIGINT AS h FROM sh
-), cnt AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id),
+    SELECT doc_id, {md5_bits_sql("s")} AS h FROM sh
+)"""
+
+# per-doc shingle counts and per-pair shared counts: the Jaccard terms
+_JACCARD_TERMS_SQL = """\
+, cnt AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id),
 inter AS (
     SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS k
     FROM shh a JOIN shh b ON a.h = b.h AND a.doc_id < b.doc_id
     GROUP BY 1, 2
-)
+)"""
+
+_JACCARD_ORACLE = (
+    _SHINGLES_SQL
+    + _SHINGLE_HASH_SQL
+    + _JACCARD_TERMS_SQL
+    + """
 SELECT id_a, id_b, round(k * 1.0 / (ca.n + cb.n - k), 6) AS jaccard
 FROM inter
 JOIN cnt ca ON ca.doc_id = id_a
@@ -108,7 +118,7 @@ WHERE k * 1.0 / (ca.n + cb.n - k) >= 0.5
 
 @register("dedup_ngram_jaccard", oracle=_JACCARD_ORACLE)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _docs(spark, sf_dir).filter(
+    pairs = sf_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _JACCARD_CAP
     ).transform(
         ngram_jaccard_pairs("doc_id", "text", shingle_k=3, threshold=0.5)
@@ -125,10 +135,8 @@ _CONTAIN_THRESHOLD = 0.9
 
 _CONTAINMENT_ORACLE = (
     _SHINGLES_SQL_ALL
-    + f"""
-, shh AS (
-    SELECT doc_id, ('0x' || substr(md5(s), 1, 14))::BIGINT AS h FROM sh
-), kept AS (
+    + _SHINGLE_HASH_SQL
+    + f""", kept AS (
     SELECT h FROM shh GROUP BY h HAVING count(*) <= {_CONTAIN_MAX_DF}
 ), shk AS (
     SELECT shh.doc_id, shh.h FROM shh JOIN kept USING (h)
@@ -156,7 +164,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     2000 docs)."""
     from pywrangler_spark.util import keep_alive
 
-    pairs = _docs(spark, sf_dir).transform(
+    pairs = sf_table(spark, sf_dir, "documents").transform(
         containment_pairs(
             "doc_id", "text", shingle_k=3,
             threshold=_CONTAIN_THRESHOLD, max_df=_CONTAIN_MAX_DF,
@@ -193,7 +201,7 @@ def _minhash_oracle() -> str:
     SELECT doc_id, list(s) AS shs FROM sh GROUP BY doc_id
 ), hs AS (
     SELECT doc_id,
-           list_transform(shs, s -> ('0x' || substr(md5(s), 1, 7))::BIGINT)
+           list_transform(shs, s -> {md5_bits_sql("s", 7)})
                AS hh
     FROM shl WHERE len(shs) > 0
 ), sig_t AS (
@@ -222,7 +230,7 @@ WHERE list_sum(list_transform(range(1, {_NUM_HASHES} + 1),
 
 @register("dedup_minhash_lsh", oracle=_minhash_oracle())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "documents").transform(
         minhash_lsh_pairs(
             "doc_id",
             "text",
@@ -247,10 +255,10 @@ def _simhash_oracle() -> str:
     )
     return f"""
 WITH toks AS (
-    SELECT doc_id, UNNEST(string_split({_NORM_SQL}, ' ')) AS tok
+    SELECT doc_id, UNNEST(string_split({NORM_SQL}, ' ')) AS tok
     FROM documents
 ), hashed AS (
-    SELECT doc_id, ('0x' || substr(md5(tok), 1, 14))::BIGINT AS h FROM toks
+    SELECT doc_id, {md5_bits_sql("tok")} AS h FROM toks
     WHERE tok <> ''
 ), votes AS (
     SELECT doc_id AS id, {votes} FROM hashed GROUP BY doc_id
@@ -261,7 +269,9 @@ SELECT id, CAST({assemble} AS BIGINT) AS simhash FROM votes
 
 @register("dedup_simhash", oracle=_simhash_oracle())
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).transform(simhash_table("doc_id", "text"))
+    return sf_table(spark, sf_dir, "documents").transform(
+        simhash_table("doc_id", "text")
+    )
 
 
 # ---- near-dup clusters: pairs -> connected components ----------------------
@@ -273,29 +283,15 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CLUSTERS_ORACLE = (
     _SHINGLES_SQL.replace("WITH d AS", "WITH RECURSIVE d AS")
-    + """
-, shh AS (
-    SELECT doc_id, ('0x' || substr(md5(s), 1, 14))::BIGINT AS h FROM sh
-), cnt AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id),
-inter AS (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS k
-    FROM shh a JOIN shh b ON a.h = b.h AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-), pairs AS (
+    + _SHINGLE_HASH_SQL
+    + _JACCARD_TERMS_SQL
+    + f""", pairs AS (
     SELECT id_a, id_b
     FROM inter
     JOIN cnt ca ON ca.doc_id = id_a
     JOIN cnt cb ON cb.doc_id = id_b
     WHERE k * 1.0 / (ca.n + cb.n - k) >= 0.5
-), e AS (
-    SELECT id_a AS s, id_b AS d FROM pairs
-    UNION ALL
-    SELECT id_b, id_a FROM pairs
-), reach(id, lab) AS (
-    SELECT s, s FROM e
-    UNION
-    SELECT e.d, r.lab FROM reach r JOIN e ON e.s = r.id
-)
+), {REACH_SQL}
 SELECT id AS doc_id, CAST(MIN(lab) AS BIGINT) AS component
 FROM reach GROUP BY id
 """
@@ -307,7 +303,7 @@ def dedup_clusters_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.graph import connected_components
 
     pairs = (
-        _docs(spark, sf_dir)
+        sf_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < _JACCARD_CAP)
         .transform(
             ngram_jaccard_pairs("doc_id", "text", shingle_k=3, threshold=0.5)
@@ -344,7 +340,7 @@ def dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.dedup import simhash_near_pairs
     from pywrangler_spark.util import keep_alive
 
-    pairs = _docs(spark, sf_dir).transform(
+    pairs = sf_table(spark, sf_dir, "documents").transform(
         simhash_near_pairs("doc_id", "text", max_hamming=5)
     )
     # keep_alive: the cast must carry the sketch caches (util.keep_alive)
@@ -358,10 +354,10 @@ def dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 # previously-accepted batches); the new batch is everything else.
 _INCR_ORACLE = f"""
 WITH seen AS (
-    SELECT DISTINCT md5({_NORM_SQL}) AS fp
+    SELECT DISTINCT md5({NORM_SQL}) AS fp
     FROM documents WHERE doc_id % 3 = 0
 ), batch AS (
-    SELECT doc_id, md5({_NORM_SQL}) AS fp
+    SELECT doc_id, md5({NORM_SQL}) AS fp
     FROM documents WHERE doc_id % 3 <> 0
 ), unseen AS (
     SELECT b.* FROM batch b
@@ -379,7 +375,7 @@ def dedup_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         duplicate_groups,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     seen = docs.filter(F.col("doc_id") % 3 == 0).transform(
         duplicate_groups("doc_id", "text")
     )
@@ -403,7 +399,7 @@ def dedup_incremental_bloom_docs(
         duplicate_groups,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     seen = docs.filter(F.col("doc_id") % 3 == 0).transform(
         duplicate_groups("doc_id", "text")
     )
@@ -420,30 +416,7 @@ def dedup_incremental_bloom_docs(
 # chunk_docs_cdc), fingerprints chunks, applies the same >=2 /
 # <=max_chunk_docs posting band and shared-chunk floor.
 
-_CDC_NEARDUP_ORACLE = f"""
-WITH w AS (
-    SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ws,
-           list_transform(
-               string_split({_NORM_SQL}, ' '),
-               t -> ('0x' || substr(md5(t), 1, 14))::BIGINT
-           ) AS th
-    FROM documents
-    WHERE text IS NOT NULL AND {_NORM_SQL} != ''
-), toks AS (
-    SELECT doc_id, ws, th, t.i AS pos
-    FROM w, UNNEST(range(1, len(ws) + 1)) AS t(i)
-), flagged AS (
-    SELECT doc_id, ws[pos] AS tok, pos,
-           CASE WHEN pos >= 2 AND
-                     (th[pos - 1] * 31 + th[pos]) % 16 = 0
-                THEN 1 ELSE 0 END AS cut
-    FROM toks
-), numbered AS (
-    SELECT doc_id, tok, pos,
-           CAST(sum(cut) OVER (PARTITION BY doc_id ORDER BY pos)
-                AS INT) AS chunk_index
-    FROM flagged
-), chunks AS (
+_CDC_NEARDUP_ORACLE = cdc_chunks_sql(16) + """, chunks AS (
     SELECT doc_id, chunk_index,
            string_agg(tok, ' ' ORDER BY pos) AS chunk,
            count(*) AS n_tokens
@@ -468,7 +441,7 @@ HAVING count(*) >= 2
 def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.dedup import cdc_chunk_neardup_pairs
 
-    return _docs(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "documents").transform(
         cdc_chunk_neardup_pairs(
             "doc_id",
             "text",

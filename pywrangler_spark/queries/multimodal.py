@@ -10,8 +10,6 @@ the test suite pins exact values.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,11 +18,7 @@ from pywrangler_spark.operators.multimodal import (
     extract_blob_features,
 )
 from pywrangler_spark.queries import register
-from pywrangler_spark.sources import read_parquet
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+from pywrangler_spark.sources import sf_table
 
 
 _BLOB_STATS_ORACLE = """
@@ -39,7 +33,7 @@ FROM documents
 
 @register("multimodal_blob_stats", oracle=_BLOB_STATS_ORACLE)
 def multimodal_blob_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with_blob = _docs(spark, sf_dir).transform(attach_blob("text"))
+    with_blob = sf_table(spark, sf_dir, "documents").transform(attach_blob("text"))
     return with_blob.select(
         "doc_id",
         F.col("blob_meta.n_bytes").alias("n_bytes"),
@@ -85,7 +79,7 @@ FROM codes
 
 @register("multimodal_features", oracle=_FEATURES_ORACLE)
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with_blob = _docs(spark, sf_dir).transform(attach_blob("text"))
+    with_blob = sf_table(spark, sf_dir, "documents").transform(attach_blob("text"))
     return with_blob.transform(
         extract_blob_features("doc_id", "blob", decoder="fake")
     )

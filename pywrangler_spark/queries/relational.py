@@ -34,11 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pywrangler_spark.queries import register
-from pywrangler_spark.sources import read_parquet
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+from pywrangler_spark.sources import sf_table
 
 
 def dsum(col: Column, scale: int = 6) -> Column:
@@ -80,7 +76,7 @@ GROUP BY l_returnflag, l_linestatus
 
 @register("q1_pricing_summary", oracle=_Q1_ORACLE)
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     cnt = F.count(F.lit(1))
     return (
@@ -117,13 +113,13 @@ GROUP BY l_orderkey, o_orderdate, o_orderpriority
 @register("q3_shipping_priority", oracle=_Q3_ORACLE)
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit("1998-01-01").cast("timestamp")
-    cust = _t(spark, sf_dir, "customer").filter(
+    cust = sf_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     ).select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = sf_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < cutoff
     ).select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = sf_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > cutoff
     ).select("l_orderkey", "l_extendedprice", "l_discount")
     return (
@@ -157,15 +153,15 @@ GROUP BY n_name
 
 @register("q5_local_supplier_volume", oracle=_Q5_ORACLE)
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = _t(spark, sf_dir, "orders").filter(
+    region = sf_table(spark, sf_dir, "region")
+    nation = sf_table(spark, sf_dir, "nation")
+    cust = sf_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    supp = sf_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    orders = sf_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = sf_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     # Region restriction rides a broadcast LEFT SEMI against the bounded
@@ -216,7 +212,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 
 @register("q6_forecast_revenue", oracle=_Q6_ORACLE)
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-07-01").cast("timestamp"))
@@ -245,15 +241,15 @@ GROUP BY c_custkey, c_name, c_acctbal, n_name
 
 @register("q10_returned_items", oracle=_Q10_ORACLE)
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = sf_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    orders = _t(spark, sf_dir, "orders").filter(
+    nation = sf_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    orders = sf_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1998-07-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = sf_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     ).select("l_orderkey", "l_extendedprice", "l_discount")
     return (
@@ -285,11 +281,11 @@ GROUP BY o_orderpriority
 
 @register("q4_order_priority", oracle=_Q4_ORACLE)
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = sf_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1998-07-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_orderdate", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = sf_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey)
@@ -317,7 +313,7 @@ WHERE rn <= 3
 def top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
@@ -340,7 +336,7 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 
 @register("rollup_pricing", oracle=_ROLLUP_ORACLE)
 def rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         dsum(F.col("l_extendedprice")).alias("sum_base_price"),
         F.count(F.lit(1)).alias("n_items"),
@@ -359,8 +355,8 @@ GROUP BY s_suppkey, s_name
 
 @register("q15_top_supplier", oracle=_SUPPLIER_ORACLE)
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    supp = sf_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    li = sf_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1998-07-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))
     ).select("l_suppkey", "l_extendedprice", "l_discount")
@@ -386,7 +382,7 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 
 @register("cube_quantities", oracle=_CUBE_ORACLE)
 def cube_quantities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         dsum(F.col("l_quantity")).alias("sum_qty"),
         F.count(F.lit(1)).alias("n_items"),
@@ -406,7 +402,7 @@ GROUP BY l_returnflag
 
 @register("pivot_status_revenue", oracle=_PIVOT_ORACLE)
 def pivot_status_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
@@ -430,10 +426,10 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
 
 @register("setops_building_big_spenders", oracle=_SETOPS_ORACLE)
 def setops_building_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").filter(
+    cust = sf_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     ).select(F.col("c_custkey").alias("custkey"))
-    orders = _t(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     big = orders.filter(F.col("o_totalprice") > 150000).select(
         F.col("o_custkey").alias("custkey")
     )
@@ -455,7 +451,7 @@ GROUP BY l_returnflag
 
 @register("distinct_counts", oracle=_DISTINCT_ORACLE)
 def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_suppliers"),
@@ -483,14 +479,14 @@ GROUP BY 1, 2, 3
 
 @register("q7_nation_volume", oracle=_Q7_ORACLE)
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = sf_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     ).select("l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").filter(F.col("n_nationkey") < 5)
+    supp = sf_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    orders = sf_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cust = sf_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nation = sf_table(spark, sf_dir, "nation").filter(F.col("n_nationkey") < 5)
     n1 = nation.select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
@@ -529,11 +525,11 @@ WHERE l_shipdate >= TIMESTAMP '1997-03-01'
 
 @register("q14_promo_revenue", oracle=_Q14_ORACLE)
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = sf_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     ).select("l_partkey", "l_extendedprice", "l_discount")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    part = sf_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(part, li.l_partkey == part.p_partkey)
@@ -560,11 +556,11 @@ HAVING sum(l_quantity) > 150
 
 @register("q18_large_orders", oracle=_Q18_ORACLE)
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    orders = _t(spark, sf_dir, "orders").select(
+    cust = sf_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    orders = sf_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    li = sf_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -588,10 +584,10 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
 
 @register("q19_discounted_revenue", oracle=_Q19_ORACLE)
 def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = sf_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    part = sf_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     joined = li.join(part, li.l_partkey == part.p_partkey)
     cond1 = (
         (F.col("p_brand") == "Brand#1")
@@ -634,7 +630,7 @@ def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Expand distinct-rewrite, which drags the rsd=0.01 HLL buffer
     # (2^14 registers) through a per-(group, key) partial aggregate —
     # measured 17x slower at sf0.1. Same results, one scan either way.
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     dedup = li.select("l_returnflag", "l_partkey").distinct()
     approx = F.approx_count_distinct("l_partkey", 0.01)
     exact = F.count(F.lit(1))
@@ -668,8 +664,8 @@ GROUP BY c_count
 
 @register("q13_order_distribution", oracle=_Q13_ORACLE)
 def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = sf_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = sf_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     ).select("o_custkey", "o_orderkey")
     counted = (
@@ -710,10 +706,10 @@ WHERE CAST(5 AS DECIMAL(27,6)) * CAST(l_quantity AS DECIMAL(27,6)) * cnt
 
 @register("q17_small_quantity_revenue", oracle=_Q17_ORACLE)
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    brand_parts = _t(spark, sf_dir, "part").filter(
+    brand_parts = sf_table(spark, sf_dir, "part").filter(
         F.col("p_brand") == "Brand#23"
     ).select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = sf_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     dec = lambda c: c.cast("decimal(27,6)")  # noqa: E731
@@ -771,8 +767,8 @@ GROUP BY 1
 
 @register("q8_market_share", oracle=_Q8_ORACLE)
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    nation = sf_table(spark, sf_dir, "nation")
+    region = sf_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     # Bounded-side restrictions ride broadcast LEFT SEMI joins (estimate =
     # left side, so cust keeps its scan-based size); the supplier nation
     # NAME is attached to the fact after the supplier join via the pinned
@@ -782,7 +778,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(region), F.col("n_regionkey") == region.r_regionkey
     ).select("n_nationkey")
     amer_cust = (
-        _t(spark, sf_dir, "customer")
+        sf_table(spark, sf_dir, "customer")
         .join(
             F.broadcast(amer_keys),
             F.col("c_nationkey") == F.col("n_nationkey"),
@@ -790,17 +786,17 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("c_custkey")
     )
-    part = _t(spark, sf_dir, "part").filter(
+    part = sf_table(spark, sf_dir, "part").filter(
         F.col("p_type") == "ECONOMY"
     ).select("p_partkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = _t(spark, sf_dir, "orders").filter(
+    supp = sf_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    orders = sf_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate").between(
             F.lit("1995-01-01").cast("timestamp"),
             F.lit("1996-12-31").cast("timestamp"),
         )
     ).select("o_orderkey", "o_custkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = sf_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -853,14 +849,14 @@ GROUP BY c_nationkey
 
 @register("q22_dormant_balances", oracle=_Q22_ORACLE)
 def q22_dormant_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = sf_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
     threshold = cust.filter(F.col("c_acctbal") > 0.0).agg(
         (dsum(F.col("c_acctbal")) / F.count(F.lit(1))).alias("avg_bal")
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        sf_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit(_Q22_CUTOFF).cast("timestamp"))
         .select("o_custkey")
     )
@@ -903,10 +899,10 @@ def salted_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     skewed data in tests/test_skew.py."""
     from pywrangler_spark.operators.skew import adaptive_salted_join
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = sf_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("k"), "l_extendedprice", "l_discount"
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = sf_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"), "o_orderpriority"
     )
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -939,16 +935,16 @@ GROUP BY 1, 2
 
 @register("q9_product_profit", oracle=_Q9_ORACLE)
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(
+    part = sf_table(spark, sf_dir, "part").filter(
         F.col("p_name").like("%red%")
     ).select("p_partkey", "p_retailprice")
     # n_name attaches to the fact AFTER the supplier join via the pinned
     # bounded-nation broadcast: a pre-joined supplier x nation frame would
     # carry a product size estimate and lose its auto-broadcast.
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
+    supp = sf_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = sf_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    orders = sf_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = sf_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         "l_extendedprice", "l_discount", "l_quantity",
     )
@@ -992,12 +988,16 @@ GROUP BY 1
 
 @register("q12_late_shipments", oracle=_Q12_ORACLE)
 def q12_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
+    return _q12(
+        sf_table(spark, sf_dir, "lineitem"), sf_table(spark, sf_dir, "orders")
+    )
+
+
+def _q12(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
+    orders = orders.select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
     )
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linestatus", "l_shipdate"
-    )
+    li = lineitem.select("l_orderkey", "l_linestatus", "l_shipdate")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -1027,11 +1027,11 @@ GROUP BY 1, 2
 
 @register("q16_supplier_diversity", oracle=_Q16_ORACLE)
 def q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(
+    part = sf_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#3")
         & F.col("p_size").isin(1, 5, 11, 20, 28, 37)
     ).select("p_partkey", "p_brand", "p_size")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = sf_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_size")
@@ -1055,7 +1055,7 @@ LIMIT 100
 @register("topk_expensive_orders", oracle=_TOPK_ORDERS_ORACLE)
 def topk_expensive_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "orders")
+        sf_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderdate")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .limit(100)
@@ -1087,7 +1087,7 @@ GROUP BY 1
 def quantiles_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.quantile import group_quantiles
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     return li.transform(
         group_quantiles(
             ["l_extendedprice", "l_quantity"],
@@ -1115,7 +1115,7 @@ GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
 
 @register("groupingsets_order_revenue", oracle=_GSETS_ORACLE)
 def groupingsets_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return orders.groupingSets(
         [["o_orderstatus", "o_orderpriority"], ["o_orderstatus"], []],
         "o_orderstatus",
@@ -1149,7 +1149,7 @@ WHERE rn = 1
 
 @register("argmax_order_per_priority", oracle=_ARGMAX_ORACLE)
 def argmax_order_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     rank_key = F.struct(
         F.col("o_totalprice"), (-F.col("o_orderkey")).alias("nk")
     )
@@ -1194,10 +1194,19 @@ GROUP BY 1
 
 @register("q21_waiting_supplier", oracle=_Q21_ORACLE)
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
+    return _q21(
+        spark,
+        sf_dir,
+        sf_table(spark, sf_dir, "lineitem"),
+        sf_table(spark, sf_dir, "orders"),
     )
+
+
+def _q21(
+    spark: SparkSession, sf_dir: str, lineitem: DataFrame, orders: DataFrame
+) -> DataFrame:
+    orders = orders.select("o_orderkey", "o_orderdate")
+    li = lineitem.select("l_orderkey", "l_suppkey", "l_shipdate")
     late = (
         F.col("l_shipdate")
         > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
@@ -1214,7 +1223,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "late_supp"
         ),
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supp = sf_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         per_order.filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
         .join(supp, F.col("late_supp") == F.col("s_suppkey"))
@@ -1271,7 +1280,7 @@ def _ensure_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple:
     tag = _re.sub(r"\W+", "_", os.path.basename(sf_dir.rstrip("/")))
     li_tbl, o_tbl = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
     if not spark.catalog.tableExists(li_tbl):
-        li = _t(spark, sf_dir, "lineitem").select(
+        li = sf_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_suppkey", "l_shipdate", "l_linestatus",
             "l_quantity",
         )
@@ -1285,9 +1294,9 @@ def _ensure_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple:
     if not spark.catalog.tableExists(o_tbl):
         if n_buckets is None:
             n_buckets = _fact_buckets(
-                _t(spark, sf_dir, "lineitem").count()
+                sf_table(spark, sf_dir, "lineitem").count()
             )
-        orders = _t(spark, sf_dir, "orders").select(
+        orders = sf_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderdate", "o_orderpriority", "o_custkey",
             "o_totalprice",
         )
@@ -1308,33 +1317,11 @@ def q21_waiting_supplier_bucketed(
     from pywrangler_spark.sources import read_table
 
     li_tbl, o_tbl = _ensure_bucketed_facts(spark, sf_dir)
-    orders = read_table(spark, o_tbl).select("o_orderkey", "o_orderdate")
-    li = read_table(spark, li_tbl).select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    late = (
-        F.col("l_shipdate")
-        > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-    )
-    flagged = (
-        li.hint("merge")
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.max(F.when(late, 1).otherwise(0)).alias("is_late"))
-    )
-    per_order = flagged.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_supp"),
-        F.sum("is_late").alias("n_late"),
-        F.max(F.when(F.col("is_late") == 1, F.col("l_suppkey"))).alias(
-            "late_supp"
-        ),
-    )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        per_order.filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
-        .join(supp, F.col("late_supp") == F.col("s_suppkey"))
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
+    return _q21(
+        spark,
+        sf_dir,
+        read_table(spark, li_tbl).hint("merge"),
+        read_table(spark, o_tbl),
     )
 
 
@@ -1348,25 +1335,8 @@ def q12_late_shipments_bucketed(
     from pywrangler_spark.sources import read_table
 
     li_tbl, o_tbl = _ensure_bucketed_facts(spark, sf_dir)
-    orders = read_table(spark, o_tbl).select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    li = read_table(spark, li_tbl).select(
-        "l_orderkey", "l_linestatus", "l_shipdate"
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.hint("merge")
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .filter(
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-        )
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
+    return _q12(
+        read_table(spark, li_tbl).hint("merge"), read_table(spark, o_tbl)
     )
 
 
@@ -1389,7 +1359,7 @@ def q18_large_orders_bucketed(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
     li = read_table(spark, li_tbl).select("l_orderkey", "l_quantity")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    cust = sf_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     big = (
         li.hint("merge")
         .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -1428,7 +1398,7 @@ GROUP BY 1
 
 @register("unpivot_lineitem_measures", oracle=_UNPIVOT_ORACLE)
 def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = sf_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         F.col("l_extendedprice").alias("price"),
         F.col("l_quantity").alias("quantity"),
@@ -1480,11 +1450,11 @@ WHERE unit_cost = (SELECT MIN(unit_cost) FROM costs c2
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    part = _t(spark, sf_dir, "part").filter(
+    part = sf_table(spark, sf_dir, "part").filter(
         (F.col("p_size") >= 40) & (F.col("p_type") == "LARGE")
     ).select("p_partkey", "p_type")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    nation = sf_table(spark, sf_dir, "nation")
+    region = sf_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     # EUROPE restriction rides a broadcast LEFT SEMI (estimate = supplier
     # scan, so the fact join keeps its auto-broadcast at test scale and
     # degrades gracefully at 100 TB); n_name attaches afterwards via the
@@ -1494,7 +1464,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         nation.n_regionkey == region.r_regionkey,
     ).select("n_nationkey")
     supp = (
-        _t(spark, sf_dir, "supplier")
+        sf_table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(euro_keys),
             F.col("s_nationkey") == F.col("n_nationkey"),
@@ -1502,7 +1472,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("s_suppkey", "s_name", "s_acctbal", "s_nationkey")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = sf_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey",
         (F.col("l_extendedprice") / F.col("l_quantity")).alias("unit"),
     )
@@ -1551,10 +1521,10 @@ WHERE part_value > (SELECT SUM(part_value) * 0.0006 FROM per_part)
 
 @register("q11_important_parts", oracle=_Q11_ORACLE)
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = sf_table(spark, sf_dir, "nation")
+    region = sf_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     supp = (
-        _t(spark, sf_dir, "supplier")
+        sf_table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(nation.join(
                 F.broadcast(region),
@@ -1564,7 +1534,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("s_suppkey")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = sf_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey",
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
     )
@@ -1610,10 +1580,10 @@ WHERE recent_qty > 0.5 * total_qty
 
 @register("q20_recent_part_suppliers", oracle=_Q20_ORACLE)
 def q20_recent_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(
+    part = sf_table(spark, sf_dir, "part").filter(
         F.col("p_name").like("small %")
     ).select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = sf_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_quantity", "l_shipdate"
     )
     recent = F.when(
@@ -1629,7 +1599,7 @@ def q20_recent_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(F.col("l_quantity"), 2).alias("total_qty"),
         )
     )
-    supp = _t(spark, sf_dir, "supplier").select(
+    supp = sf_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_acctbal"
     )
     return (
@@ -1665,7 +1635,7 @@ def profile_lineitem_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators.profile.column_profile`` (single scan, single agg)."""
     from pywrangler_spark.operators.profile import column_profile
 
-    return _t(spark, sf_dir, "lineitem").transform(
+    return sf_table(spark, sf_dir, "lineitem").transform(
         column_profile(_PROFILE_COLS)
     )
 
@@ -1691,7 +1661,7 @@ def histogram_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.profile import histogram
 
     return (
-        _t(spark, sf_dir, "lineitem")
+        sf_table(spark, sf_dir, "lineitem")
         .transform(histogram("l_extendedprice", 0.0, 110000.0, 22))
         .select("bin", "n_rows")
     )
@@ -1724,12 +1694,12 @@ def nullsafe_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators.skew.left_join_null_bypass``."""
     from pywrangler_spark.operators.skew import left_join_null_bypass
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = sf_table(spark, sf_dir, "orders").select(
         F.when(F.col("o_custkey") % 50 == 0, None)
         .otherwise(F.col("o_custkey"))
         .alias("k")
     )
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = sf_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"), "c_name", "c_mktsegment"
     )
     joined = orders.transform(left_join_null_bypass(cust, "k"))
@@ -1775,7 +1745,7 @@ def window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ntile_from_rank,
     )
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = sf_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     ranked = orders.transform(
@@ -1863,7 +1833,7 @@ GROUP BY l_returnflag
 def approx_quantiles_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     # exact tier: weighted median over distinct (flag, price) pairs
     pairs = li.groupBy("l_returnflag", "l_extendedprice").agg(
         F.count(F.lit(1)).alias("_c")
@@ -1963,7 +1933,7 @@ FROM cur, ref
 def profile_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.profile import profile_drift
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     cur = orders.filter(F.col("o_orderkey") % 2 == 1)
     ref = orders.filter(F.col("o_orderkey") % 2 == 0)
     return cur.transform(
@@ -1993,7 +1963,7 @@ FROM lineitem
 def correlation_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.profile import correlation_matrix
 
-    return _t(spark, sf_dir, "lineitem").transform(
+    return sf_table(spark, sf_dir, "lineitem").transform(
         correlation_matrix(
             ["l_quantity", "l_extendedprice", "l_discount"]
         )

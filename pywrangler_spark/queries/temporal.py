@@ -13,11 +13,7 @@ from pywrangler_spark.functions.temporal import epoch_micros
 from pywrangler_spark.operators.asof import asof_join, time_bucket_rollup
 from pywrangler_spark.operators.rangejoin import interval_join, range_join
 from pywrangler_spark.queries import register
-from pywrangler_spark.sources import read_parquet
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet(spark, f"{sf_dir}/events.parquet")
+from pywrangler_spark.sources import sf_table
 
 
 # ---- as-of join: purchase -> most recent preceding click ------------------
@@ -39,7 +35,7 @@ def asof_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attach to every purchase the latest click (same user, at-or-before)
     — classic attribution as-of join. Plan: one Exchange on user_id, one
     Sort, zero join nodes (see ``operators.asof``)."""
-    ev = _events(spark, sf_dir)
+    ev = sf_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -82,7 +78,7 @@ def timebucket_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour rollup of event counts and value sums per type —
     the batch form of the streaming windowed aggregation (map-side
     partial agg; the shuffle carries one row per bucket x type)."""
-    out = _events(spark, sf_dir).transform(
+    out = sf_table(spark, sf_dir, "events").transform(
         time_bucket_rollup(
             "ts",
             "1 hour",
@@ -117,7 +113,7 @@ GROUP BY 1, 2, 3
 
 @register("rangejoin_click_windows", oracle=_RANGE_ORACLE)
 def rangejoin_click_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = sf_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -165,7 +161,7 @@ GROUP BY 1
 
 @register("intervaljoin_error_shadow", oracle=_OVERLAP_ORACLE)
 def intervaljoin_error_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = sf_table(spark, sf_dir, "events")
 
     def windows(kind: str, prefix: str) -> DataFrame:
         return ev.where(F.col("event_type") == kind).select(
@@ -217,7 +213,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts
 def rolling_7d_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.rolling import trailing_window_agg
 
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "ts", "value")
+    ev = sf_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
     rolled = ev.transform(
         trailing_window_agg(
             "ts",
@@ -258,7 +254,7 @@ GROUP BY 1
 def user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.trend import group_trend
 
-    return _events(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "events").transform(
         group_trend("ts", "value", "user_id", round_digits=(8, 4))
     )
 
@@ -285,7 +281,7 @@ FROM events
 def ffill_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.fill import ffill
 
-    ev = _events(spark, sf_dir).select(
+    ev = sf_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "ts",
@@ -322,7 +318,7 @@ def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction via ``operators.latest.latest_by_key``."""
     from pywrangler_spark.operators.latest import latest_by_key
 
-    return _events(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "events").transform(
         latest_by_key("user_id", "ts", "event_id")
     )
 
@@ -347,7 +343,7 @@ def scd2_user_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     next event (NULL = current). ``operators.latest.scd2_from_changelog``."""
     from pywrangler_spark.operators.latest import scd2_from_changelog
 
-    ev = _events(spark, sf_dir).select(
+    ev = sf_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
     out = ev.transform(
@@ -384,7 +380,7 @@ def changelog_compress_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (null-safe) — ``operators.latest.drop_unchanged``."""
     from pywrangler_spark.operators.latest import drop_unchanged
 
-    ev = _events(spark, sf_dir).select(
+    ev = sf_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
     return ev.transform(drop_unchanged("user_id", ["ts", "event_id"], "event_type"))
@@ -414,7 +410,7 @@ def json_props_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     from_json parse, dropped pre-shuffle so the raw string never moves)."""
     from pywrangler_spark.functions.json import extract_json
 
-    ev = _events(spark, sf_dir).select("event_type", "props").transform(
+    ev = sf_table(spark, sf_dir, "events").select("event_type", "props").transform(
         extract_json("props", "k INT", drop=True)
     )
     return ev.groupBy("event_type").agg(
@@ -453,7 +449,7 @@ GROUP BY 1, 2
 def hopping_hourly_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping rollup: 1-hour windows sliding every 30 minutes, counts and
     value sums per event_type — ``time_bucket_rollup(slide=...)``."""
-    return _events(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "events").transform(
         time_bucket_rollup(
             "ts",
             "1 hour",
@@ -504,7 +500,7 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     after that — ``operators.funnel.funnel``."""
     from pywrangler_spark.operators.funnel import funnel
 
-    return _events(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "events").transform(
         funnel(
             "user_id",
             "ts",
@@ -542,7 +538,7 @@ GROUP BY 1, 2
 def cohort_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct active users per (first-event cohort day, weeks since
     first event) — the retention-triangle build."""
-    ev = _events(spark, sf_dir).select("user_id", "ts")
+    ev = sf_table(spark, sf_dir, "events").select("user_id", "ts")
     from pyspark.sql import Window
 
     first = F.min("ts").over(Window.partitionBy("user_id"))
@@ -588,7 +584,7 @@ def cdc_upsert_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot — ``operators.latest.apply_changelog``."""
     from pywrangler_spark.operators.latest import apply_changelog, latest_by_key
 
-    ev = _events(spark, sf_dir).select(
+    ev = sf_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value",
         (F.col("event_type") == "error").alias("dead"),
     )
@@ -641,7 +637,7 @@ def ohlc_hourly_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators.asof.ohlc_bars``."""
     from pywrangler_spark.operators.asof import ohlc_bars
 
-    return _events(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "events").transform(
         ohlc_bars("ts", "value", "1 hour",
                   groupby_columns="event_type",
                   tiebreak_columns="event_id")
@@ -680,7 +676,7 @@ def twa_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    d = _events(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "events").select(
         "user_id",
         "value",
         (epoch_micros(F.lead("ts").over(w))
@@ -722,7 +718,7 @@ GROUP BY 1
 def journey_prefix_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count users per first-5-event journey signature (initials joined
     with '>'), e.g. 'v>c>v>e>p'."""
-    seq = _events(spark, sf_dir).groupBy("user_id").agg(
+    seq = sf_table(spark, sf_dir, "events").groupBy("user_id").agg(
         F.array_sort(
             F.collect_list(
                 F.struct("ts", "event_id",
@@ -748,7 +744,47 @@ def journey_prefix_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rebuilds the identical grid with generate_series. In-bucket ties
 # collapse by (ts, value) lexicographic max on both engines.
 
-_RESAMPLE_ORACLE = """
+# the hourly LOCF series' CTEs: ``ev`` buckets every event by floor
+# (Spark's pmod; DuckDB's % truncates toward zero), ``collapsed`` keeps
+# each (user, hour)'s last value, ``grid`` spans each user's hours
+_HOURLY_EV_SQL = """
+WITH ev AS (
+    SELECT user_id,
+           CAST(floor(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
+                AS BIGINT) * 3600000000 AS b,
+           epoch_us(CAST(ts AS TIMESTAMP)) AS tus,
+           "value" AS v
+    FROM events
+)"""
+
+
+def _hourly_collapsed_sql(n_events: bool) -> str:
+    count = (
+        ",\n           COUNT(*) OVER (PARTITION BY user_id, b) AS n_events"
+        if n_events
+        else ""
+    )
+    return f""", collapsed AS (
+    SELECT DISTINCT user_id, b,
+           last_value(v) OVER (
+               PARTITION BY user_id, b ORDER BY tus, v
+               ROWS BETWEEN UNBOUNDED PRECEDING
+                        AND UNBOUNDED FOLLOWING) AS bv{count}
+    FROM ev
+)"""
+
+
+_HOURLY_GRID_SQL = """, span AS (
+    SELECT user_id, MIN(b) AS lo, MAX(b) AS hi FROM ev GROUP BY user_id
+), grid AS (
+    SELECT user_id, UNNEST(generate_series(lo // 3600000000,
+                                           hi // 3600000000))
+               * 3600000000 AS b
+    FROM span
+)"""
+
+_RESAMPLE_ORACLE = (
+    """
 WITH ev AS (
     SELECT user_id,
            -- floor bucketing (matches Spark pmod), NOT %: DuckDB's %
@@ -759,22 +795,10 @@ WITH ev AS (
            epoch_us(CAST(ts AS TIMESTAMP)) AS tus,
            "value" AS v
     FROM events
-), collapsed AS (
-    SELECT DISTINCT user_id, b,
-           last_value(v) OVER (
-               PARTITION BY user_id, b ORDER BY tus, v
-               ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND UNBOUNDED FOLLOWING) AS bv,
-           COUNT(*) OVER (PARTITION BY user_id, b) AS n_events
-    FROM ev
-), span AS (
-    SELECT user_id, MIN(b) AS lo, MAX(b) AS hi FROM ev GROUP BY user_id
-), grid AS (
-    SELECT user_id, UNNEST(generate_series(lo // 3600000000,
-                                           hi // 3600000000))
-               * 3600000000 AS b
-    FROM span
-)
+)"""
+    + _hourly_collapsed_sql(True)
+    + _HOURLY_GRID_SQL
+    + """
 SELECT g.user_id,
        make_timestamp(g.b) AS bucket_start,
        last_value(c.bv IGNORE NULLS) OVER (
@@ -783,13 +807,14 @@ SELECT g.user_id,
        CAST(COALESCE(c.n_events, 0) AS BIGINT) AS n_events
 FROM grid g LEFT JOIN collapsed c USING (user_id, b)
 """
+)
 
 
 @register("resample_hourly_locf", oracle=_RESAMPLE_ORACLE)
 def resample_hourly_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.resample import resample_locf
 
-    return _events(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "events").transform(
         resample_locf("ts", 3600, "user_id", "value", agg="last")
     )
 
@@ -801,23 +826,10 @@ def resample_hourly_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the dense mode's honest linear floor, and consumers that don't need
 # the explicit grid take this form (dense derivable via runs_to_dense,
 # equivalence property-tested).
-_RESAMPLE_RUNS_ORACLE = """
-WITH ev AS (
-    SELECT user_id,
-           CAST(floor(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                AS BIGINT) * 3600000000 AS b,
-           epoch_us(CAST(ts AS TIMESTAMP)) AS tus,
-           "value" AS v
-    FROM events
-), collapsed AS (
-    SELECT DISTINCT user_id, b,
-           last_value(v) OVER (
-               PARTITION BY user_id, b ORDER BY tus, v
-               ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND UNBOUNDED FOLLOWING) AS bv,
-           COUNT(*) OVER (PARTITION BY user_id, b) AS n_events
-    FROM ev
-)
+_RESAMPLE_RUNS_ORACLE = (
+    _HOURLY_EV_SQL
+    + _hourly_collapsed_sql(True)
+    + """
 SELECT user_id,
        make_timestamp(b) AS valid_from,
        make_timestamp(COALESCE(
@@ -829,13 +841,14 @@ SELECT user_id,
        CAST(n_events AS BIGINT) AS n_events
 FROM collapsed
 """
+)
 
 
 @register("resample_hourly_locf_runs", oracle=_RESAMPLE_RUNS_ORACLE)
 def resample_hourly_locf_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.resample import resample_locf
 
-    return _events(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "events").transform(
         resample_locf(
             "ts", 3600, "user_id", "value", agg="last", output="runs"
         )
@@ -848,29 +861,11 @@ def resample_hourly_locf_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # input. The oracle derives the SAME number the independent way (avg
 # over the materialized dense grid), which is the equivalence a 100 TB
 # consumer relies on when it skips the grid.
-_RESAMPLE_TWA_ORACLE = """
-WITH ev AS (
-    SELECT user_id,
-           CAST(floor(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                AS BIGINT) * 3600000000 AS b,
-           epoch_us(CAST(ts AS TIMESTAMP)) AS tus,
-           "value" AS v
-    FROM events
-), collapsed AS (
-    SELECT DISTINCT user_id, b,
-           last_value(v) OVER (
-               PARTITION BY user_id, b ORDER BY tus, v
-               ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND UNBOUNDED FOLLOWING) AS bv
-    FROM ev
-), span AS (
-    SELECT user_id, MIN(b) AS lo, MAX(b) AS hi FROM ev GROUP BY user_id
-), grid AS (
-    SELECT user_id, UNNEST(generate_series(lo // 3600000000,
-                                           hi // 3600000000))
-               * 3600000000 AS b
-    FROM span
-), dense AS (
+_RESAMPLE_TWA_ORACLE = (
+    _HOURLY_EV_SQL
+    + _hourly_collapsed_sql(False)
+    + _HOURLY_GRID_SQL
+    + """, dense AS (
     SELECT g.user_id,
            last_value(c.bv IGNORE NULLS) OVER (
                PARTITION BY g.user_id ORDER BY g.b
@@ -882,6 +877,7 @@ SELECT user_id,
        COUNT(v) AS n_buckets
 FROM dense GROUP BY user_id
 """
+)
 
 
 @register("resample_runs_weighted_mean", oracle=_RESAMPLE_TWA_ORACLE)
@@ -900,7 +896,7 @@ def resample_runs_weighted_mean(
     from pywrangler_spark.operators.resample import resample_locf
 
     step_us = 3_600 * 1_000_000
-    runs = _events(spark, sf_dir).transform(
+    runs = sf_table(spark, sf_dir, "events").transform(
         resample_locf(
             "ts", 3600, "user_id", "value", agg="last", output="runs"
         )
@@ -953,7 +949,7 @@ def zscore_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "event_id")
         .rowsBetween(-20, -1)
     )
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "ts", "value")
+    ev = sf_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
     z = (F.col("value") - F.avg("value").over(w)) / F.nullif(
         F.stddev_samp("value").over(w), F.lit(0.0)
     )
@@ -987,7 +983,7 @@ GROUP BY event_type
 
 @register("variant_props_by_type", oracle=_VARIANT_ORACLE)
 def variant_props_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).select(
+    ev = sf_table(spark, sf_dir, "events").select(
         "event_type", F.parse_json("props").alias("v")
     )
     extracted = ev.select(
@@ -1045,7 +1041,7 @@ def zorder_code_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleave and bucket arithmetic the Z-order layout writer uses."""
     from pywrangler_spark.sources.layout import zorder_code
 
-    base = _events(spark, sf_dir).select(
+    base = sf_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.expr("unix_micros(ts) div 60000000").alias("minute"),
@@ -1097,7 +1093,7 @@ def winsorize_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.clean import winsorize
 
     return (
-        _events(spark, sf_dir)
+        sf_table(spark, sf_dir, "events")
         .transform(winsorize("value", 0.05, 0.95, group_by="event_type"))
         .select("event_id", F.col("value").alias("value_w"))
     )
@@ -1120,7 +1116,7 @@ def impute_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.clean import impute
 
     return (
-        _events(spark, sf_dir)
+        sf_table(spark, sf_dir, "events")
         .transform(impute("value", "median", group_by="event_type"))
         .select("event_id", F.col("value").alias("value_i"))
     )
@@ -1147,7 +1143,7 @@ def scale_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.clean import scale
 
     return (
-        _events(spark, sf_dir)
+        sf_table(spark, sf_dir, "events")
         .transform(scale("value", "zscore", group_by="event_type"))
         .select("event_id", F.col("value").alias("value_z"))
     )

@@ -6,8 +6,6 @@ equivalent (see ``functions.text``), pinning semantics cross-engine.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,30 +21,33 @@ from pywrangler_spark.functions.text import (
     words,
 )
 from pywrangler_spark.queries import register
-from pywrangler_spark.sources import read_parquet
-
-_NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+from pywrangler_spark.queries._shared import (
+    NORM_SQL,
+    TOKENS_SQL,
+    bucket_sql,
+    cdc_chunks_sql,
+    md5_bits_sql,
+    query_gate,
+    query_gate_sql,
+)
+from pywrangler_spark.sources import sf_table
+from pywrangler_spark.util import BoundedFitCache
 
 
 _TEXT_STATS_ORACLE = f"""
 SELECT doc_id,
-       CASE WHEN {_NORM_SQL} = '' THEN 0
-            ELSE len(string_split({_NORM_SQL}, ' ')) END AS n_tokens,
+       {TOKENS_SQL} AS n_tokens,
        len(regexp_extract_all(text, '{BPE_PATTERN}')) AS n_tokens_bpe,
        len(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
            / nullif(len(text), 0) AS alpha_ratio,
-       md5({_NORM_SQL}) AS fingerprint
+       md5({NORM_SQL}) AS fingerprint
 FROM documents
 """
 
 
 @register("text_stats", oracle=_TEXT_STATS_ORACLE)
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     t = F.col("text")
     return docs.select(
         "doc_id",
@@ -59,7 +60,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lang_oracle() -> str:
     scores = {
-        lang: f"len(regexp_extract_all({_NORM_SQL}, '{pat}'))"
+        lang: f"len(regexp_extract_all({NORM_SQL}, '{pat}'))"
         for lang, pat in LANG_PROFILES.items()
     }
     best = "greatest(" + ", ".join(scores.values()) + ")"
@@ -79,7 +80,7 @@ FROM scored
 
 @register("lang_id", oracle=_lang_oracle())
 def lang_id_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", "lang", lang_id(F.col("text")).alias("lang_pred")
     )
@@ -102,7 +103,7 @@ def _bm25_oracle() -> str:
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     return f"""
 WITH toks AS (
-    SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS term
+    SELECT doc_id, unnest(string_split({NORM_SQL}, ' ')) AS term
     FROM documents
 ), doclen AS (
     SELECT doc_id, CAST(COUNT(*) AS DOUBLE) AS dl FROM toks GROUP BY 1
@@ -133,7 +134,7 @@ LIMIT 10
 def bm25_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.search import bm25_search
 
-    return _docs(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "documents").transform(
         bm25_search(list(_BM25_TERMS), "doc_id", "text", k=10)
     )
 
@@ -144,17 +145,12 @@ def bm25_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a pure projection (no shuffle); the stratified sample is one window per
 # stratum with rank-limit pushdown.
 
-_HASH56_SQL = (
-    "('0x' || substr(md5('42' || ':' || CAST(doc_id AS VARCHAR)), 1, 14))"
-    "::BIGINT"
-)
-
 _SPLIT_ORACLE = f"""
 SELECT split, source, COUNT(*) AS n_docs
 FROM (
     SELECT source,
-           CASE WHEN {_HASH56_SQL} % 10000 < 8000 THEN 'train'
-                WHEN {_HASH56_SQL} % 10000 < 9000 THEN 'val'
+           CASE WHEN {bucket_sql(42)} < 8000 THEN 'train'
+                WHEN {bucket_sql(42)} < 9000 THEN 'val'
                 ELSE 'test' END AS split
     FROM documents
 )
@@ -167,7 +163,7 @@ def hash_split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.sampling import hash_split
 
     return (
-        _docs(spark, sf_dir)
+        sf_table(spark, sf_dir, "documents")
         .transform(
             hash_split(
                 "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}, seed=42
@@ -184,7 +180,7 @@ FROM (
     SELECT doc_id, source,
            row_number() OVER (
                PARTITION BY source
-               ORDER BY {_HASH56_SQL} % 10000, doc_id
+               ORDER BY {bucket_sql(42)}, doc_id
            ) AS rn,
            COUNT(*) OVER (PARTITION BY source) AS n
     FROM documents
@@ -198,7 +194,7 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.sampling import stratified_exact_sample
 
     return (
-        _docs(spark, sf_dir)
+        sf_table(spark, sf_dir, "documents")
         .transform(stratified_exact_sample("source", 0.2, "doc_id", seed=42))
         .select("doc_id", "source")
     )
@@ -227,7 +223,7 @@ WHERE text IS NOT NULL AND len(text) > 0 AND s <= len(text)
 def chunk_documents_200(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.chunk import chunk_documents
 
-    return _docs(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "documents").transform(
         chunk_documents("doc_id", "text", chunk_size=200, overlap=50)
     )
 
@@ -240,8 +236,7 @@ def chunk_documents_200(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GATE_ORACLE = f"""
 WITH sig AS (
     SELECT doc_id,
-           CASE WHEN {_NORM_SQL} = '' THEN 0
-                ELSE len(string_split({_NORM_SQL}, ' ')) END AS n_tokens,
+           {TOKENS_SQL} AS n_tokens,
            len(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
                / nullif(len(text), 0) AS alpha_ratio
     FROM documents
@@ -261,7 +256,7 @@ WHERE n_tokens >= lo_t AND n_tokens <= hi_t AND alpha_ratio >= lo_a
 def quality_gate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.quality import percentile_gate
 
-    sig = _docs(spark, sf_dir).select(
+    sig = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
         quality_alpha_ratio(F.col("text")).alias("alpha_ratio"),
@@ -282,14 +277,14 @@ def quality_gate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # At 100 TB this is the BPE-vocabulary / idf-table build; hot terms are
 # fine (partial aggregation collapses them map-side before the shuffle).
 
-_VOCAB_ORACLE = """
+_VOCAB_ORACLE = f"""
 SELECT term,
        COUNT(*)                AS occurrences,
        COUNT(DISTINCT doc_id)  AS n_docs
 FROM (
     SELECT doc_id,
            unnest(string_split(
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
+               {NORM_SQL},
                ' ')) AS term
     FROM documents
 )
@@ -304,7 +299,7 @@ LIMIT 200
 def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-200 corpus terms by occurrence (with document frequency) —
     the vocabulary/idf-table build step of a text pipeline."""
-    toks = _docs(spark, sf_dir).select(
+    toks = sf_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(words(F.col("text"))).alias("term")
     )
     agg = (
@@ -328,8 +323,7 @@ _PACK_ORACLE = f"""
 WITH sig AS (
     SELECT doc_id,
            doc_id % 4 AS shard,
-           CASE WHEN {_NORM_SQL} = '' THEN 0
-                ELSE len(string_split({_NORM_SQL}, ' ')) END AS n_tokens
+           {TOKENS_SQL} AS n_tokens
     FROM documents
 ), c AS (
     SELECT *,
@@ -353,7 +347,7 @@ def pack_docs_512(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards — ``operators.pack.pack_sequences``."""
     from pywrangler_spark.operators.pack import pack_sequences
 
-    sig = _docs(spark, sf_dir).select(
+    sig = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         (F.col("doc_id") % 4).alias("shard"),
         token_count(F.col("text")).alias("n_tokens"),
@@ -374,8 +368,7 @@ WITH sig AS (
     SELECT doc_id,
            doc_id % 4 AS shard,
            text,
-           CASE WHEN {_NORM_SQL} = '' THEN 0
-                ELSE len(string_split({_NORM_SQL}, ' ')) END AS n_tokens
+           {TOKENS_SQL} AS n_tokens
     FROM documents
     WHERE text IS NOT NULL
 ), c AS (
@@ -410,7 +403,8 @@ def pack_render_512(spark: SparkSession, sf_dir: str) -> DataFrame:
         render_packs,
     )
 
-    sig = _docs(spark, sf_dir).filter(F.col("text").isNotNull()).select(
+    docs = sf_table(spark, sf_dir, "documents")
+    sig = docs.filter(F.col("text").isNotNull()).select(
         "doc_id",
         (F.col("doc_id") % 4).alias("shard"),
         "text",
@@ -440,7 +434,7 @@ def pack_render_512(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _REPETITION_ORACLE = f"""
 WITH w AS (
-    SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ws FROM documents
+    SELECT doc_id, string_split({NORM_SQL}, ' ') AS ws FROM documents
 ), c AS (
     SELECT doc_id, ws, len(ws) AS n,
            CASE WHEN len(ws) >= 2
@@ -536,7 +530,7 @@ def repetition_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pywrangler_spark.operators.dedup import _scale_out
 
-    base = _scale_out(_docs(spark, sf_dir)).select(
+    base = _scale_out(sf_table(spark, sf_dir, "documents")).select(
         "doc_id", words(F.col("text")).alias("ws")
     )
     stats = base.mapInPandas(
@@ -572,7 +566,7 @@ FROM (
     SELECT doc_id, source,
            row_number() OVER (
                PARTITION BY source
-               ORDER BY {_HASH56_SQL} % 10000, doc_id
+               ORDER BY {bucket_sql(42)}, doc_id
            ) AS rn
     FROM documents
 )
@@ -585,7 +579,7 @@ def cap_docs_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.sampling import cap_per_key
 
     return (
-        _docs(spark, sf_dir)
+        sf_table(spark, sf_dir, "documents")
         .transform(cap_per_key("source", 15, "doc_id", seed=42))
         .select("doc_id", "source")
     )
@@ -600,9 +594,7 @@ def cap_docs_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIX_ORACLE = f"""
 WITH per_source AS (
     SELECT source,
-           CAST(SUM(CASE WHEN {_NORM_SQL} = '' THEN 0
-                         ELSE len(string_split({_NORM_SQL}, ' ')) END)
-                AS BIGINT) AS n_tokens,
+           CAST(SUM({TOKENS_SQL}) AS BIGINT) AS n_tokens,
            CAST(COUNT(*) AS BIGINT) AS n_docs
     FROM documents GROUP BY source
 ), tot AS (
@@ -623,7 +615,7 @@ FROM per_source, tot
 @register("source_mix_weights", oracle=_MIX_ORACLE)
 def source_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_source = (
-        _docs(spark, sf_dir)
+        sf_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -653,9 +645,9 @@ def source_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TOKEN_CHUNK_ORACLE = f"""
 WITH w AS (
-    SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ws
+    SELECT doc_id, string_split({NORM_SQL}, ' ') AS ws
     FROM documents
-    WHERE text IS NOT NULL AND {_NORM_SQL} != ''
+    WHERE text IS NOT NULL AND {NORM_SQL} != ''
 ), starts AS (
     SELECT doc_id, ws,
            UNNEST(range(0, greatest(len(ws), 1), 50)) AS token_start
@@ -676,7 +668,7 @@ FROM starts
 def chunk_docs_by_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.chunk import chunk_by_tokens
 
-    return _docs(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "documents").transform(
         chunk_by_tokens(
             "doc_id", "text", tokens_per_chunk=60, overlap_tokens=10
         )
@@ -693,30 +685,7 @@ def chunk_docs_by_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CDC_AVG = 16
 
-_CDC_CHUNK_ORACLE = f"""
-WITH w AS (
-    SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ws,
-           list_transform(
-               string_split({_NORM_SQL}, ' '),
-               t -> ('0x' || substr(md5(t), 1, 14))::BIGINT
-           ) AS th
-    FROM documents
-    WHERE text IS NOT NULL AND {_NORM_SQL} != ''
-), toks AS (
-    SELECT doc_id, ws, th, t.i AS pos
-    FROM w, UNNEST(range(1, len(ws) + 1)) AS t(i)
-), flagged AS (
-    SELECT doc_id, ws[pos] AS tok, pos,
-           CASE WHEN pos >= 2 AND
-                     (th[pos - 1] * 31 + th[pos]) % {_CDC_AVG} = 0
-                THEN 1 ELSE 0 END AS cut
-    FROM toks
-), numbered AS (
-    SELECT doc_id, tok, pos,
-           CAST(sum(cut) OVER (PARTITION BY doc_id ORDER BY pos)
-                AS INT) AS chunk_index
-    FROM flagged
-)
+_CDC_CHUNK_ORACLE = cdc_chunks_sql(_CDC_AVG) + """
 SELECT doc_id, chunk_index,
        CAST(min(pos) - 1 AS INT) AS token_start,
        string_agg(tok, ' ' ORDER BY pos) AS chunk,
@@ -730,7 +699,7 @@ GROUP BY doc_id, chunk_index
 def chunk_docs_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.chunk import chunk_content_defined
 
-    return _docs(spark, sf_dir).transform(
+    return sf_table(spark, sf_dir, "documents").transform(
         chunk_content_defined("doc_id", "text", avg_tokens=_CDC_AVG)
     )
 
@@ -748,7 +717,8 @@ SELECT CAST(count(*) AS BIGINT) AS n_docs, TRUE AS bounds_ok
 FROM documents
 """
 
-_BPE_MERGES: dict = {}
+# fit-once serve-many, the queries/similarity.py convention
+_BPE_MERGES: dict = BoundedFitCache()
 
 
 @register("bpe_token_stats", oracle=_BPE_ORACLE)
@@ -759,10 +729,11 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pywrangler_spark.operators.bpe import bpe_encode, train_bpe
 
-    docs = _docs(spark, sf_dir)
-    if sf_dir not in _BPE_MERGES:
-        _BPE_MERGES[sf_dir] = train_bpe(docs, "text", n_merges=200)
-    encoded = docs.transform(bpe_encode(_BPE_MERGES[sf_dir], "text"))
+    docs = sf_table(spark, sf_dir, "documents")
+    merges = _BPE_MERGES.get_or_fit(
+        sf_dir, lambda: train_bpe(docs, "text", n_merges=200)
+    )
+    encoded = docs.transform(bpe_encode(merges, "text"))
     n_words = token_count(F.col("text"))
     n_chars = F.length(
         F.regexp_replace(normalize_text(F.col("text")), " ", "")
@@ -781,15 +752,19 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Signed feature hashing (md5 arithmetic, bit-reproducible) gives every
 # document a dense 64-d vector; exact cosine pairs over those vectors
 # are then fully hash-checkable — the model-free text -> ANN bridge.
-_DOCVEC_NEARDUP_ORACLE = f"""
+def _doc_vectors_sql(dim: int, where: str = "") -> str:
+    """``WITH`` prefix ending in ``vec(doc_id, v)``: the signed
+    feature-hashed ``dim``-d vector of every document ``where`` keeps
+    (``operators.docvec.hashed_doc_vectors``)."""
+    return f"""
 WITH toks AS (
-    SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS tok
-    FROM documents WHERE doc_id < 2000
+    SELECT doc_id, unnest(string_split({NORM_SQL}, ' ')) AS tok
+    FROM documents{where}
 ), t2 AS (SELECT * FROM toks WHERE tok <> ''),
 h AS (
-    SELECT doc_id, ('0x' || substr(md5(tok), 1, 14))::BIGINT AS h FROM t2
+    SELECT doc_id, {md5_bits_sql("tok")} AS h FROM t2
 ), cell AS (
-    SELECT doc_id, h % 64 AS idx,
+    SELECT doc_id, h % {dim} AS idx,
            CASE WHEN (h & (1::BIGINT << 55)) != 0
                 THEN 1.0 ELSE -1.0 END AS s
     FROM h
@@ -800,9 +775,14 @@ h AS (
     SELECT doc_id, map(list(idx), list(v)) AS m FROM agg GROUP BY doc_id
 ), vec AS (
     SELECT doc_id,
-           list_transform(range(0, 64), i -> coalesce(m[i][1], 0.0)) AS v
+           list_transform(range(0, {dim}), i -> coalesce(m[i][1], 0.0)) AS v
     FROM vecm
-), e AS (
+)"""
+
+
+_DOCVEC_NEARDUP_ORACLE = _doc_vectors_sql(
+    64, " WHERE doc_id < 2000"
+) + """, e AS (
     SELECT doc_id, v, sqrt(list_dot_product(v, v)) AS n FROM vec
 )
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -823,7 +803,7 @@ def docvec_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairwise verification demos (_JACCARD_CAP); the scale path for
     # doc vectors is the ANN ladder (LSH/IVF/PQ) over the same vectors
     vecs = (
-        _docs(spark, sf_dir)
+        sf_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 2000)
         .transform(hashed_doc_vectors("doc_id", "text", dim=64))
     )
@@ -852,7 +832,7 @@ def frequency_encode_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pywrangler_spark.operators.clean import frequency_encode
 
     return (
-        _docs(spark, sf_dir)
+        sf_table(spark, sf_dir, "documents")
         .transform(frequency_encode("source"))
         .select("doc_id", F.col("source_freq"))
     )
@@ -861,7 +841,7 @@ def frequency_encode_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- ANN over hashed doc vectors (the discovery path for docvec) ----------
 _DOCVEC_ANN_ORACLE = f"""
 SELECT CAST(count(*) AS BIGINT) AS n_queries, TRUE AS recall_ok
-FROM documents WHERE doc_id % 40 = 0 AND doc_id < 2000 AND {_NORM_SQL} <> ''
+FROM documents WHERE {query_gate_sql("doc_id")} AND {NORM_SQL} <> ''
 """
 
 
@@ -890,13 +870,13 @@ def docvec_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate frame, so dropping the result frees it.
     scope = CacheScope()
     vecs = scope.persist(
-        _docs(spark, sf_dir).transform(
+        sf_table(spark, sf_dir, "documents").transform(
             hashed_doc_vectors("doc_id", "text", dim=64)
         )
     )
     # fixed query batch: the cap is a no-op at driver scales and
     # pins serving cost to (batch x corpus) at larger ones
-    qf = (F.col("id") % 40 == 0) & (F.col("id") < 2000)
+    qf = query_gate("id")
     exact = vecs.transform(
         topk_cosine("id", "doc_vec", k=10, query_filter=qf)
     )
@@ -939,28 +919,7 @@ def _docvec_serve_oracle(
             lit = "[" + ",".join("1.0" if c > 0 else "-1.0" for c in w) + "]"
             rows.append(f"({t},{p},{lit})")
     masks = ",".join(f"({m})" for m in [0] + [1 << i for i in range(n_planes)])
-    return f"""
-WITH toks AS (
-    SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS tok
-    FROM documents
-), t2 AS (SELECT * FROM toks WHERE tok <> ''),
-h AS (
-    SELECT doc_id, ('0x' || substr(md5(tok), 1, 14))::BIGINT AS h FROM t2
-), cell AS (
-    SELECT doc_id, h % {dim} AS idx,
-           CASE WHEN (h & (1::BIGINT << 55)) != 0
-                THEN 1.0 ELSE -1.0 END AS s
-    FROM h
-), agg AS (
-    SELECT doc_id, idx, CAST(SUM(s) AS DOUBLE) AS v
-    FROM cell GROUP BY 1, 2
-), vecm AS (
-    SELECT doc_id, map(list(idx), list(v)) AS m FROM agg GROUP BY doc_id
-), vec AS (
-    SELECT doc_id,
-           list_transform(range(0, {dim}), i -> coalesce(m[i][1], 0.0)) AS v
-    FROM vecm
-), e AS (
+    return _doc_vectors_sql(dim) + f""", e AS (
     SELECT doc_id AS id, v, sqrt(list_dot_product(v, v)) AS n FROM vec
 ), nt0 AS (
     SELECT 4 + CAST(round(greatest(0.0, log10(count(*) / 2000.0)))
@@ -988,7 +947,7 @@ bits AS (
 ), probes(mask) AS (VALUES {masks}),
 qprobe AS (
     SELECT DISTINCT qb.id AS qid, qb.t, xor(qb.bucket, probes.mask) AS bucket
-    FROM buck qb, probes WHERE qb.id % 40 = 0 AND qb.id < 2000
+    FROM buck qb, probes WHERE {query_gate_sql("qb.id")}
 ), cand AS (
     SELECT DISTINCT qp.qid, b.id
     FROM qprobe qp JOIN buck b ON b.t = qp.t AND b.bucket = qp.bucket
@@ -1038,7 +997,7 @@ def docvec_ann_lsh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoped to the returned frame's lifetime
     scope = CacheScope()
     vecs = scope.persist(
-        _docs(spark, sf_dir).transform(
+        sf_table(spark, sf_dir, "documents").transform(
             hashed_doc_vectors("doc_id", "text", dim=64)
         )
     )
@@ -1047,7 +1006,7 @@ def docvec_ann_lsh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk_cosine_lsh(
             "id", "doc_vec", k=10, n_planes=8, n_tables=n_tables,
             dim=64, plane_kind="rademacher",
-            query_filter=(F.col("id") % 40 == 0) & (F.col("id") < 2000),
+            query_filter=query_gate("id"),
         )
     )
     return scope.tie(out.select("query_id", "neighbor_id", "cosine", "rank"))
@@ -1098,7 +1057,7 @@ def redact_pii_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     redacted spans — scan-side regexp_replace chain, zero exchanges."""
     from pywrangler_spark.operators.redact import redact_pii
 
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     pii_a = F.concat(
         F.col("text"),

@@ -24,11 +24,7 @@ from pywrangler_spark.functions.web import (
     url_host_sql,
 )
 from pywrangler_spark.queries import register
-from pywrangler_spark.sources import read_parquet
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet(spark, f"{sf_dir}/documents.parquet")
+from pywrangler_spark.sources import sf_table
 
 
 # ---- HTML -> text ----------------------------------------------------------
@@ -53,7 +49,7 @@ WHERE text IS NOT NULL
 
 @register("webclean_docs", oracle=_WEBCLEAN_ORACLE)
 def webclean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).filter(F.col("text").isNotNull())
+    docs = sf_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     html = F.concat(
         F.lit(
             '<html><head><style>p {color: red}</style>'
@@ -114,7 +110,7 @@ GROUP BY 1
 
 @register("url_canonical_domains", oracle=_URL_DOMAINS_ORACLE)
 def url_canonical_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     url = (
         F.when(
             F.col("doc_id") % 4 == 0,

@@ -18,7 +18,8 @@ from pywrangler_spark.sources.parquet import (
     TABLE_NAMES,
     load_tables,
     read_parquet,
-    register_views,
+    sf_path,
+    sf_table,
     validate_sf_dir,
 )
 
@@ -29,7 +30,8 @@ __all__ = [
     "zorder_layout",
     "read_parquet",
     "load_tables",
-    "register_views",
+    "sf_path",
+    "sf_table",
     "validate_sf_dir",
     "read_binary_files",
     "read_text_shards",

@@ -140,29 +140,26 @@ def validate_sf_dir(
         )
 
 
+def sf_path(sf_dir: str, name: str) -> str:
+    """Where driver table ``name`` lives in ``sf_dir``: one parquet each."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read driver table ``name`` from ``sf_dir`` — the one table reader
+    every registered query and script goes through."""
+    return read_parquet(spark, sf_path(sf_dir, name))
+
+
 def load_tables(
     spark: SparkSession,
     sf_dir: str,
     names: Optional[Iterable[str]] = None,
 ) -> Dict[str, DataFrame]:
-    """Load the driver testdata tables from ``sf_dir`` (one parquet each)."""
+    """Load the driver testdata tables from ``sf_dir`` (the ones present)."""
     validate_sf_dir(sf_dir, names)
-    names = tuple(names) if names else TABLE_NAMES
-    tables = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            tables[name] = read_parquet(spark, path)
-    return tables
-
-
-def register_views(
-    spark: SparkSession,
-    sf_dir: str,
-    names: Optional[Iterable[str]] = None,
-) -> Dict[str, DataFrame]:
-    """Load tables and register each as a temp view for ``spark.sql``."""
-    tables = load_tables(spark, sf_dir, names)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables
+    return {
+        name: sf_table(spark, sf_dir, name)
+        for name in (tuple(names) if names else TABLE_NAMES)
+        if os.path.exists(sf_path(sf_dir, name))
+    }

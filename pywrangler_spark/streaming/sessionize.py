@@ -46,8 +46,11 @@ def stream_session_stats(
             sdf.withWatermark(ts_column, watermark)
             .groupBy(
                 F.col(groupby_column),
+                # whole microseconds (Spark's timestamp resolution): the
+                # gap must match the batch operator's to the microsecond
                 F.session_window(
-                    F.col(ts_column), f"{int(gap_seconds)} seconds"
+                    F.col(ts_column),
+                    f"{round(gap_seconds * 1_000_000)} microseconds",
                 ),
             )
             .agg(*aggs)

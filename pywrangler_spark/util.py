@@ -275,11 +275,12 @@ def keep_alive(derived, *sources):
 class BoundedFitCache(dict):
     """Per-process fit-once cache with an entry bound (VERDICT r12 #8).
 
-    The fit-once-serve-many model caches (``_IVF_CENTROIDS``,
-    ``_PQ_CODEBOOKS``, ``_CLF_MODELS``, the param dicts) are keyed on
-    ``sf_dir``/layout and were unbounded — harmless in a bench process
-    that only ever sees a handful of corpora, a slow leak for a
-    long-lived library user iterating over many datasets. Oldest-insert
+    The fit-once-serve-many model caches of the query registry
+    (``_IVF_CENTROIDS``, ``_PQ_CODEBOOKS``, ``_CLF_MODELS``,
+    ``_BPE_MERGES``, the param dicts) are keyed on ``sf_dir``/layout and
+    filled through :meth:`get_or_fit`. Unbounded, they were harmless in
+    a bench process that only ever sees a handful of corpora, a slow
+    leak for a long-lived library user iterating over many datasets. Oldest-insert
     eviction is correctness-free: every cached fit is deterministic
     (fixed seed, same corpus), so a re-fit after eviction reproduces
     the identical artifact; the bound only caps resident model memory.
@@ -293,3 +294,10 @@ class BoundedFitCache(dict):
         if key not in self and len(self) >= self.maxsize:
             del self[next(iter(self))]
         super().__setitem__(key, value)
+
+    def get_or_fit(self, key, fit: Callable[[], Any]):
+        """The cached artifact for ``key``; on a miss ``fit()`` builds
+        it and the cache keeps it."""
+        if key not in self:
+            self[key] = fit()
+        return self[key]

@@ -41,7 +41,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from pywrangler_spark.session import get_spark
-from pywrangler_spark.sources import read_parquet
+from pywrangler_spark.sources import sf_path, sf_table
 
 # key column -> per-replica offset. Offsets exceed every key's range at
 # sf0.1 (max: orderkey 600k, event_id 100k) and are divisible by the
@@ -133,14 +133,14 @@ def main() -> None:
     scaled = [t for t in SCALED_TABLES if not only or t in only]
 
     for name in fixed:
-        df = read_parquet(spark, os.path.join(args.src, f"{name}.parquet"))
+        df = sf_table(spark, args.src, name)
         df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(args.dest, f"{name}.parquet")
+            sf_path(args.dest, name)
         )
         print(f"{name}: copied")
 
     for name in scaled:
-        df = read_parquet(spark, os.path.join(args.src, f"{name}.parquet"))
+        df = sf_table(spark, args.src, name)
         keyed = [c for c in df.columns if c in offsets]
         replicas = []
         for i in range(args.mult):
@@ -158,7 +158,7 @@ def main() -> None:
             1, OUT_FILES.get(name, 4) * args.mult * offset_mult // 10
         )
         out.repartition(n_files).write.mode("overwrite").parquet(
-            os.path.join(args.dest, f"{name}.parquet")
+            sf_path(args.dest, name)
         )
         print(f"{name}: x{args.mult} via {keyed}")
 

@@ -26,13 +26,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from pywrangler_spark.queries._shared import query_gate
 from pywrangler_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def _query_filter():
-    # built lazily: Column construction needs an active SparkContext
-    return (F.col("vec_id") % 40 == 0) & (F.col("vec_id") < 2000)
 DIM = 64
 FLOORS = {"lsh": 0.3, "ivf": 0.5, "pq": 0.6, "ivfpq": 0.45}
 
@@ -40,6 +38,7 @@ FLOORS = {"lsh": 0.3, "ivf": 0.5, "pq": 0.6, "ivfpq": 0.45}
 def build_approx(family, emb, n_rows, scaled):
     from pywrangler_spark.operators import similarity as S
 
+    qf = query_gate("vec_id")
     n_centroids, n_probe, n_tables, rerank = 16, 4, 4, 1
     if scaled:
         p = S.suggest_ann_params(n_rows)
@@ -49,7 +48,7 @@ def build_approx(family, emb, n_rows, scaled):
         return emb.transform(
             S.topk_cosine_lsh(
                 "vec_id", "embedding", k=10, n_planes=8,
-                n_tables=n_tables, dim=DIM, query_filter=_query_filter(),
+                n_tables=n_tables, dim=DIM, query_filter=qf,
             )
         ), {"n_tables": n_tables}
     if family == "ivf":
@@ -59,7 +58,7 @@ def build_approx(family, emb, n_rows, scaled):
         return emb.transform(
             S.topk_cosine_ivf(
                 "vec_id", "embedding", k=10, n_centroids=n_centroids,
-                n_probe=n_probe, query_filter=_query_filter(), centroids=cents,
+                n_probe=n_probe, query_filter=qf, centroids=cents,
             )
         ), {"n_centroids": n_centroids, "n_probe": n_probe}
     if family == "pq":
@@ -69,7 +68,7 @@ def build_approx(family, emb, n_rows, scaled):
         return emb.transform(
             S.topk_cosine_pq(
                 "vec_id", "embedding", k=10, m=16, codebook_k=256,
-                query_filter=_query_filter(), codebooks=books,
+                query_filter=qf, codebooks=books,
                 rerank=rerank,
             )
         ), {"m": 16, "codebook_k": 256, "rerank": rerank}
@@ -84,7 +83,7 @@ def build_approx(family, emb, n_rows, scaled):
             S.topk_cosine_ivfpq(
                 "vec_id", "embedding", k=10, n_centroids=n_centroids,
                 n_probe=n_probe, m=16, codebook_k=256,
-                query_filter=_query_filter(), centroids=cents, codebooks=books,
+                query_filter=qf, centroids=cents, codebooks=books,
                 rerank=rerank,
             )
         ), {"n_centroids": n_centroids, "n_probe": n_probe,
@@ -164,18 +163,18 @@ def main() -> int:
         per_query_recall,
         topk_cosine,
     )
-    from pywrangler_spark.queries.similarity import _emb
+    from pywrangler_spark.sources import sf_table
 
     results = []
     for sf_dir in sf_dirs:
-        emb = _emb(spark, sf_dir)
+        emb = sf_table(spark, sf_dir, "embeddings")
         if args.synth_mult:
             emb = synth_expand(emb, args.synth_mult)
         emb = emb.persist()
         n_rows = emb.count()
         exact = emb.transform(
             topk_cosine("vec_id", "embedding", k=10,
-                        query_filter=_query_filter())
+                        query_filter=query_gate("vec_id"))
         )
         for fam in fams:
             for scaled in ([False, True] if args.scaled else [False]):

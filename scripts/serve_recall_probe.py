@@ -28,13 +28,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from pywrangler_spark.queries._shared import query_gate
 from pywrangler_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _query_filter():
-    return (F.col("id") % 40 == 0) & (F.col("id") < 2000)
 
 
 def main() -> int:
@@ -57,7 +54,7 @@ def main() -> int:
         topk_cosine,
         topk_cosine_lsh,
     )
-    from pywrangler_spark.sources import read_parquet
+    from pywrangler_spark.sources import sf_table
 
     spark = get_spark(
         "serve-recall-probe", extra_conf={"spark.driver.memory": "48g"}
@@ -67,7 +64,7 @@ def main() -> int:
     results = []
     for sf_dir in args.sf:
         vecs = (
-            read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+            sf_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
             .transform(hashed_doc_vectors("doc_id", "text", dim=64))
             .persist()
@@ -79,7 +76,7 @@ def main() -> int:
         exact = (
             vecs.transform(
                 topk_cosine("id", "doc_vec", k=10,
-                            query_filter=_query_filter())
+                            query_filter=query_gate("id"))
             )
             .select("query_id", "neighbor_id")
             .persist()
@@ -95,7 +92,7 @@ def main() -> int:
                 topk_cosine_lsh(
                     "id", "doc_vec", k=10, n_planes=8,
                     n_tables=n_tables, dim=64, plane_kind=kind,
-                    query_filter=_query_filter(),
+                    query_filter=query_gate("id"),
                 )
             )
             recall, nq = per_query_recall(exact, approx).agg(

@@ -191,6 +191,50 @@ class TestStreamingSessions:
             f"{matching}/{len(b)} sessions match"
         )
 
+    def test_fractional_gap_matches_batch(self, spark, tmp_path):
+        """A fractional gap is kept exactly: events 90.2 s and 90.4 s
+        apart are one session under a 90.5 s gap on both paths (a gap
+        truncated to 90 s splits them into three)."""
+        import datetime as dt
+
+        t0 = dt.datetime(2024, 1, 1)
+        at = lambda s: t0 + dt.timedelta(seconds=s)  # noqa: E731
+        # user 1's events, then two later micro-batches that carry the
+        # watermark past the end of user 1's session
+        batches = [
+            [(1, at(0.0)), (1, at(90.2)), (1, at(180.6))],
+            [(2, at(86_400))],
+            [(3, at(2 * 86_400))],
+        ]
+        schema = "user_id long, ts timestamp"
+        files = tmp_path / "files"
+        files.mkdir()
+        for i, rows in enumerate(batches):
+            out = str(tmp_path / f"batch{i}")
+            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+                out
+            )
+            for name in os.listdir(out):
+                if name.endswith(".parquet"):
+                    dest = str(files / f"{i:03d}.parquet")
+                    shutil.copy(os.path.join(out, name), dest)
+                    os.utime(dest, (1_700_000_000 + i * 60,) * 2)
+        df = spark.createDataFrame(batches[0], schema)
+        batch = df.transform(session_stats("ts", 90.5, "user_id"))
+        streamed = _run_stream(
+            spark,
+            stream_session_stats(
+                "ts", 90.5, "user_id", watermark="0 seconds"
+            ),
+            str(files),
+            df.schema,
+            "fractional_gap_sink",
+        )
+        assert [r.n_events for r in batch.collect()] == [3]
+        assert [
+            r.n_events for r in streamed.collect() if r.user_id == 1
+        ] == [3]
+
 
 class TestStreamingRollup:
     def test_buckets_match_batch(self, spark, events_stream_dir):

@@ -327,15 +327,40 @@ class TestBoundedFitCache:
         c["a"] = 9
         assert list(c) == ["a", "b"] and c["a"] == 9
 
-    def test_registry_model_caches_are_bounded(self):
+    def test_get_or_fit_fits_once_per_key(self):
         from pywrangler_spark.util import BoundedFitCache
-        from pywrangler_spark.queries import corpus, similarity
 
-        for cache in (
-            similarity._ANN_PARAMS,
-            similarity._IVF_CENTROIDS,
-            similarity._PQ_CODEBOOKS,
-            corpus._FIT_PARAMS,
-            corpus._CLF_MODELS,
-        ):
-            assert isinstance(cache, BoundedFitCache)
+        c, fits = BoundedFitCache(maxsize=2), []
+        fit = lambda: fits.append(1) or len(fits)  # noqa: E731
+        assert [c.get_or_fit("a", fit), c.get_or_fit("a", fit)] == [1, 1]
+        assert c.get_or_fit("b", fit) == 2 and len(fits) == 2
+
+    def test_registry_model_caches_are_bounded(self):
+        """Every module-level dict of ``pywrangler_spark.queries.*`` that
+        is empty at import is a fit cache and must be bounded. Checked in
+        a fresh interpreter: this process's queries may have filled them."""
+        import os
+        import subprocess
+        import sys
+
+        probe = """
+import importlib, pkgutil
+import pywrangler_spark.queries as q
+from pywrangler_spark.util import BoundedFitCache
+caches, unbounded = [], []
+for info in pkgutil.iter_modules(q.__path__):
+    mod = importlib.import_module(f"{q.__name__}.{info.name}")
+    for name, value in vars(mod).items():
+        if isinstance(value, dict) and not value and not name.startswith("__"):
+            caches.append(f"{info.name}.{name}")
+            if not isinstance(value, BoundedFitCache):
+                unbounded.append(f"{info.name}.{name}")
+print(len(caches), unbounded)
+"""
+        out = subprocess.run(
+            [sys.executable, "-c", probe],
+            capture_output=True, text=True, check=True,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ).stdout.split(maxsplit=1)
+        assert int(out[0]) >= 6  # the ANN, classifier and BPE caches
+        assert out[1].strip() == "[]", f"unbounded fit caches: {out[1]}"
