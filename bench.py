@@ -33,14 +33,16 @@ Three modes, one query loop (:func:`run_suite`) and one session bring-up:
   ``sys.path`` puts that package root first, so per-query HEAD/REF
   ratios (min over passes) are measured within the same host window —
   the host drifts 2-6x across minutes, which makes cross-round absolute
-  numbers incomparable. ``bench_ab.json`` also keeps every pass's
+  numbers incomparable. ``artifacts/bench_ab.json`` also keeps every pass's
   per-query seconds for both arms and ``cpus``; the last stdout line
   carries the ratio summary and the three worst ratios.
 - ``python bench.py --isolated [NAME ...]``: each query in its own fresh
-  subprocess + session (best of the reps inside it).
+  subprocess + session (best of the reps inside it), written to
+  ``artifacts/bench_isolated.json``.
 
 ``SPARK_GRAFT_BENCH_QUERIES`` (comma-separated) restricts any mode to a
-subset; ``SPARK_GRAFT_BENCH_OUT`` redirects the written record.
+subset; ``SPARK_GRAFT_BENCH_OUT`` redirects the written record (a path
+relative to the repo root).
 """
 
 from __future__ import annotations
@@ -195,7 +197,7 @@ def _run_in_subprocess(root: str, names, reps: int, telemetry: bool) -> dict:
 
 def ab_record(sha: str, passes: dict, cpus) -> dict:
     """Fold each arm's per-pass query seconds (``{"head": {query: [sec,
-    ...]}, "ref": {...}}``) into the ``bench_ab.json`` record: paired
+    ...]}, "ref": {...}}``) into the ``artifacts/bench_ab.json`` record: paired
     per-query min-over-passes ratios (head/ref; <1 = HEAD faster) over
     the queries both arms ran, plus the passes themselves and ``cpus``,
     so a reader can tell whether a ratio is inside the pass spread."""
@@ -246,9 +248,7 @@ def ab_main(ref: str) -> None:
                     passes[variant].setdefault(name, []).append(sec)
 
     result = ab_record(sha, passes, cpus)
-    out_name = os.environ.get("SPARK_GRAFT_BENCH_OUT", "bench_ab.json")
-    with open(os.path.join(REPO, out_name), "w") as fh:
-        json.dump(result, fh)
+    _write(result, "artifacts/bench_ab.json")
     print(json.dumps(result))
     compact = {k: v for k, v in result.items()
                if k not in ("ratios", "cpus", "passes")}
@@ -263,9 +263,8 @@ def isolated_main(names) -> None:
     session (best-of-N reps inside it), so host-window contention and
     suite-accumulated state (UI store, code cache, GC pressure) cannot
     tax its number. This is the decade-table mode for the big scale —
-    SCALE.md's measured precedent is suite-mode sf10 numbers running
-    5-30x isolated times under contention, which burns a round of
-    re-adjudicating phantom regressions each time."""
+    SCALE.md "How the numbers are measured" records suite-mode sf10
+    numbers running 5-30x isolated times under contention."""
     from pywrangler_spark.queries import QUERIES
 
     names = list(names) or _suite_names()
@@ -288,7 +287,7 @@ def isolated_main(names) -> None:
             f"{res['queries'].get(name) or res['errors'].get(name)}",
             file=sys.stderr,
         )
-    _emit(merged, "bench_isolated.json", mode="isolated")
+    _emit(merged, "artifacts/bench_isolated.json", mode="isolated")
 
 
 def _stage_metrics_reader(spark):
@@ -321,8 +320,7 @@ def _stage_metrics_reader(spark):
 def _aggregate_stages(stages, slots: int) -> dict:
     """One query's ``stage_metrics``: the
     :func:`pywrangler_spark.benchmark.stage_totals` of its stages in MB
-    (the normalized peak is the mean-based estimate documented there;
-    README and SCALE.md label it so)."""
+    (the normalized peak is the mean-based estimate documented there)."""
     from pywrangler_spark.benchmark import stage_totals
 
     t = stage_totals(stages, slots)
@@ -373,11 +371,20 @@ def _emit(result: dict, default_out: str, mode: str | None = None) -> None:
     # optional keys appear only when they carry something
     full = {k: v for k, v in full.items()
             if v or k not in ("mode", "errors", "stage_metrics")}
-    out_name = os.environ.get("SPARK_GRAFT_BENCH_OUT", default_out)
-    with open(os.path.join(REPO, out_name), "w") as fh:
-        json.dump(full, fh)
+    _write(full, default_out)
     print(json.dumps(full))
     print(json.dumps(_compact(full)))
+
+
+def _write(record: dict, default_out: str) -> None:
+    """Write ``record`` to ``SPARK_GRAFT_BENCH_OUT`` or ``default_out``,
+    both relative to the repo root."""
+    path = os.path.join(
+        REPO, os.environ.get("SPARK_GRAFT_BENCH_OUT", default_out)
+    )
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as fh:
+        json.dump(record, fh)
 
 
 def main() -> None:

@@ -55,7 +55,7 @@ def token_count(col: Column) -> Column:
     than ``size(split(...))`` — same number (normalize_text guarantees
     single-space separators, no leading/trailing), but no per-row token
     ARRAY is allocated just to take its length (probe:
-    ``bench_textstats_probe_sf10.json``, bit-identical over sf10)."""
+    ``artifacts/bench_textstats_probe_sf10.json``, bit-identical over sf10)."""
     norm = normalize_text(col)
     return F.when(norm == "", F.lit(0)).otherwise(
         F.regexp_count(norm, F.lit(" ")) + 1

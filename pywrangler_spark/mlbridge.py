@@ -90,11 +90,14 @@ def to_ml_transformer(stage: Any, name: str = None) -> Transformer:
         return stage
     if isinstance(stage, Stage):
         return to_ml_transformer(stage.obj, name or stage.name)
+    if not isinstance(stage, BaseWrangler) and not callable(stage):
+        raise TypeError(
+            f"cannot bridge {type(stage)} to pyspark.ml.Transformer; "
+            "expected a BaseWrangler, Stage, or DataFrame callable"
+        )
 
     if isinstance(stage, BaseWrangler):
-        wrangler = _copy.deepcopy(stage)
-        params = wrangler.get_params()
-        cls_name = name or type(stage).__name__
+        stage = _copy.deepcopy(stage)
 
         def _apply(self, df):
             wr = self._stage
@@ -102,28 +105,15 @@ def to_ml_transformer(stage: Any, name: str = None) -> Transformer:
             return wr.fit_transform(df)
 
         doc = inspect.getdoc(type(stage))
-        return _build(cls_name, wrangler, params, _apply, doc)
-
-    if callable(stage):
-        sig = inspect.signature(stage)
-        params = {
-            n: p.default
-            for n, p in sig.parameters.items()
-            if p.default is not inspect.Parameter.empty
-        }
-        cls_name = name or getattr(stage, "__name__", "function_stage")
-        if cls_name == "<lambda>":
-            cls_name = "function_stage"
+    else:
 
         def _apply(self, df):
             return self._stage(df, **self.currentParams())
 
-        return _build(cls_name, stage, params, _apply, inspect.getdoc(stage))
-
-    raise TypeError(
-        f"cannot bridge {type(stage)} to pyspark.ml.Transformer; "
-        "expected a BaseWrangler, Stage, or DataFrame callable"
-    )
+        doc = inspect.getdoc(stage)
+    # name and params follow the one conversion rule Pipeline uses
+    spec = Stage.from_any(stage, 0)
+    return _build(name or spec.name, stage, spec.params, _apply, doc)
 
 
 def _build(

@@ -135,10 +135,9 @@ def suggest_fit_params(n_rows: int) -> dict:
     the validated base point — the ``suggest_ann_params`` treatment
     (capacity derived from one corpus count, not pinned constants).
 
-    Measured rationale (holdout ladder in SCALE.md, "Round-8:
-    classifier fit cap"): a fixed 64k cap holds holdout
-    accuracy within noise of the full fit at the scale it was validated
-    (0.994/0.996 at sf0.1/sf1) but decays as the corpus vocabulary
+    Measured rationale (holdout ladder in SCALE.md "Classifier fit
+    schedule"): a fixed 64k cap matches the full fit at the scale it
+    was validated (0.996 at sf0.1/sf1) but decays as the corpus vocabulary
     outgrows the sample (0.976 at sf10) — the gap is TOKEN COVERAGE,
     and sample size is the lever (iterations/features/regularization
     measured flat). So both levers grow with the data:
@@ -148,8 +147,8 @@ def suggest_fit_params(n_rows: int) -> dict:
       the sample) grows 2x per 10x data, sublinear and bounded, while
       sample vocabulary tracks a Heaps-law corpus (vocab ~ n^0.5 means
       ~3.2x new types per decade; the synthetic key-shifted corpus is
-      the linear worst case and still closes most of the gap — ladder
-      in SCALE.md);
+      the linear worst case and still closes most of the gap — same
+      ladder);
     - ``n_features``: ``FIT_BASE_FEATURES``, doubled per decade
       alongside the cap (hash-bucket collision rate is vocab/buckets;
       growing the sample without the feature space converts coverage
@@ -192,8 +191,8 @@ def fit_text_classifier(
     a bounded sample, not the corpus — every L-BFGS iteration is a full
     treeAggregate pass over the fit input, so an uncapped fit grows
     linearly with corpus scale while the learned linear model stops
-    changing (holdout-equivalence table in SCALE.md: accuracy identical
-    at caps 2k/8k/32k vs the full fit at 10x scale). The sample is a
+    changing (SCALE.md "Classifier fit schedule": the scheduled cap
+    holds within 0.06 of the full fit at 100x scale). The sample is a
     per-label md5-bucket THRESHOLD over the TEXT hash
     (:func:`_threshold_cap`) — deterministic across engines, reruns
     and partitionings, uniform within each label, and selected by a

@@ -590,7 +590,7 @@ class ContainmentPairs(CacheOwner):
     The hashed shingle stream is consumed up to four times (df-cap
     aggregate, per-doc counts, both self-join sides) and tokenize+shingle
     dominates the family's task-time (measured: ~89% for the span
-    family, ``span_pos_sf10.json``), so each ``__call__`` persists it
+    family, ``artifacts/span_pos_sf10.json``), so each ``__call__`` persists it
     into a per-call :class:`~pywrangler_spark.util.CacheScope`.
 
     Output: (id_a, id_b, containment), id_a < id_b.

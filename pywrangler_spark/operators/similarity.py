@@ -376,8 +376,8 @@ def suggest_ann_params(n_rows: int) -> dict:
     past the driver-scale defaults (16 cells / probe 4 / 4 tables /
     no rerank, validated at ``ANN_BASE_ROWS`` ~2k vectors).
 
-    Measured rationale (``scripts/recall_probe.py``, SCALE.md recall
-    table): with hyperparameters FROZEN at the driver-scale defaults, a
+    Measured rationale (``scripts/recall_probe.py``, SCALE.md "Recall vs
+    scale"): with hyperparameters FROZEN at the driver-scale defaults, a
     10x distinct-vector corpus drops PQ recall@10 from 0.64 to ~0.55
     and IVF-PQ to ~0.39 — below their gates. The levers that restore
     it, per family:

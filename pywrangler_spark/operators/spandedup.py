@@ -172,7 +172,7 @@ def _hit_position_sets(
     # plain count is a partial_count that map-side-combines to one
     # (gram, n) row per mapper per distinct gram: the exchange is
     # bounded by mappers x vocabulary. Measured (sf100 same-window
-    # isolated probe, bench_spanmask_count_probe_sf100.json): the
+    # isolated probe, artifacts/bench_spanmask_count_probe_sf100.json): the
     # span-stats pipeline's total shuffle drops 10.2 -> 6.9 GB and the
     # decade-max query runs 227.9 -> 154.0 s (0.68x) with bit-identical
     # output; sf1/sf10 are neutral-to-better with the same ~5x cut on
@@ -330,7 +330,7 @@ def duplicate_span_stats(
     join moves corpus-COUNT bytes, not corpus-TEXT bytes, at every
     scale.
 
-    Measured (sf100 probe, bench_spanstats_sf100.json vs the
+    Measured (sf100 probe, artifacts/bench_spanstats_sf100.json vs the
     appending form's re-probe): 170.2 -> 135.6 s and the shuffle drops
     by exactly the corpus's compressed text mass (~0.76 GB of 11.0 GB
     total — this synthetic corpus averages only ~300 text bytes/doc,

@@ -392,7 +392,7 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap-label seed -> model that generalizes): median-split LM scores
     label the corpus, even doc_ids train, odd doc_ids evaluate.
 
-    Scale shape (the two round-8 fixes, before/after in SCALE.md):
+    Scale shape (SCALE.md "Classifier fit schedule"):
 
     - the TEACHER LABEL TABLE ``(doc_id, qlabel)`` is persisted once —
       ~0.1% of corpus bytes. The teacher lineage (vocab aggregate + LM
@@ -403,8 +403,8 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
       (``max_fit_rows``), not the full even half: every L-BFGS
       iteration is a treeAggregate over the fit input, so the uncapped
       fit grows linearly with the corpus while the model stops
-      changing. Holdout table (SCALE.md, "Round-8: classifier fit cap"):
-      64k cap = 0.994/0.996/0.976 at sf0.1/sf1/sf10 vs 0.996 full —
+      changing. Holdout (SCALE.md "Classifier fit schedule"): a 64k
+      cap is the full fit (0.996) at sf0.1/sf1 and 0.976 at sf10 —
       the residual sf10 gap is token-coverage against this synthetic
       corpus's linearly-growing vocabulary (key-shifted replication);
       natural corpora grow vocabulary ~sqrt(n) (Heaps), favoring the
@@ -425,7 +425,8 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # capacity schedule, resolved once per (process, corpus) like the
     # ANN gates' suggest_ann_params: cap and feature width derive from
     # corpus size instead of pinning the 64k/2^16 base point (which
-    # decays with vocabulary growth at 10x+ — holdout ladder, SCALE.md)
+    # decays with vocabulary growth at 10x+ — SCALE.md "Classifier fit
+    # schedule")
     fitp = _FIT_PARAMS.get_or_fit(
         sf_dir, lambda: suggest_fit_params(docs.count())
     )

@@ -7,7 +7,7 @@ pruned columns; dimension joins stay broadcast-shaped so the only shuffles
 are the final aggregations; aggregates are aliased identically to the
 oracle.
 
-Broadcast policy (the round-8 peak-memory audit, SCALE.md): ``F.broadcast``
+Broadcast policy (SCALE.md "Broadcast policy"): ``F.broadcast``
 is PINNED only on frames whose size is scale-invariant — nation/region
 (25/5 rows) and output-bounded aggregates (1-row thresholds, per-priority
 5-row tables, per-returnflag sketches). Dimensions that GROW with scale
@@ -1255,7 +1255,7 @@ def _fact_buckets(n_rows: int) -> int:
     task waves) and keeps growing past it (2048 at sf100's 600M rows,
     where a pinned 128 put ~4.7M orderkeys in every task's aggregate
     hash table — measured 36.8x/decade and 184 GB of summed task peaks
-    before this schedule, bench_sf100_subset.json). Bucket count is a
+    before this schedule, artifacts/bench_sf100_subset.json). Bucket count is a
     WRITE-time layout decision: at 100 TB you size buckets so one
     bucket's rows fit a task, you don't pin last year's constant."""
     target = max(32, n_rows // 500_000)

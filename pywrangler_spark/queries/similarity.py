@@ -42,8 +42,9 @@ _NORM_E = """
 # gates derive their hyperparameters from corpus size via
 # suggest_ann_params instead of pinning driver-scale constants, so the
 # sf10 rows exercise the same schedule a 100 TB deployment relies on
-# (recall_scale.json is the measured basis). The one count() per corpus
-# is a fit-phase action, cached like the centroid/codebook artifacts.
+# (artifacts/recall_scale.json is the measured basis). The one count()
+# per corpus is a fit-phase action, cached like the centroid/codebook
+# artifacts.
 _ANN_PARAMS: dict = BoundedFitCache()
 
 
@@ -233,7 +234,7 @@ def ann_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top k*2 ADC candidates exactly, keep the true top-k) must lift
     recall above a HIGHER floor than unrefined PQ clears — 0.7 vs the
     0.6 base gate (measured 0.73 at a 10x distinct-vector corpus where
-    unrefined PQ drops to 0.55; see SCALE.md recall table)."""
+    unrefined PQ drops to 0.55; see SCALE.md "Recall vs scale")."""
     emb = sf_table(spark, sf_dir, "embeddings")
     # schedule-derived, floored at 2: this gate EXISTS to exercise the
     # refine stage, so it never degrades to unrefined PQ at driver

@@ -13,6 +13,7 @@ from pywrangler_spark.functions.temporal import epoch_micros
 from pywrangler_spark.operators.asof import asof_join, time_bucket_rollup
 from pywrangler_spark.operators.rangejoin import interval_join, range_join
 from pywrangler_spark.queries import register
+from pywrangler_spark.queries.relational import dsum
 from pywrangler_spark.sources import sf_table
 
 
@@ -890,7 +891,8 @@ def resample_runs_weighted_mean(
     / step + 1); a run whose carried value is still NULL (before the
     user's first non-null bucket) contributes nothing, exactly like the
     NULL prefix of the dense series. This is the documented consumption
-    pattern for 100 TB consumers (SCALE.md): store/ship runs, derive
+    pattern for 100 TB consumers (SCALE.md "Resampling: runs, not
+    grids"): store/ship runs, derive
     grid-shaped statistics by weighting, expand with runs_to_dense only
     when a consumer genuinely needs grid rows."""
     from pywrangler_spark.operators.resample import resample_locf
@@ -906,12 +908,15 @@ def resample_runs_weighted_mean(
         / F.lit(step_us)
         + 1
     ).cast("long")
+    # the weighted sum accumulates exactly (``dsum``), so a mean that
+    # lands on a 4 dp tie rounds HALF_UP as the oracle's does, whatever
+    # the f64 summation order
     return (
         runs.filter(F.col("value").isNotNull())
         .groupBy("user_id")
         .agg(
             F.round(
-                F.sum(F.col("value") * n_buckets) / F.sum(n_buckets), 4
+                dsum(F.col("value") * n_buckets) / F.sum(n_buckets), 4
             ).alias("twa_value"),
             F.sum(n_buckets).alias("n_buckets"),
         )

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for named queries into plans/<tag>/.
+"""Capture .explain("formatted") for named queries.
 
 Usage: python scripts/capture_plans.py <tag> <suffix> name [name...]
-Writes plans/<tag>/<name>_<suffix>.txt. Queries whose build phase runs
-eager fit/routing jobs execute those jobs; the captured plan is the
-final (serve) DataFrame's physical plan.
+Writes artifacts/plans/<tag>/<name>_<suffix>.txt. Queries whose build
+phase runs eager fit/routing jobs execute those jobs; the captured plan
+is the final (serve) DataFrame's physical plan.
 """
 
 from __future__ import annotations
@@ -14,6 +14,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pywrangler_spark.plans import explain_string
 from pywrangler_spark.queries import QUERIES
 from pywrangler_spark.session import get_spark
 
@@ -24,7 +25,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", tag,
+        "artifacts", "plans", tag,
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(
@@ -33,9 +34,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = explain_string(df)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Compute the sf1→sf10 decade table from the two bench artifacts.
 
-Reads ``bench_full_sf1.json`` and ``bench_full_sf10.json`` (either
-mode; the round-7 regeneration runs both with ``bench.py --isolated``
-so host-window contention cannot inflate the ratios) and prints a
+Reads ``artifacts/bench_full_sf1.json`` and
+``artifacts/bench_full_sf10.json`` (either mode; the committed pair was
+written by ``bench.py --isolated`` so host-window contention cannot
+inflate the ratios) and prints a
 summary plus the worst per-query ratios — 10× data, so a ratio ≤ 10 is
 sublinear scaling and anything well above needs either a plan fix or a
 contention explanation backed by the per-query stage telemetry.
@@ -19,9 +20,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
-    with open(os.path.join(REPO, "bench_full_sf1.json")) as fh:
+    with open(os.path.join(REPO, "artifacts/bench_full_sf1.json")) as fh:
         sf1 = json.load(fh)
-    with open(os.path.join(REPO, "bench_full_sf10.json")) as fh:
+    with open(os.path.join(REPO, "artifacts/bench_full_sf10.json")) as fh:
         sf10 = json.load(fh)
     q1, q10 = sf1["queries"], sf10["queries"]
     shared = sorted(set(q1) & set(q10))

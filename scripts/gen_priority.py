@@ -17,7 +17,7 @@ derives, for every registered query:
     module level (shared helpers like ``functions.text.token_count``).
 
 Order emitted to ``pywrangler_spark/queries/_priority.py`` (imported by
-the registry) and recorded in ``rows_age.json``:
+the registry) and recorded in ``artifacts/rows_age.json``:
 
 1. never-green queries (registry order),
 2. everything else by OLDEST green round first; within a vintage,
@@ -36,7 +36,7 @@ is committed, so ``rounds_seen`` includes that round and
 ``last_green_round`` reflects the window it claims to describe. A
 pre-gate run silently describes the previous round's world. At round
 N+1 start: (1) confirm ``CORRECTNESS_r{N}.json`` is committed, (2) run
-this script, (3) commit ``rows_age.json`` + ``_priority.py`` before
+this script, (3) commit ``artifacts/rows_age.json`` + ``_priority.py`` before
 any code change that would mark rows rewritten.
 """
 
@@ -298,7 +298,7 @@ def main() -> int:
 
     order = sorted(report, key=sort_key)
 
-    with open(os.path.join(REPO, "rows_age.json"), "w") as fh:
+    with open(os.path.join(REPO, "artifacts/rows_age.json"), "w") as fh:
         json.dump(
             {
                 "generated_at_head": git("rev-parse", "HEAD"),

@@ -3,7 +3,8 @@ driver testdata directory (default: sf0.1 x10 -> sf1-equivalent).
 
 The driver testdata is read-only and tops out at sf0.1; the scaling
 claims in SCALE.md need at least one measured decade above the bench
-point. Replication with per-replica key offsets preserves every
+point (SCALE.md "Suite and decade tables"). Replication with
+per-replica key offsets preserves every
 referential edge (orders.o_custkey -> customer.c_custkey,
 lineitem.l_orderkey/_partkey/_suppkey -> their parents) while growing
 fact tables, group counts, and corpus size linearly:
@@ -19,7 +20,8 @@ fact tables, group counts, and corpus size linearly:
 - ``documents``/``embeddings`` replicate verbatim (ids shifted): the
   replicas are exact duplicates, which is the realistic stress shape
   for the dedup family (web corpora duplicate wholesale) — SCALE.md
-  documents this when reading the dedup-family scaling numbers.
+  "How the numbers are measured" documents this when reading the
+  dedup-family scaling numbers.
 
 Timestamps are written at Spark's native micros; ``read_parquet``
 normalizes both the driver's TIMESTAMP(NANOS) and these.

@@ -6,8 +6,8 @@ driver's sf0.01/sf0.1 scales; recall typically *decays* as the corpus
 outgrows fixed hyperplane/centroid capacity, and the sf1/sf10 scaling
 runs measured time only. This probe runs the production configurations
 (and optionally auto-scaled ones) at any sf dir and prints the numeric
-avg recall per family — the numbers SCALE.md's recall-vs-scale table
-records.
+avg recall per family — the numbers SCALE.md "Recall vs scale"
+records (``artifacts/recall_scale.json``).
 
 Usage:
   python scripts/recall_probe.py [--sf DIR ...] [--families lsh,ivf,...]

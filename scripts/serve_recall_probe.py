@@ -13,7 +13,7 @@ Configuration mirrors the serve query exactly: hashed doc vectors
 (suggest_ann_params), queries = id % 40 == 0 AND id < 2000.
 
   python scripts/serve_recall_probe.py [--sf DIR ...] [--out PATH]
-defaults: .scratch/sf1 sf10 sf100 -> serve_recall_scale.json
+defaults: .scratch/sf1 sf10 sf100 -> artifacts/serve_recall_scale.json
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ def main() -> int:
             for d in ("sf1", "sf10", "sf100")
         ],
     )
-    ap.add_argument("--out", default="serve_recall_scale.json")
+    ap.add_argument("--out", default="artifacts/serve_recall_scale.json")
     args = ap.parse_args()
 
     from pywrangler_spark.operators.docvec import hashed_doc_vectors

@@ -195,7 +195,8 @@ class TestRound6PlanContracts:
         # exchange. That exchange must be the explicit WIDE repartition
         # (REPARTITION_BY_NUM, AQE-initial width) placed before the
         # explode — the AQE-coalesced implicit window exchange spilled
-        # 13.6 GB at the sf100 probe (SCALE.md r9 batch 2)
+        # 13.6 GB at the sf100 probe (SCALE.md "Dedup: exact, MinHash,
+        # SimHash and CDC")
         df = QUERIES["chunk_docs_cdc"](spark, SF)
         plan = explain_string(df)
         assert "filter(" not in plan.split("\n\n")[0]
@@ -231,7 +232,7 @@ class TestRound6PlanContracts:
         ],
     )
     def test_unpinned_growing_dims_still_broadcast(self, spark, name):
-        # Broadcast policy (SCALE.md round-8 audit): part/customer/supplier
+        # SCALE.md "Broadcast policy": part/customer/supplier
         # GROW with scale factor, so their joins carry NO F.broadcast pin —
         # the optimizer must keep choosing broadcast at test scale from
         # scan-based size estimates. The load-bearing part is the

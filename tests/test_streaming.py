@@ -175,7 +175,6 @@ class TestStreamingSessions:
             ev.schema,
             "sessions_sink",
         )
-        # watermark 0 + availableNow: all sessions closed by end of input
         b = {
             (r.user_id, r.session_start): (r.n_events, round(r.value_sum, 2))
             for r in batch.collect()
@@ -184,12 +183,20 @@ class TestStreamingSessions:
             (r.user_id, r.session_start): (r.n_events, round(r.value_sum, 2))
             for r in streamed.collect()
         }
-        assert len(s) > 0
-        matching = sum(1 for k in s if b.get(k) == s[k])
-        # boundary semantics differ only at exact-gap edges (none in data)
-        assert matching / max(len(b), 1) > 0.95, (
-            f"{matching}/{len(b)} sessions match"
-        )
+        assert s
+        # every session the stream emits is its batch twin
+        assert {k: b.get(k) for k in s} == s
+        # the watermark ends at max(ts) (0 s delay), so exactly the
+        # sessions whose last event + gap lies past it are still open
+        max_ts = ev.agg(F.max("ts")).first()[0]
+        still_open = {
+            (r.user_id, r.session_start)
+            for r in batch.filter(
+                F.col("session_end") + F.expr(f"INTERVAL {int(gap)} SECONDS")
+                > F.lit(max_ts)
+            ).collect()
+        }
+        assert set(b) - set(s) == still_open
 
     def test_fractional_gap_matches_batch(self, spark, tmp_path):
         """A fractional gap is kept exactly: events 90.2 s and 90.4 s
