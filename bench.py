@@ -22,7 +22,9 @@ spill MB, peak execution memory) by diffing the UI REST /stages endpoint
 around the run — ``stage_metrics`` in the full record — so cross-query
 contamination (one query's shuffle/spill taxing its neighbor) is visible
 in the artifact instead of needing a lucky catch. The full record also
-holds ``cpus``, the executor slots the session ran with.
+holds ``cpus``, the executor slots the session ran with, and
+``driver_memory``, the heap ``get_spark`` sized for it (half the host's
+memory on a local master).
 
 Three modes, one query loop (:func:`run_suite`) and one session bring-up:
 
@@ -33,16 +35,20 @@ Three modes, one query loop (:func:`run_suite`) and one session bring-up:
   ``sys.path`` puts that package root first, so per-query HEAD/REF
   ratios (min over passes) are measured within the same host window —
   the host drifts 2-6x across minutes, which makes cross-round absolute
-  numbers incomparable. ``artifacts/bench_ab.json`` also keeps every pass's
+  numbers incomparable. ``.scratch/bench_ab.json`` also keeps every pass's
   per-query seconds for both arms and ``cpus``; the last stdout line
-  carries the ratio summary and the three worst ratios.
+  carries the ratio summary and the three worst ratios. A REF older
+  than ``get_spark``'s heap rule runs its arm at Spark's default 1g heap.
 - ``python bench.py --isolated [NAME ...]``: each query in its own fresh
   subprocess + session (best of the reps inside it), written to
-  ``artifacts/bench_isolated.json``.
+  ``.scratch/bench_isolated.json``.
 
 ``SPARK_GRAFT_BENCH_QUERIES`` (comma-separated) restricts any mode to a
 subset; ``SPARK_GRAFT_BENCH_OUT`` redirects the written record (a path
-relative to the repo root).
+relative to the repo root). The ``--ab`` and ``--isolated`` records
+default under the gitignored ``.scratch/``, so a run never overwrites
+committed evidence; a record meant for ``artifacts/`` sets
+``SPARK_GRAFT_BENCH_OUT`` to its path there.
 """
 
 from __future__ import annotations
@@ -81,8 +87,7 @@ def _session(telemetry: bool = True):
     # the UI store feeds the /stages telemetry; retainedStages well
     # above any single query's stage count so per-query diffs never see
     # eviction
-    extra_conf = {"spark.driver.memory": "48g",
-                  "spark.ui.enabled": "true" if telemetry else "false"}
+    extra_conf = {"spark.ui.enabled": "true" if telemetry else "false"}
     if telemetry:
         extra_conf["spark.ui.retainedStages"] = "20000"
     spark = get_spark("bench", extra_conf=extra_conf)
@@ -162,6 +167,9 @@ def run_suite(spark, sf_dir: str, names, reps: int) -> dict:
         spark.sparkContext._jvm.System.gc()
     return {
         "cpus": slots,
+        "driver_memory": spark.sparkContext.getConf().get(
+            "spark.driver.memory"
+        ),
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "errors": errors,
         "stage_metrics": stage_metrics,
@@ -197,7 +205,7 @@ def _run_in_subprocess(root: str, names, reps: int, telemetry: bool) -> dict:
 
 def ab_record(sha: str, passes: dict, cpus) -> dict:
     """Fold each arm's per-pass query seconds (``{"head": {query: [sec,
-    ...]}, "ref": {...}}``) into the ``artifacts/bench_ab.json`` record: paired
+    ...]}, "ref": {...}}``) into the ``--ab`` record: paired
     per-query min-over-passes ratios (head/ref; <1 = HEAD faster) over
     the queries both arms ran, plus the passes themselves and ``cpus``,
     so a reader can tell whether a ratio is inside the pass spread."""
@@ -248,7 +256,7 @@ def ab_main(ref: str) -> None:
                     passes[variant].setdefault(name, []).append(sec)
 
     result = ab_record(sha, passes, cpus)
-    _write(result, "artifacts/bench_ab.json")
+    _write(result, ".scratch/bench_ab.json")
     print(json.dumps(result))
     compact = {k: v for k, v in result.items()
                if k not in ("ratios", "cpus", "passes")}
@@ -271,15 +279,15 @@ def isolated_main(names) -> None:
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
-    merged: dict = {"cpus": None, "queries": {}, "errors": {},
-                    "stage_metrics": {}}
+    merged: dict = {"cpus": None, "driver_memory": None, "queries": {},
+                    "errors": {}, "stage_metrics": {}}
     for i, name in enumerate(names):
         try:
             res = _run_in_subprocess(REPO, [name], REPS, telemetry=True)
         except RuntimeError as exc:
             merged["errors"][name] = str(exc)
             continue
-        merged["cpus"] = res["cpus"]
+        merged.update(cpus=res["cpus"], driver_memory=res["driver_memory"])
         for key in ("queries", "errors", "stage_metrics"):
             merged[key].update(res[key])
         print(
@@ -287,7 +295,7 @@ def isolated_main(names) -> None:
             f"{res['queries'].get(name) or res['errors'].get(name)}",
             file=sys.stderr,
         )
-    _emit(merged, "artifacts/bench_isolated.json", mode="isolated")
+    _emit(merged, ".scratch/bench_isolated.json", mode="isolated")
 
 
 def _stage_metrics_reader(spark):
@@ -366,6 +374,7 @@ def _emit(result: dict, default_out: str, mode: str | None = None) -> None:
             "queries": timings,
             "sf": float(sf_match.group(1)) if sf_match else None,
             "cpus": result["cpus"],
+            "driver_memory": result["driver_memory"],
             "errors": result["errors"],
             "stage_metrics": result["stage_metrics"]}
     # optional keys appear only when they carry something

@@ -219,55 +219,11 @@ def sessionize_gap_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # global timeline (no group key): the range-partitioned distributed
-# operator; the oracle runs the same semantics with one global window
-_GLOBAL_ORACLE = """
-WITH denoised AS (
-    SELECT *, CASE WHEN event_type = 'signup' THEN 1
-                   WHEN event_type = 'purchase' THEN 2 END AS m
-    FROM events
-), neigh AS (
-    SELECT *,
-        last_value(m IGNORE NULLS) OVER
-            (ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING
-             AND 1 PRECEDING) AS pm,
-        first_value(m IGNORE NULLS) OVER
-            (ORDER BY ts, event_id ROWS BETWEEN 1 FOLLOWING
-             AND UNBOUNDED FOLLOWING) AS nm
-    FROM denoised
-), kept AS (
-    SELECT *,
-        CASE WHEN m = 1 AND (nm IS DISTINCT FROM 1) THEN 1
-             WHEN m = 2 AND (pm IS DISTINCT FROM 2) THEN 2 END AS km,
-        CASE WHEN m = 1 AND (nm IS DISTINCT FROM 1) THEN 1 ELSE 0 END AS bs
-    FROM neigh
-), fills AS (
-    SELECT *,
-        last_value(km IGNORE NULLS) OVER
-            (ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING
-             AND CURRENT ROW) AS a,
-        last_value(km IGNORE NULLS) OVER
-            (ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING
-             AND 1 PRECEDING) AS prv,
-        first_value(km IGNORE NULLS) OVER
-            (ORDER BY ts, event_id ROWS BETWEEN 1 FOLLOWING
-             AND UNBOUNDED FOLLOWING) AS nxt
-    FROM kept
-), flagged AS (
-    SELECT *,
-        (((a IS NOT DISTINCT FROM 1) AND (nxt IS NOT DISTINCT FROM 2))
-         OR ((a IS NOT DISTINCT FROM 2) AND (prv IS NOT DISTINCT FROM 1)))
-            AS valid
-    FROM fills
+# operator; its oracle is the enumerated last/first SQL with every window
+# over the whole timeline instead of one user's events
+_GLOBAL_ORACLE = interval_oracle_sql(False, True).replace(
+    "PARTITION BY user_id ", ""
 )
-SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type,
-       "value", props,
-       CAST(CASE WHEN valid THEN
-            sum(CASE WHEN bs = 1 AND valid THEN 1 ELSE 0 END) OVER
-                (ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING
-                 AND CURRENT ROW)
-            ELSE 0 END AS BIGINT) AS iids
-FROM flagged
-"""
 
 
 @register("interval_global_timeline", oracle=_GLOBAL_ORACLE)

@@ -1,4 +1,6 @@
-"""SparkSession factory with the engine's required configuration.
+"""SparkSession factory with the engine's required configuration: the one
+place a session's configuration is written, for the library, its tests,
+scripts and benchmark harness alike.
 
 Local mode for tests/bench; on a real cluster the same configs apply (AQE,
 arrow, nanos handling) while master/memory come from the deployment.
@@ -6,9 +8,18 @@ arrow, nanos handling) while master/memory come from the deployment.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def local_driver_memory(meminfo: str) -> str:
+    """The driver heap of a local session: half of the ``MemTotal`` line
+    of ``/proc/meminfo`` text, in whole GiB, at least ``1g``."""
+    kib = int(re.search(r"^MemTotal:\s+(\d+) kB", meminfo, re.M).group(1))
+    return f"{max(1, kib // 2 // 2**20)}g"
 
 
 def get_spark(
@@ -25,9 +36,23 @@ def get_spark(
       :mod:`pywrangler_spark.sources.parquet`).
     - AQE on: runtime coalescing + skew-join handling.
     - Arrow on: fast pandas interchange for the Pandas-UDF operators.
+
+    Driver heap: a local master gets :func:`local_driver_memory` of the
+    host (in local mode the driver heap holds the executors' memory too),
+    so a run cannot ask for more memory than the machine has and its
+    spill numbers mean what they say. ``extra_conf`` is the one override,
+    for the heap as for every other key:
+    ``extra_conf={"spark.driver.memory": "4g"}``. The heap takes effect
+    only when this call starts the JVM: ``getOrCreate`` hands back a
+    running session with the heap it started with.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
+    extra_conf = dict(extra_conf or {})
+    if master.startswith("local") and "spark.driver.memory" not in extra_conf:
+        # without /proc (not Linux) Spark's default heap applies
+        with contextlib.suppress(OSError), open("/proc/meminfo") as fh:
+            extra_conf["spark.driver.memory"] = local_driver_memory(fh.read())
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -74,7 +99,7 @@ def get_spark(
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.ui.enabled", "false")
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in extra_conf.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

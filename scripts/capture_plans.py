@@ -28,9 +28,7 @@ def main() -> None:
         "artifacts", "plans", tag,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(
-        "capture-plans", extra_conf={"spark.driver.memory": "48g"}
-    )
+    spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = QUERIES[name](spark, sf_dir)

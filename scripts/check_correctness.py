@@ -74,7 +74,7 @@ def main() -> int:
         allow_partial=os.environ.get("SPARK_GRAFT_ALLOW_PARTIAL") == "1",
     )
 
-    spark = get_spark("check-correctness", shuffle_partitions=8)
+    spark = get_spark("check-correctness")
 
     con = duckdb.connect()
     for t in TABLES:

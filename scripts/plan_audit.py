@@ -27,7 +27,7 @@ def main() -> None:
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
         sys.exit(f"unknown queries: {', '.join(unknown)}")
-    spark = get_spark("plan-audit", shuffle_partitions=8)
+    spark = get_spark("plan-audit")
     for name in sorted(names):
         df = QUERIES[name](spark, sf)
         plan = explain_string(df)

@@ -155,9 +155,7 @@ def main() -> int:
     ]
     fams = args.families.split(",")
 
-    spark = get_spark(
-        "recall-probe", extra_conf={"spark.driver.memory": "48g"}
-    )
+    spark = get_spark("recall-probe")
     spark.sparkContext.setLogLevel("ERROR")
     from pywrangler_spark.operators.similarity import (
         per_query_recall,

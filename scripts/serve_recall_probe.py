@@ -56,9 +56,7 @@ def main() -> int:
     )
     from pywrangler_spark.sources import sf_table
 
-    spark = get_spark(
-        "serve-recall-probe", extra_conf={"spark.driver.memory": "48g"}
-    )
+    spark = get_spark("serve-recall-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     results = []

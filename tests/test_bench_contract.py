@@ -1,8 +1,9 @@
 """The bench.py contract: the final stdout line is compact JSON under 250
-characters, the full record carries ``cpus`` and per-query stage
-telemetry, and a query that fails on a later rep leaves neither a timing
-nor telemetry behind. The ``--ab`` record keeps every pass beside its
-min-over-passes ratios."""
+characters, the full record carries ``cpus``, ``driver_memory`` and
+per-query stage telemetry, and a query that fails on a later rep leaves
+neither a timing nor telemetry behind. The ``--ab`` record keeps every
+pass beside its min-over-passes ratios; the ``--isolated`` record does
+not default under the committed ``artifacts/``."""
 
 import json
 import os
@@ -11,6 +12,7 @@ import sys
 
 import bench
 from pywrangler_spark.queries import QUERIES
+from pywrangler_spark.session import local_driver_memory
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF0001 = "/root/testdata/sf0.001"
@@ -41,6 +43,9 @@ def test_bench_subset_run(tmp_path):
 
     full = json.loads(out.read_text())
     assert full["cpus"] == 2
+    # no heap passed: get_spark's local rule sized it
+    with open("/proc/meminfo") as fh:
+        assert full["driver_memory"] == local_driver_memory(fh.read())
     assert "cpus" not in compact
     assert set(full["queries"]) == {"interval_last_first", "sessionize_gap_1d"}
     assert set(full["stage_metrics"]) == set(full["queries"])
@@ -51,6 +56,7 @@ def test_bench_subset_run(tmp_path):
 def test_committed_full_record_renders_compact_line():
     with open(os.path.join(REPO, "bench_full.json")) as fh:
         full = json.load(fh)
+    assert full["cpus"] and full["driver_memory"]
     line = json.dumps(bench._compact(full))
     assert len(line) < COMPACT_MAX, line
     assert json.loads(line)["n_queries"] == len(full["queries"])
@@ -77,6 +83,23 @@ def test_ab_record_with_no_shared_query():
     rec = bench.ab_record("abc1234", {"head": {"a": [1.0]}, "ref": {}}, 2)
     assert rec["ratios"] == {} and rec["median_ratio"] is None
     assert rec["n_shared"] == 0
+
+
+def test_isolated_record_does_not_default_under_artifacts(monkeypatch):
+    def run(root, names, reps, telemetry):
+        return {"cpus": 4, "driver_memory": "7g",
+                "queries": {names[0]: 1.0}, "errors": {}, "stage_metrics": {}}
+
+    written = []
+    monkeypatch.setattr(bench, "_run_in_subprocess", run)
+    monkeypatch.setattr(
+        bench, "_write", lambda record, out: written.append((record, out))
+    )
+    bench.isolated_main(["interval_last_first"])
+    [(record, out)] = written
+    assert not os.path.normpath(out).startswith("artifacts"), out
+    assert (record["cpus"], record["driver_memory"]) == (4, "7g")
+    assert record["queries"] == {"interval_last_first": 1.0}
 
 
 def test_stage_reader_is_none_with_ui_off(spark):

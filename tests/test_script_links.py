@@ -44,6 +44,9 @@ RUN_RECORDS = (
 # files the program writes outside the repo, named by their base name:
 # make_scale.py's record in each scaled data dir
 OUTSIDE_REPO = ("_scale_meta.json",)
+# the gitignored directory of run outputs (bench.py --ab / --isolated
+# records): its files exist only after a run
+RUN_OUTPUT_DIR = ".scratch/"
 
 _PART = r"[\w.<>{}*,-]"
 _PATH = rf"(?:{_PART}+/)*[\w<>{{}}*,-]+\.(?:json|md|py|txt)"
@@ -139,7 +142,8 @@ def dangling(texts):
                 ("scripts/", "artifacts/")
             ):
                 continue
-            if os.path.basename(path) in OUTSIDE_REPO:
+            if (os.path.basename(path) in OUTSIDE_REPO
+                    or path.startswith(RUN_OUTPUT_DIR)):
                 continue
             for p in _expand(path):
                 if not _resolves(p, tracked):
